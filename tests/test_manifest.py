@@ -6442,12 +6442,38 @@ def test_footer_stats_match_scan_stats_exactly(spark, tmp_path):
     ).collect()
     assert len(rows) == 1 and rows[0]["min_x"] == 1.5
 
+    # a stats column present in no chunk (absent chunk statistics) must
+    # return None from the footer path, so the scan serves it
+    schema_extra = df.withColumn("zz", F.lit(1)).schema
+    assert M._footer_file_stats(
+        spark, base, "data/c=ab", ["k", "zz"], schema_extra, 0,
+        null_stats=False,
+    ) is None
 
-def test_footer_stats_hadoop_twin_matches_arrow_branch(spark, tmp_path):
-    """The object-store (parquet-mr/py4j) footer branch must produce the
-    same rows as the Arrow branch — it is otherwise only reachable on
-    scheme'd paths no test exercises. Driven directly on a local path
-    (Hadoop FS speaks those too)."""
+
+def _scan_stats(spark, base, data_dir, stats_cols, schema, schema_id):
+    """``_file_stats`` rows through the distributed scan, footers off."""
+    from tibame_project_spark.sources import manifest as M
+
+    orig = M._footer_file_stats
+    M._footer_file_stats = lambda *a, **kw: None
+    try:
+        return sorted(
+            tuple(r)
+            for r in M._file_stats(
+                spark, base, data_dir, stats_cols, schema, None, schema_id,
+                null_stats=True,
+            ).collect()
+        )
+    finally:
+        M._footer_file_stats = orig
+
+
+def test_footer_stats_remote_scheme_and_all_null_match_scan(spark, tmp_path):
+    """The footer path serves a REGISTERED remote scheme (the 100 TB
+    deployment shape: a register_arrow_fs resolver Hadoop does not
+    speak) and an all-NULL column, both equal to the distributed scan."""
+    from pyarrow import fs as pafs
     from pyspark.sql import functions as F
 
     from tibame_project_spark.sources import manifest as M
@@ -6462,18 +6488,6 @@ def test_footer_stats_hadoop_twin_matches_arrow_branch(spark, tmp_path):
     )
     cols = ["k", "s", "dt"]
     M._write_data(df, base, "data/c=tw", "k", 2)
-    arrow = M._footer_file_stats(
-        spark, base, "data/c=tw", cols, df.schema, 5, null_stats=True
-    )
-    hadoop = M._footer_file_stats_hadoop(
-        spark, base, "data/c=tw", cols, df.schema, 5, null_stats=True
-    )
-    assert arrow == hadoop and len(arrow) == 2
-
-    # the Arrow branch must also serve a REGISTERED remote scheme (the
-    # 100 TB deployment shape): same rows through a register_arrow_fs
-    # resolver that Hadoop does not speak
-    from pyarrow import fs as pafs
 
     def resolver(path):
         rel = path[len("mock://store/"):]
@@ -6488,95 +6502,32 @@ def test_footer_stats_hadoop_twin_matches_arrow_branch(spark, tmp_path):
             spark, "mock://store/t", "data/c=tw", cols, df.schema, 5,
             null_stats=True,
         )
-        assert remote == arrow
     finally:
         if prev is None:
             del M._ARROW_FS_RESOLVERS["mock"]
         else:
             M.register_arrow_fs("mock", prev)
+    assert len(remote) == 2
+    assert sorted(remote) == _scan_stats(
+        spark, base, "data/c=tw", cols, df.schema, 5
+    )
 
-    # all-NULL column parity between the twins
+    # an all-NULL column: null counts, no bounds — as the scan says
     df2 = spark.createDataFrame([(1, None), (2, None)], "k int, s string")
     M._write_data(df2, base, "data/c=tw2", None, 1)
     a2 = M._footer_file_stats(
         spark, base, "data/c=tw2", ["k", "s"], df2.schema, 0,
         null_stats=True,
     )
-    h2 = M._footer_file_stats_hadoop(
-        spark, base, "data/c=tw2", ["k", "s"], df2.schema, 0,
-        null_stats=True,
-    )
-    assert a2 == h2 and len(a2) == 1
+    assert len(a2) == 1
+    assert a2 == _scan_stats(spark, base, "data/c=tw2", ["k", "s"], df2.schema, 0)
 
 
-def test_footer_stats_thread_pool_matches_sequential(spark, tmp_path, monkeypatch):
-    """A many-file commit reads its footers on a bounded thread pool
-    (r15 — the driver-side loop was the commit's critical path at high
-    file counts); pooled and sequential reads must produce IDENTICAL
-    manifest rows in identical order, on both the Arrow branch and the
-    parquet-mr twin, and the fallback-to-scan contract (a file without
-    chunk statistics) must survive the pool."""
-    from pyspark.sql import functions as F
-
-    from tibame_project_spark.sources import manifest as M
-
-    base = str(tmp_path / "t")
-    df = spark.range(0, 4000).select(
-        F.col("id").alias("k"),
-        F.concat(F.lit("v"), F.col("id").cast("string")).alias("s"),
-    )
-    # 12 files: comfortably above _FOOTER_STATS_POOL_MIN (8); zero the
-    # latency-probe threshold so the pool branch engages even at local-FS
-    # footer speeds (in production the probe keeps fast stores sequential)
-    M._write_data(df, base, "data/c=pool", "k", 12)
-    assert 12 >= M._FOOTER_STATS_POOL_MIN
-    monkeypatch.setattr(M, "_FOOTER_POOL_MIN_SEQ_S", 0.0)
-    monkeypatch.setattr(M, "_FOOTER_STATS_THREADS", 16)
-    pooled = M._footer_file_stats(
-        spark, base, "data/c=pool", ["k", "s"], df.schema, 3, null_stats=True
-    )
-    pooled_h = M._footer_file_stats_hadoop(
-        spark, base, "data/c=pool", ["k", "s"], df.schema, 3, null_stats=True
-    )
-    monkeypatch.setattr(M, "_FOOTER_STATS_THREADS", 1)
-    seq = M._footer_file_stats(
-        spark, base, "data/c=pool", ["k", "s"], df.schema, 3, null_stats=True
-    )
-    seq_h = M._footer_file_stats_hadoop(
-        spark, base, "data/c=pool", ["k", "s"], df.schema, 3, null_stats=True
-    )
-    assert len(pooled) == 12
-    assert pooled == seq
-    assert pooled_h == seq_h
-    assert pooled == pooled_h
-
-    # fallback parity under the pool: a stats column whose chunk
-    # statistics are absent must return None (scan path) from the pooled
-    # map exactly like the sequential one — simulate by asking for a
-    # column that exists in no chunk
-    class NoStats(Exception):
-        pass
-
-    monkeypatch.setattr(M, "_FOOTER_STATS_THREADS", 16)
-    schema_extra = df.withColumn("zz", F.lit(1)).schema
-    assert (
-        M._footer_file_stats_arrow(
-            M._arrow_fs(base), "data/c=pool", ["k", "zz"], schema_extra, 3,
-            null_stats=False,
-        )
-        is None
-    )
-
-
-def test_footer_stats_fall_back_to_hadoop_twin_on_arrow_io_error(
-    spark, tmp_path
-):
+def test_footer_stats_return_none_on_arrow_io_error(spark, tmp_path):
     """An Arrow filesystem that constructs but cannot ACCESS the store
     (credentials only in Spark's Hadoop conf, transient store errors)
-    must fall through to the parquet-mr twin, not crash the commit —
-    the same fallback discipline as every sibling _arrow_fs consumer."""
-    from pyarrow import fs as pafs
-
+    must make the footer path return None — the caller then takes the
+    distributed scan — not crash the commit."""
     from tibame_project_spark.sources import manifest as M
 
     def resolver(path):
@@ -6586,14 +6537,6 @@ def test_footer_stats_fall_back_to_hadoop_twin_on_arrow_io_error(
 
         return Raising(), path.split("://", 1)[1]
 
-    called = {}
-
-    def fake_hadoop(*a, **k):
-        called["hit"] = True
-        return [("sentinel",)]
-
-    orig = M._footer_file_stats_hadoop
-    M._footer_file_stats_hadoop = fake_hadoop
     prev = M.register_arrow_fs("deny", resolver)
     try:
         got = M._footer_file_stats(
@@ -6601,9 +6544,8 @@ def test_footer_stats_fall_back_to_hadoop_twin_on_arrow_io_error(
             spark.range(1).select(F.col("id").cast("int").alias("k")).schema,
             0, null_stats=False,
         )
-        assert got == [("sentinel",)] and "hit" in called
+        assert got is None
     finally:
-        M._footer_file_stats_hadoop = orig
         if prev is None:
             del M._ARROW_FS_RESOLVERS["deny"]
         else:
@@ -6729,3 +6671,99 @@ def test_scoped_conf_concurrent_scopes_restore_original(spark):
     assert spark.conf.get(key) == orig
     assert spark.conf.get("spark.sql.maxSinglePartitionBytes") == "134217728b"
     assert not M._CONF_SCOPES  # no dangling refcounts
+
+
+def test_scoped_conf_failed_set_leaves_no_scope():
+    """A scope whose ``conf.set`` raises must not stay registered: no
+    exit would ever release it, and the next scope on that key would
+    skip its own set."""
+    from tibame_project_spark.sources import manifest as M
+
+    class Conf:
+        def get(self, key):
+            return "true"
+
+        def set(self, key, value):
+            raise RuntimeError("conf is read-only")
+
+    class Session:
+        conf = Conf()
+
+    with pytest.raises(RuntimeError, match="read-only"):
+        with M._scoped_conf(Session(), "spark.sql.adaptive.enabled", "false"):
+            pass
+    assert not M._CONF_SCOPES
+
+
+def test_fits_one_task_fails_closed_on_unknown_bytes(monkeypatch):
+    """The single-task fusion gate fuses only inputs PROVABLY small: a
+    NULL file size is not provably small, so it takes the distributed
+    plan."""
+    from tibame_project_spark.sources import manifest as M
+
+    monkeypatch.setattr(M, "_MERGE_FUSE_MAX_BYTES", 100)
+    assert M._fits_one_task([])
+    assert M._fits_one_task([100])
+    assert M._fits_one_task(iter([40, 60]))
+    assert not M._fits_one_task([101])
+    assert not M._fits_one_task([None])
+    assert not M._fits_one_task([10, None])
+
+
+def test_merge_batch_with_memo_named_column(spark, tmp_path):
+    """A user column spelled like the engine's LocalRelation memo
+    (``_tibame_is_local``) must not shadow it: DataFrame attribute
+    access returns that Column, which the merge's ``if`` cannot
+    convert to a bool."""
+    schema = "id long, _tibame_is_local long"
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(10)], schema), base,
+        stats_cols=["id"], cluster_by="id", n_files=2,
+    )
+    batch = spark.createDataFrame([(3, 30), (42, 42)], schema)
+    assert merge_manifest_table(spark, batch, base, "id") == 1
+    got = {
+        (r["id"], r["_tibame_is_local"])
+        for r in read_manifest_table(spark, base).collect()
+    }
+    assert got == {(i, i) for i in range(10) if i != 3} | {(3, 30), (42, 42)}
+
+
+def test_commit_fs_create_new_has_one_winner_per_race(spark, tmp_path):
+    """The default CommitFS create-new must be atomic on a local path:
+    threads racing one path get exactly one winner, every trial.
+    Hadoop's local ``create(path, overwrite=False)`` checks, then
+    creates, and lets several racers win."""
+    import threading
+
+    from tibame_project_spark.sources import manifest as M
+
+    fs, _, jvm = M._fs_for(spark, str(tmp_path))
+    n_threads = 4
+    for trial in range(200):
+        path = jvm.org.apache.hadoop.fs.Path(f"{tmp_path}/_CLAIM_v{trial}")
+        barrier = threading.Barrier(n_threads, timeout=30)
+        wins = []
+
+        def racer():
+            barrier.wait()
+            try:
+                M._COMMIT_FS.create_new(fs, path)
+                wins.append(1)
+            except Exception:
+                pass
+
+        threads = [threading.Thread(target=racer) for _ in range(n_threads)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+            assert not t.is_alive()
+        assert len(wins) == 1, f"trial {trial}: {len(wins)} winners"
+    # the loser's error is a plain FileExistsError, and data lands intact
+    tag = jvm.org.apache.hadoop.fs.Path(f"{tmp_path}/tags/t.json")
+    M._COMMIT_FS.create_new(fs, tag, b'{"version": 3}')
+    with pytest.raises(FileExistsError):
+        M._COMMIT_FS.create_new(fs, tag, b"{}")
+    assert (tmp_path / "tags" / "t.json").read_bytes() == b'{"version": 3}'

@@ -4,9 +4,10 @@ story (r10 verdict item 5: the seam + fake prove the interface; these
 are the honest, runnable implementations).
 
 The protocol needs exactly one primitive: atomic CREATE-NEW of a small
-marker object (claim / commit marker / tag pin). HDFS, POSIX, ABFS and
-GCS provide it natively (the default ``CommitFS``); classic S3 PUT does
-not. Two public designs close the gap, both implemented here:
+marker object (claim / commit marker / tag pin). HDFS, ABFS and GCS
+provide it natively, and POSIX through ``O_EXCL`` (the default
+``CommitFS`` uses both); classic S3 PUT does not. Two public designs
+close the gap, both implemented here:
 
 * **external coordination** (:class:`CoordinatedCommitFS`) — hold the
   exclusivity decision in a SEPARATE store that does have atomic
@@ -34,7 +35,7 @@ from __future__ import annotations
 
 import hashlib
 
-from tibame_project_spark.sources.manifest import CommitFS
+from tibame_project_spark.sources.manifest import CommitFS, _create_new
 
 __all__ = ["CoordinatedCommitFS", "ConditionalPutCommitFS"]
 
@@ -42,16 +43,17 @@ __all__ = ["CoordinatedCommitFS", "ConditionalPutCommitFS"]
 class CoordinatedCommitFS(CommitFS):
     """Atomic create-new via an external coordination directory.
 
-    ``coord_path(fs)`` must name a directory on a filesystem whose
-    ``create(path, overwrite=False)`` is truly atomic (HDFS, POSIX,
-    ABFS, GCS). ``create_new`` first atomically creates a coordination
-    entry named by the sha256 of the target path (its content is the
-    target path string, for :meth:`clear_orphans`); only the winner
-    then PUTs the real object — the coordination entry, not the object,
-    is the arbiter, so the object store's PUT may be a blind overwrite.
-    ``delete`` removes the object and THEN its entry, so a crash
-    between the two leaves entry-without-object — recoverable, never
-    two owners.
+    ``coord_dir`` must name a directory on a filesystem with a truly
+    atomic create-new (HDFS, ABFS, GCS, or a local directory, which
+    :func:`~tibame_project_spark.sources.manifest._create_new` creates
+    with ``O_EXCL``). ``create_new`` first atomically creates a
+    coordination entry named by the sha256 of the target path (its
+    content is the target path string, for :meth:`clear_orphans`); only
+    the winner then PUTs the real object — the coordination entry, not
+    the object, is the arbiter, so the object store's PUT may be a blind
+    overwrite. ``delete`` removes the object and THEN its entry, so a
+    crash between the two leaves entry-without-object — recoverable,
+    never two owners.
 
     Crash contract: a writer that dies between entry-create and object
     PUT leaves an orphan entry that blocks that one path. Commits at
@@ -90,11 +92,8 @@ class CoordinatedCommitFS(CommitFS):
 
     def create_new(self, fs, path, data: bytes = b"") -> None:
         entry = self._entry(fs, path)
-        out = self._coord_fs.create(entry, False)  # the atomic arbiter
-        try:
-            out.write(bytearray(str(path).encode("utf-8")))
-        finally:
-            out.close()
+        # the atomic arbiter (O_EXCL when the coordination dir is local)
+        _create_new(self._coord_fs, entry, str(path).encode("utf-8"))
         # won the entry: the blind PUT below is exclusive by coordination
         try:
             out = fs.create(path, True)

@@ -58,12 +58,12 @@ claimed window never runs a Spark job; a claim whose commit never
 appears is a crashed writer — :func:`recover_manifest_table` clears it.
 
 **Filesystem requirement**: every publish point (claims, markers, tag
-pins) is an atomic create-new — atomic on HDFS / local / ABFS via
-Hadoop's ``create(path, overwrite=False)``, but NOT on S3A/GCS without
-conditional-write support. On such stores install a conditional-put
-adapter through the :class:`CommitFS` seam (:func:`set_commit_fs`) —
-the same pluggable-LogStore split Delta Lake documents. Layout under
-``base_path``::
+pins) is an atomic create-new — ``O_EXCL`` on local paths, Hadoop's
+``create(path, overwrite=False)`` on HDFS / ABFS, but NOT atomic on
+S3A/GCS without conditional-write support. On such stores install a
+conditional-put adapter through the :class:`CommitFS` seam
+(:func:`set_commit_fs`) — the same pluggable-LogStore split Delta Lake
+documents. Layout under ``base_path``::
 
     _COMMIT_v<n>       commit markers (atomic create-new; the publish)
     _CLAIM_v<n>        claim markers (atomic create-new; serialize only
@@ -514,9 +514,11 @@ def _is_local_relation(df: DataFrame) -> bool:
     Memoized per DataFrame object: ``optimizedPlan()`` forces a full
     analyze+optimize of the plan via py4j — pure driver cost that grows
     with plan size — and a frame's LocalRelation-ness never changes, so
-    the second and later probes of the same object are free."""
-    cached = getattr(df, "_tibame_is_local", None)
-    if cached is not None:
+    the second and later probes of the same object are free. The memo
+    is read from the instance dict and must be a ``bool``: attribute
+    access would return a Column for a user column of the same name."""
+    cached = vars(df).get("_tibame_is_local")
+    if isinstance(cached, bool):
         return cached
     try:
         result = (
@@ -997,33 +999,53 @@ _CLAIM_WAIT_S = 30.0
 _CLAIM_POLL_S = 0.25
 
 
+def _create_new(fs, path, data: bytes = b"") -> None:
+    """Create the Hadoop ``path`` on ``fs`` with ``data`` iff it does not
+    exist; raise if it does. A ``file:`` path is created with ``O_CREAT
+    | O_EXCL``, which the kernel makes atomic: Hadoop's local
+    ``create(path, overwrite=False)`` checks, then creates, so racing
+    callers can both win it. Every other scheme takes Hadoop's
+    create-new."""
+    uri = fs.makeQualified(path).toUri()
+    if uri.getScheme() == "file":
+        local = uri.getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        return
+    out = fs.create(path, False)
+    try:
+        if data:
+            out.write(bytearray(data))
+    finally:
+        out.close()
+
+
 class CommitFS:
     """The ONE filesystem primitive the commit protocol's correctness
     rests on: **atomic create-new** — create the file iff it does not
     exist, all-or-nothing against every concurrent caller. Claim markers,
     commit markers, and tag pins all publish through it.
 
-    The default implementation is Hadoop's ``fs.create(path,
-    overwrite=False)``, which IS atomic on HDFS, local filesystems, and
-    ABFS — but NOT on S3A or GCS connectors without conditional-write
-    support: eventual-consistency-era S3A implements create-new as a
-    non-atomic exists-then-put, so two racing writers can both "win" a
-    claim and corrupt a version. This is exactly the problem Delta Lake
-    solves with its pluggable LogStore. Deploying on such a store
-    requires installing an adapter here (:func:`set_commit_fs`) that
-    maps ``create_new`` onto a real conditional put (S3
-    ``If-None-Match``, GCS ``ifGenerationMatch=0``, or a DynamoDB-class
-    coordination table). See SCALE.md for the deployment matrix."""
+    The default implementation is :func:`_create_new`: ``O_CREAT |
+    O_EXCL`` on local (``file:``) paths, Hadoop's ``fs.create(path,
+    overwrite=False)`` elsewhere. Hadoop's create-new IS atomic on HDFS
+    and ABFS, but NOT on its local filesystem (it checks, then creates)
+    nor on S3A or GCS connectors without conditional-write support:
+    eventual-consistency-era S3A implements create-new as a non-atomic
+    exists-then-put, so two racing writers can both "win" a claim and
+    corrupt a version. This is exactly the problem Delta Lake solves
+    with its pluggable LogStore. Deploying on such a store requires
+    installing an adapter here (:func:`set_commit_fs`) that maps
+    ``create_new`` onto a real conditional put (S3 ``If-None-Match``,
+    GCS ``ifGenerationMatch=0``, or a DynamoDB-class coordination
+    table). See SCALE.md for the deployment matrix."""
 
     def create_new(self, fs, path, data: bytes = b"") -> None:
         """Atomically create ``path`` with ``data`` (empty for markers);
         MUST raise if the path already exists, with no partial state."""
-        out = fs.create(path, False)
-        try:
-            if data:
-                out.write(bytearray(data))
-        finally:
-            out.close()
+        _create_new(fs, path, data)
 
     def delete(self, fs, path) -> bool:
         """Delete a path this seam created (claim release, retention
@@ -1640,16 +1662,6 @@ def recover_manifest_table(
     return removed
 
 
-def _env_int(name: str, default: int) -> int:
-    """An int env knob, parsed defensively: a malformed value falls back
-    to the default (disabling a fast path must never crash module
-    import)."""
-    try:
-        return int(os.environ.get(name, str(default)))
-    except (TypeError, ValueError):
-        return default
-
-
 #: Spark types whose parquet footer statistics this engine decodes for
 #: the metadata-only stats path. Deliberately excludes float/double (a
 #: NaN anywhere makes parquet min/max undefined — the format's own
@@ -1659,24 +1671,6 @@ def _env_int(name: str, default: int) -> int:
 _FOOTER_STATS_KINDS = frozenset(
     "boolean tinyint smallint int bigint string date".split()
 )
-
-#: Footer reads are per-file driver-side calls whose latency spans four
-#: orders of magnitude by store: ~0.1 ms on a local FS through Arrow,
-#: ~50 ms through py4j/parquet-mr or against an object store. A commit
-#: adding thousands of files would serialize seconds-to-minutes on the
-#: driver, so the loop pools — ADAPTIVELY: the first footer is read
-#: sequentially as a latency probe, and the rest go to a bounded thread
-#: pool only when probed-latency × remaining-count exceeds
-#: _FOOTER_POOL_MIN_SEQ_S (pool spin-up + GIL contention otherwise COSTS
-#: more than it saves — measured 0.04 s sequential vs 0.14 s pooled for
-#: 256 local-FS Arrow footers, vs 13.3 s sequential / 8.1 s pooled for
-#: the same files through py4j). Arrow releases the GIL during I/O; py4j
-#: opens one gateway connection per Python thread; Hadoop FileSystem and
-#: parquet-mr footer readers are thread-safe.
-#: TIBAME_FOOTER_STATS_THREADS<=1 restores the sequential loop.
-_FOOTER_STATS_THREADS = _env_int("TIBAME_FOOTER_STATS_THREADS", 16)
-_FOOTER_STATS_POOL_MIN = 8
-_FOOTER_POOL_MIN_SEQ_S = 0.1
 
 
 #: Reference-counted scoped-conf state: ``(id(session), key) →
@@ -1706,8 +1700,10 @@ def _scoped_conf(spark, key: str, value: str):
                 old = spark.conf.get(key)
             except Exception:
                 old = None
-            _CONF_SCOPES[skey] = st = [1, old]
+            # register only once the set succeeded: a failed set must
+            # not leave a scope that no exit will ever release
             spark.conf.set(key, value)
+            _CONF_SCOPES[skey] = st = [1, old]
         else:
             st[0] += 1
     try:
@@ -1749,46 +1745,6 @@ def _no_aqe(spark):
     return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
-class _FooterFallback(Exception):
-    """A file's footer cannot serve the manifest stats exactly (absent
-    chunk statistics, value-bearing chunk without bounds) — the caller
-    must take the distributed scan path."""
-
-
-def _footer_stats_map(read_one, files: list) -> list | None:
-    """Run ``read_one`` over ``files`` — pooled when the probed per-file
-    latency predicts a sequential wall above
-    :data:`_FOOTER_POOL_MIN_SEQ_S`, sequential otherwise — preserving
-    input order. ``read_one`` returns a manifest row tuple or None
-    (zero-row file); raising :class:`_FooterFallback` makes the whole
-    map return None (scan path). Other exceptions propagate (store I/O:
-    the caller's concern)."""
-    import time as _time
-
-    try:
-        if not files:
-            return []
-        t0 = _time.perf_counter()
-        first = read_one(files[0])
-        probe = _time.perf_counter() - t0
-        rest = files[1:]
-        if (
-            _FOOTER_STATS_THREADS > 1
-            and len(files) >= _FOOTER_STATS_POOL_MIN
-            and probe * len(rest) > _FOOTER_POOL_MIN_SEQ_S
-        ):
-            from concurrent.futures import ThreadPoolExecutor
-
-            workers = min(_FOOTER_STATS_THREADS, len(rest))
-            with ThreadPoolExecutor(max_workers=workers) as pool:
-                results = [first] + list(pool.map(read_one, rest))
-        else:
-            results = [first] + [read_one(f) for f in rest]
-    except _FooterFallback:
-        return None
-    return [r for r in results if r is not None]
-
-
 def _truncate_string_stats(mn, mx):
     """The scan path's string-stats truncation contract, in Python: min
     truncates to a prefix (still a lower bound); max appends U+10FFFF to
@@ -1817,21 +1773,19 @@ def _footer_file_stats(
     metadata approach: min/max/null-count/row-count live in each file's
     footer). Returns the manifest rows as tuples in
     :func:`_file_stats`'s column order, or None when the footers cannot
-    serve them exactly (a stats column outside ``_FOOTER_STATS_KINDS``,
-    a chunk written without statistics) — the caller then takes the
-    distributed scan path, which is always correct.
+    serve them exactly — the caller then takes the distributed
+    ``_metadata`` scan, which is always correct. None comes back for a
+    stats column outside ``_FOOTER_STATS_KINDS``, a chunk written
+    without statistics, a scheme :func:`_arrow_fs` cannot reach, and
+    any Arrow I/O error (credentials living only in Spark's Hadoop
+    conf, transient store errors, adapter quirks).
 
-    Footer reads are driver-side calls, µs-to-ms per file — at this
-    engine's file sizes that replaces a distributed scan of every fresh
-    byte with O(files) metadata reads (the same driver-side O(files)
-    model the manifest itself uses, measured flat to 100k files).
-    Commits above :data:`_FOOTER_STATS_POOL_MIN` files whose probed
-    per-file latency predicts a slow sequential walk read their footers
-    on a bounded thread pool (:func:`_footer_stats_map` — Arrow releases
-    the GIL, py4j is thread-safe) so a thousand-file commit on a
-    high-latency store no longer serializes seconds-to-minutes on the
-    driver; small commits and fast local stores stay sequential (pool
-    spin-up costs more than it saves there — measured).
+    The footers are read sequentially through the :func:`_arrow_fs`
+    seam — one Arrow code path for local paths, s3:// / hdfs://
+    (pyarrow's own connectors) and :func:`register_arrow_fs` adapters.
+    A footer read is a driver-side call of well under a millisecond on
+    a local store, so a commit pays O(files) metadata reads instead of
+    a distributed scan of every fresh byte.
 
     Parity notes vs the scan path, all load-bearing: a ZERO-ROW part
     file yields no manifest row (the scan's groupBy drops empty groups —
@@ -1842,216 +1796,76 @@ def _footer_file_stats(
         kind = schema[c].dataType.simpleString().split("(")[0]
         if kind not in _FOOTER_STATS_KINDS:
             return None
-    # footers are read through the _arrow_fs seam — ONE Arrow code path
-    # for local paths, s3://'/hdfs:// (pyarrow's own connectors), and
-    # register_arrow_fs adapters; a scheme Arrow cannot reach — or can
-    # construct but not ACCESS (credentials living only in Spark's
-    # Hadoop conf, transient store errors, adapter quirks) — takes the
-    # parquet-mr/py4j twin, exactly like every sibling _arrow_fs
-    # consumer (_meta, _manifest_arrow, _materialize_manifest) falls
-    # back on Arrow I/O errors. Still O(files) metadata reads either
-    # way (~ms per call vs Arrow's µs), which at 1 GB files beats a
-    # re-scan by orders of magnitude.
     resolved = _arrow_fs(base_path)
-    if resolved is not None:
-        try:
-            return _footer_file_stats_arrow(
-                resolved, data_dir, stats_cols, schema, schema_id,
-                null_stats=null_stats,
-            )
-        except Exception:
-            pass  # the JVM path below is authoritative for this store
-    return _footer_file_stats_hadoop(
-        spark, base_path, data_dir, stats_cols, schema, schema_id,
-        null_stats=null_stats,
-    )
-
-
-def _footer_file_stats_arrow(
-    resolved,
-    data_dir: str,
-    stats_cols: list[str],
-    schema: StructType,
-    schema_id: int,
-    *,
-    null_stats: bool,
-) -> list[tuple] | None:
-    """The Arrow body of :func:`_footer_file_stats`: raises on store I/O
-    errors (the caller falls back to the Hadoop twin), returns None when
-    footers cannot serve the stats exactly (caller falls back to the
-    scan), else the manifest rows."""
+    if resolved is None:
+        return None
+    import pyarrow as pa
     import pyarrow.parquet as _pq
     from pyarrow.fs import FileSelector, FileType
 
     afs, abase = resolved
     root = f"{abase.rstrip('/')}/{data_dir}"
-    # an explicit listing, NOT a glob: a glob metacharacter in the table
-    # path ([, ?, *) would silently list a DIFFERENT directory and
-    # publish an empty manifest where the scan path failed loudly
-    infos = afs.get_file_info(FileSelector(root, allow_not_found=True))
-    files = [
-        fi
-        for fi in sorted(infos, key=lambda i: i.path)
-        if fi.type == FileType.File
-        and fi.path.rsplit("/", 1)[-1].endswith(".parquet")
-        and not fi.path.rsplit("/", 1)[-1].startswith(("_", "."))
-    ]
-
-    def read_one(fi):
-        name = fi.path.rsplit("/", 1)[-1]
-        with afs.open_input_file(fi.path) as f:
-            md = _pq.ParquetFile(f).metadata
-        nrows = md.num_rows
-        if nrows == 0:
-            return None
-        mins: dict = {c: None for c in stats_cols}
-        maxs: dict = {c: None for c in stats_cols}
-        nulls: dict = {c: 0 for c in stats_cols}
-        for i in range(md.num_row_groups):
-            rg = md.row_group(i)
-            chunks = {
-                rg.column(j).path_in_schema: rg.column(j)
-                for j in range(rg.num_columns)
-            }
-            for c in stats_cols:
-                ch = chunks.get(c)
-                if ch is None:
-                    raise _FooterFallback(name)
-                s = ch.statistics
-                # absent statistics (or a null-count the writer didn't
-                # set): only the data itself can answer — fall back
-                if s is None or not s.has_null_count:
-                    raise _FooterFallback(name)
-                nulls[c] += s.null_count
-                if not s.has_min_max:
-                    if s.null_count == rg.num_rows:
-                        continue  # all-NULL chunk: nulls only
-                    raise _FooterFallback(name)  # values but no bounds
-                lo, hi = s.min, s.max
-                if mins[c] is None or lo < mins[c]:
-                    mins[c] = lo
-                if maxs[c] is None or hi > maxs[c]:
-                    maxs[c] = hi
-        for c in stats_cols:
-            if isinstance(schema[c].dataType, StringType):
-                mins[c], maxs[c] = _truncate_string_stats(mins[c], maxs[c])
-        row: list = [f"{data_dir}/{name}", int(fi.size), int(nrows)]
-        for c in stats_cols:
-            row += [mins[c], maxs[c]]
-        if null_stats:
-            row += [int(nulls[c]) for c in stats_cols]
-        row += [None, int(schema_id)]
-        return tuple(row)
-
-    return _footer_stats_map(read_one, files)
-
-
-def _footer_file_stats_hadoop(
-    spark: SparkSession,
-    base_path: str,
-    data_dir: str,
-    stats_cols: list[str],
-    schema: StructType,
-    schema_id: int,
-    *,
-    null_stats: bool,
-) -> list[tuple] | None:
-    """The Hadoop-FS twin of the Arrow footer branch, for scheme'd
-    object stores: parquet-mr footers via py4j. Same contract, same
-    fall-back-to-scan semantics."""
-    import datetime as _dt
-
-    fs, root, jvm = _fs_for(spark, f"{base_path}/{data_dir}")
-    if not fs.exists(root):
-        return []
-    statuses = sorted(
-        (
-            st
-            for st in fs.listStatus(root)
-            if not st.isDirectory()
-            and st.getPath().getName().endswith(".parquet")
-            and not st.getPath().getName().startswith(("_", "."))
-        ),
-        key=lambda st: st.getPath().getName(),
-    )
-    conf = spark._jsc.hadoopConfiguration()
-    hif = jvm.org.apache.parquet.hadoop.util.HadoopInputFile
-    pfr = jvm.org.apache.parquet.hadoop.ParquetFileReader
-
-    def decode(c, v):
-        if v is None:
-            return None
-        kind = schema[c].dataType.simpleString()
-        if kind == "string":
-            return bytes(v.getBytes()).decode("utf-8")
-        if kind == "date":
-            return _dt.date(1970, 1, 1) + _dt.timedelta(days=int(v))
-        if kind == "boolean":
-            return bool(v)
-        return int(v)
-
-    def read_one(st):
-        reader = pfr.open(hif.fromPath(st.getPath(), conf))
-        try:
-            blocks = reader.getFooter().getBlocks()
-            nrows = 0
+    rows = []
+    try:
+        # an explicit listing, NOT a glob: a glob metacharacter in the
+        # table path ([, ?, *) would silently list a DIFFERENT directory
+        # and publish an empty manifest where the scan path failed loudly
+        infos = afs.get_file_info(FileSelector(root, allow_not_found=True))
+        for fi in sorted(infos, key=lambda i: i.path):
+            name = fi.path.rsplit("/", 1)[-1]
+            if (
+                fi.type != FileType.File
+                or not name.endswith(".parquet")
+                or name.startswith(("_", "."))
+            ):
+                continue
+            with afs.open_input_file(fi.path) as f:
+                md = _pq.ParquetFile(f).metadata
+            if md.num_rows == 0:
+                continue
             mins: dict = {c: None for c in stats_cols}
             maxs: dict = {c: None for c in stats_cols}
             nulls: dict = {c: 0 for c in stats_cols}
-            for b in blocks:
-                nrows += b.getRowCount()
+            for i in range(md.num_row_groups):
+                rg = md.row_group(i)
                 chunks = {
-                    ch.getPath().toDotString(): ch for ch in b.getColumns()
+                    rg.column(j).path_in_schema: rg.column(j)
+                    for j in range(rg.num_columns)
                 }
                 for c in stats_cols:
                     ch = chunks.get(c)
-                    if ch is None:
-                        raise _FooterFallback(st.getPath().getName())
-                    s = ch.getStatistics()
-                    # isEmpty() == no statistics were written for the
-                    # chunk (or parquet-mr refused corrupt legacy binary
-                    # stats) — only the data itself can answer then
-                    if s is None or s.isEmpty():
-                        raise _FooterFallback(st.getPath().getName())
-                    if not s.isNumNullsSet():
-                        raise _FooterFallback(st.getPath().getName())
-                    nulls[c] += s.getNumNulls()
-                    if not s.hasNonNullValue():
-                        # bound-less chunk: legitimate ONLY when every
-                        # value is NULL — a value-bearing chunk without
-                        # min/max would publish NULL bounds, which the
-                        # prune layer reads as "all-NULL file" (IS NOT
-                        # NULL skips it): silent row loss. Same guard as
-                        # the Arrow branch's null_count == num_rows.
-                        if s.getNumNulls() != ch.getValueCount():
-                            raise _FooterFallback(st.getPath().getName())
-                        continue  # all-NULL chunk: nulls only
-                    lo = decode(c, s.genericGetMin())
-                    hi = decode(c, s.genericGetMax())
+                    s = None if ch is None else ch.statistics
+                    # absent statistics (or a null-count the writer
+                    # didn't set): only the data itself can answer
+                    if s is None or not s.has_null_count:
+                        return None
+                    nulls[c] += s.null_count
+                    if not s.has_min_max:
+                        if s.null_count == rg.num_rows:
+                            continue  # all-NULL chunk: nulls only
+                        # values but no bounds: NULL bounds would read as
+                        # an all-NULL file to the prune layer (row loss)
+                        return None
+                    lo, hi = s.min, s.max
                     if mins[c] is None or lo < mins[c]:
                         mins[c] = lo
                     if maxs[c] is None or hi > maxs[c]:
                         maxs[c] = hi
-        finally:
-            reader.close()
-        if nrows == 0:
-            return None
-        for c in stats_cols:
-            if isinstance(schema[c].dataType, StringType):
-                mins[c], maxs[c] = _truncate_string_stats(mins[c], maxs[c])
-        row: list = [
-            f"{data_dir}/{st.getPath().getName()}",
-            int(st.getLen()),
-            int(nrows),
-        ]
-        for c in stats_cols:
-            row += [mins[c], maxs[c]]
-        if null_stats:
-            row += [int(nulls[c]) for c in stats_cols]
-        row += [None, int(schema_id)]
-        return tuple(row)
-
-    return _footer_stats_map(read_one, statuses)
+            for c in stats_cols:
+                if isinstance(schema[c].dataType, StringType):
+                    mins[c], maxs[c] = _truncate_string_stats(
+                        mins[c], maxs[c]
+                    )
+            row: list = [f"{data_dir}/{name}", int(fi.size), int(md.num_rows)]
+            for c in stats_cols:
+                row += [mins[c], maxs[c]]
+            if null_stats:
+                row += [int(nulls[c]) for c in stats_cols]
+            row += [None, int(schema_id)]
+            rows.append(tuple(row))
+    except (OSError, pa.ArrowException):
+        return None  # the scan path is authoritative for this store
+    return rows
 
 
 def _file_stats(
@@ -2089,12 +1903,13 @@ def _file_stats(
     on both sides), and :func:`manifest_table_stats` folds the global
     nullCount for free.
 
-    r14: when every stats column's type is footer-decodable, the
-    min/max/null/row/byte stats come from the parquet FOOTERS instead
-    (:func:`_footer_file_stats`) — the commit re-reads ZERO data bytes;
-    the distributed scan below is the fallback for the remaining types
-    and for files missing chunk statistics. A Bloom-configured table
-    still scans for its filters, but reading ONLY the Bloom columns."""
+    When every stats column's type is footer-decodable, the
+    min/max/null/row/byte stats come from the parquet FOOTERS instead,
+    read through Arrow (:func:`_footer_file_stats`) — the commit re-reads
+    ZERO data bytes. The distributed scan below is the fallback for the
+    remaining types, for files missing chunk statistics, and for stores
+    Arrow cannot reach or read. A Bloom-configured table still scans for
+    its filters, but reading ONLY the Bloom columns."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -2160,10 +1975,7 @@ def _file_stats(
         # explode→bit_or→pack pipeline runs without its two exchanges
         # (1 job per Bloom column instead of an AQE stage cascade);
         # bigger commits keep the fully distributed build
-        bloom_fused = (
-            _MERGE_FUSE_MAX_BYTES > 0
-            and sum(int(r[1]) for r in footer_rows) <= _MERGE_FUSE_MAX_BYTES
-        )
+        bloom_fused = _fits_one_task(r[1] for r in footer_rows)
         if bloom_fused:
             raw = raw.coalesce(1)
         bmaps: dict = {}
@@ -2390,9 +2202,7 @@ def _expect_gate(
 #: files when validating unique() rules post-write — same bounded-driver
 #: contract as the DV sidecar read-back. Above it (or Arrow-unreachable)
 #: the check runs as one distributed read of the written files.
-_UNIQ_READBACK_MAX_BYTES = _env_int(
-    "TIBAME_UNIQ_READBACK_MAX_BYTES", 256 << 20
-)
+_UNIQ_READBACK_MAX_BYTES = 256 << 20
 
 
 def _validate_unique_written(spark, written: tuple, rules: list, fail) -> None:
@@ -2988,9 +2798,8 @@ def read_manifest_table(
 #: Max live files whose candidacy folds into the merge's bounds agg as
 #: per-file BETWEEN flags (one agg expr per file). Above it the broadcast
 #: semi-join path scales arbitrarily; the fold only exists to keep small
-#: tables' commits at one batch scan. Cluster deployments can raise or
-#: zero it (0 disables the fold).
-_CAND_FOLD_MAX_FILES = _env_int("TIBAME_MERGE_CAND_FOLD_MAX", 96)
+#: tables' commits at one batch scan.
+_CAND_FOLD_MAX_FILES = 96
 
 #: Max total candidate bytes for the single-file merge REWRITE FUSION:
 #: when a merge rewrites at most one file and its bytes fit a single
@@ -3001,8 +2810,18 @@ _CAND_FOLD_MAX_FILES = _env_int("TIBAME_MERGE_CAND_FOLD_MAX", 96)
 #: stage/job instead of a 3-stage AQE chain. Above the bound (or with
 #: >1 candidate file, where range-clustering the output needs its
 #: exchange) the distributed plan is the 100 TB-correct shape and is
-#: kept. 0 disables the fusion.
-_MERGE_FUSE_MAX_BYTES = _env_int("TIBAME_MERGE_FUSE_MAX_BYTES", 128 << 20)
+#: kept.
+_MERGE_FUSE_MAX_BYTES = 128 << 20
+
+
+def _fits_one_task(sizes) -> bool:
+    """The single-task fusion gate's byte test: True when every file
+    size in ``sizes`` is known and they sum to at most
+    :data:`_MERGE_FUSE_MAX_BYTES`. A NULL size cannot prove the input
+    small, so it fails closed to the distributed plan."""
+    sizes = list(sizes)
+    return None not in sizes and sum(sizes) <= _MERGE_FUSE_MAX_BYTES
+
 
 #: stat value types whose F.lit() comparison provably coerces like the
 #: semi-join's column-vs-column comparison (int family, string, bool,
@@ -3021,8 +2840,6 @@ def _cand_fold_files(base_path: str, head: int, key: str):
     import datetime
     import decimal
 
-    if _CAND_FOLD_MAX_FILES <= 0:
-        return None
     tbl = _manifest_arrow(base_path, head)
     if tbl is None or tbl.num_rows > _CAND_FOLD_MAX_FILES:
         return None
@@ -3382,18 +3199,13 @@ def _prepare_merge_edit_impl(
     # is one stage/one job instead of a 3-stage AQE chain per merge.
     # Multi-file rewrites keep the range exchange (clustering IS the
     # optimization at scale) and big candidates keep task parallelism.
-    cand_bytes = sum(int(f["bytes"] or 0) for f in cand_files)
     # one output file per touched file: byte-based sizing was tried and
     # REVERTED — fewer, wider files change which files later merges must
     # rewrite (wider min/max ranges swallow future candidates), which is
     # an observable layout change (evolution_cycle's live-era contract
     # tripped on it); the rewrite preserves the table's file granularity
     n_out = max(1, len(touched))
-    fused = (
-        n_out <= 1
-        and _MERGE_FUSE_MAX_BYTES > 0
-        and cand_bytes <= _MERGE_FUSE_MAX_BYTES
-    )
+    fused = n_out <= 1 and _fits_one_task(f["bytes"] for f in cand_files)
     if update_condition is not None:
         # WHEN MATCHED AND <condition> (Delta's conditional merge) as a
         # SOURCE PRE-FILTER, so the fixpoint-critical full-row upsert
@@ -4446,11 +4258,8 @@ def _prepare_delete_edit(
     # stage boundary) disappears and scan → semi-join → distinct →
     # sidecar write is a single job. Bigger candidate sets keep the
     # parallel distinct.
-    if (
-        len(cand_files) <= 1
-        and _MERGE_FUSE_MAX_BYTES > 0
-        and sum(int(f["bytes"] or 0) for f in cand_files)
-        <= _MERGE_FUSE_MAX_BYTES
+    if len(cand_files) <= 1 and _fits_one_task(
+        f["bytes"] for f in cand_files
     ):
         sidecar = present.coalesce(1).distinct()
         with _single_partition_ok(spark):
@@ -4681,12 +4490,7 @@ def update_manifest_table(
     # r15 single-file fusion (same gate as the merge rewrite): a
     # one-small-file candidate scan runs its path-distinct in ONE
     # partition — no exchange, no AQE stage boundary, one job
-    if (
-        len(files) <= 1
-        and _MERGE_FUSE_MAX_BYTES > 0
-        and sum(int(r["bytes"] or 0) for r in files)
-        <= _MERGE_FUSE_MAX_BYTES
-    ):
+    if len(files) <= 1 and _fits_one_task(r["bytes"] for r in files):
         raw = raw.coalesce(1)
     hit = {
         r["__path"]
