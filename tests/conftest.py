@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 
 import pytest
@@ -28,3 +30,35 @@ def spark_global(spark):
     """Alias so hypothesis-driven tests reuse the session fixture without
     triggering function-scoped teardown per example."""
     return spark
+
+
+_JOB_GROUPS = itertools.count()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` counts the Spark jobs launched
+    from this thread inside the block: they run under a fresh job group,
+    and ``jobs()`` returns how many the status tracker holds for it so
+    far — callable inside the block (e.g. from a wrapped engine function)
+    or after it."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"spark_jobs-{next(_JOB_GROUPS)}"
+
+        def jobs() -> int:
+            # job-start events reach the status store through the
+            # listener bus asynchronously: drain it before reading
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    return count

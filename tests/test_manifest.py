@@ -6767,3 +6767,356 @@ def test_commit_fs_create_new_has_one_winner_per_race(spark, tmp_path):
     with pytest.raises(FileExistsError):
         M._COMMIT_FS.create_new(fs, tag, b"{}")
     assert (tmp_path / "tags" / "t.json").read_bytes() == b'{"version": 3}'
+
+
+def test_data_skipping_translates_between_as_its_comparisons(spark, tmp_path):
+    """Spark parses ``c BETWEEN a AND b`` as the function
+    ``between(c, a, b)`` and rewrites it to ``c >= a AND c <= b``: the
+    prune compiler derives exactly that form's prune (cross-type and
+    NULL bounds included), NOT BETWEEN proves nothing, and a narrow
+    window opens one file."""
+    from tibame_project_spark.localdf import local_rows_df
+    from tibame_project_spark.sources.manifest import data_skipping_expr
+
+    base = str(tmp_path / "t")
+    rows = [(i, i * 10, f"u{i:02d}") for i in range(80)]
+    write_manifest_table(
+        spark, local_rows_df(spark, rows, "id long, price long, user string"),
+        base, stats_cols=["id", "price", "user"], cluster_by="id",
+        n_files=8, keep=10,
+    )
+
+    def skip(pred):
+        return data_skipping_expr(spark, base, pred)
+
+    for c, a, b in (
+        ("id", "10", "20"),
+        ("id", "30", "12"),
+        ("id", "NULL", "20"),
+        ("id", "'3'", "20"),
+        ("id", "1.5", "9"),
+        ("id", "5", "price"),
+        ("45", "id", "price"),
+        ("user", "'u10'", "'u19'"),
+    ):
+        between = skip(f"{c} BETWEEN {a} AND {b}")
+        assert between == skip(f"{c} >= {a} AND {c} <= {b}"), (c, a, b)
+    assert skip("id BETWEEN 10 AND 20") == "(max_id >= 10) AND (min_id <= 20)"
+    assert skip("id BETWEEN 10 AND 20 OR price < 50") == skip(
+        "(id >= 10 AND id <= 20) OR price < 50"
+    )
+    assert skip("id NOT BETWEEN 10 AND 20") is None
+    got = read_manifest_table(spark, base, where="id BETWEEN 3 AND 4")
+    assert len(got.inputFiles()) == 1
+    assert sorted(r["id"] for r in got.collect()) == [3, 4]
+
+
+@pytest.mark.parametrize(
+    "narrow, wide",
+    [("int", "bigint"), ("tinyint", "smallint"), ("tinyint", "bigint"),
+     ("smallint", "int")],
+)
+def test_dv_sidecars_from_before_and_after_a_widening_read_in_one_scan(
+    spark, tmp_path, narrow, wide
+):
+    """Live files whose deletion vectors were written before a key
+    widening (narrow ``__key``) and after it (wide ``__key``) read
+    through ONE sidecar scan with the current key type — for the table
+    read and for a delete whose candidates carry both generations —
+    with the vectorized parquet reader on and off."""
+    import pyarrow.parquet as pq
+
+    from tibame_project_spark.localdf import local_rows_df
+    from tibame_project_spark.sources.manifest import (
+        delete_manifest_table,
+        evolve_manifest_table,
+    )
+
+    base = str(tmp_path / "t")
+    model = {i: i * 3 for i in range(-40, 40)}
+    write_manifest_table(
+        spark, local_rows_df(spark, sorted(model.items()), f"id {narrow}, v long"),
+        base, stats_cols=["id"], cluster_by="id", n_files=4, keep=20,
+    )
+
+    def delete(keys, typ):
+        delete_manifest_table(
+            spark, local_rows_df(spark, [(k,) for k in keys], f"id {typ}"),
+            base, "id", keep=20,
+        )
+        for k in keys:
+            del model[k]
+
+    delete([-35, -10], narrow)  # the two low files: narrow sidecar
+    evolve_manifest_table(spark, base, widen={"id": wide}, keep=20)
+    delete([10, 30], wide)  # the two high files: wide sidecar
+    # candidates carrying one narrow and one wide sidecar generation
+    delete([-34, 11], wide)
+    dirs = {r["dv_path"] for r in manifest_stats(spark, base).collect()}
+    key_types = {
+        str(pq.read_table(f"{base}/{d}").schema.field("__key").type)
+        for d in dirs
+    }
+    assert None not in dirs and len(key_types) == 2, key_types
+
+    want = set(model.items())
+    window = {(k, v) for k, v in want if -36 <= k <= 12}
+    try:
+        for vectorized in ("true", "false"):
+            spark.conf.set(
+                "spark.sql.parquet.enableVectorizedReader", vectorized
+            )
+            got = read_manifest_table(spark, base)
+            assert dict(got.dtypes)["id"] == wide
+            assert {(r["id"], r["v"]) for r in got.collect()} == want
+            pruned = read_manifest_table(
+                spark, base, where="id >= -36 AND id <= 12"
+            )
+            assert {(r["id"], r["v"]) for r in pruned.collect()} == window
+    finally:
+        spark.conf.unset("spark.sql.parquet.enableVectorizedReader")
+
+
+def test_local_batch_guards_refuse_on_the_driver_and_publish_nothing(
+    spark, tmp_path, spark_jobs
+):
+    """NULL and duplicate keys in a driver-local batch refuse with the
+    aggregate path's exact messages, without a Spark job, and publish
+    nothing; a distributed batch refuses the same way."""
+    from tibame_project_spark.localdf import local_rows_df
+    from tibame_project_spark.sources.manifest import delete_manifest_table
+
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(20)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=2, keep=10,
+    )
+    null_msg = (
+        "merge batch contains NULL 'id' keys; manifest merge requires "
+        "non-null keys"
+    )
+    dup_msg = r"merge batch carries duplicate 'id' keys \(3 rows, 2 distinct\)"
+    del_msg = "delete batch contains NULL 'id' keys; a NULL never lands"
+    def local(rows, schema):
+        return local_rows_df(spark, rows, schema)
+
+    for make in (local, spark.createDataFrame):
+        with spark_jobs() as jobs:
+            with pytest.raises(ValueError, match=null_msg):
+                merge_manifest_table(
+                    spark, make([(1, 5), (None, 6)], "id long, v long"),
+                    base, "id",
+                )
+            with pytest.raises(ValueError, match=dup_msg):
+                merge_manifest_table(
+                    spark, make([(1, 5), (1, 6), (2, 7)], "id long, v long"),
+                    base, "id",
+                )
+            with pytest.raises(ValueError, match=del_msg):
+                delete_manifest_table(
+                    spark, make([(None,), (3,)], "id long"), base, "id"
+                )
+            if make is local:
+                assert jobs() == 0
+    assert read_manifest_version(spark, base) == 0
+    assert _content(spark, base) == {(i, i) for i in range(20)}
+
+
+@pytest.mark.parametrize(
+    "table_type, batch_type",
+    [("bigint", "bigint"), ("bigint", "int"), ("string", "string"),
+     ("date", "date"), ("decimal(12,2)", "decimal(12,2)")],
+)
+def test_driver_bounds_match_the_aggregate(
+    spark, tmp_path, spark_jobs, table_type, batch_type
+):
+    """On seeded random local batches (NULLs, duplicates, keys inside,
+    between and outside the files' ranges) the driver-side bounds,
+    counts and candidate fold equal the Spark aggregate's over the same
+    rows, and cost no job."""
+    import datetime
+    import decimal
+    import random
+
+    from pyspark.sql.types import StructType
+
+    from tibame_project_spark.localdf import local_rows_df
+    from tibame_project_spark.sources import manifest as M
+
+    to_key = {
+        "bigint": int,
+        "int": int,
+        # code points above U+FFFF order after U+FF5E in UTF-8 (and in
+        # Python), but before it in UTF-16
+        "string": lambda i: f"k{i:+04d}" + "é～😀"[i % 3],
+        "date": lambda i: datetime.date(2020, 1, 1) + datetime.timedelta(i),
+        "decimal(12,2)": lambda i: decimal.Decimal(i) / 4,
+    }
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark,
+        local_rows_df(
+            spark, [(to_key[table_type](i), i) for i in range(0, 400, 2)],
+            f"k {table_type}, v long",
+        ),
+        base, stats_cols=["k"], cluster_by="k", n_files=6, keep=10,
+    )
+    head = read_manifest_version(spark, base)
+    fold = M._cand_fold_files(base, head, "k")
+    assert fold is not None and len(fold) == 6
+    key_type = StructType.fromJson(M._meta(spark, base, head)["schema"])[
+        "k"
+    ].dataType
+    rng = random.Random(f"driver-bounds/{table_type}/{batch_type}")
+    for n in (0, 1, 3, 40, 40, 40):
+        # a placeholder row filtered away keeps n=0 typed like the rest
+        rows = [(None, -1)] + [
+            (None if rng.random() < 0.1
+             else to_key[batch_type](rng.randrange(-30, 430)), j)
+            for j in range(n)
+        ]
+        schema = f"k {batch_type}, j long"
+        local = local_rows_df(spark, rows, schema).where("j >= 0")
+        with spark_jobs() as jobs:
+            got = M._batch_bounds(spark, local, "k", key_type, fold, distinct=True)
+            assert jobs() == 0
+        want = M._batch_bounds(
+            spark, spark.createDataFrame(rows, schema).where("j >= 0"), "k",
+            key_type, fold, distinct=True,
+        )
+        # the aggregate's max over no non-NULL key is NULL, not false
+        want = {
+            k: bool(v) if k.startswith("__cand") else v
+            for k, v in want.items()
+        }
+        assert got == want, rows
+
+
+def test_float_collated_and_distributed_batches_keep_the_aggregate(
+    spark, tmp_path, monkeypatch
+):
+    """Batches the driver cannot fold exactly take the Spark aggregate
+    and keep its semantics: a double key (NaN is one distinct value to
+    Spark, two to a Python set), a UTF8_LCASE key ('a' and 'A' are one
+    key to it) and a parquet-read (distributed) batch."""
+    from pyspark.sql.types import StringType
+
+    from tibame_project_spark.localdf import local_rows_df
+    from tibame_project_spark.sources import manifest as M
+
+    aggs = []
+    real = M._no_aqe
+
+    def spy(s):
+        aggs.append(1)
+        return real(s)
+
+    monkeypatch.setattr(M, "_no_aqe", spy)
+
+    base = str(tmp_path / "d")
+    write_manifest_table(
+        spark,
+        local_rows_df(spark, [(i + 0.5, i) for i in range(20)], "k double, v long"),
+        base, stats_cols=["k"], cluster_by="k", n_files=2, keep=10,
+    )
+    merge_manifest_table(
+        spark,
+        local_rows_df(spark, [(3.5, 30), (40.5, 40)], "k double, v long"),
+        base, "k", keep=10,
+    )
+    assert len(aggs) == 1
+    got = {(r["k"], r["v"]) for r in read_manifest_table(spark, base).collect()}
+    assert got == {(i + 0.5, i) for i in range(20) if i != 3} | {
+        (3.5, 30), (40.5, 40)
+    }
+    # local_rows_df turns NaN into NULL: project the NaN in instead
+    nans = local_rows_df(spark, [(1, 1), (2, 2)], "k long, v long").select(
+        F.lit(float("nan")).alias("k"), "v"
+    )
+    assert M._is_local_relation(nans)
+    with pytest.raises(ValueError, match=r"duplicate 'k' keys \(2 rows, 1 distinct\)"):
+        merge_manifest_table(spark, nans, base, "k")
+
+    base = str(tmp_path / "s")
+    write_manifest_table(
+        spark, local_rows_df(spark, [("a", 1), ("b", 2)], "k string, v long"),
+        base, stats_cols=["k"], keep=10,
+    )
+    lcase = local_rows_df(spark, [("a", 1), ("A", 2)], "k string, v long").select(
+        F.col("k").cast(StringType("UTF8_LCASE")).alias("k"), "v"
+    )
+    assert M._is_local_relation(lcase)
+    with pytest.raises(ValueError, match=r"duplicate 'k' keys \(2 rows, 1 distinct\)"):
+        merge_manifest_table(spark, lcase, base, "k")
+
+    base = str(tmp_path / "p")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(20)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=2, keep=10,
+    )
+    _mk(spark, [(4, 44), (25, 25)]).write.parquet(str(tmp_path / "batch"))
+    batch = spark.read.parquet(str(tmp_path / "batch"))
+    assert not M._is_local_relation(batch)
+    n_aggs = len(aggs)
+    merge_manifest_table(spark, batch, base, "id", keep=10)
+    assert len(aggs) == n_aggs + 1
+    assert _content(spark, base) == {
+        (i, i) for i in range(20) if i != 4
+    } | {(4, 44), (25, 25)}
+
+
+def test_local_fold_merge_runs_no_job_before_its_rewrite(
+    spark, tmp_path, spark_jobs, monkeypatch
+):
+    """A driver-local batch merged into a small table (candidate fold)
+    over a deletion-vectored candidate launches its first Spark job in
+    the rewrite write: bounds, guards, candidacy and the DV sidecar
+    read are all planned without one."""
+    from tibame_project_spark.sources import manifest as M
+    from tibame_project_spark.sources.manifest import delete_manifest_table
+
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(40)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=4, keep=10,
+    )
+    delete_manifest_table(spark, _mk(spark, [(5, 0)]).select("id"), base, "id")
+    assert M._cand_fold_files(base, 1, "id") is not None
+    seen = []
+    real = M._write_data
+
+    def spy(*a, **kw):
+        seen.append(jobs())
+        return real(*a, **kw)
+
+    monkeypatch.setattr(M, "_write_data", spy)
+    with spark_jobs() as jobs:
+        merge_manifest_table(spark, _mk(spark, [(3, 33), (6, 66), (41, 41)]), base, "id")
+    assert seen == [0]
+    want = {(i, i) for i in range(40) if i not in (3, 5, 6)}
+    assert _content(spark, base) == want | {(3, 33), (6, 66), (41, 41)}
+
+
+def test_building_a_pruned_read_over_a_dv_table_runs_no_job(
+    spark, tmp_path, spark_jobs
+):
+    """``read_manifest_table(where=...)`` over files with deletion
+    vectors builds its DataFrame without a Spark job: the manifest is
+    pruned on the driver and the sidecars are read with a known
+    schema, so no schema inference runs."""
+    from tibame_project_spark.sources.manifest import delete_manifest_table
+
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(40)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=4, keep=10,
+    )
+    delete_manifest_table(
+        spark, _mk(spark, [(5, 0), (15, 0), (25, 0)]).select("id"), base, "id"
+    )
+    with spark_jobs() as jobs:
+        df = read_manifest_table(spark, base, where="id >= 3 AND id <= 25")
+        assert jobs() == 0
+    assert sorted(r["id"] for r in df.collect()) == [
+        i for i in range(3, 26) if i not in (5, 15, 25)
+    ]

@@ -106,6 +106,7 @@ distinct keys.
 
 from __future__ import annotations
 
+import bisect
 import contextlib
 import json
 import math
@@ -117,7 +118,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from tibame_project_spark.localdf import local_rows_df
-from pyspark.sql.types import StringType, StructType
+from pyspark.sql.types import (
+    BooleanType, ByteType, DateType, DecimalType, IntegerType, LongType,
+    ShortType, StringType, StructField, StructType,
+)
 
 from tibame_project_spark.sources.writers import (
     _COMMIT_PREFIX,
@@ -806,12 +810,17 @@ def _registry(meta: dict) -> tuple[dict[int, list[dict]], int]:
 def _projection(phys_fields: list[dict], cur_fields: list[dict]) -> list:
     """Columns lifting a file written under ``phys_fields`` into the
     current schema: match by field id → rename + widen-cast; ids absent
-    from the file (added after it was written) read as NULL."""
+    from the file (added after it was written) read as NULL. A field
+    whose name and type did not change is selected by name: a cast and
+    alias would cost py4j round-trips per column and read."""
     by_id = {f["id"]: f for f in phys_fields}
     cols = []
     for f in cur_fields:
-        t = _type_from_json(f["type"])
         p = by_id.get(f["id"])
+        if p is not None and (p["name"], p["type"]) == (f["name"], f["type"]):
+            cols.append(f["name"])
+            continue
+        t = _type_from_json(f["type"])
         if p is None:
             cols.append(F.lit(None).cast(t).alias(f["name"]))
         else:
@@ -869,21 +878,16 @@ def _trail(p: str) -> str:
 def _read_dv_sidecars(
     spark: SparkSession, base_path: str, dirs: list[str], key_type
 ) -> DataFrame:
-    """Union of DV sidecar dirs with ``__key`` cast to the CURRENT key
-    type — sidecars written before a widening hold the old type, and each
-    dir is read separately so parquet schema merging never has to
-    reconcile int32 vs int64 across generations."""
-    parts = [
-        spark.read.parquet(_data_path(base_path, d)).select(
-            F.col("__path").alias("__dvp"),
-            F.col("__key").cast(key_type).alias("__key"),
-        )
-        for d in dirs
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """All DV sidecar dirs as ONE scan with a known schema (no inference
+    job): the parquet reader itself promotes the ``__key`` of sidecars
+    written before a widening (every :data:`_WIDEN_OK` pair, vectorized
+    or not) to the CURRENT ``key_type``."""
+    schema = StructType(
+        [StructField("__path", StringType()), StructField("__key", key_type)]
+    )
+    return spark.read.schema(schema).parquet(
+        *[_data_path(base_path, d) for d in dirs]
+    ).select(F.col("__path").alias("__dvp"), "__key")
 
 
 def _read_live(
@@ -897,8 +901,10 @@ def _read_live(
     each group reads with its physical schema then projects by field id
     (rename + widen-cast + NULL-fill — see :func:`_projection`); files
     WITH a deletion vector also read their ``_metadata`` path and one
-    anti-join against the referenced sidecars drops condemned keys —
-    broadcast-hinted only while the sidecars stay under
+    anti-join against the referenced sidecars (one known-schema scan of
+    every sidecar dir, :func:`_read_dv_sidecars` — building the frame
+    launches no job) drops condemned keys — broadcast-hinted only while
+    the sidecars stay under
     :data:`_DV_BROADCAST_MAX_BYTES` (sizes from the filesystem listing,
     driver metadata; above the bound AQE picks the join). ``files`` is a
     list of manifest rows/dicts with ``path``, ``dv_path``, and
@@ -1740,8 +1746,11 @@ def _no_aqe(spark):
     partial → one single-partition exchange → final: AQE has nothing to
     adapt (no partition counts to coalesce, no joins to re-plan) but
     materializes each stage as its own job — 3-4 scheduler round-trips
-    where a non-adaptive run is ONE. Commit-path bounds/guard aggs are
-    per-commit, so the saved round-trips multiply."""
+    where a non-adaptive run is ONE. Its one user is the merge/delete
+    bounds/guard agg of :func:`_batch_bounds`, which runs only for
+    batches the driver cannot fold itself (distributed batches, or
+    float/timestamp/collated keys); it is per-commit, so the saved
+    round-trips multiply."""
     return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
 
 
@@ -2877,6 +2886,96 @@ def _cand_fold_files(base_path: str, head: int, key: str):
     return out
 
 
+def _driver_key_class(dt, key_type) -> type | None:
+    """The Python class a batch key of Spark type ``dt`` collects as,
+    when Python orders, compares and deduplicates those values exactly
+    as the bounds aggregate does; else None. Integral, boolean, date and
+    decimal keys qualify (a decimal only at the table's own key type, so
+    no comparison has to widen it), strings only under the default
+    UTF8_BINARY collation (code point order IS UTF-8 byte order). Float
+    keys (NaN, -0.0), timestamps (session time zone) and collated
+    strings keep the aggregate."""
+    import datetime
+    import decimal
+
+    if isinstance(dt, (ByteType, ShortType, IntegerType, LongType)):
+        return int
+    if isinstance(dt, BooleanType):
+        return bool
+    if isinstance(dt, DateType):
+        return datetime.date
+    if isinstance(dt, DecimalType) and dt == key_type:
+        return decimal.Decimal
+    if isinstance(dt, StringType) and dt.collation == "UTF8_BINARY":
+        return str
+    return None
+
+
+def _batch_bounds(
+    spark: SparkSession,
+    batch: DataFrame,
+    key: str,
+    key_type,
+    fold_files,
+    *,
+    distinct: bool,
+) -> dict:
+    """The merge/delete guard row of a change batch: key bounds
+    ``lo``/``hi``, row count ``n``, non-NULL key count ``nk``, distinct
+    key count ``ndk`` (aggregated only when ``distinct``; the delete
+    never reads it), and per fold file (:func:`_cand_fold_files`)
+    ``__cand{i}`` — does any batch key land in that file's range.
+
+    A DRIVER-LOCAL batch whose key class passes :func:`_driver_key_class`
+    (and whose fold literals are of that same class) is computed in
+    Python from its collected key column: collecting a LocalRelation
+    launches no job. NULL keys count in ``n`` only; with no non-NULL key
+    the bounds are NULL and no file is a candidate — the aggregate's
+    semantics. Everything else runs the one scalar aggregate."""
+    fold_files = fold_files or ()
+    cls = None
+    if _is_local_relation(batch):
+        col = batch.select(key)
+        cls = _driver_key_class(col.schema.fields[0].dataType, key_type)
+    if cls is not None and all(
+        type(f[b]) is cls for f in fold_files for b in ("__lo", "__hi")
+    ):
+        vals = [r[0] for r in col.collect()]
+        keys = sorted(v for v in vals if v is not None)
+        out = {
+            "lo": keys[0] if keys else None,
+            "hi": keys[-1] if keys else None,
+            "n": len(vals),
+            "nk": len(keys),
+            "ndk": len(set(keys)),
+        }
+        for i, f in enumerate(fold_files):
+            j = bisect.bisect_left(keys, f["__lo"])
+            out[f"__cand{i}"] = j < len(keys) and keys[j] <= f["__hi"]
+        return out
+    aggs = [
+        F.min(key).alias("lo"),
+        F.max(key).alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+        F.count(key).alias("nk"),
+    ]
+    if distinct:
+        aggs.append(F.countDistinct(key).alias("ndk"))
+    aggs += [
+        F.max(F.col(key).between(F.lit(f["__lo"]), F.lit(f["__hi"]))).alias(
+            f"__cand{i}"
+        )
+        for i, f in enumerate(fold_files)
+    ]
+    # a driver-local batch aggregates in ONE partition: no exchange, so
+    # AQE has no stage boundaries and the whole guard scan is a single
+    # job instead of one per shuffle stage; distributed batches keep
+    # their parallel partial aggregation
+    agg_src = batch.coalesce(1) if _is_local_relation(batch) else batch
+    with _no_aqe(spark):
+        return agg_src.agg(*aggs).first().asDict()
+
+
 def merge_manifest_table(
     spark: SparkSession,
     source: DataFrame,
@@ -2989,8 +3088,8 @@ def _prepare_merge_edit(
     stats_cols, dv_key, bloom, schemas, schema_id}``. Shared by the
     immediate :func:`merge_manifest_table` and the staged
     :func:`stage_merge_manifest_table` (write-audit-publish)."""
-    # the batch is evaluated up to three times below (bounds agg,
-    # key broadcast, merge rewrite — four with update_condition's
+    # a distributed batch is evaluated up to three times below (bounds
+    # agg, key broadcast, merge rewrite — four with update_condition's
     # target join): persist it ONCE so a batch derived from an
     # expensive upstream pipeline (a CDC join, a staged read) is not
     # re-computed per evaluation — the first bounds agg materializes
@@ -2998,7 +3097,8 @@ def _prepare_merge_edit(
     # CALLER already persisted is left alone (persist would no-op and
     # the unpersist would silently drop their cache). A batch that is
     # already a DRIVER-LOCAL relation (optimizer-folded LocalRelation —
-    # the common CDC-micro-batch shape) is never persisted: each
+    # the common CDC-micro-batch shape) is never persisted: its bounds
+    # usually come from a zero-job collect of its key column and each
     # re-evaluation replays in-memory rows, while the persist would
     # cost a materialization job per commit.
     ours = not source.is_cached and not _is_local_relation(source)
@@ -3043,39 +3143,21 @@ def _prepare_merge_edit_impl(
             f"merge key {key!r} must be a declared stats column ({stats_cols}) "
             "— file skipping needs its min/max"
         )
-    # one batch scan for bounds AND the NULL-key guard (count(*) vs
-    # count(key)) AND the key-uniqueness guard (count vs count distinct)
-    # — not a separate limit(1) job per commit.
-    # r14: per-file CANDIDACY rides the SAME scan when the live file set
-    # is small enough to fold — one max(key BETWEEN min_i AND max_i)
-    # flag per live file, exactly the semi-join's "does any batch key
-    # land in this file's range" — so the separate broadcast-build +
-    # semi-join jobs disappear from the commit; big tables (or stores
-    # the driver-side Arrow reader can't reach, or stat types whose
-    # literal coercion isn't provably identical to the join's) keep the
-    # scale-proof broadcast semi-join below.
+    # one pass over the batch for bounds AND the NULL-key guard
+    # (count(*) vs count(key)) AND the key-uniqueness guard (count vs
+    # count distinct) — on the driver for a local batch, else one scan.
+    # r14: per-file CANDIDACY rides the SAME pass when the live file set
+    # is small enough to fold — one "does any batch key land in this
+    # file's range" flag per live file, exactly the semi-join's — so the
+    # separate broadcast-build + semi-join jobs disappear from the
+    # commit; big tables (or stores the driver-side Arrow reader can't
+    # reach, or stat types whose literal coercion isn't provably
+    # identical to the join's) keep the scale-proof broadcast semi-join
+    # below.
     fold_files = _cand_fold_files(base_path, head, key)
-    aggs = [
-        F.min(key).alias("lo"),
-        F.max(key).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-        F.count(key).alias("nk"),
-        F.countDistinct(key).alias("ndk"),
-    ]
-    if fold_files is not None:
-        aggs += [
-            F.max(
-                F.col(key).between(F.lit(f["__lo"]), F.lit(f["__hi"]))
-            ).alias(f"__cand{i}")
-            for i, f in enumerate(fold_files)
-        ]
-    # a driver-local batch aggregates in ONE partition: no exchange, so
-    # AQE has no stage boundaries and the whole guard scan is a single
-    # job instead of one per shuffle stage; distributed batches keep
-    # their parallel partial aggregation
-    agg_src = source.coalesce(1) if _is_local_relation(source) else source
-    with _no_aqe(spark):
-        bounds = agg_src.agg(*aggs).first()
+    bounds = _batch_bounds(
+        spark, source, key, schema[key].dataType, fold_files, distinct=True
+    )
     if bounds["n"] != bounds["nk"]:
         raise ValueError(
             f"merge batch contains NULL {key!r} keys; manifest merge requires "
@@ -3851,6 +3933,22 @@ def _skip_next_literal_char(o: int) -> str | None:
     return None
 
 
+def _skip_cmp(kind: str, kids, stats, types) -> str | None:
+    """The min/max prune of one ``<``/``<=``/``>``/``>=`` comparison
+    between a stats column and a type-compatible non-NULL literal
+    (either side; a literal on the left flips the operator), else
+    None."""
+    hit = _skip_attr_lit(kids)
+    if hit is None:
+        return None
+    name, lit, flipped = hit
+    c = stats.get(name.casefold())
+    if c is None or not _skip_order_compatible(types.get(name.casefold()), lit):
+        return None
+    op = _SKIP_FLIP[kind] if flipped else kind
+    return _SKIP_CMP[op].format(c=c, v=lit.sql())
+
+
 def _skip_walk(spark, base_path, version, node, stats, null_stats, bloom_cols, types):
     """One prune conjunct for ``node``'s subtree, or None when the
     subtree proves nothing about file-level stats (conservative: no
@@ -3902,17 +4000,22 @@ def _skip_walk(spark, base_path, version, node, stats, null_stats, bloom_cols, t
                 pass  # the range tier alone is still a safe superset
         return " AND ".join(f"({p})" for p in parts) if parts else None
     if kind in _SKIP_CMP and len(kids) == 2:
-        hit = _skip_attr_lit(kids)
-        if hit is None:
-            return None
-        name, lit, flipped = hit
-        c = stats.get(name.casefold())
-        if c is None or not _skip_order_compatible(
-            types.get(name.casefold()), lit
-        ):
-            return None
-        op = _SKIP_FLIP[kind] if flipped else kind
-        return _SKIP_CMP[op].format(c=c, v=lit.sql())
+        return _skip_cmp(kind, kids, stats, types)
+    if (
+        kind == "UnresolvedFunction"
+        and len(kids) == 3
+        and node.nameParts().mkString(".").casefold() == "between"
+    ):
+        # Spark parses `c BETWEEN a AND b` as between(c, a, b) and
+        # rewrites it to `c >= a AND c <= b`: translate exactly that
+        # (NOT BETWEEN is a Not above this node — no constraint)
+        parts = [
+            _skip_cmp(k, [kids[0], b], stats, types)
+            for k, b in (("GreaterThanOrEqual", kids[1]),
+                         ("LessThanOrEqual", kids[2]))
+        ]
+        parts = [p for p in parts if p is not None]
+        return " AND ".join(f"({p})" for p in parts) if parts else None
     if kind == "In" and len(kids) >= 2:
         if kids[0].getClass().getSimpleName() != "UnresolvedAttribute":
             return None
@@ -4014,11 +4117,11 @@ def data_skipping_expr(
     """Derive a ``prune=`` expression FROM a row predicate — Delta's
     transparent data skipping as an explicit verb. Walks the Catalyst
     parse tree of ``predicate`` and translates every part it can prove
-    file-level: comparisons and IN-lists against stats columns become
-    min/max range checks (plus per-era Bloom probes for equality/IN on
-    Bloom columns), IS [NOT] NULL becomes a null-count check on
-    ``null_stats`` tables, AND keeps any translatable side, OR requires
-    both. Everything else — NOT, functions, casts, column-to-column,
+    file-level: comparisons, BETWEEN and IN-lists against stats columns
+    become min/max range checks (plus per-era Bloom probes for
+    equality/IN on Bloom columns), IS [NOT] NULL becomes a null-count
+    check on ``null_stats`` tables, AND keeps any translatable side, OR
+    requires both. Everything else — NOT, functions, casts, column-to-column,
     and any literal whose TYPE FAMILY differs from the column's
     (cross-family predicates coerce numerically row-side but would
     compare raw stats prune-side: ``string_col > 9`` matches '10'
@@ -4139,31 +4242,17 @@ def _prepare_delete_edit(
             f"delete); got {key!r}"
         )
     kdist = keys.select(F.col(key).alias("__key")).distinct()
-    # one batch scan for bounds AND the NULL-key guard — min/max and the
-    # count-vs-count(key) NULL check are distinct-insensitive, so the
-    # agg runs on the RAW batch (no pre-distinct exchange). Per-file
-    # CANDIDACY rides the same scan when the live file set is small
+    # one pass over the batch for bounds AND the NULL-key guard — min/max
+    # and the count-vs-count(key) NULL check are distinct-insensitive,
+    # so it runs on the RAW batch (no pre-distinct exchange). Per-file
+    # CANDIDACY rides the same pass when the live file set is small
     # enough to fold (exactly the merge's candidate fold): the separate
     # broadcast-build + semi-join jobs disappear from the delete. A
-    # driver-local batch aggregates in ONE partition, so the whole
-    # guard scan is a single job.
+    # driver-local batch is folded on the driver with zero jobs.
     fold_files = _cand_fold_files(base_path, head, key)
-    aggs = [
-        F.min(key).alias("lo"),
-        F.max(key).alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-        F.count(key).alias("nk"),
-    ]
-    if fold_files is not None:
-        aggs += [
-            F.max(
-                F.col(key).between(F.lit(f["__lo"]), F.lit(f["__hi"]))
-            ).alias(f"__cand{i}")
-            for i, f in enumerate(fold_files)
-        ]
-    agg_src = keys.coalesce(1) if _is_local_relation(keys) else keys
-    with _no_aqe(spark):
-        bounds = agg_src.agg(*aggs).first()
+    bounds = _batch_bounds(
+        spark, keys, key, schema[key].dataType, fold_files, distinct=False
+    )
     if bounds["n"] != bounds["nk"]:
         raise ValueError(
             f"delete batch contains NULL {key!r} keys; a NULL never lands "
@@ -4238,8 +4327,9 @@ def _prepare_delete_edit(
     )
     # union in the touched files' EXISTING vectors so each file's sidecar
     # generation is complete on its own (readers never chase chains);
-    # per-dir reads + cast keep pre-widening sidecars unionable
-    # sidecars and _metadata extraction both speak the TRAILING form
+    # the one known-schema sidecar scan reads pre-widening generations
+    # promoted to the current key type; sidecars and _metadata
+    # extraction both speak the TRAILING form
     # (== the manifest path on a normal table; a clone's absolute source
     # paths reduce to it), so all comparisons below go through _trail
     old_dirs = sorted({r["dv_path"] for r in cand_files if r["dv_path"]})
