@@ -4,6 +4,7 @@ streaming windowed/session aggregation semantics."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -34,6 +35,59 @@ def test_table_name_env_suffix(monkeypatch):
     assert catalog.table_name("dim", "places", env="prod") == "dim.places"
     with pytest.raises(ValueError):
         catalog.table_name("gold", "x")
+
+
+def _write_parquet(path, columns: dict) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), str(path))
+
+
+def test_load_of_an_unchanged_file_runs_no_job(spark, spark_jobs, tmp_path):
+    """The second load of an unchanged file reads with the memoized schema:
+    no schema-inference job, same rows."""
+    _write_parquet(tmp_path / "t.parquet", {"id": [1, 2, 3], "s": ["a", "b", "c"]})
+    first = catalog.load(spark, str(tmp_path), "t")
+    with spark_jobs() as jobs:
+        again = catalog.load(spark, str(tmp_path), "t")
+    assert jobs() == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+
+def test_load_schema_memo_follows_file_and_conf_changes(spark, spark_jobs, tmp_path):
+    """A file rewritten at the same path with another schema, or a change
+    of a conf that steers inference, is read with the new schema; a
+    directory path is never memoized and infers on every load."""
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, {"id": [1, 2], "b": [b"x", b"y"]})
+    assert catalog.load(spark, str(tmp_path), "t").dtypes == [
+        ("id", "bigint"), ("b", "binary")
+    ]
+    _write_parquet(path, {"id": [1, 2], "d": [0.5, 1.5], "b": [b"x", b"y"]})
+    df = catalog.load(spark, str(tmp_path), "t")
+    assert df.dtypes == [("id", "bigint"), ("d", "double"), ("b", "binary")]
+    assert sorted(r.d for r in df.collect()) == [0.5, 1.5]
+
+    spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+    try:
+        assert dict(catalog.load(spark, str(tmp_path), "t").dtypes)["b"] == "string"
+    finally:
+        spark.conf.unset("spark.sql.parquet.binaryAsString")
+    assert dict(catalog.load(spark, str(tmp_path), "t").dtypes)["b"] == "binary"
+
+    table_dir = tmp_path / "dir.parquet"
+    table_dir.mkdir()
+    _write_parquet(table_dir / "part-0.parquet", {"id": [1]})
+    catalog.load(spark, str(tmp_path), "dir")
+    (table_dir / "part-0.parquet").unlink()
+    _write_parquet(table_dir / "part-0.parquet", {"id": [1], "s": ["a"]})
+    with spark_jobs() as jobs:
+        df = catalog.load(spark, str(tmp_path), "dir")
+    assert jobs() == 1
+    assert df.dtypes == [("id", "bigint"), ("s", "string")]
+    assert os.path.realpath(table_dir) not in catalog._SCHEMA_MEMO
 
 
 def test_ctas_drop_rename_lifecycle(spark):

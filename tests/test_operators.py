@@ -1604,6 +1604,27 @@ def test_sparse_cosine_df_cap_prunes_hot_tokens(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_sparse_cosine_null_ids_are_not_ranked_but_count(spark):
+    """A NULL doc or query id is never ranked, as in the oracle's id-key
+    joins; the NULL-id doc still counts in the document frequency and is
+    the only posting of "fig", which still counts in the query norm."""
+    from tibame_project_spark.operators.similarity import sparse_cosine_topk
+
+    docs = spark.createDataFrame(
+        [(None, "apple fig"), (30, "apple"), (31, "banana")],
+        "doc_id long, text string",
+    )
+    queries = spark.createDataFrame(
+        [(1, "apple fig"), (None, "apple")], "query_id long, text string"
+    )
+    for cap in (None, 0.7):
+        rows = [tuple(r) for r in sparse_cosine_topk(
+            docs, queries, k=3, df_frac_cap=cap
+        ).collect()]
+        # q1 = {apple, fig}: cos(doc30, q1) = 1 / (1 · √2)
+        assert rows == [(1, 30, 1, 0.7071)], (cap, rows)
+
+
 # ---------------------------------------------------------------------------
 # layout-optimized (sorted) parquet write → row-group data skipping
 

@@ -430,14 +430,59 @@ def test_curriculum_tier_major_no_global_sort(spark):
 def test_sparse_topk_candidates_via_token_join(spark):
     """The inverted index IS the join: candidate pairs come from a
     broadcast hash join on the token, never a cross product, and the dot
-    aggregate partial-aggregates map-side before its (query, doc) exchange."""
+    aggregate reuses the doc-key partitioning of the Σtf² window, so no
+    exchange sits under it. Five shuffles in all, each named by its key:
+    query-postings count, doc-count scalar, token windows (df + the
+    representative posting), doc-key window, per-query window; plus the
+    two broadcasts (doc count, query postings)."""
+    import re
+
     plan = _plan(entry.q_sparse_topk(spark, SF_DIR))
     assert "CartesianProduct" not in plan
     # (a BroadcastNestedLoopJoin IS present — the 1-row doc-count scalar of
     # the df cap; the corpus-sized relations all join hash-partitioned)
-    import re
+    assert re.search(r"BroadcastHashJoin \[token#\d+\], \[token#\d+\], Inner", plan)
+    assert "SortMergeJoin" not in plan
+    lines = plan.splitlines()
+    dot_aggs = [
+        i for i, line in enumerate(lines)
+        if re.search(r"HashAggregate\(keys=\[__qid#\d+L?, __did#", line)
+    ]
+    assert len(dot_aggs) == 2  # final over partial
+    for i in dot_aggs:
+        assert "Exchange" not in lines[i + 1], lines[i + 1]
+    shuffles = sorted(
+        re.sub(r", \d+\)$", ")", re.sub(r"#\d+L?", "", p))
+        for p in re.findall(r"(?<!Broadcast)Exchange (\w+(?:\([^)]*\))?)", plan)
+    )
+    assert shuffles == [
+        "SinglePartition",
+        "hashpartitioning(__did)",
+        "hashpartitioning(__qid)",
+        "hashpartitioning(query_id, token)",
+        "hashpartitioning(token)",
+    ], shuffles
+    assert plan.count("BroadcastExchange") == 2
 
-    assert re.search(r"hashpartitioning\(__qid#\d+L?, __did#", plan)  # dot agg
+
+def test_warm_sparse_topk_runs_at_most_eight_jobs(spark, spark_jobs):
+    """A warm ``sparse_topk`` (postings checkpoint built, documents schema
+    memoized) runs ≤ 8 Spark jobs: the query-postings count, the doc-count
+    aggregate and its broadcast, the query-postings broadcast, then one per
+    corpus-side stage (postings → token exchange, token windows → doc-key
+    exchange, dot aggregate → query exchange, query window → sink). The
+    plan with a (query, doc) dot exchange, norm aggregates joined back and
+    a schema-inference job at every load ran 15."""
+
+    def run():
+        entry.q_sparse_topk(spark, SF_DIR).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+    run()
+    with spark_jobs() as jobs:
+        run()
+    assert jobs() <= 8, jobs()
 
 
 def test_pagerank_rank_join_broadcasts_not_cartesian(spark):

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -538,6 +538,20 @@ def test_global_sort_index_permutation_for_arbitrary_ids(
         max_size=3,
     ),
     st.one_of(st.none(), st.floats(min_value=0.1, max_value=1.0)),
+)
+# the cases where the query norm could drift from the replay's:
+# a query token absent from the corpus, without and with a cap
+@example(docs=[["apple", "banana"], ["banana", "cherry"]], qs=[["apple", "fig", "fig"]], cap=None)
+@example(docs=[["apple", "banana"], ["banana", "cherry"]], qs=[["apple", "fig", "fig"]], cap=1.0)
+# empty docs count in |docs| but have no postings: apple (df 2) survives
+# 0.5 · 4, not 0.5 · 2
+@example(docs=[[], [], ["apple"], ["apple", "banana"]], qs=[["apple", "banana"]], cap=0.5)
+@example(docs=[[], []], qs=[["apple"]], cap=0.5)
+# the cap prunes every shared token of the first query, one of the second's
+@example(
+    docs=[["apple", "banana"], ["apple", "banana"], ["cherry"]],
+    qs=[["apple", "banana"], ["banana", "cherry", "cherry"]],
+    cap=0.5,
 )
 def test_sparse_cosine_topk_matches_python_replay(spark_global, docs, qs, cap):
     """For arbitrary small corpora (including empty docs and repeated

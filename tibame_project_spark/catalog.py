@@ -9,9 +9,11 @@ naming helper — no custom metastore, just ``spark.sql`` DDL over parquet.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 LAYERS = ("src", "ods", "dim", "fact", "mart")
 
@@ -28,6 +30,23 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+#: Session confs that change what parquet schema inference returns (the
+#: flags of Spark's ``ParquetToSparkSchemaConverter``).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.caseSensitive",
+)
+
+#: realpath -> (stamp, inferred schema) of the last inference per file;
+#: see :func:`load`.
+_SCHEMA_MEMO: dict[str, tuple[tuple, StructType]] = {}
 
 
 def table_name(layer: str, name: str, env: str | None = None) -> str:
@@ -60,7 +79,9 @@ def register_testdata(
     (``airflow/utils/gcp.py:132-201``) for the driver's synthetic tables.
     ``tables`` narrows registration to the views a query actually reads —
     view creation is per-table driver work (schema resolution), so callers
-    on a hot path shouldn't pay for ten tables to use one.
+    on a hot path shouldn't pay for ten tables to use one. Each table goes
+    through :func:`load`, so re-registering unchanged files runs no
+    schema-inference job (the memo contract is documented there).
     """
     out: dict[str, DataFrame] = {}
     for t in tables if tables is not None else TESTDATA_TABLES:
@@ -88,12 +109,49 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       from dying with PARQUET_TYPE_ILLEGAL;
     - ``session.timeZone=UTC`` makes calendar math over events match the
       naive-UTC semantics of the parquet/DuckDB oracle.
+
+    Schema memo: ``spark.read.parquet`` runs one schema-inference Spark job
+    per call, even for a single file. When the path is a regular file, the
+    inferred schema is kept per realpath, stamped with the file's size,
+    ``st_mtime_ns`` and inode and with the session confs that change what
+    inference returns (``_INFERENCE_CONFS``: ``nanosAsLong``,
+    ``binaryAsString``, ``int96AsTimestamp``, ``inferTimestampNTZ``, ...).
+    A later load with an equal stamp reads with
+    ``spark.read.schema(memoized)`` and runs no job; the file listing
+    itself stays fresh. A changed stamp infers again and replaces the
+    entry (one entry per path). A directory, or a path ``os.stat`` cannot
+    reach, infers on every call.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    return df
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` through the schema memo of :func:`load`.
+    The stamp is taken before the read, so a file that changes while its
+    schema is inferred leaves a stale stamp, never a stale schema."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    real = os.path.realpath(path)
+    stamp = (
+        st.st_size,
+        st.st_mtime_ns,
+        st.st_ino,
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+    hit = _SCHEMA_MEMO.get(real)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_MEMO[real] = (stamp, df.schema)
     return df
 
 

@@ -706,92 +706,84 @@ def sparse_cosine_topk(
 
     Physical plan (the inverted index, relationally):
       1. postings(docs):  explode tokens → (id, token, tf) count agg
-      2. df prune: token document frequency from the SAME aggregate,
-         thresholded at ``df_frac_cap``·|docs| (impact pruning / stop-token
-         drop — the standard fix for the posting-list skew of "the": hot
-         tokens pair every doc with every query and their contribution is
-         near-constant noise). The doc-count scalar is a broadcast 1-row
-         aggregate, not a driver count. Cosine is then EXACT in the pruned
-         token space (norms are computed after the prune), which is what a
+      2. ONE exchange on token carries two windows: the document
+         frequency, thresholded at ``df_frac_cap``·|docs| (impact pruning
+         / stop-token drop — hot tokens pair every doc with every query
+         for near-constant noise; |docs| is a broadcast 1-row aggregate),
+         and a representative-posting flag (the token's smallest id).
+         Cosine is then EXACT in the pruned token space, which is what a
          SQL oracle replays.
-      3. candidates: item postings ⋈ broadcast(query postings) on token →
-         (query, doc) dot = SUM(tf_i·tf_q) — integer-exact.
-      4. norms joined back (items on the id key, queries broadcast),
-         score = dot / (√Σtf_i² · √Σtf_q²) — exact ints through correctly
-         rounded IEEE sqrt/division, so bit-identical on any engine.
-      5. per-query top-k window, (score DESC, id) tie-break.
+      3. a window on the id key carries Σtf_i².
+      4. candidates: item postings ⋈ broadcast(query postings) on token →
+         (query, doc, Σtf_i²) dot = SUM(tf_i·tf_q), integer-exact, on the
+         id partitioning of step 3: no exchange of its own.
+      5. per-query window: Σtf_q² — with a cap, over the representative
+         rows (each kept query token meets exactly one); with none, a
+         window over the query postings, so tokens absent from the corpus
+         still count — then score = dot / (√Σtf_i² · √Σtf_q²), exact ints
+         through correctly rounded IEEE sqrt/division (bit-identical on
+         any engine), and top-k by (score DESC, id).
 
-    Shuffles: postings count agg, dot agg, norm join, final window — each
-    keyed on token / (query,doc) / id, all evenly hash-partitioned AFTER
-    the df prune removes the hot-token skew. At 100 TB the broadcast side
-    is only the query batch's postings (bounded by the batch), never the
-    corpus. Returns (query_id, id, rank, score).
+    Shuffles: query-postings count agg, token windows, id window, query
+    window, all hash-partitioned AFTER the df prune removes the hot-token
+    skew, plus the 1-row doc count. The broadcast side is only the query
+    batch's postings, never the corpus. Returns (query_id, id, rank,
+    score).
 
-    Caching contract: the raw item-postings relation feeds the df
-    aggregate and (through the prune join) the norm and dot consumers;
-    recomputing it re-runs the tokenize+explode+count over the full
-    corpus per consumer (a measured ~3× of this operator's cost). Two
-    lifecycles:
-
-    * ``item_postings=None`` (default): the postings are built and
-      ``persist()``-ed here; the returned DataFrame keeps referencing
-      them, so they live until ``spark.catalog.clearCache()`` or session
-      end (``bench.py`` clears between queries).
-    * ``item_postings=`` a :func:`sparse_postings` result over the SAME
-      corpus (caller-cached — ``persist`` or ``localCheckpoint``): no
-      ownership taken, so one build can serve several retrievals (e.g.
-      ``sparse_topk`` + ``hybrid_rerank`` share one inverted index). At
-      100 TB this is the normal path: the postings are a materialized
-      inverted-index table, built once, reused across query batches.
+    Postings: the raw item postings have ONE consumer in this plan, so
+    ``item_postings=None`` builds them inline, uncached. Pass a
+    caller-cached (``persist`` / ``localCheckpoint``) :func:`sparse_postings`
+    result over the SAME corpus to share one build across retrievals
+    (``sparse_topk`` + ``hybrid_rerank`` do); at 100 TB it is a
+    materialized inverted-index table, reused across query batches.
     """
     if item_postings is None:
-        # persist the RAW postings: without the cache the tokenize+
-        # explode+count pass over the corpus re-runs per consumer
-        item_post = sparse_postings(
+        item_postings = sparse_postings(
             ensure_parallelism(docs), text_col=text_col, id_col=id_col
-        ).persist()
-    else:
-        item_post = item_postings
-    item_post = item_post.select(
-        F.col(id_col).alias("__did"), "token", "tf"
-    )
+        )
+    item_post = item_postings.select(F.col(id_col).alias("__did"), "token", "tf")
     query_post = sparse_postings(
         queries, text_col=text_col, id_col=query_id_col
-    ).select(F.col(query_id_col).alias("__qid"), "token", "tf")
+    ).select(F.col(query_id_col).alias("__qid"), "token", F.col("tf").alias("__qtf"))
+    qtf2 = F.col("__qtf") * F.col("__qtf")
+    by_qid = Window.partitionBy("__qid")
 
     if df_frac_cap is not None:
-        docfreq = item_post.groupBy("token").agg(
-            F.count(F.lit(1)).cast("int").alias("__df")
-        )
+        by_token = Window.partitionBy("token")
         n_docs = docs.agg(F.count(F.lit(1)).alias("__n"))
-        kept = docfreq.crossJoin(F.broadcast(n_docs)).filter(
-            F.col("__df") <= F.lit(df_frac_cap) * F.col("__n")
+        item_post = (
+            item_post.withColumn("__df", F.count(F.lit(1)).over(by_token))
+            .withColumn("__rep", F.row_number().over(by_token.orderBy("__did")) == 1)
+            .crossJoin(F.broadcast(n_docs))
+            .filter(F.col("__df") <= F.lit(df_frac_cap) * F.col("__n"))
         )
-        # co-partitioned: both sides of each join arrive hashed on token
-        item_post = item_post.join(kept.select("token"), "token")
-        query_post = query_post.join(kept.select("token"), "token")
-
-    item_norm = item_post.groupBy("__did").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("__dn")
-    )
-    query_norm = query_post.groupBy("__qid").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("__qn")
-    )
+        # each kept query token meets exactly one representative posting
+        qn2_part = F.sum(F.when(F.col("__rep"), qtf2).otherwise(0))
+        qn2 = F.sum("__qn2").over(by_qid)
+    else:
+        query_post = query_post.withColumn("__qn2", F.sum(qtf2).over(by_qid))
+        qn2_part = F.max("__qn2")  # constant per query
+        qn2 = F.col("__qn2")
 
     dots = (
-        item_post.join(
-            F.broadcast(query_post.select("__qid", "token", F.col("tf").alias("__qtf"))),
-            "token",
+        item_post.withColumn(
+            "__dn2", F.sum(F.col("tf") * F.col("tf")).over(Window.partitionBy("__did"))
         )
-        .groupBy("__qid", "__did")
-        .agg(F.sum(F.col("tf") * F.col("__qtf")).alias("__dot"))
+        .join(F.broadcast(query_post), "token")
+        .groupBy("__qid", "__did", "__dn2")
+        .agg(
+            F.sum(F.col("tf") * F.col("__qtf")).alias("__dot"),
+            qn2_part.alias("__qn2"),
+        )
     )
+    # rows with a NULL id are not ranked (the oracle's id joins drop them),
+    # but they carry query-norm parts until the query window has summed them
     scored = (
-        dots.join(item_norm, "__did")
-        .join(F.broadcast(query_norm), "__qid")
-        .withColumn("score", F.col("__dot") / (F.col("__dn") * F.col("__qn")))
+        dots.withColumn("__qn2", qn2)
+        .filter(F.col("__qid").isNotNull() & F.col("__did").isNotNull())
+        .withColumn("score", F.col("__dot") / (F.sqrt("__dn2") * F.sqrt("__qn2")))
     )
-    w = Window.partitionBy("__qid").orderBy(F.col("score").desc(), F.col("__did"))
+    w = by_qid.orderBy(F.col("score").desc(), F.col("__did"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
