@@ -6641,58 +6641,171 @@ def test_arrow_twin_materialization_matches_spark_path(spark, tmp_path):
         assert a == b, f"manifest v={ver} diverged between twin and Spark paths"
 
 
-def test_scoped_conf_concurrent_scopes_restore_original(spark):
-    """The commit path's scoped conf overrides (_no_aqe,
-    _single_partition_ok) must survive CONCURRENT writers in one session:
-    a naive save/set/restore interleaves — writer B snapshots writer A's
-    override as "the original" and restores it after A restored the real
-    value, leaking the override for the session's lifetime (caught as an
-    AQE plan test failing only after the multiwriter suite). The
-    refcounted scope restores the true original at the LAST exit."""
-    import random
-    import time
-    from concurrent.futures import ThreadPoolExecutor
+def test_commits_leave_the_session_confs_alone(spark, tmp_path):
+    """The commit path's AQE-off and unbounded single-partition actions
+    run in a cloned session: a poller reading the caller's session confs
+    while a fused merge, a fused DV delete, a Bloom-table commit and a
+    merge of a parquet-read (distributed) batch commit sees only the
+    original values."""
+    import threading
+
+    from tibame_project_spark.sources.manifest import delete_manifest_table
+
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.maxSinglePartitionBytes")
+    orig = tuple(spark.conf.get(k) for k in keys)
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(20)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=1, keep=10,
+    )
+    _mk(spark, [(4, 44), (25, 25)]).write.parquet(str(tmp_path / "batch"))
+    seen, polls, stop = set(), [0], threading.Event()
+
+    def poll():
+        while not stop.is_set():
+            seen.add(tuple(spark.conf.get(k) for k in keys))
+            polls[0] += 1
+
+    poller = threading.Thread(target=poll, daemon=True)
+    poller.start()
+    try:
+        merge_manifest_table(spark, _mk(spark, [(3, 30), (40, 40)]), base, "id", keep=10)
+        delete_manifest_table(spark, _mk(spark, [(5, 0)]).select("id"), base, "id", keep=10)
+        write_manifest_table(
+            spark, _mk(spark, [(i, i) for i in range(20)]), str(tmp_path / "b"),
+            stats_cols=["id"], bloom_cols=["v"],
+        )
+        batch = spark.read.parquet(str(tmp_path / "batch"))
+        merge_manifest_table(spark, batch, base, "id", keep=10)
+    finally:
+        stop.set()
+        poller.join(timeout=30)
+    assert not poller.is_alive()
+    assert polls[0] > 0
+    assert seen == {orig}
+    assert _content(spark, base) == {
+        (i, i) for i in range(20) if i not in (3, 4, 5)
+    } | {(3, 30), (4, 44), (25, 25), (40, 40)}
+
+
+def test_fused_merge_clone_keeps_the_gate_and_the_session_confs(
+    spark, tmp_path, monkeypatch
+):
+    """A fused merge runs in a clone of the caller's session and must
+    behave as it would in the session itself: the expect gate's
+    Observation fires there (a violating batch raises, a clean one
+    commits — run in a worker thread, so a gate that never fires fails
+    the test instead of hanging it), and the data files take the
+    caller's runtime confs (a gzip codec, which ``newSession()`` would
+    drop)."""
+    import threading
+
+    import pyarrow.parquet as pq
+
+    from tibame_project_spark.operators.expectations import in_range
+    from tibame_project_spark.sources import manifest as M
+
+    clones = []
+    real = M._in_clone
+
+    def spy(*frames):
+        clones.append(len(frames))
+        return real(*frames)
+
+    monkeypatch.setattr(M, "_in_clone", spy)
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(20)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=1, keep=10,
+    )
+    rule = [in_range("v", 0, 100)]
+    out = {}
+
+    def gated():
+        try:
+            with pytest.raises(ValueError, match="expectation gate failed"):
+                merge_manifest_table(
+                    spark, _mk(spark, [(3, -1)]), base, "id", expect=rule, keep=10
+                )
+            out["version"] = merge_manifest_table(
+                spark, _mk(spark, [(3, 30)]), base, "id", expect=rule, keep=10
+            )
+        except BaseException as e:  # re-raised on the test thread
+            out["error"] = e
+
+    worker = threading.Thread(target=gated, daemon=True)
+    worker.start()
+    worker.join(timeout=120)
+    assert not worker.is_alive(), "the expect gate's Observation never fired"
+    if "error" in out:
+        raise out["error"]
+    assert out["version"] == 1
+    assert clones == [2, 2]  # both merges fused: source and current moved
+
+    codec = "spark.sql.parquet.compression.codec"
+    old = spark.conf.get(codec)
+    spark.conf.set(codec, "gzip")
+    try:
+        merge_manifest_table(spark, _mk(spark, [(4, 40)]), base, "id", keep=10)
+    finally:
+        spark.conf.set(codec, old)
+    assert clones == [2, 2, 2]
+    files = M.manifest_file_paths(spark, base)
+    assert len(files) == 1
+    meta = pq.ParquetFile(f"{base}/{files[0]}").metadata
+    assert {
+        meta.row_group(g).column(c).compression
+        for g in range(meta.num_row_groups)
+        for c in range(meta.num_columns)
+    } == {"GZIP"}
+    assert _content(spark, base) == {
+        (i, i) for i in range(20) if i not in (3, 4)
+    } | {(3, 30), (4, 40)}
+
+
+def test_merge_fusion_is_bounded_on_the_source_side(spark, tmp_path, monkeypatch):
+    """The single-file merge fusion also needs a small source: a batch
+    whose size estimate is unknown (RDD-backed, estimated at
+    Long.MaxValue) or large (a 400 MB range filtered to 10 rows, which
+    the estimate cannot see) keeps the distributed merge join."""
+    from pyspark.sql.types import LongType, StructField, StructType
 
     from tibame_project_spark.sources import manifest as M
 
-    key = "spark.sql.adaptive.enabled"
-    orig = spark.conf.get(key)
+    plans = []
+    orig_wd = M._write_data
 
-    def worker(_):
-        with M._no_aqe(spark):
-            assert spark.conf.get(key) == "false"
-            time.sleep(random.uniform(0.0, 0.03))
-            with M._single_partition_ok(spark):  # nesting across keys
-                pass
-        return True
+    def spy(df, *a, **k):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return orig_wd(df, *a, **k)
 
-    with ThreadPoolExecutor(max_workers=8) as ex:
-        assert all(ex.map(worker, range(32)))
-    assert spark.conf.get(key) == orig
-    assert spark.conf.get("spark.sql.maxSinglePartitionBytes") == "134217728b"
-    assert not M._CONF_SCOPES  # no dangling refcounts
-
-
-def test_scoped_conf_failed_set_leaves_no_scope():
-    """A scope whose ``conf.set`` raises must not stay registered: no
-    exit would ever release it, and the next scope on that key would
-    skip its own set."""
-    from tibame_project_spark.sources import manifest as M
-
-    class Conf:
-        def get(self, key):
-            return "true"
-
-        def set(self, key, value):
-            raise RuntimeError("conf is read-only")
-
-    class Session:
-        conf = Conf()
-
-    with pytest.raises(RuntimeError, match="read-only"):
-        with M._scoped_conf(Session(), "spark.sql.adaptive.enabled", "false"):
-            pass
-    assert not M._CONF_SCOPES
+    monkeypatch.setattr(M, "_write_data", spy)
+    base = str(tmp_path / "t")
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    write_manifest_table(
+        spark, df, base, stats_cols=["k"], cluster_by="k", n_files=1, keep=10
+    )
+    schema = StructType(
+        [StructField("k", LongType()), StructField("v", LongType())]
+    )
+    rdd_batch = spark.createDataFrame(
+        spark.sparkContext.parallelize([(3, -1), (5000, -1)], 1), schema
+    )
+    big_estimate = spark.range(0, 50_000_000).where("id % 5000000 = 0").select(
+        F.col("id").alias("k"), F.lit(-2).cast("long").alias("v")
+    )
+    for batch in (rdd_batch, big_estimate):
+        plans.clear()
+        merge_manifest_table(spark, batch, base, "k", keep=10)
+        merged = [p for p in plans if "FullOuter" in p]
+        assert merged, "merge write plan not captured"
+        assert "Exchange hashpartitioning" in merged[0]
+    got = {(r["k"], r["v"]) for r in read_manifest_table(spark, base).collect()}
+    assert got == {(i, -2 if i == 0 else -1 if i == 3 else i * 2) for i in range(1000)} | {
+        (5000, -1)
+    } | {(i * 5_000_000, -2) for i in range(1, 10)}
 
 
 def test_fits_one_task_fails_closed_on_unknown_bytes(monkeypatch):
@@ -6978,10 +7091,10 @@ def test_driver_bounds_match_the_aggregate(
         schema = f"k {batch_type}, j long"
         local = local_rows_df(spark, rows, schema).where("j >= 0")
         with spark_jobs() as jobs:
-            got = M._batch_bounds(spark, local, "k", key_type, fold, distinct=True)
+            got = M._batch_bounds(local, "k", key_type, fold, distinct=True)
             assert jobs() == 0
         want = M._batch_bounds(
-            spark, spark.createDataFrame(rows, schema).where("j >= 0"), "k",
+            spark.createDataFrame(rows, schema).where("j >= 0"), "k",
             key_type, fold, distinct=True,
         )
         # the aggregate's max over no non-NULL key is NULL, not false
@@ -7005,13 +7118,13 @@ def test_float_collated_and_distributed_batches_keep_the_aggregate(
     from tibame_project_spark.sources import manifest as M
 
     aggs = []
-    real = M._no_aqe
+    real = M._in_clone
 
-    def spy(s):
-        aggs.append(1)
-        return real(s)
+    def spy(*frames):
+        aggs.extend(1 for f in frames if f.columns[:2] == ["lo", "hi"])
+        return real(*frames)
 
-    monkeypatch.setattr(M, "_no_aqe", spy)
+    monkeypatch.setattr(M, "_in_clone", spy)
 
     base = str(tmp_path / "d")
     write_manifest_table(

@@ -107,11 +107,8 @@ distinct keys.
 from __future__ import annotations
 
 import bisect
-import contextlib
 import json
 import math
-import os
-import threading
 import uuid
 
 import pyspark.sql.functions as F
@@ -126,6 +123,7 @@ from pyspark.sql.types import (
 from tibame_project_spark.sources.writers import (
     _COMMIT_PREFIX,
     _committed_versions,
+    _create_new,
     _version_suffix,
     read_snapshot_version,
 )
@@ -1005,29 +1003,6 @@ _CLAIM_WAIT_S = 30.0
 _CLAIM_POLL_S = 0.25
 
 
-def _create_new(fs, path, data: bytes = b"") -> None:
-    """Create the Hadoop ``path`` on ``fs`` with ``data`` iff it does not
-    exist; raise if it does. A ``file:`` path is created with ``O_CREAT
-    | O_EXCL``, which the kernel makes atomic: Hadoop's local
-    ``create(path, overwrite=False)`` checks, then creates, so racing
-    callers can both win it. Every other scheme takes Hadoop's
-    create-new."""
-    uri = fs.makeQualified(path).toUri()
-    if uri.getScheme() == "file":
-        local = uri.getPath()
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        return
-    out = fs.create(path, False)
-    try:
-        if data:
-            out.write(bytearray(data))
-    finally:
-        out.close()
-
-
 class CommitFS:
     """The ONE filesystem primitive the commit protocol's correctness
     rests on: **atomic create-new** — create the file iff it does not
@@ -1679,79 +1654,56 @@ _FOOTER_STATS_KINDS = frozenset(
 )
 
 
-#: Reference-counted scoped-conf state: ``(id(session), key) →
-#: [active_scopes, original_value]``. Session confs are GLOBAL to the
-#: session, and this engine supports CONCURRENT writers in one session
-#: (the multiwriter commit tests drive exactly that) — a naive
-#: save/set/restore interleaves: writer B snapshots writer A's override
-#: as "the original" and restores it after A already restored the real
-#: value, leaking the override for the session's lifetime (caught as a
-#: downstream AQE-plan test failing only after the multiwriter suite).
-#: First scope in saves the true original; last scope out restores it.
-_CONF_SCOPES: dict = {}
-_CONF_SCOPES_LOCK = threading.Lock()
+#: The confs of :func:`_in_clone`'s session. AQE off: the fused plans
+#: run in one partition and the scalar bounds aggregate ends in one, so
+#: AQE has nothing to adapt (no partition count to coalesce, no join to
+#: re-plan), but it runs every stage as its own job.
+#: ``maxSinglePartitionBytes`` unbounded: the fuse gates bound a fused
+#: plan's REAL input bytes (≤ :data:`_MERGE_FUSE_MAX_BYTES`), but
+#: Catalyst's join-output estimate MULTIPLIES child estimates — a
+#: KB-scale broadcast join is routinely estimated in the hundreds of MB
+#: — and EnsureRequirements then shuffles the SinglePartition away
+#: (SPARK-41986's parallelism safety net), re-inserting exactly the
+#: exchanges the fusion removed. The engine knows the true bytes; the
+#: estimator does not.
+_CLONE_CONFS = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.maxSinglePartitionBytes": str((1 << 63) - 1),
+}
 
 
-@contextlib.contextmanager
-def _scoped_conf(spark, key: str, value: str):
-    """Set a session conf for the duration of a block, concurrency-safe
-    via refcounting (every user of one key must want the SAME value —
-    true for both engine scopes below). Restored by the LAST exiter,
-    error or not."""
-    skey = (id(spark), key)
-    with _CONF_SCOPES_LOCK:
-        st = _CONF_SCOPES.get(skey)
-        if st is None:
-            try:
-                old = spark.conf.get(key)
-            except Exception:
-                old = None
-            # register only once the set succeeded: a failed set must
-            # not leave a scope that no exit will ever release
-            spark.conf.set(key, value)
-            _CONF_SCOPES[skey] = st = [1, old]
-        else:
-            st[0] += 1
-    try:
-        yield
-    finally:
-        with _CONF_SCOPES_LOCK:
-            st[0] -= 1
-            if st[0] == 0:
-                del _CONF_SCOPES[skey]
-                if st[1] is None:
-                    spark.conf.unset(key)
-                else:
-                    spark.conf.set(key, st[1])
+def _in_clone(*frames: DataFrame) -> list[DataFrame]:
+    """``frames`` re-rooted in a ``cloneSession()`` of their session,
+    which alone carries :data:`_CLONE_CONFS`: the caller's session keeps
+    its confs, so a query a concurrent writer plans in it keeps AQE and
+    the single-partition safety net. The clone copies the runtime confs
+    (time zone, ANSI, codecs — ``newSession()`` would drop them) and
+    shares the CacheManager, so a frame persisted in the parent is a
+    cache hit here. One clone serves every call while the session's
+    runtime confs stay as they were when it was cloned; any change makes
+    a fresh clone (a clone per call cost the ``table_commits`` benchmark
+    about 9% more CPU a pass on a 4-core host). Attach an
+    ``Observation`` only AFTER the move: the clone
+    copies just the execution listeners its parent had when cloned, so
+    one attached in the parent may never fire for an action run here.
 
-
-def _single_partition_ok(spark):
-    """Scoped raise of ``spark.sql.maxSinglePartitionBytes`` around the
-    execution of a FUSED single-partition plan. The fuse gates bound the
-    plan's REAL input bytes (≤ :data:`_MERGE_FUSE_MAX_BYTES`), but
-    Catalyst's join-output size estimate MULTIPLIES child estimates —
-    a KB-scale broadcast join is routinely estimated in the hundreds of
-    MB (and an Arrow-built local relation with NO size estimate defaults
-    to ~9 EB) — and EnsureRequirements then shuffles the SinglePartition
-    away (SPARK-41986's parallelism safety net), re-inserting exactly
-    the exchanges the fusion removed. The engine knows the true bytes;
-    the estimator does not (guide §8)."""
-    return _scoped_conf(
-        spark, "spark.sql.maxSinglePartitionBytes", str((1 << 63) - 1)
-    )
-
-
-def _no_aqe(spark):
-    """Scoped AQE-off around a SCALAR aggregate action. A global agg is
-    partial → one single-partition exchange → final: AQE has nothing to
-    adapt (no partition counts to coalesce, no joins to re-plan) but
-    materializes each stage as its own job — 3-4 scheduler round-trips
-    where a non-adaptive run is ONE. Its one user is the merge/delete
-    bounds/guard agg of :func:`_batch_bounds`, which runs only for
-    batches the driver cannot fold itself (distributed batches, or
-    float/timestamp/collated keys); it is per-commit, so the saved
-    round-trips multiply."""
-    return _scoped_conf(spark, "spark.sql.adaptive.enabled", "false")
+    The frames keep the caller's Python session object: a Python
+    ``SparkSession`` built around the clone would re-point
+    ``RDD.toDF`` at it, process-wide."""
+    parent = frames[0].sparkSession
+    jparent = parent._jsparkSession
+    confs = jparent.conf().getAll()
+    memo = vars(parent).get("_tibame_clone")
+    if memo is None or not memo[0].equals(confs):
+        jclone = jparent.cloneSession()
+        for k, v in _CLONE_CONFS.items():
+            jclone.conf().set(k, v)
+        memo = parent._tibame_clone = (confs, jclone)
+    of_rows = parent._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    return [
+        DataFrame(of_rows(memo[1], f._jdf.queryExecution().analyzed()), parent)
+        for f in frames
+    ]
 
 
 def _truncate_string_stats(mn, mx):
@@ -1983,19 +1935,15 @@ def _file_stats(
         # one task, build each column's filters in ONE partition, so the
         # explode→bit_or→pack pipeline runs without its two exchanges
         # (1 job per Bloom column instead of an AQE stage cascade);
-        # bigger commits keep the fully distributed build
-        bloom_fused = _fits_one_task(r[1] for r in footer_rows)
-        if bloom_fused:
+        # bigger commits keep the fully distributed build. Unlike the
+        # fused merge, this plan stays in the caller's session: no join
+        # multiplies its size estimate, which follows the scanned bytes,
+        # so no exchange comes back under the default single-partition cap
+        if _fits_one_task(r[1] for r in footer_rows):
             raw = raw.coalesce(1)
         bmaps: dict = {}
         for c in bloom["cols"]:
-            words = _bloom_words(raw, c, bloom["m"], bloom["k"])
-            if bloom_fused:
-                with _single_partition_ok(spark):
-                    rows = words.collect()
-            else:
-                rows = words.collect()
-            for r in rows:
+            for r in _bloom_words(raw, c, bloom["m"], bloom["k"]).collect():
                 bmaps.setdefault(r["path"], {})[c] = r[f"bloom_{c}"]
         brows = [
             row
@@ -2912,7 +2860,6 @@ def _driver_key_class(dt, key_type) -> type | None:
 
 
 def _batch_bounds(
-    spark: SparkSession,
     batch: DataFrame,
     key: str,
     key_type,
@@ -2931,7 +2878,10 @@ def _batch_bounds(
     Python from its collected key column: collecting a LocalRelation
     launches no job. NULL keys count in ``n`` only; with no non-NULL key
     the bounds are NULL and no file is a candidate — the aggregate's
-    semantics. Everything else runs the one scalar aggregate."""
+    semantics. Everything else runs the one scalar aggregate, in
+    :func:`_in_clone`'s session: AQE has nothing to adapt in a global
+    aggregate, but would run each of its stages as its own job (3 jobs
+    over a parquet batch where the clone runs 1, per commit)."""
     fold_files = fold_files or ()
     cls = None
     if _is_local_relation(batch):
@@ -2968,12 +2918,11 @@ def _batch_bounds(
         for i, f in enumerate(fold_files)
     ]
     # a driver-local batch aggregates in ONE partition: no exchange, so
-    # AQE has no stage boundaries and the whole guard scan is a single
-    # job instead of one per shuffle stage; distributed batches keep
+    # the whole guard scan is a single job; distributed batches keep
     # their parallel partial aggregation
     agg_src = batch.coalesce(1) if _is_local_relation(batch) else batch
-    with _no_aqe(spark):
-        return agg_src.agg(*aggs).first().asDict()
+    (agg,) = _in_clone(agg_src.agg(*aggs))
+    return agg.first().asDict()
 
 
 def merge_manifest_table(
@@ -3156,7 +3105,7 @@ def _prepare_merge_edit_impl(
     # below.
     fold_files = _cand_fold_files(base_path, head, key)
     bounds = _batch_bounds(
-        spark, source, key, schema[key].dataType, fold_files, distinct=True
+        source, key, schema[key].dataType, fold_files, distinct=True
     )
     if bounds["n"] != bounds["nk"]:
         raise ValueError(
@@ -3286,8 +3235,21 @@ def _prepare_merge_edit_impl(
     # rewrite (wider min/max ranges swallow future candidates), which is
     # an observable layout change (evolution_cycle's live-era contract
     # tripped on it); the rewrite preserves the table's file granularity
+    # the source side must fit one task too: a driver-local batch, or an
+    # optimizer estimate within the bound (an unknown one, e.g. an
+    # RDD-backed frame's Long.MaxValue, fails closed)
     n_out = max(1, len(touched))
-    fused = n_out <= 1 and _fits_one_task(f["bytes"] for f in cand_files)
+    fused = (
+        n_out <= 1
+        and _fits_one_task(f["bytes"] for f in cand_files)
+        and (
+            _is_local_relation(source)
+            or _fits_one_task(
+                [source._jdf.queryExecution().optimizedPlan().stats()
+                 .sizeInBytes()]
+            )
+        )
+    )
     if update_condition is not None:
         # WHEN MATCHED AND <condition> (Delta's conditional merge) as a
         # SOURCE PRE-FILTER, so the fixpoint-critical full-row upsert
@@ -3332,8 +3294,11 @@ def _prepare_merge_edit_impl(
     else:
         cur_persisted = None
     if fused:
-        current = current.coalesce(1)
-        source = source.coalesce(1)
+        # both sides run in ONE clone (AQE off, unbounded single-partition
+        # cap), losing no parallelism: each fits one task by the gate.
+        # Moved before the expect gate attaches its Observation
+        current, source = _in_clone(current, source)
+        current, source = current.coalesce(1), source.coalesce(1)
     try:
         if update_condition is not None:
             # inside the try: a condition referencing a nonexistent
@@ -3370,11 +3335,7 @@ def _prepare_merge_edit_impl(
             current, source, key, delete_col=delete_col, null_safe_keys=False
         )
         data_dir = f"data/c={_token()}"
-        if fused:
-            with _single_partition_ok(spark):
-                _write_data(merged, base_path, data_dir, key, n_out)
-        else:
-            _write_data(merged, base_path, data_dir, key, n_out)
+        _write_data(merged, base_path, data_dir, key, n_out)
         gate()  # batch violations abort pre-marker: partial v is invisible
     finally:
         if cur_persisted is not None:
@@ -4251,7 +4212,7 @@ def _prepare_delete_edit(
     # driver-local batch is folded on the driver with zero jobs.
     fold_files = _cand_fold_files(base_path, head, key)
     bounds = _batch_bounds(
-        spark, keys, key, schema[key].dataType, fold_files, distinct=False
+        keys, key, schema[key].dataType, fold_files, distinct=False
     )
     if bounds["n"] != bounds["nk"]:
         raise ValueError(
@@ -4347,16 +4308,17 @@ def _prepare_delete_edit(
     # required distribution, so the distinct's exchange (and its AQE
     # stage boundary) disappears and scan → semi-join → distinct →
     # sidecar write is a single job. Bigger candidate sets keep the
-    # parallel distinct.
+    # parallel distinct. The fused distinct runs in :func:`_in_clone`'s
+    # session (one job where the caller's session runs three): its input
+    # is one small file's keys, so AQE-off and the unbounded
+    # single-partition cap cost it no parallelism.
     if len(cand_files) <= 1 and _fits_one_task(
         f["bytes"] for f in cand_files
     ):
-        sidecar = present.coalesce(1).distinct()
-        with _single_partition_ok(spark):
-            sidecar.write.mode("overwrite").parquet(f"{base_path}/{dv_dir}")
+        (sidecar,) = _in_clone(present.coalesce(1).distinct())
     else:
         sidecar = present.distinct().coalesce(1)
-        sidecar.write.mode("overwrite").parquet(f"{base_path}/{dv_dir}")
+    sidecar.write.mode("overwrite").parquet(f"{base_path}/{dv_dir}")
     # a no-hit delete still FIXES the table's DV key (first use)
     edit["dv_key"] = key
     # repoint ONLY files with at least one condemned pair in the new

@@ -13,6 +13,8 @@ Maps the reference's write modes onto Spark save modes:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 
 
@@ -298,6 +300,33 @@ def _committed_versions(listing) -> list[int]:
     ]
 
 
+def _create_new(fs, path, data: bytes = b"") -> None:
+    """Create the Hadoop ``path`` on ``fs`` with ``data`` iff it does not
+    exist; raise if it does. Only the exists-test-and-create is atomic:
+    a ``file:`` path is opened with ``O_CREAT | O_EXCL``, so exactly one
+    of several racing callers creates it (Hadoop's local
+    ``create(path, overwrite=False)`` checks, then creates, and lets
+    several win). ``data`` is written AFTER the create, so a concurrent
+    reader may see the file shorter than ``data``, and a crash mid-write
+    leaves it so. Every other scheme takes Hadoop's create-new, which is
+    as atomic as that filesystem makes it (HDFS and ABFS are; S3A and
+    GCS without conditional writes are not)."""
+    uri = fs.makeQualified(path).toUri()
+    if uri.getScheme() == "file":
+        local = uri.getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        return
+    out = fs.create(path, False)
+    try:
+        if data:
+            out.write(bytearray(data))
+    finally:
+        out.close()
+
+
 def write_snapshot(
     spark,
     df: DataFrame,
@@ -310,8 +339,9 @@ def write_snapshot(
     snapshot-isolation pattern that table formats (Delta/Iceberg)
     industrialize: each write lands in a fresh ``v=<n>/`` subdirectory of
     ``base_path`` and is published by atomically creating an empty
-    ``_COMMIT_v<n>`` marker (create-new, never rename/replace — the
-    append-only-log commit; atomic on local/HDFS semantics. Object
+    ``_COMMIT_v<n>`` marker (create-new through :func:`_create_new`,
+    never rename/replace — the append-only-log commit; atomic on local
+    paths and HDFS. Object
     stores without conditional PUT make create-new a check-then-write,
     which is why the single-writer contract below is load-bearing there,
     exactly as it is for every file-log table format without a lock
@@ -371,7 +401,7 @@ def write_snapshot(
     marker = jvm.org.apache.hadoop.fs.Path(
         f"{base_path}/{_COMMIT_PREFIX}{version}"
     )
-    fs.create(marker, False).close()  # create-new = the commit
+    _create_new(fs, marker)  # create-new = the commit
     floor = version - keep
     for status in listing:
         mv = _version_suffix(status.getPath().getName(), _COMMIT_PREFIX)
