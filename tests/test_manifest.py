@@ -328,7 +328,9 @@ def test_merge_candidate_fold_string_key_and_unsafe_type_fallback(
         cluster_by="id",
         n_files=4,
     )
-    assert M._cand_fold_files(base, read_manifest_version(spark, base), "id")
+    assert M._cand_fold_files(
+        M._load_manifest(spark, base, read_manifest_version(spark, base)), "id"
+    )
     before = set(manifest_file_paths(spark, base))
     batch = spark.createDataFrame(
         [("k005", -5, False), ("zzz", 1, False)], "id string, v long, dead boolean"
@@ -351,7 +353,11 @@ def test_merge_candidate_fold_string_key_and_unsafe_type_fallback(
         stats_cols=["id"],
     )
     assert (
-        M._cand_fold_files(tbase, read_manifest_version(spark, tbase), "id") is None
+        M._cand_fold_files(
+            M._load_manifest(spark, tbase, read_manifest_version(spark, tbase)),
+            "id",
+        )
+        is None
     )
     tb = spark.sql(
         "SELECT timestamp'2024-01-01' + make_interval(0,0,0,0,0,0,3) AS id,"
@@ -1911,7 +1917,7 @@ def test_compaction_consolidates_schema_eras(spark, tmp_path):
         head = read_manifest_version(spark, base)
         return {
             r["schema_id"]
-            for r in M._load_manifest(spark, base, head)
+            for r in spark.createDataFrame(M._load_manifest(spark, base, head))
             .select("schema_id").distinct().collect()
         }
 
@@ -2768,8 +2774,7 @@ def test_arrow_and_spark_manifest_paths_agree(spark, tmp_path, monkeypatch):
         base, "id", delete_col="dead",
     )
     head = M.read_manifest_version(spark, base)
-    tbl = M._manifest_arrow(base, head)
-    assert tbl is not None
+    tbl = M._load_manifest(spark, base, head)
     via_arrow = sorted(map(str, spark.createDataFrame(tbl).collect()))
     via_spark = sorted(map(str, spark.read.parquet(
         f"{base}/manifest/v={head}"
@@ -2794,7 +2799,10 @@ def test_arrow_and_spark_manifest_paths_agree(spark, tmp_path, monkeypatch):
     assert _content(spark, base) == want
     assert _content(spark, base2) == want
     # and the fallback-written table is Arrow-readable afterwards
-    assert M._manifest_arrow(base2, M.read_manifest_version(spark, base2)) is not None
+    import pyarrow.parquet as pq
+
+    head2 = M.read_manifest_version(spark, base2)
+    assert pq.read_table(f"{base2}/manifest/v={head2}").num_rows > 0
 
 
 def test_commit_fs_seam_routes_every_publish_point(spark, tmp_path):
@@ -5096,14 +5104,12 @@ def test_arrow_metadata_fast_paths_on_registered_remote_scheme(spark, tmp_path):
         # commit-meta read: same dict through the remote scheme
         assert M._meta(spark, mock_base, 0) == M._meta(spark, base_local, 0)
         # manifest load: same relation through the remote scheme
-        tbl = M._manifest_arrow(mock_base, 0)
-        local_tbl = M._manifest_arrow(base_local, 0)
-        assert tbl is not None and local_tbl is not None
+        tbl = M._load_manifest(spark, mock_base, 0)
+        local_tbl = M._load_manifest(spark, base_local, 0)
         assert tbl.sort_by("path").equals(local_tbl.sort_by("path"))
         # materialization: the pre-claim manifest write lands through
         # the registered fs, same rows as the local writer would produce
-        man = M._load_manifest(spark, base_local, 0)
-        M._materialize_manifest(spark, man, mock_base, "manifest/tmp_mock")
+        M._materialize_manifest(spark, local_tbl, mock_base, "manifest/tmp_mock")
         out = tmp_path / "t" / "manifest" / "tmp_mock" / "part-00000.parquet"
         assert out.exists()
         assert pq.read_table(str(out)).num_rows == local_tbl.num_rows
@@ -5121,7 +5127,7 @@ def test_arrow_metadata_tier_falls_back_on_unresolvable_scheme():
     import tibame_project_spark.sources.manifest as M
 
     assert M._arrow_fs("noconnector://bucket/t") is None
-    assert M._manifest_arrow("noconnector://bucket/t", 0) is None
+    assert M._write_arrow_parquet("noconnector://bucket/t", "manifest_tmp/x", None) is False
 
 
 def test_drop_column_is_metadata_only_and_never_resurrects(spark, tmp_path):
@@ -6392,20 +6398,20 @@ def test_footer_stats_match_scan_stats_exactly(spark, tmp_path):
     def both(data_dir, stats_cols, schema, null_stats):
         foot = sorted(
             tuple(r)
-            for r in M._file_stats(
+            for r in spark.createDataFrame(M._file_stats(
                 spark, base, data_dir, stats_cols, schema, None,
                 null_stats=null_stats,
-            ).collect()
+            )).collect()
         )
         orig = M._footer_file_stats
         M._footer_file_stats = lambda *a, **kw: None
         try:
             scan = sorted(
                 tuple(r)
-                for r in M._file_stats(
+                for r in spark.createDataFrame(M._file_stats(
                     spark, base, data_dir, stats_cols, schema, None,
                     null_stats=null_stats,
-                ).collect()
+                )).collect()
             )
         finally:
             M._footer_file_stats = orig
@@ -6437,9 +6443,9 @@ def test_footer_stats_match_scan_stats_exactly(spark, tmp_path):
         spark, base, "data/c=e4", ["k", "x"], df4.schema, 0,
         null_stats=False,
     ) is None
-    rows = M._file_stats(
+    rows = spark.createDataFrame(M._file_stats(
         spark, base, "data/c=e4", ["k", "x"], df4.schema, None
-    ).collect()
+    )).collect()
     assert len(rows) == 1 and rows[0]["min_x"] == 1.5
 
     # a stats column present in no chunk (absent chunk statistics) must
@@ -6460,10 +6466,10 @@ def _scan_stats(spark, base, data_dir, stats_cols, schema, schema_id):
     try:
         return sorted(
             tuple(r)
-            for r in M._file_stats(
+            for r in spark.createDataFrame(M._file_stats(
                 spark, base, data_dir, stats_cols, schema, None, schema_id,
                 null_stats=True,
-            ).collect()
+            )).collect()
         )
     finally:
         M._footer_file_stats = orig
@@ -6552,93 +6558,90 @@ def test_footer_stats_return_none_on_arrow_io_error(spark, tmp_path):
             M.register_arrow_fs("deny", prev)
 
 
-def test_arrow_twin_materialization_matches_spark_path(spark, tmp_path):
-    """The r14 Arrow-twin commit materialization (the head manifest read
-    driver-side, minus removed paths, plus footer-derived added rows,
-    written with pyarrow — zero Spark jobs) must produce manifest rows
-    IDENTICAL to the Spark materialization it short-circuits, across
-    create / append / MERGE (update + insert + tombstone delete) — on a
-    Bloom-configured table, whose per-file filter maps are now folded
-    driver-side instead of joined distributed. Only the random commit
+@pytest.mark.parametrize(
+    "stats_cols", [["k", "s"], ["k", "s", "x", "ts"]], ids=["footer", "scan"]
+)
+def test_arrow_manifest_matches_the_spark_store_path(
+    spark, tmp_path, monkeypatch, stats_cols
+):
+    """Manifests are pyarrow Tables from load to write. On a store
+    pyarrow cannot reach (``_arrow_fs`` → None) they are read and
+    written through Spark and the footer stats fall back to the scan.
+    One history — create, append, MERGE (update + insert + tombstone),
+    a widening evolve, a DV delete, stage + publish of a merge and a
+    shallow clone — on a Bloom-configured null-stats table must leave
+    row-identical manifests both ways, with footer-decodable stats and
+    with double/timestamp ones. Only the table roots, the random commit
     dir tokens and distributed-writer part suffixes may differ."""
+    import datetime
     import re
-
-    from pyspark.sql import functions as F
 
     from tibame_project_spark.sources import manifest as M
 
-    def norm(v):
-        if isinstance(v, str):
-            v = re.sub(r"(data|dv)/[^/]+/", r"\1/D/", v)
-            v = re.sub(r"part-(\d+)[^.]*", r"part-\1", v)
-        if isinstance(v, dict):
-            return tuple(sorted(v.items()))
-        return v
+    schema = "k int, s string, v bigint, x double, ts timestamp"
 
-    def build(base):
-        df = spark.range(0, 600).select(
-            F.col("id").cast("int").alias("k"),
-            F.concat(F.lit("u"), (F.col("id") % 89).cast("string")).alias("s"),
-            (F.col("id") * 3).alias("v"),
-        )
-        M.write_manifest_table(
-            spark, df, base, stats_cols=["k", "s"], cluster_by="k",
-            n_files=2, bloom_cols=["s"], null_stats=True, keep=6,
-        )
-        M.append_manifest_table(
-            spark,
-            df.where("k < 50").withColumn("v", F.col("v") + 1000),
-            base, n_files=1, cluster_by="k", keep=6,
-        )
-        batch = spark.createDataFrame(
-            [(10, "u10", 7, False), (9000, "unew", 8, False),
-             (25, "u25", 0, True)],
-            "k int, s string, v bigint, __del boolean",
-        )
-        M.merge_manifest_table(
-            spark, batch, base, "k", delete_col="__del", keep=6
-        )
-        head = M.manifest_history(spark, base).agg(
-            F.max("version")
-        ).first()[0]
+    def rows(ks, v0, dead=None):
         out = []
-        for ver in range(head + 1):
-            rows = spark.read.parquet(f"{base}/manifest/v={ver}").collect()
-            out.append(
-                sorted(
-                    tuple(norm(v) for v in r)
-                    for r in (tuple(row) for row in rows)
-                )
-            )
+        for k in ks:
+            r = (k, f"u{k % 89}", k * 3 + v0, k / 4,
+                 datetime.datetime(2021, 1, 1) + datetime.timedelta(hours=k))
+            out.append(r if dead is None else r + (dead,))
         return out
 
-    counts = {"twin": 0}
-    orig_write = M._write_arrow_parquet
+    def build(base, clone):
+        df = spark.createDataFrame(rows(range(600), 0), schema)
+        M.write_manifest_table(
+            spark, df, base, stats_cols=stats_cols, cluster_by="k",
+            n_files=2, bloom_cols=["s"], null_stats=True, keep=10,
+        )
+        M.append_manifest_table(
+            spark, spark.createDataFrame(rows(range(600, 650), 1000), schema),
+            base, n_files=1, cluster_by="k", keep=10,
+        )
+        M.merge_manifest_table(
+            spark,
+            spark.createDataFrame(
+                rows([10, 9000], 7, False) + rows([25], 0, True),
+                schema + ", __del boolean",
+            ),
+            base, "k", delete_col="__del", keep=10,
+        )
+        M.evolve_manifest_table(spark, base, widen={"k": "bigint"}, keep=10)
+        wide = schema.replace("k int", "k bigint")
+        M.delete_manifest_table(
+            spark, spark.createDataFrame([(40,), (41,)], "k bigint"),
+            base, "k", keep=10,
+        )
+        tok = M.stage_merge_manifest_table(
+            spark, spark.createDataFrame(rows([620, 9100], 5), wide), base, "k"
+        )
+        M.publish_staged_manifest(spark, base, tok, keep=10)
+        M.clone_manifest_table(spark, base, clone)
 
-    def counting_write(*a, **kw):
-        ok = orig_write(*a, **kw)
-        counts["twin"] += bool(ok)
-        return ok
+        def norm(v):
+            if isinstance(v, str):
+                v = v.replace(base, "B")
+                v = re.sub(r"(data|dv)/c=[^/]+", r"\1/D", v)
+                v = re.sub(r"part-(\d+)[^.]*", r"part-\1", v)
+            if isinstance(v, dict):
+                return tuple(sorted(v.items()))
+            return v
 
-    M._write_arrow_parquet = counting_write
-    try:
-        twin_rows = build(str(tmp_path / "twin"))
-    finally:
-        M._write_arrow_parquet = orig_write
-    assert counts["twin"] > 0, "twin path never engaged on a local table"
+        out = []
+        for root, n in ((base, 6), (clone, 1)):
+            for ver in range(n):
+                got = spark.read.parquet(f"{root}/manifest/v={ver}").collect()
+                out.append(sorted(tuple(norm(v) for v in r) for r in got))
+        return out
 
-    orig_rows = M._rows_to_arrow
-    M._write_arrow_parquet = lambda *a, **kw: False
-    M._rows_to_arrow = lambda *a, **kw: None
-    try:
-        spark_rows = build(str(tmp_path / "plain"))
-    finally:
-        M._write_arrow_parquet = orig_write
-        M._rows_to_arrow = orig_rows
+    arrow_rows = build(str(tmp_path / "arrow"), str(tmp_path / "arrow_clone"))
+    monkeypatch.setattr(M, "_arrow_fs", lambda path: None)
+    spark_rows = build(str(tmp_path / "spark"), str(tmp_path / "spark_clone"))
+    monkeypatch.undo()
 
-    assert len(twin_rows) == len(spark_rows) == 3
-    for ver, (a, b) in enumerate(zip(twin_rows, spark_rows)):
-        assert a == b, f"manifest v={ver} diverged between twin and Spark paths"
+    assert len(arrow_rows) == len(spark_rows) == 7
+    for i, (a, b) in enumerate(zip(arrow_rows, spark_rows)):
+        assert a and a == b, f"manifest #{i} diverged between Arrow and Spark stores"
 
 
 def test_commits_leave_the_session_confs_alone(spark, tmp_path):
@@ -6806,6 +6809,101 @@ def test_merge_fusion_is_bounded_on_the_source_side(spark, tmp_path, monkeypatch
     assert got == {(i, -2 if i == 0 else -1 if i == 3 else i * 2) for i in range(1000)} | {
         (5000, -1)
     } | {(i * 5_000_000, -2) for i in range(1, 10)}
+
+
+def test_update_condition_fuses_only_within_the_broadcast_bound(
+    spark, tmp_path, monkeypatch
+):
+    """The fused merge broadcasts its candidate rows explicitly under
+    ``update_condition``, so it fuses only while the candidates fit
+    ``_BROADCAST_MAX_BYTES``: with the bound below one small file's size
+    a conditional merge keeps the distributed merge join, and the same
+    merge without a condition still fuses."""
+    from tibame_project_spark.sources import manifest as M
+
+    plans = []
+    orig_wd = M._write_data
+
+    def spy(df, *a, **k):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return orig_wd(df, *a, **k)
+
+    monkeypatch.setattr(M, "_write_data", spy)
+    monkeypatch.setattr(M, "_BROADCAST_MAX_BYTES", 100)
+    base = str(tmp_path / "t")
+    df = spark.range(0, 1000).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    write_manifest_table(
+        spark, df, base, stats_cols=["k"], cluster_by="k", n_files=1, keep=10
+    )
+    for cond in ("v > t_v", None):
+        plans.clear()
+        batch = _mk(spark, [(3, 100), (5000, 1)], "k long, v long")
+        merge_manifest_table(
+            spark, batch, base, "k", keep=10, update_condition=cond
+        )
+        merged = [p for p in plans if "FullOuter" in p]
+        assert merged, "merge write plan not captured"
+        assert ("Exchange hashpartitioning" in merged[0]) == (cond is not None)
+    got = {(r["k"], r["v"]) for r in read_manifest_table(spark, base).collect()}
+    assert got == {(i, 100 if i == 3 else i * 2) for i in range(1000)} | {
+        (5000, 1)
+    }
+
+
+def test_manifest_arithmetic_runs_no_spark_job(spark, tmp_path, spark_jobs):
+    """Evolve, clone and ``manifest_history`` only edit or fold manifests,
+    which are driver-side Arrow tables: none of them launches a Spark
+    job on a local table."""
+    from tibame_project_spark.sources.manifest import (
+        clone_manifest_table,
+        evolve_manifest_table,
+        manifest_history,
+    )
+
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(40)], "id int, v long"),
+        base, stats_cols=["id"], cluster_by="id", n_files=4, keep=10,
+    )
+    with spark_jobs() as jobs:
+        evolve_manifest_table(spark, base, widen={"id": "bigint"}, keep=10)
+        assert jobs() == 0
+    with spark_jobs() as jobs:
+        clone_manifest_table(spark, base, str(tmp_path / "c"))
+        assert jobs() == 0
+    with spark_jobs() as jobs:
+        hist = manifest_history(spark, base).collect()
+        assert jobs() == 0
+    assert [(r["version"], r["files"], r["rows"]) for r in hist] == [
+        (0, 4, 40), (1, 4, 40)
+    ]
+    assert _content(spark, str(tmp_path / "c")) == {(i, i) for i in range(40)}
+
+
+def test_append_with_double_stats_runs_at_most_three_jobs(
+    spark, tmp_path, spark_jobs
+):
+    """A double stats column takes the scan stats path; the scan's jobs
+    moved from the manifest write into the stats collection, so an
+    append still runs at most three jobs (data write, stats scan)."""
+    from tibame_project_spark.sources import manifest as M
+
+    base = str(tmp_path / "t")
+    schema = "id long, x double"
+    write_manifest_table(
+        spark, _mk(spark, [(i, i / 2) for i in range(40)], schema), base,
+        stats_cols=["id", "x"], cluster_by="id", n_files=2, keep=10,
+    )
+    with spark_jobs() as jobs:
+        M.append_manifest_table(
+            spark, _mk(spark, [(100, 20.5), (101, 1.5)], schema), base, keep=10
+        )
+        assert jobs() <= 3
+    stats = spark.createDataFrame(M._load_manifest(spark, base, 1)).collect()
+    assert sum(r["rows"] for r in stats) == 42
+    assert max(r["max_x"] for r in stats) == 20.5
 
 
 def test_fits_one_task_fails_closed_on_unknown_bytes(monkeypatch):
@@ -7075,7 +7173,7 @@ def test_driver_bounds_match_the_aggregate(
         base, stats_cols=["k"], cluster_by="k", n_files=6, keep=10,
     )
     head = read_manifest_version(spark, base)
-    fold = M._cand_fold_files(base, head, "k")
+    fold = M._cand_fold_files(M._load_manifest(spark, base, head), "k")
     assert fold is not None and len(fold) == 6
     key_type = StructType.fromJson(M._meta(spark, base, head)["schema"])[
         "k"
@@ -7194,7 +7292,7 @@ def test_local_fold_merge_runs_no_job_before_its_rewrite(
         stats_cols=["id"], cluster_by="id", n_files=4, keep=10,
     )
     delete_manifest_table(spark, _mk(spark, [(5, 0)]).select("id"), base, "id")
-    assert M._cand_fold_files(base, 1, "id") is not None
+    assert M._cand_fold_files(M._load_manifest(spark, base, 1), "id") is not None
     seen = []
     real = M._write_data
 

@@ -880,19 +880,19 @@ def test_footer_stats_equal_scan_stats_for_arbitrary_data(
     cols = ["k", "s", "dt"]
     foot = sorted(
         tuple(r)
-        for r in M._file_stats(
+        for r in spark.createDataFrame(M._file_stats(
             spark, base, "data/c=p", cols, df.schema, None, null_stats=True
-        ).collect()
+        )).collect()
     )
     orig = M._footer_file_stats
     M._footer_file_stats = lambda *a, **kw: None
     try:
         scan = sorted(
             tuple(r)
-            for r in M._file_stats(
+            for r in spark.createDataFrame(M._file_stats(
                 spark, base, "data/c=p", cols, df.schema, None,
                 null_stats=True,
-            ).collect()
+            )).collect()
         )
     finally:
         M._footer_file_stats = orig

@@ -183,12 +183,14 @@ _ORDERABLE_KINDS = (
     "timestamp timestamp_ntz"
 )
 
-#: Deletion-vector sidecars above this byte size are joined WITHOUT a
-#: broadcast hint (AQE picks the strategy): sidecars store full
-#: (file, key) pairs — unlike Delta's per-file bitmaps — so percent-level
-#: condemnation of a huge corpus yields a condemned set no driver should
-#: be forced to broadcast.
-_DV_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
+#: The one bound on what the engine FORCE-broadcasts (bytes on disk).
+#: Deletion-vector sidecars above it are joined WITHOUT a broadcast hint
+#: (AQE picks the strategy): sidecars store full (file, key) pairs —
+#: unlike Delta's per-file bitmaps — so percent-level condemnation of a
+#: huge corpus yields a condemned set no driver should be forced to
+#: broadcast. A merge with ``update_condition`` fuses (and so broadcasts
+#: its candidate rows explicitly) only while the candidates fit it.
+_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 #: Per-file min/max stats for STRING columns are truncated to this many
 #: characters (conservatively — see ``_file_stats``): manifest rows must
@@ -450,15 +452,18 @@ _ARROW_FS_RESOLVERS: dict = {}
 
 
 def register_arrow_fs(scheme: str, resolver):
-    """Extend the driver-side Arrow metadata fast paths (:func:`_meta`
-    reads, manifest loads, commit-manifest materialization) to a URI
-    scheme pyarrow's ``FileSystem.from_uri`` doesn't speak natively.
+    """Extend the driver-side Arrow metadata paths (:func:`_meta` reads,
+    manifest loads, commit-manifest materialization, footer stats) to a
+    URI scheme pyarrow's ``FileSystem.from_uri`` doesn't speak natively.
     ``resolver(path) -> (pyarrow.fs.FileSystem, fs-relative path)`` —
     e.g. map ``abfs://`` through ``pyarrow.fs.PyFileSystem(
     FSSpecHandler(adlfs_fs))``, or a test scheme through a
     ``SubTreeFileSystem``. Returns the previously registered resolver
-    (or None) so callers can restore it. Unresolvable schemes keep the
-    documented fallback: the distributed Spark read/write path."""
+    (or None) so callers can restore it. A scheme nothing resolves keeps
+    the manifest a driver-side Arrow table all the same, read and written
+    through Spark: each manifest load there is one ``toArrow()`` job
+    (once a lazy read), and footer stats fall back to the ``_metadata``
+    scan."""
     prev = _ARROW_FS_RESOLVERS.get(scheme)
     _ARROW_FS_RESOLVERS[scheme] = resolver
     return prev
@@ -470,9 +475,9 @@ def _arrow_fs(path: str):
     scheme. Local paths resolve to LocalFileSystem; ``s3://`` and
     ``hdfs://`` resolve through pyarrow's own connectors (from_uri);
     other schemes resolve through :func:`register_arrow_fs` adapters —
-    so the manifest read/materialize fast paths are one code path on
-    every store pyarrow can reach. Anything unresolvable falls back to
-    the distributed read/write."""
+    so the manifest read/materialize paths are one code path on every
+    store pyarrow can reach. Anything unresolvable reads and writes its
+    manifests through Spark."""
     try:
         from pyarrow import fs as pafs
 
@@ -485,24 +490,6 @@ def _arrow_fs(path: str):
         return pafs.FileSystem.from_uri(path)
     except Exception:
         return None
-
-
-def _manifest_arrow(base_path: str, version: int):
-    """A version's manifest as a pyarrow Table (driver-side read, no
-    Spark job), or None when pyarrow can't reach the store. The
-    manifest is O(live files) rows — the same relation every committed
-    format holds driver-side (Delta's log replay, Iceberg's manifest
-    list); reading it as a job costs scheduler latency per consumer."""
-    resolved = _arrow_fs(f"{base_path}/manifest/v={version}")
-    if resolved is None:
-        return None
-    fs, d = resolved
-    try:
-        import pyarrow.dataset as ds
-
-        return ds.dataset(d, format="parquet", filesystem=fs).to_table()
-    except Exception:
-        return None  # unreadable/corrupt: the Spark path raises properly
 
 
 def _is_local_relation(df: DataFrame) -> bool:
@@ -534,77 +521,21 @@ def _is_local_relation(df: DataFrame) -> bool:
 
 
 def _rows_to_arrow(rows: list[tuple], schema: StructType):
-    """Driver-local rows as a pyarrow Table typed by the Spark schema —
-    the Arrow TWIN of ``local_rows_df`` over the same rows — or None
-    when the conversion can't be proven faithful (exotic types). Rides
-    the same pandas→Arrow conversion ``local_rows_df`` itself ships to
-    the JVM, so twin and DataFrame agree value-for-value."""
-    try:
-        import pandas as pd
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
+    """Driver-local rows as a pyarrow Table typed by the Spark schema,
+    through the same pandas→Arrow conversion ``local_rows_df`` ships to
+    the JVM, so the manifest rows and a frame built from them agree
+    value-for-value. A failed conversion raises."""
+    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        pdf = pd.DataFrame.from_records(
-            list(rows), columns=[f.name for f in schema.fields]
-        ).astype(object)
-        pdf = pdf.where(pd.notna(pdf), None)
-        return pa.Table.from_pandas(
-            pdf, schema=to_arrow_schema(schema), preserve_index=False
-        ).replace_schema_metadata(None)
-    except Exception:
-        return None
-
-
-def _twin_filter_removed(twin, removed):
-    """``manifest.where(~path.isin(removed))`` on the Arrow twin, or
-    None (twin lost → Spark path materializes)."""
-    if twin is None:
-        return None
-    try:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        mask = pc.is_in(
-            twin.column("path"),
-            value_set=pa.array(list(removed), type=pa.string()),
-        )
-        # match Spark's NULL-predicate semantics: ~isin(...) is NULL for a
-        # NULL path, so Spark DROPS such rows — require path IS NOT NULL
-        # here too (a NULL path row would otherwise survive only the twin)
-        return twin.filter(
-            pc.and_(
-                pc.invert(pc.fill_null(mask, False)),
-                pc.is_valid(twin.column("path")),
-            )
-        )
-    except Exception:
-        return None
-
-
-def _twin_union(twin, added_twin):
-    """``manifest.unionByName(added)`` on the Arrow twins: reorder the
-    added block to the manifest's column order and concatenate. Types
-    must MATCH FIELD-FOR-FIELD — unionByName would reconcile differing
-    types by promotion, and silently diverging from that here could
-    change stored stat types, so any mismatch drops the twin (None →
-    the Spark path materializes, always correct)."""
-    if twin is None or added_twin is None:
-        return None
-    try:
-        import pyarrow as pa
-
-        names = twin.schema.names
-        if set(added_twin.schema.names) != set(names):
-            return None
-        added_twin = added_twin.select(names)
-        for a, b in zip(twin.schema, added_twin.schema):
-            if a.type != b.type:
-                return None
-        return pa.concat_tables(
-            [twin, added_twin], promote_options="default"
-        )
-    except Exception:
-        return None
+    pdf = pd.DataFrame.from_records(
+        list(rows), columns=[f.name for f in schema.fields]
+    ).astype(object)
+    pdf = pdf.where(pd.notna(pdf), None)
+    return pa.Table.from_pandas(
+        pdf, schema=to_arrow_schema(schema), preserve_index=False
+    ).replace_schema_metadata(None)
 
 
 def _write_arrow_parquet(base_path: str, rel_dir: str, tbl) -> bool:
@@ -613,8 +544,6 @@ def _write_arrow_parquet(base_path: str, rel_dir: str, tbl) -> bool:
     single-file writers produce). True on success; False when the store
     is Arrow-unreachable or the write failed (caller takes the Spark
     path). ``rel_dir`` must be attempt-unique — nothing is cleared."""
-    if tbl is None:
-        return False
     resolved = _arrow_fs(base_path)
     if resolved is None:
         return False
@@ -634,35 +563,32 @@ def _write_arrow_parquet(base_path: str, rel_dir: str, tbl) -> bool:
         return False
 
 
-def _read_parquet_local(spark: SparkSession, path: str):
-    """A small metadata parquet dir (staged manifest rows, bounds) as a
-    driver-loaded LocalRelation DataFrame with its Arrow table attached
-    as ``_tibame_arrow``, or None (caller takes the distributed read).
-    The local relation keeps every downstream action job-free and lets
-    ``_finish`` materialize through the twin."""
+def _read_arrow(spark: SparkSession, path: str):
+    """A small metadata parquet dir (a manifest, a stage's added rows or
+    bounds) as a driver-side pyarrow Table: read through
+    :func:`_arrow_fs` with no Spark job. A store neither pyarrow nor
+    :func:`register_arrow_fs` reaches (or a dir pyarrow cannot read)
+    takes one Spark read ending in ``toArrow()`` — one job per load
+    where a lazy read once cost none until its first action; no test or
+    workload runs on such a store."""
     resolved = _arrow_fs(path)
-    if resolved is None:
-        return None
-    fs, d = resolved
-    try:
-        import pyarrow.dataset as ds
+    if resolved is not None:
+        fs, d = resolved
+        try:
+            import pyarrow.dataset as ds
 
-        tbl = ds.dataset(d, format="parquet", filesystem=fs).to_table()
-        df = spark.createDataFrame(tbl)
-        df._tibame_arrow = tbl
-        return df
-    except Exception:
-        return None
+            return ds.dataset(d, format="parquet", filesystem=fs).to_table()
+        except Exception:
+            pass  # unreadable here: the Spark read raises properly
+    return spark.read.parquet(path).toArrow()
 
 
-def _parquet_strings_local(
-    base_path: str, rel_dir: str, col: str, max_bytes: int = 256 << 20
-):
+def _parquet_strings_local(base_path: str, rel_dir: str, col: str):
     """The distinct values of one string column of a small parquet dir,
-    read driver-side through Arrow — or None (size over ``max_bytes``,
-    store Arrow-unreachable, read failed: caller runs the distributed
-    read). Bounds the driver's exposure the way a collect of the same
-    distinct set already would."""
+    read driver-side through Arrow — or None (size over
+    :data:`_UNIQ_READBACK_MAX_BYTES`, store Arrow-unreachable, read
+    failed: caller runs the distributed read). Bounds the driver's
+    exposure the way a collect of the same distinct set already would."""
     resolved = _arrow_fs(base_path)
     if resolved is None:
         return None
@@ -674,7 +600,7 @@ def _parquet_strings_local(
 
         full = f"{d.rstrip('/')}/{rel_dir}"
         infos = fs.get_file_info(pafs.FileSelector(full, recursive=True))
-        if sum(i.size or 0 for i in infos if i.is_file) > max_bytes:
+        if sum(i.size or 0 for i in infos if i.is_file) > _UNIQ_READBACK_MAX_BYTES:
             return None
         tbl = ds.dataset(full, format="parquet", filesystem=fs).to_table(
             columns=[col]
@@ -685,84 +611,81 @@ def _parquet_strings_local(
 
 
 def _materialize_manifest(
-    spark: SparkSession,
-    manifest: DataFrame,
-    base_path: str,
-    tmp_dir: str,
-    twin=None,
+    spark: SparkSession, tbl, base_path: str, rel_dir: str
 ) -> None:
-    """Write a prepared manifest relation to ``tmp_dir`` (the pre-claim
-    materialization ``_finish`` renames into place). When ``_finish``
-    carried the commit's Arrow TWIN (``twin``: the same rows as a
-    driver-side pyarrow Table — head manifest read through Arrow, minus
-    removed paths, plus footer-derived added rows), the write is pure
-    driver-side pyarrow: ZERO Spark jobs. Otherwise local tables take
-    the driver-side Arrow writer — ``toArrow()`` runs the one inherent
-    job (the new files' stats scan feeding the union) and the parquet
-    write itself skips the distributed writer's output-committer dance;
-    remote stores take the distributed write. Same rows either way
-    (snappy parquet, one file)."""
-    if _write_arrow_parquet(base_path, tmp_dir, twin):
-        return
-    resolved = _arrow_fs(base_path)
-    if resolved is not None:
-        try:
-            import pyarrow.parquet as pq
+    """Write manifest rows (a pyarrow Table) to ``rel_dir`` as one snappy
+    parquet file: the pre-claim materialization ``_finish`` renames into
+    place, and a stage's added rows. One driver-side pyarrow write, no
+    Spark job; a store pyarrow cannot write takes one single-file Spark
+    write of the same rows."""
+    if not _write_arrow_parquet(base_path, rel_dir, tbl):
+        spark.createDataFrame(tbl).coalesce(1).write.mode("overwrite").parquet(
+            f"{base_path}/{rel_dir}"
+        )
 
-            fs, d = resolved
-            tbl = manifest.toArrow()
-            out = f"{d.rstrip('/')}/{tmp_dir}"
-            fs.create_dir(out, recursive=True)
-            pq.write_table(
-                tbl.replace_schema_metadata(None),
-                f"{out}/part-00000.parquet",
-                compression="snappy", filesystem=fs,
+
+def _load_manifest(spark: SparkSession, base_path: str, version: int):
+    """A version's manifest as a driver-side pyarrow Table, normalized to
+    carry ``dv_path`` (NULL) and ``schema_id`` (0) for manifests written
+    before those columns existed — the add-column evolution of the
+    manifest itself. The manifest is O(live files) rows, the relation
+    every table format holds on the driver (Delta's log replay, Iceberg's
+    manifest list): commits edit it in Arrow, consumers that evaluate SQL
+    over it wrap it with ``spark.createDataFrame`` (a LocalRelation, so
+    their actions scan nothing). On an Arrow-unreachable store the load
+    is one ``toArrow()`` job (:func:`_read_arrow`)."""
+    import pyarrow as pa
+
+    tbl = _read_arrow(spark, f"{base_path}/manifest/v={version}")
+    if "dv_path" not in tbl.schema.names:
+        tbl = tbl.append_column(
+            "dv_path", pa.nulls(tbl.num_rows, type=pa.string())
+        )
+    if "schema_id" not in tbl.schema.names:
+        tbl = tbl.append_column(
+            "schema_id", pa.array([0] * tbl.num_rows, type=pa.int32())
+        )
+    return tbl
+
+
+def _edit_manifest(man, removed, added):
+    """One commit's file edit on a manifest Table: drop the ``removed``
+    paths (a NULL-path row drops too, as Spark's ``~isin`` filter drops
+    it) and append the ``added`` rows. Column names must match, as a
+    strict ``unionByName`` requires; differing types promote."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if removed:
+        path = man.column("path")
+        gone = pc.is_in(path, value_set=pa.array(list(removed), type=pa.string()))
+        man = man.filter(
+            pc.and_(pc.invert(pc.fill_null(gone, False)), pc.is_valid(path))
+        )
+    if added is not None:
+        if set(added.schema.names) != set(man.schema.names):
+            raise ValueError(
+                f"manifest edit adds rows with columns {added.schema.names}; "
+                f"the manifest has {man.schema.names}"
             )
-            return
-        except Exception:
-            pass  # exotic type the Arrow collector rejects: Spark path
-    manifest.coalesce(1).write.mode("overwrite").parquet(
-        f"{base_path}/{tmp_dir}"
-    )
-
-
-def _load_manifest(spark: SparkSession, base_path: str, version: int) -> DataFrame:
-    """Read a version's manifest, normalized to carry ``dv_path`` (NULL)
-    and ``schema_id`` (0) for manifests written before those columns
-    existed — the add-column evolution of the manifest itself.
-
-    Local tables load driver-side through Arrow into a JVM local
-    relation: every downstream action (candidate-selection joins, file
-    listings, rebase diffs) then skips the per-consumer manifest scan
-    job. The Arrow table rides along as ``_tibame_arrow`` (normalized
-    identically) so ``_finish`` can materialize the next commit's
-    manifest without any Spark job. Remote stores fall back to the
-    distributed read."""
-    tbl = _manifest_arrow(base_path, version)
-    if tbl is not None:
-        try:
-            import pyarrow as pa
-
-            if "dv_path" not in tbl.schema.names:
-                tbl = tbl.append_column(
-                    "dv_path", pa.nulls(tbl.num_rows, type=pa.string())
-                )
-            if "schema_id" not in tbl.schema.names:
-                tbl = tbl.append_column(
-                    "schema_id", pa.array([0] * tbl.num_rows, type=pa.int32())
-                )
-            man = spark.createDataFrame(tbl)
-            man._tibame_arrow = tbl
-            return man
-        except Exception:
-            man = spark.createDataFrame(tbl)
-    else:
-        man = spark.read.parquet(f"{base_path}/manifest/v={version}")
-    if "dv_path" not in man.columns:
-        man = man.withColumn("dv_path", F.lit(None).cast("string"))
-    if "schema_id" not in man.columns:
-        man = man.withColumn("schema_id", F.lit(0))
+        man = pa.concat_tables(
+            [man, added.select(man.schema.names)], promote_options="permissive"
+        )
     return man
+
+
+def _manifest_files(spark: SparkSession, man, cols: list[str], *prunes):
+    """The ``cols`` of a manifest's rows, kept by every non-None ``prunes``
+    SQL expression (a NULL verdict keeps the row: the superset contract
+    of ``prune=``). Without a prune the rows come straight off the Arrow
+    table; a prune evaluates over ``spark.createDataFrame(man)``."""
+    prunes = [p for p in prunes if p is not None]
+    if not prunes:
+        return man.select(cols).to_pylist()
+    df = spark.createDataFrame(man)
+    for p in prunes:
+        df = df.where(F.coalesce(F.expr(p), F.lit(True)))
+    return df.select(*cols).collect()
 
 
 def _fields_from_schema(schema: StructType) -> list[dict]:
@@ -903,7 +826,7 @@ def _read_live(
     every sidecar dir, :func:`_read_dv_sidecars` — building the frame
     launches no job) drops condemned keys — broadcast-hinted only while
     the sidecars stay under
-    :data:`_DV_BROADCAST_MAX_BYTES` (sizes from the filesystem listing,
+    :data:`_BROADCAST_MAX_BYTES` (sizes from the filesystem listing,
     driver metadata; above the bound AQE picks the join). ``files`` is a
     list of manifest rows/dicts with ``path``, ``dv_path``, and
     (optionally) ``schema_id``."""
@@ -955,7 +878,7 @@ def _read_live(
             ).getLength()
             for d in dirs
         )
-        if dv_bytes <= _DV_BROADCAST_MAX_BYTES:
+        if dv_bytes <= _BROADCAST_MAX_BYTES:
             dv = F.broadcast(dv)
         raw = dv_parts[0]
         for p in dv_parts[1:]:
@@ -1184,13 +1107,14 @@ def _check_rebase(
     col = bounds[0] if bounds else None
 
     def rows_of(v: int) -> dict:
+        # through Spark, not to_pylist: the stat values compare with the
+        # bounds the batch aggregate collected, and Arrow would hand back
+        # tz-aware datetimes where Spark collects naive ones
         cols = ["path", "dv_path"] + (
             [f"min_{col}", f"max_{col}"] if col else []
         )
-        return {
-            r["path"]: r
-            for r in _load_manifest(spark, base_path, v).select(*cols).collect()
-        }
+        man = _load_manifest(spark, base_path, v).select(cols)
+        return {r["path"]: r for r in spark.createDataFrame(man).collect()}
 
     try:
         prev = rows_of(base_head)
@@ -1241,9 +1165,9 @@ def _finish(
     stats_cols: list[str],
     keep: int,
     base_head: int | None,
-    full_manifest: DataFrame | None = None,
+    full_manifest=None,
     removed: frozenset = frozenset(),
-    added: DataFrame | None = None,
+    added=None,
     bounds: tuple | None = None,
     dv_key: str | None = None,
     bloom: dict | None = None,
@@ -1265,13 +1189,15 @@ def _finish(
        deletes with intersecting read sets / key ranges raise);
        ``full_manifest`` commits (create, full refresh, restore) are
        exclusive and never rebase;
-    2. MATERIALIZE the resulting manifest to an attempt-unique
-       ``manifest_tmp/c=<token>`` dir — this executes the whole lineage
-       (head manifest load + the ``_file_stats`` scan of the new data
-       files + Bloom aggregation), deliberately OUTSIDE any claim: a
-       large commit's stats job can run minutes, and running it inside
-       the claimed window would make healthy slow writers look crashed
-       to every waiter (r09 ADVICE);
+    2. EDIT the manifest — a driver-side pyarrow Table from load to
+       write: the head's rows minus ``removed`` plus ``added`` (already
+       computed: :func:`_file_stats` ran any stats scan before this call)
+       — and MATERIALIZE it to an attempt-unique
+       ``manifest_tmp/c=<token>`` dir, deliberately OUTSIDE any claim, so
+       the claimed window is pure filesystem metadata. On a local or
+       Arrow-reachable store this step runs no Spark job; on an
+       Arrow-unreachable one the head load is one ``toArrow()`` job and
+       the write one Spark write (:func:`_materialize_manifest`);
     3. atomically CLAIM version ``h+1`` (create-new ``_CLAIM_v<n>``,
        through the :class:`CommitFS` seam) — the claim serializes only
        the metadata window, so losing it means waiting for that
@@ -1390,27 +1316,14 @@ def _finish(
                 manifest = full_manifest
             else:
                 manifest = _load_manifest(spark, base_path, base_head)
-            # the commit's Arrow twin: head manifest (driver-side Arrow
-            # read) minus removed paths plus the footer-derived added
-            # rows — when every ingredient is Arrow-local the
-            # materialization below runs ZERO Spark jobs; any gap in the
-            # chain (distributed stats, remote store, type drift) drops
-            # the twin and the Spark path materializes as before
-            twin = getattr(manifest, "_tibame_arrow", None)
             if full_manifest is None:
-                if removed:
-                    manifest = manifest.where(~F.col("path").isin(list(removed)))
-                    twin = _twin_filter_removed(twin, removed)
-                if added is not None:
-                    manifest = manifest.unionByName(added)
-                    twin = _twin_union(
-                        twin, getattr(added, "_tibame_arrow", None)
-                    )
+                manifest = _edit_manifest(manifest, removed, added)
             version = (head if head is not None else -1) + 1
             # a prior rebase attempt may have materialized through a
-            # DIFFERENT writer (distributed part-<uuid> files vs the twin's
-            # fixed part-00000.parquet) — clear the dir so no attempt can
-            # publish a mix of stale pre-rebase rows and fresh ones
+            # DIFFERENT writer (distributed part-<uuid> files vs the Arrow
+            # writer's fixed part-00000.parquet) — clear the dir so no
+            # attempt can publish a mix of stale pre-rebase rows and fresh
+            # ones
             if _attempt and fs.exists(tmp) and not fs.delete(tmp, True):
                 raise IOError(
                     f"could not clear {tmp_dir} before rebase attempt "
@@ -1419,7 +1332,7 @@ def _finish(
             # materialize BEFORE claiming (docstring step 2): the claimed
             # window below is pure filesystem metadata, so _CLAIM_WAIT_S
             # bounds a rename + two small writes + a prune — not a job
-            _materialize_manifest(spark, manifest, base_path, tmp_dir, twin=twin)
+            _materialize_manifest(spark, manifest, base_path, tmp_dir)
             global _TEST_PRECLAIM_HOOK
             if _TEST_PRECLAIM_HOOK is not None:
                 hook, _TEST_PRECLAIM_HOOK = _TEST_PRECLAIM_HOOK, None
@@ -1839,13 +1752,13 @@ def _file_stats(
     schema_id: int = 0,
     *,
     null_stats: bool = False,
-) -> DataFrame:
-    """Manifest rows for the files a commit just wrote into its
-    attempt-unique ``data_dir``: one distributed groupBy keyed on the
-    ``_metadata`` hidden file path — stats ride a single scan of the NEW
-    files only. Declared-schema read so a commit that wrote ZERO files
-    (empty merge result) yields an empty manifest block, not an
-    inference error.
+):
+    """Manifest rows (a pyarrow Table) for the files a commit just wrote
+    into its attempt-unique ``data_dir``: one distributed groupBy keyed
+    on the ``_metadata`` hidden file path — stats ride a single scan of
+    the NEW files only, collected with ``toArrow()``. Declared-schema
+    read so a commit that wrote ZERO files (empty merge result) yields
+    an empty manifest block, not an inference error.
 
     ``bloom`` (``{"cols": [...], "m": bits, "k": hashes}``) adds one
     sparse per-file Bloom filter per declared column, built fully
@@ -1867,10 +1780,12 @@ def _file_stats(
     When every stats column's type is footer-decodable, the
     min/max/null/row/byte stats come from the parquet FOOTERS instead,
     read through Arrow (:func:`_footer_file_stats`) — the commit re-reads
-    ZERO data bytes. The distributed scan below is the fallback for the
-    remaining types, for files missing chunk statistics, and for stores
-    Arrow cannot reach or read. A Bloom-configured table still scans for
-    its filters, but reading ONLY the Bloom columns."""
+    ZERO data bytes, and the rows convert to Arrow directly (a failed
+    conversion raises). The distributed scan below is the fallback for
+    the remaining types, for files missing chunk statistics, and for
+    stores Arrow cannot reach or read — so on an Arrow-unreachable store
+    every commit pays the scan's jobs. A Bloom-configured table still
+    scans for its filters, but reading ONLY the Bloom columns."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -1899,16 +1814,8 @@ def _file_stats(
             StructField("dv_path", StringType()),
             StructField("schema_id", IntegerType()),
         ]
-        # local_rows_df, NOT createDataFrame: the plain list path rides
-        # a Python RDD whose every downstream action (the manifest write,
-        # a stage persist) schedules Python-runner stages — measured 4-6s
-        # per tiny write on local[32]; the Arrow path stays JVM-only
         if not bloom:
-            out = local_rows_df(spark, footer_rows, StructType(fields))
-            # the Arrow twin of the same rows lets _finish materialize
-            # the commit manifest with zero Spark jobs
-            out._tibame_arrow = _rows_to_arrow(footer_rows, StructType(fields))
-            return out
+            return _rows_to_arrow(footer_rows, StructType(fields))
         # the Bloom filters still need the values — but ONLY the Bloom
         # columns' bytes, not every stats column's
         raw = (
@@ -1920,10 +1827,8 @@ def _file_stats(
             )
         )
         # the filters are KBs per file: COLLECT them (one small job per
-        # Bloom column — the inherent value scan) and fold driver-side,
-        # so the manifest rows stay a LocalRelation with an Arrow twin
-        # instead of a distributed join the commit materialization would
-        # re-run as its own multi-stage job
+        # Bloom column — the inherent value scan) and fold driver-side
+        # into the footer rows, instead of a distributed join
         bfields = list(fields) + [
             StructField(
                 f"bloom_{c}", MapType(IntegerType(), LongType())
@@ -1952,9 +1857,7 @@ def _file_stats(
             )
             for row in footer_rows
         ]
-        out = local_rows_df(spark, brows, StructType(bfields))
-        out._tibame_arrow = _rows_to_arrow(brows, StructType(bfields))
-        return out
+        return _rows_to_arrow(brows, StructType(bfields))
     raw = spark.read.schema(schema).parquet(f"{base_path}/{data_dir}").select(
         "*",
         F.col("_metadata.file_path").alias("__path"),
@@ -2006,9 +1909,9 @@ def _file_stats(
             F.lit(schema_id).alias("schema_id"),
         )
     )
-    if not bloom:
-        return out
-    return _attach_bloom(out, raw, bloom)
+    if bloom:
+        out = _attach_bloom(out, raw, bloom)
+    return out.toArrow()
 
 
 def _bloom_words(raw: DataFrame, c: str, m: int, k: int) -> DataFrame:
@@ -2155,10 +2058,10 @@ def _expect_gate(
     return df, check
 
 
-#: Size cap for the driver-side Arrow read-back of a commit's written
-#: files when validating unique() rules post-write — same bounded-driver
-#: contract as the DV sidecar read-back. Above it (or Arrow-unreachable)
-#: the check runs as one distributed read of the written files.
+#: Size cap for a driver-side Arrow read-back: a commit's written files
+#: when validating unique() rules post-write, and a delete's fresh DV
+#: sidecar (:func:`_parquet_strings_local`). Above it (or
+#: Arrow-unreachable) the read runs distributed.
 _UNIQ_READBACK_MAX_BYTES = 256 << 20
 
 
@@ -2610,6 +2513,12 @@ def manifest_stats(
     """The manifest itself — one row per live data file with path, bytes,
     rows, and min/max per declared stats column. Monitoring surface and
     the test hook for asserting skipping."""
+    return spark.createDataFrame(_committed_manifest(spark, base_path, version))
+
+
+def _committed_manifest(spark: SparkSession, base_path: str, version: int | None):
+    """The manifest Table of a committed ``version`` (default: the head);
+    raises when that version is not committed."""
     if version is None:
         version = read_manifest_version(spark, base_path)
         if version is None:
@@ -2644,10 +2553,8 @@ def manifest_file_paths(
     ``nulls_price > 0``. NULL-safe conservative: a file whose
     stats leave the expression NULL (all-null column chunk) is KEPT, so
     pruning can only ever be a superset of the matching rows."""
-    man = manifest_stats(spark, base_path, version=version)
-    if prune is not None:
-        man = man.where(F.coalesce(F.expr(prune), F.lit(True)))
-    return [r["path"] for r in man.select("path").collect()]
+    man = _committed_manifest(spark, base_path, version)
+    return [r["path"] for r in _manifest_files(spark, man, ["path"], prune)]
 
 
 def version_as_of(spark: SparkSession, base_path: str, ts) -> int:
@@ -2737,17 +2644,16 @@ def read_manifest_table(
         version = read_manifest_version(spark, base_path)
         if version is None:
             raise FileNotFoundError(f"no committed manifest table under {base_path}")
-    man = manifest_stats(spark, base_path, version=version)
+    man = _committed_manifest(spark, base_path, version)
     meta = _meta(spark, base_path, version)
-    if prune is not None:
-        man = man.where(F.coalesce(F.expr(prune), F.lit(True)))
+    auto = None
     if where is not None:
         auto = data_skipping_expr(
             spark, base_path, where, version=version, meta=meta
         )
-        if auto is not None:
-            man = man.where(F.coalesce(F.expr(auto), F.lit(True)))
-    files = man.select("path", "dv_path", "schema_id").collect()
+    files = _manifest_files(
+        spark, man, ["path", "dv_path", "schema_id"], prune, auto
+    )
     out = _read_live(spark, base_path, files, meta)
     return out.where(where) if where is not None else out
 
@@ -2787,26 +2693,24 @@ def _fits_one_task(sizes) -> bool:
 _CAND_FOLD_LIT_TYPES = (bool, int, float, str)
 
 
-def _cand_fold_files(base_path: str, head: int, key: str):
-    """The live file set as driver-side dicts with ``__lo``/``__hi`` key
-    bounds — when the manifest is Arrow-reachable, small enough to fold
-    into the bounds agg, and the key's stat values are literal-safe;
-    else None (callers keep the broadcast semi-join). Files with NULL
-    key stats (zero-row files) are dropped: no batch key can land in a
-    NULL range, matching the semi-join's NULL comparison semantics."""
+def _cand_fold_files(man, key: str):
+    """The live file set of manifest ``man`` as driver-side dicts with
+    ``__lo``/``__hi`` key bounds — when it is small enough to fold into
+    the bounds agg and the key's stat values are literal-safe; else None
+    (callers keep the broadcast semi-join). Files with NULL key stats
+    (zero-row files) are dropped: no batch key can land in a NULL range,
+    matching the semi-join's NULL comparison semantics."""
     import datetime
     import decimal
 
-    tbl = _manifest_arrow(base_path, head)
-    if tbl is None or tbl.num_rows > _CAND_FOLD_MAX_FILES:
+    if man.num_rows > _CAND_FOLD_MAX_FILES:
         return None
-    names = set(tbl.schema.names)
+    names = set(man.schema.names)
     if f"min_{key}" not in names or f"max_{key}" not in names:
         return None
-    cols = ["path", f"min_{key}", f"max_{key}"]
-    cols += [c for c in ("bytes", "dv_path", "schema_id") if c in names]
+    cols = ["path", f"min_{key}", f"max_{key}", "bytes", "dv_path", "schema_id"]
     out = []
-    for r in tbl.select(cols).to_pylist():
+    for r in man.select(cols).to_pylist():
         lo, hi = r[f"min_{key}"], r[f"max_{key}"]
         if lo is None or hi is None:
             continue
@@ -2821,16 +2725,7 @@ def _cand_fold_files(base_path: str, head: int, key: str):
         )
         if not ok:
             return None
-        out.append(
-            {
-                "path": r["path"],
-                "bytes": r.get("bytes"),
-                "dv_path": r.get("dv_path"),
-                "schema_id": r.get("schema_id", 0),
-                "__lo": lo,
-                "__hi": hi,
-            }
-        )
+        out.append(dict(r, __lo=lo, __hi=hi))
     return out
 
 
@@ -3103,7 +2998,8 @@ def _prepare_merge_edit_impl(
     # reach, or stat types whose literal coercion isn't provably
     # identical to the join's) keep the scale-proof broadcast semi-join
     # below.
-    fold_files = _cand_fold_files(base_path, head, key)
+    man = _load_manifest(spark, base_path, head)
+    fold_files = _cand_fold_files(man, key)
     bounds = _batch_bounds(
         source, key, schema[key].dataType, fold_files, distinct=True
     )
@@ -3190,8 +3086,7 @@ def _prepare_merge_edit_impl(
             f for i, f in enumerate(fold_files) if bounds[f"__cand{i}"]
         ]
     else:
-        man = _load_manifest(spark, base_path, head)
-        coarse = man.where(
+        coarse = spark.createDataFrame(man).where(
             (F.col(f"max_{key}") >= F.lit(bounds["lo"]))
             & (F.col(f"min_{key}") <= F.lit(bounds["hi"]))
         )
@@ -3237,11 +3132,17 @@ def _prepare_merge_edit_impl(
     # tripped on it); the rewrite preserves the table's file granularity
     # the source side must fit one task too: a driver-local batch, or an
     # optimizer estimate within the bound (an unknown one, e.g. an
-    # RDD-backed frame's Long.MaxValue, fails closed)
+    # RDD-backed frame's Long.MaxValue, fails closed). With
+    # update_condition the fused plan broadcasts the candidate rows
+    # explicitly, so they must also fit the broadcast bound
     n_out = max(1, len(touched))
     fused = (
         n_out <= 1
         and _fits_one_task(f["bytes"] for f in cand_files)
+        and (
+            update_condition is None
+            or sum(f["bytes"] for f in cand_files) <= _BROADCAST_MAX_BYTES
+        )
         and (
             _is_local_relation(source)
             or _fits_one_task(
@@ -3313,7 +3214,7 @@ def _prepare_merge_edit_impl(
                 ],
             )
             src_cols = source.columns
-            # fused: cur_t is ≤ _MERGE_FUSE_MAX_BYTES by the gate, so
+            # fused: cur_t is ≤ _BROADCAST_MAX_BYTES by the gate, so
             # broadcast it EXPLICITLY — a zero-candidate current is an
             # Arrow-built local frame (ExistingRDD, unknown size stats),
             # which the auto-broadcast threshold treats as huge and
@@ -3410,17 +3311,9 @@ def _persist_stage(
     token = _token()
     key = edit["key"]
     if edit["added"] is not None:
-        # the Arrow twin (carried from the footer-stats path) writes the
-        # staged rows driver-side — no Spark job; twinless edits keep
-        # the distributed write
-        if not _write_arrow_parquet(
-            base_path,
-            f"staged/{token}/add",
-            getattr(edit["added"], "_tibame_arrow", None),
-        ):
-            edit["added"].coalesce(1).write.mode("overwrite").parquet(
-                f"{base_path}/staged/{token}/add"
-            )
+        _materialize_manifest(
+            spark, edit["added"], base_path, f"staged/{token}/add"
+        )
     if edit["bounds"] is not None:
         from pyspark.sql.types import StructField
         from pyspark.sql.types import StructType as _ST
@@ -3428,9 +3321,9 @@ def _persist_stage(
         kt = edit["schema"][key].dataType
         _, lo, hi = edit["bounds"]
         bschema = _ST([StructField("lo", kt), StructField("hi", kt)])
-        # driver-side twin only for types whose Arrow round-trip is
-        # provably the Spark one (the footer-stat kinds); timestamps
-        # and decimals keep the Spark write
+        # a driver-side Arrow write only for types whose Arrow
+        # round-trip is provably the Spark one (the footer-stat kinds);
+        # timestamps and decimals keep the Spark write
         bkind = kt.simpleString().split("(")[0]
         if bkind not in _FOOTER_STATS_KINDS or not _write_arrow_parquet(
             base_path,
@@ -3514,19 +3407,15 @@ def read_staged_manifest(
             "a different CHECK constraint set — the stage is stale; abandon "
             "it and re-stage against the current head"
         )
-    man = _load_manifest(spark, base_path, head)
-    if st["removed"]:
-        man = man.where(~F.col("path").isin(st["removed"]))
-    if st["has_added"]:
-        add = _read_parquet_local(
-            spark, f"{base_path}/staged/{token}/add"
-        )
-        if add is None:
-            add = spark.read.parquet(f"{base_path}/staged/{token}/add")
-        man = man.unionByName(add, allowMissingColumns=True)
-    if prune is not None:
-        man = man.where(F.coalesce(F.expr(prune), F.lit(True)))
-    files = man.select("path", "dv_path", "schema_id").collect()
+    # the edit publish would apply (_finish step 2), applied here
+    man = _edit_manifest(
+        _load_manifest(spark, base_path, head),
+        st["removed"],
+        _read_arrow(spark, f"{base_path}/staged/{token}/add")
+        if st["has_added"]
+        else None,
+    )
+    files = _manifest_files(spark, man, ["path", "dv_path", "schema_id"], prune)
     meta = head_meta
     if st.get("dv_key") is not None:
         # a staged FIRST delete fixes the DV key only in the stage record
@@ -3555,19 +3444,14 @@ def publish_staged_manifest(
     st = _read_stage(spark, base_path, token)
     added = None
     if st["has_added"]:
-        added = _read_parquet_local(
-            spark, f"{base_path}/staged/{token}/add"
-        )
-        if added is None:
-            added = spark.read.parquet(f"{base_path}/staged/{token}/add")
+        added = _read_arrow(spark, f"{base_path}/staged/{token}/add")
     bounds = None
     if st["has_bounds"]:
-        bdf = _read_parquet_local(
-            spark, f"{base_path}/staged/{token}/bounds"
-        )
-        if bdf is None:
-            bdf = spark.read.parquet(f"{base_path}/staged/{token}/bounds")
-        b = bdf.first()
+        # collected through Spark: the bounds compare with Spark-collected
+        # stat values in _check_rebase
+        b = spark.createDataFrame(
+            _read_arrow(spark, f"{base_path}/staged/{token}/bounds")
+        ).first()
         bounds = (st["key"], b["lo"], b["hi"])
     version = _finish(
         spark,
@@ -4210,7 +4094,8 @@ def _prepare_delete_edit(
     # enough to fold (exactly the merge's candidate fold): the separate
     # broadcast-build + semi-join jobs disappear from the delete. A
     # driver-local batch is folded on the driver with zero jobs.
-    fold_files = _cand_fold_files(base_path, head, key)
+    man = _load_manifest(spark, base_path, head)
+    fold_files = _cand_fold_files(man, key)
     bounds = _batch_bounds(
         keys, key, schema[key].dataType, fold_files, distinct=False
     )
@@ -4241,7 +4126,7 @@ def _prepare_delete_edit(
             f for i, f in enumerate(fold_files) if bounds[f"__cand{i}"]
         ]
     else:
-        coarse = _load_manifest(spark, base_path, head).where(
+        coarse = spark.createDataFrame(man).where(
             (F.col(f"max_{key}") >= F.lit(bounds["lo"]))
             & (F.col(f"min_{key}") <= F.lit(bounds["hi"]))
         )
@@ -4342,34 +4227,24 @@ def _prepare_delete_edit(
     # the commit as a manifest edit: drop the repointed files' old
     # entries, re-add them with the fresh sidecar — what lets _finish
     # rebase it over concurrent commits that left these files alone
-    edit["removed"] = repoint
-    man = _load_manifest(spark, base_path, head)
-    edit["added"] = man.where(F.col("path").isin(repoint)).withColumn(
-        "dv_path", F.lit(dv_dir)
-    )
-    # the added rows' Arrow twin (manifest twin filtered to the
-    # repointed files, dv_path repointed) keeps the staged write and
-    # the commit materialization driver-side — zero Spark jobs
-    twin = getattr(man, "_tibame_arrow", None)
-    if twin is not None:
-        try:
-            import pyarrow as pa
-            import pyarrow.compute as pc
+    import pyarrow as pa
+    import pyarrow.compute as pc
 
-            mask = pc.is_in(
-                twin.column("path"),
-                value_set=pa.array(list(repoint), type=pa.string()),
-            )
-            ftwin = twin.filter(pc.fill_null(mask, False))
-            idx = ftwin.schema.get_field_index("dv_path")
-            ftwin = ftwin.set_column(
-                idx,
-                pa.field("dv_path", pa.string()),
-                pa.array([dv_dir] * ftwin.num_rows, type=pa.string()),
-            )
-            edit["added"]._tibame_arrow = ftwin
-        except Exception:
-            pass
+    edit["removed"] = repoint
+    added = man.filter(
+        pc.fill_null(
+            pc.is_in(
+                man.column("path"),
+                value_set=pa.array(repoint, type=pa.string()),
+            ),
+            False,
+        )
+    )
+    edit["added"] = added.set_column(
+        added.schema.get_field_index("dv_path"),
+        pa.field("dv_path", pa.string()),
+        pa.array([dv_dir] * added.num_rows, type=pa.string()),
+    )
     return edit
 
 
@@ -4407,20 +4282,18 @@ def compact_manifest_table(
     meta = _meta(spark, base_path, head)
     stats_cols = meta["stats_cols"]
     schema = StructType.fromJson(meta["schema"])
-    man = _load_manifest(spark, base_path, head)
+    candidates = _load_manifest(spark, base_path, head).select(
+        ["path", "bytes", "dv_path", "schema_id"]
+    ).to_pylist()
     if recluster is not None:
-        candidates = man.select(
-            "path", "bytes", "dv_path", "schema_id"
-        ).collect()
         if not candidates:
             return None
         op = "recluster"
     else:
-        candidates = (
-            man.where(F.col("bytes") < small_bytes)
-            .select("path", "bytes", "dv_path", "schema_id")
-            .collect()
-        )
+        candidates = [
+            r for r in candidates
+            if r["bytes"] is not None and r["bytes"] < small_bytes
+        ]
         if len(candidates) < 2:
             return None
         op = "compact"
@@ -4513,10 +4386,10 @@ def update_manifest_table(
             raise ValueError(f"no such column {c!r} (have {names})")
         F.expr(e)  # fail fast on an unparseable expression
     F.expr(where)
-    man = _load_manifest(spark, base_path, head)
-    if prune is not None:
-        man = man.where(F.coalesce(F.expr(prune), F.lit(True)))
-    files = man.select("path", "bytes", "dv_path", "schema_id").collect()
+    files = _manifest_files(
+        spark, _load_manifest(spark, base_path, head),
+        ["path", "bytes", "dv_path", "schema_id"], prune,
+    )
     if not files:
         return head
     # phase 1 — candidate files: any physical row matching `where`,
@@ -4659,24 +4532,25 @@ def clone_manifest_table(
         else _os.path.abspath(src_path)
     )
 
-    def _qualify(c):
+    import pyarrow as pa
+
+    man = _load_manifest(spark, src_path, version)
+    for name in ("path", "dv_path"):
         # entries that are already external (the source is itself a
         # clone) carry through verbatim; relative ones absolutize
-        return F.when(
-            c.startswith("/") | c.contains("://") | c.startswith("file:"),
-            c,
-        ).otherwise(F.concat(F.lit(f"{src_abs}/"), c))
-
-    man = (
-        _load_manifest(spark, src_path, version)
-        .withColumn("path", _qualify(F.col("path")))
-        .withColumn(
-            "dv_path",
-            F.when(
-                F.col("dv_path").isNotNull(), _qualify(F.col("dv_path"))
+        man = man.set_column(
+            man.schema.get_field_index(name),
+            pa.field(name, pa.string()),
+            pa.array(
+                [
+                    p
+                    if p is None or p.startswith(("/", "file:")) or "://" in p
+                    else f"{src_abs}/{p}"
+                    for p in man.column(name).to_pylist()
+                ],
+                type=pa.string(),
             ),
         )
-    )
     return _finish(
         spark, dst_path,
         schema=StructType.fromJson(meta["schema"]),
@@ -4728,11 +4602,10 @@ def manifest_changes(
             raise FileNotFoundError(f"no committed manifest table under {base_path}")
 
     def entries(v: int) -> dict[tuple, int]:
+        man = _load_manifest(spark, base_path, v)
         return {
             (r["path"], r["dv_path"]): r["schema_id"]
-            for r in _load_manifest(spark, base_path, v)
-            .select("path", "dv_path", "schema_id")
-            .collect()
+            for r in man.select(["path", "dv_path", "schema_id"]).to_pylist()
         }
 
     old_files = entries(from_version)
@@ -4818,12 +4691,9 @@ def vacuum_manifest_table(
     referenced: set[str] = set()
     dv_referenced: set[str] = set()
     for v in committed:
-        for r in (
-            _load_manifest(spark, base_path, v).select("path", "dv_path").collect()
-        ):
-            referenced.add(r["path"])
-            if r["dv_path"]:
-                dv_referenced.add(r["dv_path"])
+        man = _load_manifest(spark, base_path, v)
+        referenced.update(man.column("path").to_pylist())
+        dv_referenced.update(p for p in man.column("dv_path").to_pylist() if p)
     # pending STAGED edits (write-audit-publish) reference data files no
     # manifest points at yet — an audit window must survive housekeeping,
     # so a stage's added files count as live until it publishes or is
@@ -4839,14 +4709,12 @@ def vacuum_manifest_table(
                 f"{base_path}/staged/{token}/stage.json"
             )
             if fs.exists(stamp) and fs.exists(add):
-                for r in (
-                    spark.read.parquet(f"{base_path}/staged/{token}/add")
-                    .select("path", "dv_path")
-                    .collect()
-                ):
-                    referenced.add(r["path"])
-                    if r["dv_path"]:  # a staged DV delete's sidecar
-                        dv_referenced.add(r["dv_path"])
+                staged = _read_arrow(spark, f"{base_path}/staged/{token}/add")
+                referenced.update(staged.column("path").to_pylist())
+                # a staged DV delete's sidecar
+                dv_referenced.update(
+                    p for p in staged.column("dv_path").to_pylist() if p
+                )
     deleted = 0
     data_root = jvm.org.apache.hadoop.fs.Path(f"{base_path}/data")
     if fs.exists(data_root):
@@ -5250,26 +5118,31 @@ def evolve_manifest_table(
     # expressions speak the new names/types. ONE projection — sequential
     # withColumnRenamed would corrupt swap/chain renames
     # (rename={'a':'b','b':'c'} transiently duplicates min_b)
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
     man = _load_manifest(spark, base_path, head)
     new_types = {f2["name"]: f2["type"] for f2 in new_fields}
-    out_cols = []
-    for c in man.columns:
-        col = F.col(f"`{c}`")
+    out_cols, out_names = [], []
+    for c in man.schema.names:
+        col, name = man.column(c), c
         for prefix in ("min_", "max_", "bloom_", "nulls_"):
             if c.startswith(prefix):
                 src = c[len(prefix):]
                 if src in drop:
-                    break  # stats column of a dropped field: omit
+                    col = None  # stats column of a dropped field: omit
+                    break
                 nc = rename.get(src, src)
+                name = f"{prefix}{nc}"
                 # null/bloom stats are type-independent; only the value
                 # bounds follow a widening cast
                 if prefix in ("min_", "max_") and src in widen:
-                    col = col.cast(_type_from_json(new_types[nc]))
-                out_cols.append(col.alias(f"{prefix}{nc}"))
+                    col = col.cast(to_arrow_type(_type_from_json(new_types[nc])))
                 break
-        else:
-            out_cols.append(col.alias(c))
-    man = man.select(*out_cols)
+        if col is not None:
+            out_cols.append(col)
+            out_names.append(name)
+    man = pa.Table.from_arrays(out_cols, names=out_names)
     return _finish(
         spark,
         base_path,
@@ -5548,43 +5421,23 @@ def manifest_history(spark: SparkSession, base_path: str) -> DataFrame:
     committed = sorted(_committed_versions(listing))
     if not committed:
         raise FileNotFoundError(f"no committed manifest table under {base_path}")
-    metas = {v: _meta(spark, base_path, v) for v in committed}
-    ops = {v: metas[v].get("op") for v in committed}
-    # ONE aggregation job over the union of retained manifests (they are
-    # file-count-sized parquet) — not a job per version, which turns a
-    # metadata view into a job-scheduling tax
-    parts = [
-        _load_manifest(spark, base_path, v).select(
-            F.lit(v).alias("version"), "rows", "bytes", "dv_path"
+    import pyarrow.compute as pc
+
+    rows = []
+    for v in committed:
+        meta = _meta(spark, base_path, v)
+        man = _load_manifest(spark, base_path, v)
+        rows.append(
+            (
+                v,
+                meta.get("op"),
+                meta.get("ts"),
+                man.num_rows,
+                pc.sum(man.column("rows")).as_py() or 0,
+                pc.sum(man.column("bytes")).as_py() or 0,
+                man.num_rows - man.column("dv_path").null_count,
+            )
         )
-        for v in committed
-    ]
-    un = parts[0]
-    for p in parts[1:]:
-        un = un.unionByName(p)
-    agg = {
-        r["version"]: r
-        for r in un.groupBy("version")
-        .agg(
-            F.count(F.lit(1)).alias("files"),
-            F.coalesce(F.sum("rows"), F.lit(0)).alias("rows"),
-            F.coalesce(F.sum("bytes"), F.lit(0)).alias("bytes"),
-            F.count("dv_path").alias("dv_files"),
-        )
-        .collect()
-    }
-    rows = [
-        (
-            v,
-            ops[v],
-            metas[v].get("ts"),
-            agg[v]["files"] if v in agg else 0,
-            agg[v]["rows"] if v in agg else 0,
-            agg[v]["bytes"] if v in agg else 0,
-            agg[v]["dv_files"] if v in agg else 0,
-        )
-        for v in committed
-    ]
     return local_rows_df(
         spark, rows,
         "version int, op string, ts long, files long, rows long, "
