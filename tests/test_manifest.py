@@ -282,11 +282,16 @@ def test_merge_deletes_and_empty_batch_noop(spark, tmp_path):
     assert v2 == 2 and _content(spark, base) == want
 
 
+@pytest.mark.parametrize("verb", ["merge", "delete"])
 @pytest.mark.parametrize("fold", [True, False])
-def test_merge_candidate_fold_matches_semijoin(spark, tmp_path, monkeypatch, fold):
+def test_merge_candidate_fold_matches_semijoin(
+    spark, tmp_path, monkeypatch, fold, verb
+):
     """The folded per-file candidacy flags (r14: candidate detection rides
     the bounds agg) must pick exactly the files the broadcast semi-join
-    picks — same carried-forward set, same surviving content."""
+    picks, for both keyed verbs — the merge rewrites, the delete
+    repoints, the same one file either way, with the same surviving
+    content."""
     from tibame_project_spark.sources import manifest as M
 
     if not fold:
@@ -296,17 +301,29 @@ def test_merge_candidate_fold_matches_semijoin(spark, tmp_path, monkeypatch, fol
     write_manifest_table(
         spark, df, base, stats_cols=["id"], cluster_by="id", n_files=8
     )
-    before = set(manifest_file_paths(spark, base))
+    ranges = {
+        r["path"]: (r["min_id"], r["max_id"])
+        for r in manifest_stats(spark, base).collect()
+    }
+    # 10..19 lives in one of the 8 clustered files; 1900 is out of every
+    # file's range — both paths must touch exactly that one file
+    (hit,) = [p for p, (lo, hi) in ranges.items() if lo <= 19 and hi >= 10]
     batch = spark.createDataFrame(
         [(i, 7, False) for i in range(10, 20)] + [(1900, 7, False)],
         "id long, v long, dead boolean",
     )
-    merge_manifest_table(spark, batch, base, "id", delete_col="dead")
-    carried = before & set(manifest_file_paths(spark, base))
-    # 10..19 lives in one of the 8 clustered files; 1900 is out of every
-    # file's range — both paths must rewrite exactly that one file
-    assert len(carried) == len(before) - 1
-    want = {(i, 7 if 10 <= i < 20 else 0) for i in range(1000)} | {(1900, 7)}
+    if verb == "merge":
+        merge_manifest_table(spark, batch, base, "id", delete_col="dead")
+        assert set(ranges) - set(manifest_file_paths(spark, base)) == {hit}
+        want = {(i, 7 if 10 <= i < 20 else 0) for i in range(1000)} | {
+            (1900, 7)
+        }
+    else:
+        M.delete_manifest_table(spark, batch.select("id"), base, "id")
+        dv = {r["path"]: r["dv_path"] for r in manifest_stats(spark, base).collect()}
+        assert set(dv) == set(ranges)
+        assert {p for p, d in dv.items() if d} == {hit}
+        want = {(i, 0) for i in range(1000) if not 10 <= i < 20}
     assert _content(spark, base) == want
 
 
@@ -1339,6 +1356,98 @@ def test_manifest_table_stats_without_scanning(spark, tmp_path):
     s = manifest_table_stats(spark, base)
     # physical rows unchanged (DV, zero rewrite); the vector is surfaced
     assert s["rowCount"] == 400 and s["n_dv_files"] == 1
+
+
+def test_manifest_table_stats_folds_in_arrow_with_spark_order(
+    spark, tmp_path, spark_jobs
+):
+    """The table-level fold runs no Spark job and returns what a Spark
+    aggregate over the same manifest returns, value for value and type
+    for type — on long, double, string, date, decimal and timestamp
+    stats with null counts, after a DV delete, and on an empty table.
+    NaN orders above every double: one file's NaN max makes the global
+    max NaN while the min skips it, and only an all-NaN column makes the
+    min NaN too."""
+    import datetime
+    import decimal
+    import math
+
+    from tibame_project_spark.sources.manifest import (
+        delete_manifest_table,
+        manifest_table_stats,
+    )
+
+    schema = "id long, x double, s string, d date, m decimal(10,2), ts timestamp"
+    cols = ["id", "x", "s", "d", "m", "ts"]
+
+    def rows(ids, xs):
+        return [
+            (
+                i, x, f"s{i}", datetime.date(2024, 1, 1 + i),
+                decimal.Decimal(i) / 4, datetime.datetime(2024, 2, 1, i),
+            )
+            for i, x in zip(ids, xs)
+        ]
+
+    def by_spark(base):  # the aggregate the Arrow fold must equal
+        man = manifest_stats(spark, base)
+        aggs = [
+            F.coalesce(F.sum("rows"), F.lit(0)).alias("rowCount"),
+            F.coalesce(F.sum("bytes"), F.lit(0)).alias("sizeInBytes"),
+            F.count(F.lit(1)).alias("numFiles"),
+            F.count(F.when(F.col("dv_path").isNotNull(), 1)).alias("n_dv_files"),
+        ]
+        for c in cols:
+            aggs += [
+                F.min(f"min_{c}").alias(f"min_{c}"),
+                F.max(f"max_{c}").alias(f"max_{c}"),
+                F.coalesce(F.sum(f"nulls_{c}"), F.lit(0)).alias(f"nulls_{c}"),
+            ]
+        return man.agg(*aggs).first().asDict()
+
+    def same(got, want):
+        def norm(d):
+            return {
+                k: "NaN" if isinstance(v, float) and math.isnan(v) else (type(v), v)
+                for k, v in d.items()
+            }
+        assert list(got) == list(want)
+        assert norm(got) == norm(want)
+
+    nan = float("nan")
+    mixed = str(tmp_path / "mixed")
+    write_manifest_table(
+        spark, spark.createDataFrame(rows([0, 1, 2], [1.5, -2.0, None]), schema),
+        mixed, stats_cols=cols, null_stats=True,
+    )
+    for ids, xs in (([3, 4], [nan, 9.0]), ([5, 6], [nan, nan])):
+        append_manifest_table(
+            spark, spark.createDataFrame(rows(ids, xs), schema), mixed
+        )
+    delete_manifest_table(
+        spark, spark.createDataFrame([(1,)], "id long"), mixed, "id"
+    )
+    all_nan = str(tmp_path / "all_nan")
+    write_manifest_table(
+        spark, spark.createDataFrame(rows([0, 1], [nan, nan]), schema),
+        all_nan, stats_cols=cols, null_stats=True,
+    )
+    empty = str(tmp_path / "empty")
+    write_manifest_table(
+        spark, spark.createDataFrame([], schema), empty, stats_cols=cols,
+        null_stats=True,
+    )
+    for base in (mixed, all_nan, empty):
+        with spark_jobs() as jobs:
+            got = manifest_table_stats(spark, base)
+            assert jobs() == 0
+        same(got, by_spark(base))
+    got = manifest_table_stats(spark, mixed)
+    assert math.isnan(got["max_x"]) and got["min_x"] == -2.0
+    assert (got["n_dv_files"], got["rowCount"], got["nulls_x"]) == (1, 7, 1)
+    got = manifest_table_stats(spark, all_nan)
+    assert math.isnan(got["min_x"]) and math.isnan(got["max_x"])
+    assert manifest_table_stats(spark, empty)["rowCount"] == 0
 
 
 def test_restore_is_metadata_only_rollback(spark, tmp_path):
@@ -4334,9 +4443,21 @@ def test_txn_watermark_carried_by_every_commit_kind(spark, tmp_path):
     }
 
 
-def test_txn_merge_and_delete_idempotent(spark, tmp_path):
+def test_txn_merge_and_delete_idempotent(spark, tmp_path, monkeypatch):
+    """A replayed merge or delete returns the recorded version, having
+    read the head's listing and meta once each."""
+    import collections
+
+    from tibame_project_spark.sources import manifest as M
     from tibame_project_spark.sources.manifest import delete_manifest_table
 
+    calls = collections.Counter()
+    for name in ("_begin", "_meta"):
+        def counted(*a, _fn=getattr(M, name), _name=name, **k):
+            calls[_name] += 1
+            return _fn(*a, **k)
+
+        monkeypatch.setattr(M, name, counted)
     base = str(tmp_path / "t")
     write_manifest_table(
         spark, _mk(spark, [(i, i) for i in range(10)]), base,
@@ -4346,17 +4467,21 @@ def test_txn_merge_and_delete_idempotent(spark, tmp_path):
         spark, _mk(spark, [(3, 333), (20, 20)]), base, "id",
         keep=10, txn=("cdc", 0),
     )
+    calls.clear()
     assert merge_manifest_table(
         spark, _mk(spark, [(3, 333), (20, 20)]), base, "id",
         keep=10, txn=("cdc", 0),
     ) == v
+    assert calls == {"_begin": 1, "_meta": 1}
     want = {(i, i) for i in range(10) if i != 3} | {(3, 333), (20, 20)}
     assert _content(spark, base) == want
     keys = _mk(spark, [(20, 0)]).select("id")
     v2 = delete_manifest_table(spark, keys, base, "id", keep=10, txn=("cdc", 1))
+    calls.clear()
     assert delete_manifest_table(
         spark, keys, base, "id", keep=10, txn=("cdc", 1)
     ) == v2
+    assert calls == {"_begin": 1, "_meta": 1}
     assert read_manifest_version(spark, base) == v2
     assert _content(spark, base) == want - {(20, 20)}
 

@@ -98,10 +98,14 @@ fall back to one distributed groupBy over the newly written files only
 Scale notes: manifests are one row per FILE (a 100 TB table at 1 GB
 files is a 100k-row manifest — KBs of parquet), so reading one is free
 and the pruned file list collected to the driver is the same listing
-Spark's own file index materializes there. The merge candidate search is
-O(files) — a scalar batch-bounds overlap first, then an exact
-broadcast semi-join of the surviving candidate files against the batch's
-distinct keys.
+Spark's own file index materializes there. Merge and delete share one
+candidate search (``_prepare_keyed_edit``), O(files) and exact in every
+tier: a driver-local batch bisects its collected keys against each
+file's key range (zero jobs); otherwise, for a small live file set,
+one per-file flag rides the batch's single bounds aggregate; a big
+table (or key stats whose literals do not provably coerce like the
+join) takes a scalar batch-bounds overlap first, then a broadcast
+semi-join of the surviving files against the batch's keys.
 """
 
 from __future__ import annotations
@@ -583,33 +587,6 @@ def _read_arrow(spark: SparkSession, path: str):
     return spark.read.parquet(path).toArrow()
 
 
-def _parquet_strings_local(base_path: str, rel_dir: str, col: str):
-    """The distinct values of one string column of a small parquet dir,
-    read driver-side through Arrow — or None (size over
-    :data:`_UNIQ_READBACK_MAX_BYTES`, store Arrow-unreachable, read
-    failed: caller runs the distributed read). Bounds the driver's
-    exposure the way a collect of the same distinct set already would."""
-    resolved = _arrow_fs(base_path)
-    if resolved is None:
-        return None
-    fs, d = resolved
-    try:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as ds
-        import pyarrow.fs as pafs
-
-        full = f"{d.rstrip('/')}/{rel_dir}"
-        infos = fs.get_file_info(pafs.FileSelector(full, recursive=True))
-        if sum(i.size or 0 for i in infos if i.is_file) > _UNIQ_READBACK_MAX_BYTES:
-            return None
-        tbl = ds.dataset(full, format="parquet", filesystem=fs).to_table(
-            columns=[col]
-        )
-        return set(pc.unique(tbl.column(col)).to_pylist())
-    except Exception:
-        return None
-
-
 def _materialize_manifest(
     spark: SparkSession, tbl, base_path: str, rel_dir: str
 ) -> None:
@@ -811,6 +788,42 @@ def _read_dv_sidecars(
     ).select(F.col("__path").alias("__dvp"), "__key")
 
 
+def _trail_col(c: str = "_metadata.file_path"):
+    """The trailing ``data/<dir>/<file>`` form (:func:`_trail`) of a
+    file-path column: a scan's ``_metadata.file_path`` by default."""
+    return F.regexp_extract(F.col(c), r"(data/[^/]+/[^/]+)$", 1)
+
+
+def _scan_eras(
+    spark: SparkSession,
+    base_path: str,
+    files: list,
+    registry: dict[int, list[dict]],
+    cur_fields: list[dict],
+    *,
+    path: bool = False,
+) -> DataFrame | None:
+    """``files`` (manifest rows/dicts with ``path``, ``dv_path`` and
+    optionally ``schema_id``) as ONE frame in the schema ``cur_fields``:
+    per schema era, one read with the era's physical schema lifted by
+    field id (:func:`_projection`), eras unioned by name. ``path=True``
+    adds each row's file as ``__path`` (trailing form, from
+    ``_metadata``); without it the read never touches ``_metadata``.
+    Deletion vectors are not applied. None when ``files`` is empty."""
+    out = None
+    for sid, members in sorted(_by_schema_id(files).items()):
+        cols = _projection(registry[sid], cur_fields)
+        if path:
+            cols.append(_trail_col().alias("__path"))
+        df = (
+            spark.read.schema(_schema_from_fields(registry[sid]))
+            .parquet(*[_data_path(base_path, p) for p, _ in members])
+            .select(*cols)
+        )
+        out = df if out is None else out.unionByName(df)
+    return out
+
+
 def _read_live(
     spark: SparkSession,
     base_path: str,
@@ -818,55 +831,31 @@ def _read_live(
     meta: dict,
 ) -> DataFrame:
     """The LIVE rows of a set of manifest entries, in the table's CURRENT
-    schema: files are grouped by the schema they were written under and
-    each group reads with its physical schema then projects by field id
-    (rename + widen-cast + NULL-fill — see :func:`_projection`); files
-    WITH a deletion vector also read their ``_metadata`` path and one
-    anti-join against the referenced sidecars (one known-schema scan of
-    every sidecar dir, :func:`_read_dv_sidecars` — building the frame
-    launches no job) drops condemned keys — broadcast-hinted only while
-    the sidecars stay under
-    :data:`_BROADCAST_MAX_BYTES` (sizes from the filesystem listing,
-    driver metadata; above the bound AQE picks the join). ``files`` is a
-    list of manifest rows/dicts with ``path``, ``dv_path``, and
-    (optionally) ``schema_id``."""
+    schema (:func:`_scan_eras`: per-era reads projected by field id —
+    rename + widen-cast + NULL-fill); files WITH a deletion vector also
+    read their ``_metadata`` path and one anti-join against the
+    referenced sidecars (one known-schema scan of every sidecar dir,
+    :func:`_read_dv_sidecars` — building the frame launches no job)
+    drops condemned keys — broadcast-hinted only while the sidecars stay
+    under :data:`_BROADCAST_MAX_BYTES` (sizes from the filesystem
+    listing, driver metadata; above the bound AQE picks the join).
+    ``files`` is a list of manifest rows/dicts with ``path``,
+    ``dv_path``, and (optionally) ``schema_id``."""
     registry, cur_id = _registry(meta)
     cur_fields = registry[cur_id]
-    cur_schema = _schema_from_fields(cur_fields)
     dv_key = meta.get("dv_key")
-    parts: list[DataFrame] = []
-    dv_parts: list[DataFrame] = []
-    all_dirs: set[str] = set()
-    for sid, members in sorted(_by_schema_id(files).items()):
-        phys = _schema_from_fields(registry[sid])
-        proj = _projection(registry[sid], cur_fields)
-        plain = [p for p, d in members if not d]
-        dvd = [(p, d) for p, d in members if d]
-        if plain:
-            parts.append(
-                spark.read.schema(phys)
-                .parquet(*[_data_path(base_path, p) for p in plain])
-                .select(*proj)
+    dvd = [f for f in files if f["dv_path"]]
+    out = _scan_eras(
+        spark, base_path, [f for f in files if not f["dv_path"]],
+        registry, cur_fields,
+    )
+    if dvd:
+        if dv_key is None:
+            raise ValueError(
+                "manifest has deletion-vectored files but meta carries "
+                "no dv_key — corrupt table state"
             )
-        if dvd:
-            if dv_key is None:
-                raise ValueError(
-                    "manifest has deletion-vectored files but meta carries "
-                    "no dv_key — corrupt table state"
-                )
-            all_dirs.update(d for _, d in dvd)
-            dv_parts.append(
-                spark.read.schema(phys)
-                .parquet(*[_data_path(base_path, p) for p, _ in dvd])
-                .select(
-                    *proj,
-                    F.regexp_extract(
-                        F.col("_metadata.file_path"), r"(data/[^/]+/[^/]+)$", 1
-                    ).alias("__path"),
-                )
-            )
-    if dv_parts:
-        dirs = sorted(all_dirs)
+        dirs = sorted({f["dv_path"] for f in dvd})
         key_type = dict(
             (f["name"], _type_from_json(f["type"])) for f in cur_fields
         )[dv_key]
@@ -880,21 +869,16 @@ def _read_live(
         )
         if dv_bytes <= _BROADCAST_MAX_BYTES:
             dv = F.broadcast(dv)
-        raw = dv_parts[0]
-        for p in dv_parts[1:]:
-            raw = raw.unionByName(p)
+        raw = _scan_eras(spark, base_path, dvd, registry, cur_fields, path=True)
         alive = raw.join(
             dv,
             (raw["__path"] == F.col("__dvp"))
             & (raw[dv_key] == F.col("__key")),
             "left_anti",
         ).drop("__path")
-        parts.append(alive)
-    if not parts:
-        return local_rows_df(spark, [], cur_schema)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        out = alive if out is None else out.unionByName(alive)
+    if out is None:
+        return local_rows_df(spark, [], _schema_from_fields(cur_fields))
     return out
 
 
@@ -1900,7 +1884,7 @@ def _file_stats(
         raw.groupBy("__path", "__bytes")
         .agg(*aggs)
         .select(
-            F.regexp_extract("__path", r"(data/[^/]+/[^/]+)$", 1).alias("path"),
+            _trail_col("__path").alias("path"),
             F.col("__bytes").alias("bytes"),
             "rows",
             *[c for sc in stats_cols for c in (f"min_{sc}", f"max_{sc}")],
@@ -1920,7 +1904,7 @@ def _bloom_words(raw: DataFrame, c: str, m: int, k: int) -> DataFrame:
     explode to (word, bit) pairs, a (file, word) ``bit_or`` folds them,
     a per-file collect packs the words."""
     pos = raw.select(
-        F.regexp_extract("__path", r"(data/[^/]+/[^/]+)$", 1).alias("path"),
+        _trail_col("__path").alias("path"),
         F.explode(
             F.array(
                 *[
@@ -2058,69 +2042,88 @@ def _expect_gate(
     return df, check
 
 
-#: Size cap for a driver-side Arrow read-back: a commit's written files
-#: when validating unique() rules post-write, and a delete's fresh DV
-#: sidecar (:func:`_parquet_strings_local`). Above it (or
-#: Arrow-unreachable) the read runs distributed.
+#: Size cap for a driver-side Arrow read-back of a just-written dir
+#: (:func:`_read_back_local`): a commit's data files when validating
+#: unique() rules post-write, and a delete's fresh DV sidecar. Above it
+#: (or Arrow-unreachable) the read runs distributed.
 _UNIQ_READBACK_MAX_BYTES = 256 << 20
+
+
+def _read_back_local(base_path: str, rel_dir: str, cols: list[str], fold):
+    """``fold`` of the ``cols`` of a just-written parquet dir, read
+    driver-side through Arrow — zero Spark jobs. None when the store is
+    Arrow-unreachable, the dir holds no parquet file or more than
+    :data:`_UNIQ_READBACK_MAX_BYTES`, or the read or ``fold`` fails: the
+    caller then runs the distributed read-back, which is authoritative.
+    Bounds the driver's exposure the way a collect of the same answer
+    already would."""
+    resolved = _arrow_fs(base_path)
+    if resolved is None:
+        return None
+    try:
+        import pyarrow.dataset as ds
+        import pyarrow.fs as pafs
+
+        afs, d = resolved
+        infos = afs.get_file_info(
+            pafs.FileSelector(f"{d.rstrip('/')}/{rel_dir}", allow_not_found=True)
+        )
+        files = [
+            i.path
+            for i in infos
+            if i.is_file
+            and i.base_name.endswith(".parquet")
+            and not i.base_name.startswith(("_", "."))
+        ]
+        if not files or (
+            sum(i.size or 0 for i in infos if i.is_file)
+            > _UNIQ_READBACK_MAX_BYTES
+        ):
+            return None
+        return fold(
+            ds.dataset(files, format="parquet", filesystem=afs).to_table(
+                columns=cols
+            )
+        )
+    except Exception:
+        return None
 
 
 def _validate_unique_written(spark, written: tuple, rules: list, fail) -> None:
     """Exact ``unique()`` validation over a commit's just-written files
     (``written = (base_path, data_dir, schema)``): Arrow driver-side —
-    zero Spark jobs — when reachable and under
-    :data:`_UNIQ_READBACK_MAX_BYTES`; else one distributed read-back.
-    Violations = count(col NOT NULL) − count(DISTINCT col), matching
-    ``operators.expectations`` bit-for-bit."""
+    zero Spark jobs — through :func:`_read_back_local`; else one
+    distributed read-back. Violations = count(col NOT NULL) −
+    count(DISTINCT col), matching ``operators.expectations``
+    bit-for-bit."""
     from tibame_project_spark.operators import expectations as X
 
     base_path, data_dir, schema = written
-    cols = sorted({r[3] for r in rules})
-    report = None
-    resolved = _arrow_fs(base_path)
-    if resolved is not None:
-        try:
-            import pyarrow.compute as pc
-            import pyarrow.dataset as ds
-            import pyarrow.fs as pafs
 
-            afs, d = resolved
-            full = f"{d.rstrip('/')}/{data_dir}"
-            infos = afs.get_file_info(
-                pafs.FileSelector(full, allow_not_found=True)
+    def report_of(tbl):
+        import pyarrow.compute as pc
+
+        report = []
+        for name, col, _, payload in rules:
+            c = tbl.column(payload)
+            viol = (
+                pc.count(c, mode="only_valid").as_py()
+                - pc.count_distinct(c, mode="only_valid").as_py()
             )
-            files = [
-                i.path
-                for i in infos
-                if i.is_file
-                and i.path.rsplit("/", 1)[-1].endswith(".parquet")
-                and not i.path.rsplit("/", 1)[-1].startswith(("_", "."))
-            ]
-            if files and (
-                sum(i.size or 0 for i in infos if i.is_file)
-                <= _UNIQ_READBACK_MAX_BYTES
-            ):
-                tbl = ds.dataset(
-                    files, format="parquet", filesystem=afs
-                ).to_table(columns=cols)
-                report = []
-                for name, col, _, payload in rules:
-                    c = tbl.column(payload)
-                    viol = (
-                        pc.count(c, mode="only_valid").as_py()
-                        - pc.count_distinct(c, mode="only_valid").as_py()
-                    )
-                    report.append(
-                        {
-                            "rule": name,
-                            "column": col,
-                            "n_violations": int(viol),
-                            "n_rows": tbl.num_rows,
-                            "passed": viol == 0,
-                        }
-                    )
-        except Exception:
-            report = None  # distributed read-back below is authoritative
+            report.append(
+                {
+                    "rule": name,
+                    "column": col,
+                    "n_violations": int(viol),
+                    "n_rows": tbl.num_rows,
+                    "passed": viol == 0,
+                }
+            )
+        return report
+
+    report = _read_back_local(
+        base_path, data_dir, sorted({r[3] for r in rules}), report_of
+    )
     if report is None:
         wdf = spark.read.schema(schema).parquet(f"{base_path}/{data_dir}")
         report = [
@@ -2130,6 +2133,34 @@ def _validate_unique_written(spark, written: tuple, rules: list, fail) -> None:
     bad = [r for r in report if not r["passed"]]
     if bad:
         fail(bad)
+
+
+def _widen_registry(
+    schema: StructType,
+    schemas: dict[int, list[dict]],
+    schema_id: int,
+    fields: list[StructField],
+) -> tuple[StructType, dict[int, list[dict]], int]:
+    """ADD-COLUMN evolution of the schema registry: ``fields`` append to
+    ``schema`` as a new era whose new field ids are fresh across the
+    WHOLE registry (an id freed by a schema-changing refresh must never
+    be reused for a different column — cross-era feeds pair by id).
+    Returns the widened ``(schema, schemas, schema_id)``."""
+    next_id = max(f["id"] for fl in schemas.values() for f in fl) + 1
+    new_id = max(schemas) + 1
+    return (
+        StructType(list(schema.fields) + list(fields)),
+        {
+            **schemas,
+            new_id: list(schemas[schema_id])
+            + [
+                {"id": next_id + j, "name": f.name,
+                 "type": f.dataType.jsonValue()}
+                for j, f in enumerate(fields)
+            ],
+        },
+        new_id,
+    )
 
 
 def _validate_stats_cols(df: DataFrame, stats_cols: list[str]) -> None:
@@ -2422,28 +2453,10 @@ def append_manifest_table(
             "allow_evolution=True to widen the table schema"
         )
     schemas, schema_id = _registry(meta)
-    if extras:
-        schema = StructType(
-            list(schema.fields)
-            + [df.schema[n] for n in extras]
+    if extras:  # the batch's files are written under the new schema id
+        schema, schemas, schema_id = _widen_registry(
+            schema, schemas, schema_id, [df.schema[n] for n in extras]
         )
-        # add-column evolution: new fields get ids fresh across the WHOLE
-        # registry (an id freed by a schema-changing refresh must never be
-        # reused for a different column — cross-era feeds pair by id);
-        # the batch's files are written under the new schema id
-        next_id = (
-            max(f["id"] for fl in schemas.values() for f in fl) + 1
-        )
-        new_fields = list(schemas[schema_id]) + [
-            {
-                "id": next_id + j,
-                "name": n,
-                "type": df.schema[n].dataType.jsonValue(),
-            }
-            for j, n in enumerate(extras)
-        ]
-        schema_id = max(schemas) + 1
-        schemas[schema_id] = new_fields
     _validate_stats_cols(df, stats_cols)
     rules = _constraint_rules(meta)
     if rules:  # persisted CHECK constraints gate every writer, not just
@@ -2837,11 +2850,12 @@ def merge_manifest_table(
     ``key`` range can contain a batch key (Delta/Iceberg's
     merge-on-read-free MERGE shape, re-expressed on the manifest):
 
-    1. scalar bounds of the batch key (one tiny agg) drop every file
-       whose ``[min_key, max_key]`` misses ``[batch_min, batch_max]``;
-    2. the surviving candidate files are exactly semi-joined against the
-       batch's distinct keys (broadcast — the batch is the small side);
-    3. candidates + batch go through ``operators.corrections.merge_upsert``
+    1. candidate files are those whose ``[min_key, max_key]`` holds a
+       batch key — found on the driver for a driver-local batch, as
+       per-file flags of the batch's one bounds aggregate for a small
+       table, or by a bounds overlap plus a broadcast semi-join against
+       the batch keys for a big one (:func:`_prepare_keyed_edit`);
+    2. candidates + batch go through ``operators.corrections.merge_upsert``
        (updates, inserts, tombstone deletes) and land as fresh
        range-clustered files; every non-candidate file is carried forward
        in the manifest VERBATIM — zero bytes of it read or written.
@@ -2860,10 +2874,11 @@ def merge_manifest_table(
     ``update_condition``. Returns the committed version.
 
     ``txn=(app_id, version)`` makes the commit idempotent — see
-    :func:`append_manifest_table`. A replayed merge still prepares its
-    rewrite files before the watermark check no-ops the publish; those
-    unreferenced files are vacuum's to reclaim, the same as any losing
-    racer's.
+    :func:`append_manifest_table`. A replay the head already records
+    no-ops before any batch work; one racing the original past that
+    check still prepares its rewrite files before the claim-time
+    watermark check no-ops the publish — those unreferenced files are
+    vacuum's to reclaim, the same as any losing racer's.
 
     ``allow_evolution=True`` (Delta's ``withSchemaEvolution`` MERGE):
     batch columns the table lacks widen the schema as a new era —
@@ -2881,17 +2896,14 @@ def merge_manifest_table(
     so a stale delete cannot undo a newer image. Cost: one extra join of
     the batch against the candidate rows (bounded by the batch's key
     ranges), nothing table-wide."""
-    if txn is not None:
-        _, _, h0, _ = _begin(spark, base_path)
-        if h0 is not None:
-            applied = _meta(spark, base_path, h0).get("txns", {})
-            if int(applied.get(str(txn[0]), -1)) >= int(txn[1]):
-                return h0
     edit = _prepare_merge_edit(
         spark, source, base_path, key, delete_col=delete_col, expect=expect,
         where=f"merge_manifest_table({base_path})",
         allow_evolution=allow_evolution, update_condition=update_condition,
+        txn=txn,
     )
+    if isinstance(edit, int):  # txn already applied: the replay no-ops
+        return edit
     # read set = replace set = the candidate files; a concurrent commit
     # touching them, or any file in this batch's key range, conflicts
     return _finish(
@@ -2914,102 +2926,75 @@ def merge_manifest_table(
     )
 
 
-def _prepare_merge_edit(
+def _prepare_keyed_edit(
     spark: SparkSession,
-    source: DataFrame,
+    batch: DataFrame,
     base_path: str,
     key: str,
     *,
-    delete_col: str | None,
-    expect: list | None,
-    where: str,
-    allow_evolution: bool = False,
-    update_condition: str | None = None,
-) -> dict:
-    """Everything a MERGE does BEFORE publishing — candidate selection,
-    the merge rewrite, data write, stats — packaged as the manifest EDIT
-    ``_finish`` publishes: ``{base_head, removed, added, bounds, schema,
-    stats_cols, dv_key, bloom, schemas, schema_id}``. Shared by the
-    immediate :func:`merge_manifest_table` and the staged
-    :func:`stage_merge_manifest_table` (write-audit-publish)."""
-    # a distributed batch is evaluated up to three times below (bounds
-    # agg, key broadcast, merge rewrite — four with update_condition's
-    # target join): persist it ONCE so a batch derived from an
-    # expensive upstream pipeline (a CDC join, a staged read) is not
-    # re-computed per evaluation — the first bounds agg materializes
-    # the cache; released before return on every path. A batch the
-    # CALLER already persisted is left alone (persist would no-op and
-    # the unpersist would silently drop their cache). A batch that is
-    # already a DRIVER-LOCAL relation (optimizer-folded LocalRelation —
-    # the common CDC-micro-batch shape) is never persisted: its bounds
-    # usually come from a zero-job collect of its key column and each
-    # re-evaluation replays in-memory rows, while the persist would
-    # cost a materialization job per commit.
-    ours = not source.is_cached and not _is_local_relation(source)
-    if ours:
-        source = source.persist()
-    try:
-        return _prepare_merge_edit_impl(
-            spark, source, base_path, key, delete_col=delete_col,
-            expect=expect, where=where, allow_evolution=allow_evolution,
-            update_condition=update_condition,
-        )
-    finally:
-        if ours:
-            source.unpersist()
-
-
-def _prepare_merge_edit_impl(
-    spark: SparkSession,
-    source: DataFrame,
-    base_path: str,
-    key: str,
-    *,
-    delete_col: str | None,
-    expect: list | None,
-    where: str,
-    allow_evolution: bool = False,
-    update_condition: str | None = None,
-) -> dict:
-    from tibame_project_spark.operators.corrections import merge_upsert
-
-    fs, listing, head, version = _begin(spark, base_path)
+    verb: str,
+    txn: tuple[str, int] | None = None,
+    extra_fields=None,
+):
+    """The front half of both keyed edits — ``verb`` ``"merge"``
+    (:func:`merge_manifest_table`) or ``"delete"``
+    (:func:`delete_manifest_table`), immediate or staged: one ``_begin``
+    and one ``_meta`` of the head, the ``txn=`` replay check, the key
+    guards, the batch's guard row (:func:`_batch_bounds`), the edit
+    skeleton, and the CANDIDATE files — those whose key range holds a
+    batch key, found on the driver, by flags folded into the bounds
+    aggregate, or by the broadcast semi-join (module docstring, "Scale
+    notes"). ``extra_fields(schema)`` (merge only) returns the batch
+    fields that widen the table schema (:func:`_widen_registry`), or
+    raises; it runs before the empty-batch return, so an empty batch
+    still widens. Returns the head when ``txn`` was already applied
+    (the caller no-ops), else ``(edit, meta, man, cand_files)`` with
+    ``cand_files`` None for an empty batch (a metadata-only edit)."""
+    _, _, head, _ = _begin(spark, base_path)
     if head is None:
         raise FileNotFoundError(
             f"no committed manifest table under {base_path}; create with "
             "write_manifest_table first"
         )
     meta = _meta(spark, base_path, head)
+    if txn is not None:
+        applied = meta.get("txns", {})
+        if int(applied.get(str(txn[0]), -1)) >= int(txn[1]):
+            return head
     stats_cols = meta["stats_cols"]
     schema = StructType.fromJson(meta["schema"])
     if key not in stats_cols:
         raise ValueError(
-            f"merge key {key!r} must be a declared stats column ({stats_cols}) "
-            "— file skipping needs its min/max"
+            f"{verb} key {key!r} must be a declared stats column ({stats_cols})"
+            + (" — file skipping needs its min/max" if verb == "merge" else "")
+        )
+    dv_key = meta.get("dv_key")
+    if verb == "delete" and dv_key is not None and dv_key != key:
+        raise ValueError(
+            f"table's deletion-vector key is fixed at {dv_key!r} (first "
+            f"delete); got {key!r}"
         )
     # one pass over the batch for bounds AND the NULL-key guard
-    # (count(*) vs count(key)) AND the key-uniqueness guard (count vs
-    # count distinct) — on the driver for a local batch, else one scan.
-    # r14: per-file CANDIDACY rides the SAME pass when the live file set
-    # is small enough to fold — one "does any batch key land in this
-    # file's range" flag per live file, exactly the semi-join's — so the
-    # separate broadcast-build + semi-join jobs disappear from the
-    # commit; big tables (or stores the driver-side Arrow reader can't
-    # reach, or stat types whose literal coercion isn't provably
-    # identical to the join's) keep the scale-proof broadcast semi-join
-    # below.
+    # (count(*) vs count(key)) AND, for a merge, the key-uniqueness
+    # guard (count vs count distinct) — on the driver for a local batch,
+    # else one scan; per-file candidacy rides the same pass when the
+    # live file set folds
     man = _load_manifest(spark, base_path, head)
     fold_files = _cand_fold_files(man, key)
     bounds = _batch_bounds(
-        source, key, schema[key].dataType, fold_files, distinct=True
+        batch, key, schema[key].dataType, fold_files, distinct=verb == "merge"
     )
     if bounds["n"] != bounds["nk"]:
         raise ValueError(
             f"merge batch contains NULL {key!r} keys; manifest merge requires "
             "non-null keys (a NULL never lands in a min/max range, so it "
             "would silently re-insert on every application)"
+            if verb == "merge"
+            else f"delete batch contains NULL {key!r} keys; a NULL never "
+            "lands in a min/max range, so it could never be skipped "
+            "consistently"
         )
-    if bounds["nk"] != bounds["ndk"]:
+    if verb == "merge" and bounds["nk"] != bounds["ndk"]:
         # REFUSE, never fan out: the merge is a full-outer join on the
         # key, so two images of one key in a single batch would emit two
         # output rows — silent duplicate-key corruption of a table whose
@@ -3027,44 +3012,13 @@ def _prepare_merge_edit_impl(
             "on an ordering column), then use update_condition to gate "
             "staleness against the table"
         )
-    dv_key = meta.get("dv_key")
     schemas, schema_id = _registry(meta)
-    # ADD-COLUMN schema evolution on MERGE (Delta's withSchemaEvolution):
-    # batch columns the table lacks either widen the schema (fresh field
-    # ids across the whole registry, candidates rewrite under the new
-    # era, carried files NULL-fill at read) or refuse LOUDLY — the
-    # silent alternative (merge_upsert projecting them away) would let a
-    # CDC source's new column vanish without a trace
-    # case-INSENSITIVE match, like Spark's own column resolution: a
-    # source column drifting only in case ('Price' vs 'price') must not
-    # evolve into a duplicate case-variant column that makes every later
-    # read ambiguous (mirrors the IGNORECASE constraint-reference guard
-    # in evolve_manifest_table)
-    have_ci = {f.name.casefold() for f in schema.fields}
-    if delete_col is not None:
-        have_ci.add(delete_col.casefold())  # the tombstone is never an extra
-    extras = [c for c in source.columns if c.casefold() not in have_ci]
-    if extras:
-        if not allow_evolution:
-            raise ValueError(
-                f"merge batch adds columns {extras}; pass "
-                "allow_evolution=True to widen the table schema "
-                "(without it they would be silently dropped)"
+    if extra_fields is not None:
+        extra = extra_fields(schema)
+        if extra:
+            schema, schemas, schema_id = _widen_registry(
+                schema, schemas, schema_id, extra
             )
-        schema = StructType(
-            list(schema.fields) + [source.schema[c] for c in extras]
-        )
-        next_id = max(f["id"] for fl in schemas.values() for f in fl) + 1
-        new_fields = list(schemas[schema_id]) + [
-            {
-                "id": next_id + j,
-                "name": c,
-                "type": source.schema[c].dataType.jsonValue(),
-            }
-            for j, c in enumerate(extras)
-        ]
-        schema_id = max(schemas) + 1
-        schemas[schema_id] = new_fields
     edit = {
         "base_head": head,
         "key": key,
@@ -3080,131 +3034,209 @@ def _prepare_merge_edit_impl(
         "bounds": None,
     }
     if bounds["lo"] is None:  # empty batch: a metadata-only no-op edit
-        return edit
+        return edit, meta, man, None
+    # from here the edit reads the batch's key range: a concurrent commit
+    # INTO the range conflicts, even when no file is a candidate
+    edit["bounds"] = (key, bounds["lo"], bounds["hi"])
     if fold_files is not None:
         cand_files = [
             f for i, f in enumerate(fold_files) if bounds[f"__cand{i}"]
         ]
     else:
-        coarse = spark.createDataFrame(man).where(
-            (F.col(f"max_{key}") >= F.lit(bounds["lo"]))
-            & (F.col(f"min_{key}") <= F.lit(bounds["hi"]))
+        keys = batch.select(F.col(key).alias("__key"))
+        if verb == "delete":  # a merge batch is proven key-unique above
+            keys = keys.distinct()
+        cand_files = (
+            spark.createDataFrame(man)
+            .where(
+                (F.col(f"max_{key}") >= F.lit(bounds["lo"]))
+                & (F.col(f"min_{key}") <= F.lit(bounds["hi"]))
+            )
+            .join(
+                F.broadcast(keys),
+                (F.col("__key") >= F.col(f"min_{key}"))
+                & (F.col("__key") <= F.col(f"max_{key}")),
+                "leftsemi",
+            )
+            .select("path", "bytes", "dv_path", "schema_id")
+            .collect()
         )
-        # no distinct: the key-uniqueness guard above already proved the
-        # batch's keys distinct and non-null — a distinct here would be a
-        # pure extra shuffle of the whole key set
-        keys = source.select(F.col(key).alias("__mk"))
-        cand = coarse.join(
-            F.broadcast(keys),
-            (F.col("__mk") >= F.col(f"min_{key}"))
-            & (F.col("__mk") <= F.col(f"max_{key}")),
-            "leftsemi",
-        )
-        cand_files = cand.select(
-            "path", "bytes", "dv_path", "schema_id"
-        ).collect()
-    touched = [r["path"] for r in cand_files]
+    return edit, meta, man, cand_files
 
-    # candidate rows with their deletion vectors APPLIED — a merge must
-    # not resurrect rows a DV commit already condemned; the rewrite then
-    # clears the candidates' DVs (their new files are vector-free) — and
-    # projected to the CURRENT schema, so a merge doubles as the
-    # migration pass for pre-evolution files it touches
-    current = _read_live(spark, base_path, cand_files, meta)
-    for c in extras:  # candidates lift into the widened schema NULL-filled
-        current = current.withColumn(
-            c, F.lit(None).cast(source.schema[c].dataType)
-        )
-    # r15 single-file rewrite fusion (§2.4): the rewrite output is ONE
-    # file (n_files = max(1, len(touched)) below) and its input bytes
-    # fit one task — coalesce BOTH merge-join inputs to a single
-    # partition. SinglePartition satisfies the join's required
-    # ClusteredDistribution on each side with matching partition counts,
-    # so the full-outer merge join (and update_condition's target join)
-    # plans with ZERO exchanges: candidate-read → join(s) → sort → write
-    # is one stage/one job instead of a 3-stage AQE chain per merge.
-    # Multi-file rewrites keep the range exchange (clustering IS the
-    # optimization at scale) and big candidates keep task parallelism.
-    # one output file per touched file: byte-based sizing was tried and
-    # REVERTED — fewer, wider files change which files later merges must
-    # rewrite (wider min/max ranges swallow future candidates), which is
-    # an observable layout change (evolution_cycle's live-era contract
-    # tripped on it); the rewrite preserves the table's file granularity
-    # the source side must fit one task too: a driver-local batch, or an
-    # optimizer estimate within the bound (an unknown one, e.g. an
-    # RDD-backed frame's Long.MaxValue, fails closed). With
-    # update_condition the fused plan broadcasts the candidate rows
-    # explicitly, so they must also fit the broadcast bound
-    n_out = max(1, len(touched))
-    fused = (
-        n_out <= 1
-        and _fits_one_task(f["bytes"] for f in cand_files)
-        and (
-            update_condition is None
-            or sum(f["bytes"] for f in cand_files) <= _BROADCAST_MAX_BYTES
-        )
-        and (
-            _is_local_relation(source)
-            or _fits_one_task(
-                [source._jdf.queryExecution().optimizedPlan().stats()
-                 .sizeInBytes()]
-            )
-        )
-    )
-    if update_condition is not None:
-        # WHEN MATCHED AND <condition> (Delta's conditional merge) as a
-        # SOURCE PRE-FILTER, so the fixpoint-critical full-row upsert
-        # stays untouched: a matched source row whose condition is
-        # false/NULL is dropped BEFORE the merge and the current row
-        # carries forward; unmatched rows always insert (conditions
-        # never gate WHEN NOT MATCHED); tombstones are gated too, so a
-        # stale out-of-order CDC delete cannot undo a newer image. The
-        # condition references source columns by NAME and the matched
-        # current row's as t_<name> (e.g. "ts > t_ts" = last-writer-
-        # wins). Replay stays a fixpoint: after the first apply the
-        # condition compares a row against itself and keeps the target.
-        # the t_<name> aliases are API (the condition references them),
-        # so a source column that ALREADY spells t_<target-col> (or the
-        # join key's internal __mck) would make the condition ambiguous
-        # — AnalysisException deep in the join at best, a silently
-        # misbound reference at worst. Refuse up front with names.
-        taken = {
-            f"t_{c}".casefold() for c in current.columns if c != key
-        } | {"__mck"}
-        clash = sorted(c for c in source.columns if c.casefold() in taken)
-        if clash:
+
+def _prepare_merge_edit(
+    spark: SparkSession,
+    source: DataFrame,
+    base_path: str,
+    key: str,
+    *,
+    delete_col: str | None,
+    expect: list | None,
+    where: str,
+    allow_evolution: bool = False,
+    update_condition: str | None = None,
+    txn: tuple[str, int] | None = None,
+):
+    """Everything a MERGE does BEFORE publishing — the keyed front end
+    (:func:`_prepare_keyed_edit`), the merge rewrite, data write, stats
+    — packaged as the manifest EDIT ``_finish`` publishes: ``{base_head,
+    removed, added, bounds, schema, stats_cols, dv_key, bloom, schemas,
+    schema_id, constraints}``; the head instead when ``txn`` was already
+    applied. Shared by the immediate :func:`merge_manifest_table` and
+    the staged :func:`stage_merge_manifest_table` (write-audit-publish)."""
+    from tibame_project_spark.operators.corrections import merge_upsert
+
+    # a distributed batch is evaluated up to three times below (bounds
+    # agg, key broadcast, merge rewrite — four with update_condition's
+    # target join): persist it ONCE so a batch derived from an
+    # expensive upstream pipeline (a CDC join, a staged read) is not
+    # re-computed per evaluation — the first bounds agg materializes
+    # the cache; released before return on every path. A batch the
+    # CALLER already persisted is left alone (persist would no-op and
+    # the unpersist would silently drop their cache). A batch that is
+    # already a DRIVER-LOCAL relation (optimizer-folded LocalRelation —
+    # the common CDC-micro-batch shape) is never persisted: its bounds
+    # usually come from a zero-job collect of its key column and each
+    # re-evaluation replays in-memory rows, while the persist would
+    # cost a materialization job per commit.
+    cached = cur_persisted = None
+    if not source.is_cached and not _is_local_relation(source):
+        source = cached = source.persist()
+
+    def extra_fields(schema: StructType) -> list:
+        # ADD-COLUMN schema evolution on MERGE (Delta's
+        # withSchemaEvolution): batch columns the table lacks either
+        # widen the schema (candidates rewrite under the new era,
+        # carried files NULL-fill at read) or refuse LOUDLY — the silent
+        # alternative (merge_upsert projecting them away) would let a
+        # CDC source's new column vanish without a trace.
+        # case-INSENSITIVE match, like Spark's own column resolution: a
+        # source column drifting only in case ('Price' vs 'price') must
+        # not evolve into a duplicate case-variant column that makes
+        # every later read ambiguous (mirrors the IGNORECASE
+        # constraint-reference guard in evolve_manifest_table)
+        have_ci = {f.name.casefold() for f in schema.fields}
+        if delete_col is not None:
+            have_ci.add(delete_col.casefold())  # the tombstone is never an extra
+        extras = [c for c in source.columns if c.casefold() not in have_ci]
+        if extras and not allow_evolution:
             raise ValueError(
-                f"update_condition cannot bind: source columns {clash} "
-                "collide with the t_<name> aliases of the matched target "
-                "row (or the internal __mck key); rename them in the "
-                "batch before the merge"
+                f"merge batch adds columns {extras}; pass "
+                "allow_evolution=True to widen the table schema "
+                "(without it they would be silently dropped)"
             )
-        # the candidate rows are evaluated twice with a condition (the
-        # t_<name> join below AND the merge rewrite) — persist them so
-        # the candidate parquet files are read once; marked only now,
-        # AFTER the condition expression parsed (an unparseable
-        # condition must not leak a persist), and released in the
-        # finally. The persist goes UNDER the fusion's coalesce:
-        # InMemoryTableScan reports UnknownPartitioning, so caching the
-        # COALESCED plan would bury the SinglePartition and
-        # EnsureRequirements would re-exchange both merge-join sides —
-        # exactly the shuffles the fusion removes.
-        F.expr(update_condition)
-        current = current.persist()
-        cur_persisted = current
-    else:
-        cur_persisted = None
-    if fused:
-        # both sides run in ONE clone (AQE off, unbounded single-partition
-        # cap), losing no parallelism: each fits one task by the gate.
-        # Moved before the expect gate attaches its Observation
-        current, source = _in_clone(current, source)
-        current, source = current.coalesce(1), source.coalesce(1)
+        return [source.schema[c] for c in extras]
+
     try:
+        front = _prepare_keyed_edit(
+            spark, source, base_path, key, verb="merge", txn=txn,
+            extra_fields=extra_fields,
+        )
+        if isinstance(front, int):
+            return front
+        edit, meta, _, cand_files = front
+        if cand_files is None:
+            return edit
+        schema, schema_id = edit["schema"], edit["schema_id"]
+        touched = [r["path"] for r in cand_files]
+
+        # candidate rows with their deletion vectors APPLIED — a merge must
+        # not resurrect rows a DV commit already condemned; the rewrite then
+        # clears the candidates' DVs (their new files are vector-free) — and
+        # projected to the CURRENT schema, so a merge doubles as the
+        # migration pass for pre-evolution files it touches
+        current = _read_live(spark, base_path, cand_files, meta)
+        have = set(current.columns)
+        for fld in schema.fields:  # candidates lift into a widened schema
+            if fld.name not in have:  # NULL-filled
+                current = current.withColumn(
+                    fld.name, F.lit(None).cast(fld.dataType)
+                )
+        # r15 single-file rewrite fusion (§2.4): the rewrite output is ONE
+        # file (n_files = max(1, len(touched)) below) and its input bytes
+        # fit one task — coalesce BOTH merge-join inputs to a single
+        # partition. SinglePartition satisfies the join's required
+        # ClusteredDistribution on each side with matching partition counts,
+        # so the full-outer merge join (and update_condition's target join)
+        # plans with ZERO exchanges: candidate-read → join(s) → sort → write
+        # is one stage/one job instead of a 3-stage AQE chain per merge.
+        # Multi-file rewrites keep the range exchange (clustering IS the
+        # optimization at scale) and big candidates keep task parallelism.
+        # one output file per touched file: byte-based sizing was tried and
+        # REVERTED — fewer, wider files change which files later merges must
+        # rewrite (wider min/max ranges swallow future candidates), which is
+        # an observable layout change (evolution_cycle's live-era contract
+        # tripped on it); the rewrite preserves the table's file granularity
+        # the source side must fit one task too: a driver-local batch, or an
+        # optimizer estimate within the bound (an unknown one, e.g. an
+        # RDD-backed frame's Long.MaxValue, fails closed). With
+        # update_condition the fused plan broadcasts the candidate rows
+        # explicitly, so they must also fit the broadcast bound
+        n_out = max(1, len(touched))
+        fused = (
+            n_out <= 1
+            and _fits_one_task(f["bytes"] for f in cand_files)
+            and (
+                update_condition is None
+                or sum(f["bytes"] for f in cand_files) <= _BROADCAST_MAX_BYTES
+            )
+            and (
+                _is_local_relation(source)
+                or _fits_one_task(
+                    [source._jdf.queryExecution().optimizedPlan().stats()
+                     .sizeInBytes()]
+                )
+            )
+        )
         if update_condition is not None:
-            # inside the try: a condition referencing a nonexistent
-            # column raises at join analysis, which must not leak the
-            # persist taken above
+            # WHEN MATCHED AND <condition> (Delta's conditional merge) as a
+            # SOURCE PRE-FILTER, so the fixpoint-critical full-row upsert
+            # stays untouched: a matched source row whose condition is
+            # false/NULL is dropped BEFORE the merge and the current row
+            # carries forward; unmatched rows always insert (conditions
+            # never gate WHEN NOT MATCHED); tombstones are gated too, so a
+            # stale out-of-order CDC delete cannot undo a newer image. The
+            # condition references source columns by NAME and the matched
+            # current row's as t_<name> (e.g. "ts > t_ts" = last-writer-
+            # wins). Replay stays a fixpoint: after the first apply the
+            # condition compares a row against itself and keeps the target.
+            # the t_<name> aliases are API (the condition references them),
+            # so a source column that ALREADY spells t_<target-col> (or the
+            # join key's internal __mck) would make the condition ambiguous
+            # — AnalysisException deep in the join at best, a silently
+            # misbound reference at worst. Refuse up front with names.
+            taken = {
+                f"t_{c}".casefold() for c in current.columns if c != key
+            } | {"__mck"}
+            clash = sorted(c for c in source.columns if c.casefold() in taken)
+            if clash:
+                raise ValueError(
+                    f"update_condition cannot bind: source columns {clash} "
+                    "collide with the t_<name> aliases of the matched target "
+                    "row (or the internal __mck key); rename them in the "
+                    "batch before the merge"
+                )
+            # the candidate rows are evaluated twice with a condition (the
+            # t_<name> join below AND the merge rewrite) — persist them so
+            # the candidate parquet files are read once; marked only now,
+            # AFTER the condition expression parsed (an unparseable
+            # condition must not leak a persist), and released in the
+            # finally. The persist goes UNDER the fusion's coalesce:
+            # InMemoryTableScan reports UnknownPartitioning, so caching the
+            # COALESCED plan would bury the SinglePartition and
+            # EnsureRequirements would re-exchange both merge-join sides —
+            # exactly the shuffles the fusion removes.
+            F.expr(update_condition)
+            current = cur_persisted = current.persist()
+        if fused:
+            # both sides run in ONE clone (AQE off, unbounded single-partition
+            # cap), losing no parallelism: each fits one task by the gate.
+            # Moved before the expect gate attaches its Observation
+            current, source = _in_clone(current, source)
+            current, source = current.coalesce(1), source.coalesce(1)
+        if update_condition is not None:
+            # a condition referencing a nonexistent column raises at join
+            # analysis: the finally releases the persist taken above
             cur_t = current.select(
                 F.col(key).alias("__mck"),
                 *[
@@ -3238,16 +3270,18 @@ def _prepare_merge_edit_impl(
         data_dir = f"data/c={_token()}"
         _write_data(merged, base_path, data_dir, key, n_out)
         gate()  # batch violations abort pre-marker: partial v is invisible
+        edit["removed"] = touched
+        edit["added"] = _file_stats(
+            spark, base_path, data_dir, edit["stats_cols"], schema,
+            meta.get("bloom"), schema_id=schema_id,
+            null_stats=bool(meta.get("null_stats")),
+        )
+        return edit
     finally:
         if cur_persisted is not None:
             cur_persisted.unpersist()
-    edit["removed"] = touched
-    edit["added"] = _file_stats(
-        spark, base_path, data_dir, stats_cols, schema, meta.get("bloom"),
-        schema_id=schema_id, null_stats=bool(meta.get("null_stats")),
-    )
-    edit["bounds"] = (key, bounds["lo"], bounds["hi"])
-    return edit
+        if cached is not None:
+            cached.unpersist()
 
 
 def stage_merge_manifest_table(
@@ -3530,27 +3564,50 @@ def manifest_table_stats(
     ``rows``/``bytes`` are PHYSICAL: files carrying a deletion vector
     still count their condemned rows (the manifest records what is on
     disk; ``n_dv_files`` tells you how many files carry vectors so a
-    caller can decide whether the bound is tight enough)."""
-    man = manifest_stats(spark, base_path, version=version)
-    aggs = [
-        F.coalesce(F.sum("rows"), F.lit(0)).alias("rowCount"),
-        F.coalesce(F.sum("bytes"), F.lit(0)).alias("sizeInBytes"),
-        F.count(F.lit(1)).alias("numFiles"),
-        F.count(F.when(F.col("dv_path").isNotNull(), 1)).alias("n_dv_files"),
-    ]
-    stats_cols = [
-        c[len("min_"):] for c in man.columns if c.startswith("min_")
-    ]
-    for c in stats_cols:
-        aggs.append(F.min(f"min_{c}").alias(f"min_{c}"))
-        aggs.append(F.max(f"max_{c}").alias(f"max_{c}"))
-        if f"nulls_{c}" in man.columns:
+    caller can decide whether the bound is tight enough).
+
+    The fold runs in Arrow over the driver-side manifest (no Spark job);
+    the one result row converts through ``spark.createDataFrame`` (a
+    LocalRelation), so values come back as Spark's Python types. Float
+    extremes keep Spark's order, NaN above every double: the global max
+    is NaN when any file's is, the min only when every file's is."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    man = _committed_manifest(spark, base_path, version)
+
+    def total(c):
+        return pa.scalar(pc.sum(man.column(c)).as_py() or 0, pa.int64())
+
+    def extreme(c, fold):
+        col = man.column(c)
+        if not pa.types.is_floating(col.type):
+            return fold(col)
+        nan = pc.fill_null(pc.is_nan(col), False)
+        v = fold(col.filter(pc.invert(nan)))
+        if pc.any(nan).as_py() and (fold is pc.max or not v.is_valid):
+            return pa.scalar(math.nan, col.type)
+        return v
+
+    out = {
+        "rowCount": total("rows"),
+        "sizeInBytes": total("bytes"),
+        "numFiles": pa.scalar(man.num_rows, pa.int64()),
+        "n_dv_files": pa.scalar(
+            man.num_rows - man.column("dv_path").null_count, pa.int64()
+        ),
+    }
+    names = man.schema.names
+    for c in [n[len("min_"):] for n in names if n.startswith("min_")]:
+        out[f"min_{c}"] = extreme(f"min_{c}", pc.min)
+        out[f"max_{c}"] = extreme(f"max_{c}", pc.max)
+        if f"nulls_{c}" in names:
             # null_stats tables: the global nullCount is a free fold too
-            aggs.append(
-                F.coalesce(F.sum(f"nulls_{c}"), F.lit(0)).alias(f"nulls_{c}")
-            )
-    row = man.agg(*aggs).first()
-    return dict(row.asDict())
+            out[f"nulls_{c}"] = total(f"nulls_{c}")
+    row = spark.createDataFrame(
+        pa.table({k: pa.array([v.as_py()], v.type) for k, v in out.items()})
+    ).first()
+    return row.asDict()
 
 
 def bloom_prune_expr(
@@ -4032,7 +4089,10 @@ def delete_manifest_table(
     its vector in and clears it.
 
     ``key`` must be a declared stats column (candidate files are found
-    with the same bounds + semi-join skipping as merge) and is fixed as
+    by the merge's own finder, :func:`_prepare_keyed_edit`: driver-side
+    for a driver-local batch, folded into the one bounds aggregate for a
+    small table, bounds overlap plus broadcast semi-join for a big one)
+    and is fixed as
     the table's DV key on first use — sidecars store (file, key) pairs
     and reads must know which column they condemn. Manifest ``rows``/
     ``bytes`` stay PHYSICAL for DV'd files (compaction thresholds and
@@ -4042,13 +4102,9 @@ def delete_manifest_table(
 
     ``txn=(app_id, version)`` makes the commit idempotent — see
     :func:`append_manifest_table`."""
-    if txn is not None:
-        _, _, h0, _ = _begin(spark, base_path)
-        if h0 is not None:
-            applied = _meta(spark, base_path, h0).get("txns", {})
-            if int(applied.get(str(txn[0]), -1)) >= int(txn[1]):
-                return h0
-    edit = _prepare_delete_edit(spark, keys, base_path, key)
+    edit = _prepare_delete_edit(spark, keys, base_path, key, txn=txn)
+    if isinstance(edit, int):  # txn already applied: the replay no-ops
+        return edit
     return _finish(
         spark, base_path, schema=edit["schema"], stats_cols=edit["stats_cols"],
         keep=keep, base_head=edit["base_head"],
@@ -4060,116 +4116,48 @@ def delete_manifest_table(
 
 
 def _prepare_delete_edit(
-    spark: SparkSession, keys: DataFrame, base_path: str, key: str
-) -> dict:
-    """Everything a DV DELETE does BEFORE publishing — candidate
-    selection, the condemned-pair scan, the sidecar write, the repoint —
-    packaged as the manifest edit ``_finish`` publishes. Shared by the
-    immediate :func:`delete_manifest_table` and the staged
-    :func:`stage_delete_manifest_table` (write-audit-publish)."""
-    fs, listing, head, version = _begin(spark, base_path)
-    if head is None:
-        raise FileNotFoundError(
-            f"no committed manifest table under {base_path}; create with "
-            "write_manifest_table first"
-        )
-    meta = _meta(spark, base_path, head)
-    stats_cols = meta["stats_cols"]
-    schema = StructType.fromJson(meta["schema"])
-    if key not in stats_cols:
-        raise ValueError(
-            f"delete key {key!r} must be a declared stats column ({stats_cols})"
-        )
-    dv_key = meta.get("dv_key")
-    if dv_key is not None and dv_key != key:
-        raise ValueError(
-            f"table's deletion-vector key is fixed at {dv_key!r} (first "
-            f"delete); got {key!r}"
-        )
-    kdist = keys.select(F.col(key).alias("__key")).distinct()
-    # one pass over the batch for bounds AND the NULL-key guard — min/max
-    # and the count-vs-count(key) NULL check are distinct-insensitive,
-    # so it runs on the RAW batch (no pre-distinct exchange). Per-file
-    # CANDIDACY rides the same pass when the live file set is small
-    # enough to fold (exactly the merge's candidate fold): the separate
-    # broadcast-build + semi-join jobs disappear from the delete. A
-    # driver-local batch is folded on the driver with zero jobs.
-    man = _load_manifest(spark, base_path, head)
-    fold_files = _cand_fold_files(man, key)
-    bounds = _batch_bounds(
-        keys, key, schema[key].dataType, fold_files, distinct=False
+    spark: SparkSession,
+    keys: DataFrame,
+    base_path: str,
+    key: str,
+    txn: tuple[str, int] | None = None,
+):
+    """Everything a DV DELETE does BEFORE publishing — the keyed front
+    end (:func:`_prepare_keyed_edit`), the condemned-pair scan, the
+    sidecar write, the repoint — packaged as the manifest edit
+    ``_finish`` publishes; the head instead when ``txn`` was already
+    applied. Shared by the immediate :func:`delete_manifest_table` and
+    the staged :func:`stage_delete_manifest_table` (write-audit-publish)."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    front = _prepare_keyed_edit(
+        spark, keys, base_path, key, verb="delete", txn=txn
     )
-    if bounds["n"] != bounds["nk"]:
-        raise ValueError(
-            f"delete batch contains NULL {key!r} keys; a NULL never lands "
-            "in a min/max range, so it could never be skipped consistently"
-        )
-    schemas, schema_id = _registry(meta)
-    edit = {
-        "base_head": head,
-        "key": key,
-        "schema": schema,
-        "stats_cols": stats_cols,
-        "dv_key": dv_key,
-        "bloom": meta.get("bloom"),
-        "schemas": schemas,
-        "schema_id": schema_id,
-        "removed": [],
-        "added": None,
-        "bounds": None,
-    }
-    if bounds["lo"] is None:
-        return edit
-    edit["bounds"] = (key, bounds["lo"], bounds["hi"])
-    if fold_files is not None:
-        cand_files = [
-            f for i, f in enumerate(fold_files) if bounds[f"__cand{i}"]
-        ]
-    else:
-        coarse = spark.createDataFrame(man).where(
-            (F.col(f"max_{key}") >= F.lit(bounds["lo"]))
-            & (F.col(f"min_{key}") <= F.lit(bounds["hi"]))
-        )
-        cand = coarse.join(
-            F.broadcast(kdist),
-            (F.col("__key") >= F.col(f"min_{key}"))
-            & (F.col("__key") <= F.col(f"max_{key}")),
-            "leftsemi",
-        )
-        cand_files = cand.select(
-            "path", "bytes", "dv_path", "schema_id"
-        ).collect()
+    if isinstance(front, int):
+        return front
+    edit, _, man, cand_files = front
     if not cand_files:
-        # still a range-reading edit: "no candidates" is a statement
-        # about this key range, so a concurrent commit INTO the range
-        # must conflict, not silently serialize after the no-op
+        # an empty batch, or no candidates — the latter still a
+        # range-reading edit: "no candidates" is a statement about this
+        # key range, so a concurrent commit INTO the range must
+        # conflict, not silently serialize after the no-op
         return edit
     touched = [r["path"] for r in cand_files]
-    key_type = schema[key].dataType
+    key_type = edit["schema"][key].dataType
+    schemas = edit["schemas"]
     # the condemned (file, key) pairs actually PRESENT in candidate files:
-    # one scan of the candidates (per schema era, key projected by field
-    # id and cast to the CURRENT type), semi-joined against the key batch
-    cur_fields = schemas[schema_id]
-    key_id = next(f["id"] for f in cur_fields if f["name"] == key)
-    raws = []
-    for sid, members in sorted(_by_schema_id(cand_files).items()):
-        phys_fields = schemas[sid]
-        phys_name = next(f["name"] for f in phys_fields if f["id"] == key_id)
-        raws.append(
-            spark.read.schema(_schema_from_fields(phys_fields))
-            .parquet(*[_data_path(base_path, p) for p, _ in members])
-            .select(
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), r"(data/[^/]+/[^/]+)$", 1
-                ).alias("__path"),
-                F.col(phys_name).cast(key_type).alias("__key"),
-            )
+    # one scan of the candidates (per schema era, lifted to the CURRENT
+    # schema), semi-joined against the batch's distinct keys
+    kdist = keys.select(F.col(key).alias("__key")).distinct()
+    present = (
+        _scan_eras(
+            spark, base_path, cand_files, schemas, schemas[edit["schema_id"]],
+            path=True,
         )
-    raw = raws[0]
-    for r in raws[1:]:
-        raw = raw.unionByName(r)
-    present = raw.join(F.broadcast(kdist), "__key", "leftsemi").select(
-        "__path", "__key"
+        .select("__path", F.col(key).alias("__key"))
+        .join(F.broadcast(kdist), "__key", "leftsemi")
+        .select("__path", "__key")
     )
     # union in the touched files' EXISTING vectors so each file's sidecar
     # generation is complete on its own (readers never chase chains);
@@ -4212,7 +4200,10 @@ def _prepare_delete_edit(
     # anti-join read path forever or inflate n_dv_files. The just-written
     # sidecar is a single small local file: read its path column
     # driver-side (zero jobs) when Arrow can; distributed read otherwise
-    hit = _parquet_strings_local(base_path, dv_dir, "__path")
+    hit = _read_back_local(
+        base_path, dv_dir, ["__path"],
+        lambda t: set(pc.unique(t.column("__path")).to_pylist()),
+    )
     if hit is None:
         hit = {
             r["__path"]
@@ -4227,9 +4218,6 @@ def _prepare_delete_edit(
     # the commit as a manifest edit: drop the repointed files' old
     # entries, re-add them with the fresh sidecar — what lets _finish
     # rebase it over concurrent commits that left these files alone
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     edit["removed"] = repoint
     added = man.filter(
         pc.fill_null(
@@ -4395,23 +4383,7 @@ def update_manifest_table(
     # phase 1 — candidate files: any physical row matching `where`,
     # read per schema era and lifted to the current schema first so the
     # predicate speaks current names/types
-    parts = []
-    for sid, members in sorted(_by_schema_id(files).items()):
-        phys = _schema_from_fields(schemas[sid])
-        proj = _projection(schemas[sid], cur_fields)
-        parts.append(
-            spark.read.schema(phys)
-            .parquet(*[_data_path(base_path, p) for p, _ in members])
-            .select(
-                *proj,
-                F.regexp_extract(
-                    F.col("_metadata.file_path"), r"(data/[^/]+/[^/]+)$", 1
-                ).alias("__path"),
-            )
-        )
-    raw = parts[0]
-    for p in parts[1:]:
-        raw = raw.unionByName(p)
+    raw = _scan_eras(spark, base_path, files, schemas, cur_fields, path=True)
     # r15 single-file fusion (same gate as the merge rewrite): a
     # one-small-file candidate scan runs its path-distinct in ONE
     # partition — no exchange, no AQE stage boundary, one job

@@ -1,4 +1,12 @@
-"""Attribute Spark job launches to manifest-module phases."""
+"""Attribute Spark job launches to manifest-module phases.
+
+Usage (from the repo root): ``python tools/prof_jobs_phase.py <query>``,
+e.g. ``evolution_cycle``; ``SPARK_GRAFT_SF_DIR`` picks the data (default
+sf0.1). Each listed phase is charged its SELF jobs and time — what ran
+inside it but outside any nested listed phase — so the keyed front end
+(``_prepare_keyed_edit``) shows apart from the rest of a merge's or a
+delete's prepare. Listed names the module lacks are printed, not
+wrapped."""
 import collections
 import functools
 import os
@@ -23,22 +31,25 @@ def njobs():
     return (max(ids) + 1) if ids else 0
 
 jacc = collections.Counter(); tacc = collections.Counter(); cnt = collections.Counter()
-stack = []
+stack = []  # per open phase: [jobs, seconds] spent in nested phases
 
 def wrap(mod, name):
     fn = getattr(mod, name)
     @functools.wraps(fn)
     def w(*a, **k):
         j0, t0 = njobs(), time.perf_counter()
-        stack.append(name)
+        stack.append([0, 0.0])
         try:
             return fn(*a, **k)
         finally:
-            stack.pop()
-            if not stack:  # attribute to outermost phase only
-                jacc[name] += njobs() - j0
-                tacc[name] += time.perf_counter() - t0
-                cnt[name] += 1
+            inner_j, inner_t = stack.pop()
+            dj, dt = njobs() - j0, time.perf_counter() - t0
+            jacc[name] += dj - inner_j
+            tacc[name] += dt - inner_t
+            cnt[name] += 1
+            if stack:
+                stack[-1][0] += dj
+                stack[-1][1] += dt
     setattr(mod, name, w)
 
 for n in ["_begin", "_meta", "_load_manifest", "_materialize_manifest",
@@ -46,7 +57,8 @@ for n in ["_begin", "_meta", "_load_manifest", "_materialize_manifest",
           "vacuum_manifest_table", "restore_manifest_table",
           "clone_manifest_table", "data_skipping_expr", "bloom_prune_expr",
           "version_as_of", "_manifest_tags", "read_manifest_table",
-          "_prepare_merge_edit", "append_manifest_table",
+          "_prepare_keyed_edit", "_prepare_merge_edit",
+          "_prepare_delete_edit", "append_manifest_table",
           "write_manifest_table", "update_manifest_table",
           "evolve_manifest_table", "compact_manifest_table",
           "stage_merge_manifest_table", "stage_delete_manifest_table",
@@ -55,6 +67,8 @@ for n in ["_begin", "_meta", "_load_manifest", "_materialize_manifest",
           "manifest_changes"]:
     if hasattr(M, n):
         wrap(M, n)
+    else:
+        print(f"(not in the module, not profiled: {n})")
 
 spark.read.parquet(os.path.join(SF, "region.parquet")).count()
 fn = entry.queries()[QUERY]
@@ -67,5 +81,5 @@ total_t, total_j = time.perf_counter() - t0, njobs() - j0
 print(f"=== {QUERY}: {total_j} jobs, {total_t:.2f}s ===")
 for k, j in jacc.most_common():
     print(f"  {k:28s} jobs={j:3d} t={tacc[k]:6.2f} x{cnt[k]}")
-print(f"  (attributed jobs {sum(jacc.values())}, t {sum(tacc.values()):.2f})")
+print(f"  (self jobs {sum(jacc.values())}, t {sum(tacc.values()):.2f})")
 spark.stop()
