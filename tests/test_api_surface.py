@@ -202,15 +202,85 @@ def test_triangle_degree_order_bounds_hub_wedges(spark):
 def test_shared_item_postings_memoizes_per_session_and_sf(spark):
     """sparse_topk and hybrid_rerank must reference the SAME postings build
     (that is the shared-inverted-index contract); switching corpora must
-    rebuild, and the memo must not grow without bound."""
+    rebuild, and the memo must not grow without bound: one entry per
+    index, so the fuzzy_blocked dimension sketch neither evicts the
+    postings nor is evicted by them."""
     import __spark_entry__ as entry
+    from tests.conftest import SF_DIR
 
+    entry._INDEX_MEMO.clear()
     a1 = entry._shared_item_postings(spark, "/root/testdata/sf0.001")
     a2 = entry._shared_item_postings(spark, "/root/testdata/sf0.001")
     assert a1 is a2
     b = entry._shared_item_postings(spark, "/root/testdata/sf0.01")
     assert b is not a1
-    assert len(entry._POSTINGS_MEMO) == 1  # one corpus at a time
+    assert len(entry._INDEX_MEMO) == 1  # one corpus at a time
+    entry.q_fuzzy_blocked(spark, SF_DIR)
+    sketch = entry._INDEX_MEMO["customer_band_sketch"][1]
+    entry.q_fuzzy_blocked(spark, SF_DIR)
+    assert entry._INDEX_MEMO["customer_band_sketch"][1] is sketch
+    assert entry._INDEX_MEMO["item_postings"][1] is b
+    assert len(entry._INDEX_MEMO) == 2
+
+
+def test_built_once_indexes_follow_a_rewritten_input(spark, tmp_path):
+    """Within one session, rewriting documents.parquet or customer.parquet
+    must not leave sparse_topk or fuzzy_blocked answering from the index
+    built over the file's old contents: each equals a fresh build (a new
+    session, which shares no memo entry) after the rewrite."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    from tests.conftest import SF_DIR
+
+    sf = str(tmp_path)
+    for t in ("documents", "supplier", "customer"):
+        shutil.copy(os.path.join(SF_DIR, f"{t}.parquet"), sf)
+    queries = entry.queries()
+
+    def rows(session, name):
+        return sorted(tuple(r) for r in queries[name](session, sf).collect())
+
+    def rewrite(table, col, values):
+        path = os.path.join(sf, f"{table}.parquet")
+        t = pq.read_table(path)
+        i = t.schema.get_field_index(col)
+        new = values(t.column(col).to_pylist())
+        t = t.set_column(i, t.schema.field(i), pa.array(new, t.schema.field(i).type))
+        pq.write_table(t, path + ".tmp")
+        os.replace(path + ".tmp", path)
+
+    suppliers = pq.read_table(os.path.join(sf, "supplier.parquet")).column("s_name")
+    cases = [
+        # roll the texts by one document: every query's neighbours move
+        ("sparse_topk", "documents", "text", lambda v: v[1:] + v[:1]),
+        # give the first customers the suppliers' names: exact matches
+        ("fuzzy_blocked", "customer", "c_name",
+         lambda v: suppliers.to_pylist() + v[len(suppliers):]),
+    ]
+    for name, table, col, values in cases:
+        before = rows(spark, name)
+        assert rows(spark, name) == before  # served from the memo
+        rewrite(table, col, values)
+        after = rows(spark, name)
+        fresh = rows(spark.newSession(), name)
+        assert fresh != before, name  # the rewrite changes the answer
+        assert after == fresh, name
+
+    # an input with no stamp (here a directory) is built on every call
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(1)
+
+    for _ in range(2):
+        entry._built_once(spark, "unstamped", (), [sf], build)
+    assert len(builds) == 2 and "unstamped" not in entry._INDEX_MEMO
 
 
 def _pagerank_model(edges, iterations=3, num=85, den=100, scale=10**12):

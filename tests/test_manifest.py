@@ -7456,3 +7456,48 @@ def test_building_a_pruned_read_over_a_dv_table_runs_no_job(
     assert sorted(r["id"] for r in df.collect()) == [
         i for i in range(3, 26) if i not in (5, 15, 25)
     ]
+
+
+def test_table_verbs_resolve_jvm_classes_by_full_name(spark, tmp_path, monkeypatch):
+    """A merge, a delete and a pruned read send no py4j reflection command
+    that looks up ``org``. That command is the first step of an attribute
+    chain like ``jvm.org.apache.hadoop.fs.Path``: each package step of the
+    chain is a failed class lookup that scans every jar on the classpath,
+    where one fully qualified lookup resolves the class directly."""
+    from py4j import protocol as proto
+
+    from tibame_project_spark.sources.manifest import delete_manifest_table
+
+    base = str(tmp_path / "t")
+    write_manifest_table(
+        spark, _mk(spark, [(i, i) for i in range(40)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=4,
+    )
+    upsert = _mk(spark, [(3, 33), (41, 41)])
+    condemned = _mk(spark, [(5, 0), (15, 0)]).select("id")
+    client = spark._jvm._gateway_client
+    org = (
+        proto.REFLECTION_COMMAND_NAME + proto.REFL_GET_UNKNOWN_SUB_COMMAND_NAME
+        + "org\n"
+    )
+    seen = []
+    send = client.send_command
+
+    def counting(command, *a, **kw):
+        if command.startswith(org):
+            seen.append(command)
+        return send(command, *a, **kw)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    counts = {}
+    merge_manifest_table(spark, upsert, base, "id")
+    counts["merge"], seen[:] = len(seen), []
+    delete_manifest_table(spark, condemned, base, "id")
+    counts["delete"], seen[:] = len(seen), []
+    rows = read_manifest_table(spark, base, where="id >= 3 AND id <= 20").collect()
+    counts["pruned read"] = len(seen)
+    monkeypatch.undo()
+    assert counts == {"merge": 0, "delete": 0, "pruned read": 0}
+    assert sorted(r["id"] for r in rows) == [
+        i for i in range(3, 21) if i not in (5, 15)
+    ]

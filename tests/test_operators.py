@@ -215,6 +215,56 @@ def test_fuzzy_blocked_finds_exact_and_near_matches(spark):
     assert "NestedLoop" not in plan and "CartesianProduct" not in plan
 
 
+def test_fuzzy_blocked_prebuilt_sketch_matches_inline(spark):
+    """A dimension sketch built once by fuzzy_band_sketch, as built or
+    after localCheckpoint, gives the rows of the inline sketch; a sketch
+    built with other parameters, or with none recorded, is refused."""
+    import pytest
+
+    from tibame_project_spark.operators.dedup import md5_base_hash
+    from tibame_project_spark.operators.joins import (
+        fuzzy_band_sketch,
+        fuzzy_top1_join_blocked,
+    )
+
+    left = spark.createDataFrame(
+        [("grand hotel taipei",), ("night market shilin",), ("taipei zoo",)],
+        ["query"],
+    )
+    dim = spark.createDataFrame(
+        [("grand hotel taipei", 1), ("grand hotel taipel", 4),
+         ("night market shilin!", 2), ("taipei city zoo", 5), ("xyzzy", 3)],
+        ["name", "dim_id"],
+    )
+
+    def rows(**kw):
+        return sorted(
+            tuple(r)
+            for r in fuzzy_top1_join_blocked(
+                left, dim, "query", "name", tie_break=["dim_id"], **kw
+            ).collect()
+        )
+
+    inline = rows()
+    assert ("grand hotel taipei", 0, "grand hotel taipei", 1) in inline
+    sketch = fuzzy_band_sketch(dim, "name")
+    assert rows(dim_sketch=sketch) == inline
+    kept = sketch.localCheckpoint()
+    assert kept.schema["bh"].metadata == sketch.schema["bh"].metadata != {}
+    assert rows(dim_sketch=kept) == inline
+    md5 = fuzzy_band_sketch(dim, "name", base_hash=md5_base_hash)
+    assert rows(dim_sketch=md5, base_hash=md5_base_hash) == rows(
+        base_hash=md5_base_hash
+    )
+    for bad in (
+        fuzzy_band_sketch(dim, "name", num_perm=32),
+        md5,
+        sketch.withColumn("bh", F.col("bh").alias("bh", metadata={})),
+    ):
+        with pytest.raises(ValueError, match="dim_sketch"):
+            rows(dim_sketch=bad)
+
+
 # ---------------------------------------------------------------------------
 # fb date normalization (F2) — including the reference's failure modes
 # ---------------------------------------------------------------------------

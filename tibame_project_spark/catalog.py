@@ -130,23 +130,31 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` through the schema memo of :func:`load`.
-    The stamp is taken before the read, so a file that changes while its
-    schema is inferred leaves a stale stamp, never a stale schema."""
+def file_stamp(path: str) -> tuple[int, int, int] | None:
+    """``(size, st_mtime_ns, inode)`` of the regular file at ``path`` —
+    the version stamp of everything kept per input file (the schema memo
+    of :func:`load`, the built-once indexes of the query registry). None
+    for a directory or a path ``os.stat`` cannot reach: such an input has
+    no version to key on. Take the stamp BEFORE reading the file, so a
+    file that changes during the read leaves a stale stamp (a rebuild
+    next time), never a stale result."""
     try:
         st = os.stat(path)
     except OSError:
-        st = None
-    if st is None or not stat.S_ISREG(st.st_mode):
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (st.st_size, st.st_mtime_ns, st.st_ino)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` through the schema memo of :func:`load`,
+    stamped by :func:`file_stamp` and the inference confs."""
+    st = file_stamp(path)
+    if st is None:
         return spark.read.parquet(path)
     real = os.path.realpath(path)
-    stamp = (
-        st.st_size,
-        st.st_mtime_ns,
-        st.st_ino,
-        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
-    )
+    stamp = (st, tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
     hit = _SCHEMA_MEMO.get(real)
     if hit is not None and hit[0] == stamp:
         return spark.read.schema(hit[1]).parquet(path)

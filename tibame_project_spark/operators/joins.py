@@ -266,6 +266,92 @@ def fuzzy_top1_join(
     return found.unionByName(unpack(top1(misses.select(*df.columns), full_dist)))
 
 
+#: Metadata key under which :func:`fuzzy_band_sketch` records its build
+#: parameters on the ``bh`` field; :func:`fuzzy_top1_join_blocked` checks it.
+_SKETCH_META = "fuzzy_band_sketch"
+
+#: MinHash permutation seed of the band sketch (``minhash_signature``'s
+#: default, which the DuckDB twin of ``fuzzy_blocked`` spells too).
+_SKETCH_SEED = 42
+
+
+def _sketch_params(col: str, n: int, num_perm: int, bands: int, base_hash) -> dict:
+    """The build parameters a band sketch records and a probe checks. A
+    lambda or local function has no unique name, so its name is pinned to
+    the object: a sketch built with it matches only that same object."""
+    name = f"{base_hash.__module__}.{base_hash.__qualname__}"
+    if "<" in name:
+        name = f"{name}@{id(base_hash):x}"
+    return {
+        "col": col,
+        "n": n,
+        "num_perm": num_perm,
+        "bands": bands,
+        "seed": _SKETCH_SEED,
+        "base_hash": name,
+    }
+
+
+def fuzzy_band_sketch(
+    rel: DataFrame,
+    col: str,
+    *,
+    n: int = 3,
+    num_perm: int = 16,
+    bands: int = 8,
+    base_hash=None,
+) -> DataFrame:
+    """The LSH band sketch of ``rel`` on string column ``col``: every
+    column of ``rel`` plus ``band`` (0..bands-1) and ``bh``, the md5 of
+    that band's slice of the character-``n``-gram MinHash signature — one
+    row per (input row, band). This is the blocking key of
+    :func:`fuzzy_top1_join_blocked`, which builds it for both sides.
+
+    Build it once and pass it as ``dim_sketch=`` when the same dimension is
+    probed repeatedly: sketching is the expensive half of the blocked join
+    (a MinHash aggregate per row), and a dimension that does not change
+    need not be sketched per probe. The ``bh`` field's metadata records
+    ``(col, n, num_perm, bands, seed, base_hash)``; it survives
+    ``localCheckpoint`` and the probe refuses a sketch whose parameters
+    differ from its own.
+    """
+    from tibame_project_spark.operators.dedup import (
+        minhash_signature,
+        xxhash_base_hash,
+    )
+
+    base_hash = base_hash or xxhash_base_hash
+    rows = num_perm // bands
+    # Explode the band INDEX first, then slice the signature per output
+    # row: building all band hashes inside one explode(array(struct…))
+    # re-inlines the signature aggregate into every band expression —
+    # measured ~bands× the sketch cost (the generator input is one
+    # expression tree, so the multi-use staging that protects projections
+    # does not apply). Post-explode, __sig is a carried column computed
+    # once per input row; each band row pays only element_at + md5.
+    s = F.lower(F.trim(F.col(col)))
+    k = F.greatest(F.length(s) - (n - 1), F.lit(1))
+    grams = F.array_distinct(
+        F.transform(F.sequence(F.lit(1), k), lambda i: F.substring(s, i, n))
+    )
+    sig = minhash_signature(grams, num_perm, seed=_SKETCH_SEED, base_hash=base_hash)
+    bh = F.md5(
+        F.concat_ws(
+            ",",
+            *[
+                F.element_at("__sig", (F.col("band") * rows + (j + 1)).cast("int"))
+                for j in range(rows)
+            ],
+        )
+    )
+    meta = {_SKETCH_META: _sketch_params(col, n, num_perm, bands, base_hash)}
+    return (
+        rel.withColumn("__sig", sig)
+        .withColumn("band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))))
+        .select(*rel.columns, "band", bh.alias("bh", metadata=meta))
+    )
+
+
 def fuzzy_top1_join_blocked(
     df: DataFrame,
     dim: DataFrame,
@@ -277,14 +363,35 @@ def fuzzy_top1_join_blocked(
     num_perm: int = 16,
     bands: int = 8,
     base_hash=None,
+    dim_sketch: DataFrame | None = None,
 ) -> DataFrame:
     """Scale tier of J9 for dims too large to broadcast: LSH blocking via
     character-``n``-gram MinHash, then the same map-side struct-MIN top-1.
 
-    Both relations are sketched (char n-grams → MinHash signature → ``bands``
-    band hashes); candidates are generated by a plain **equi-join on
-    (band, band_hash)** — a hash-partitioned shuffle join, no cross product
-    and no broadcast requirement — then deduped and scored with Levenshtein.
+    Both relations are sketched (:func:`fuzzy_band_sketch`: char n-grams →
+    MinHash signature → ``bands`` band hashes); candidates are generated by
+    a plain **equi-join on (band, band_hash)** — a hash-partitioned shuffle
+    join, no cross product and no broadcast requirement — then scored with
+    Levenshtein.
+
+    Cost: the sketches, not the verification. Banding keeps the candidate
+    set small (supplier × customer at sf0.01: 2,393 band-join candidates,
+    1,370 distinct pairs, a few ms of Levenshtein), while MinHash-sketching
+    the 1,500-row dimension costs most of the pass's executor CPU. So a
+    caller that probes one dimension repeatedly passes ``dim_sketch=`` — a
+    :func:`fuzzy_band_sketch` of ``dim`` on ``right_col`` built once (and
+    ``localCheckpoint``-ed, say) — and each probe sketches only ``df``.
+    Without it the dimension is sketched inline, by the same expressions,
+    so the rows are identical either way. ``dim`` still names the payload
+    columns. A sketch whose recorded parameters (column, ``n``,
+    ``num_perm``, ``bands``, seed, base hash) differ from this call's, or
+    that records none, raises ``ValueError``: its band hashes would not
+    meet the probe's and the join would silently lose matches.
+
+    Jobs per run: ``fuzzy_blocked`` (sf0.01, warm) runs 3 Spark jobs
+    with the dimension sketched inline and 3 with it prebuilt — the
+    sketch replaces the dimension's scan and sketch inside the plan, not
+    a stage or a job.
 
     Approximate by construction: a left row whose true best match never
     shares a band gets its best *candidate* instead (or drops out if it has
@@ -295,44 +402,25 @@ def fuzzy_top1_join_blocked(
     (``airflow/utils/common.py:22-28``) at data sizes extractOne cannot
     reach.
     """
-    from tibame_project_spark.operators.dedup import (
-        minhash_signature,
-        xxhash_base_hash,
-    )
+    params = dict(n=n, num_perm=num_perm, bands=bands, base_hash=base_hash)
+    if dim_sketch is None:
+        dim_sketch = fuzzy_band_sketch(dim, right_col, **params)
+    else:
+        from tibame_project_spark.operators.dedup import xxhash_base_hash
 
-    base_hash = base_hash or xxhash_base_hash
-    rows = num_perm // bands
-
-    def banded(rel: DataFrame, col: str) -> DataFrame:
-        # Explode the band INDEX first, then slice the signature per output
-        # row: building all band hashes inside one explode(array(struct…))
-        # re-inlines the signature aggregate into every band expression —
-        # measured ~bands× the sketch cost (the generator input is one
-        # expression tree, so the multi-use staging that protects projections
-        # does not apply). Post-explode, __sig is a carried column computed
-        # once per input row; each band row pays only element_at + md5.
-        s = F.lower(F.trim(F.col(col)))
-        k = F.greatest(F.length(s) - (n - 1), F.lit(1))
-        grams = F.array_distinct(
-            F.transform(F.sequence(F.lit(1), k), lambda i: F.substring(s, i, n))
+        want = _sketch_params(
+            right_col, n, num_perm, bands, base_hash or xxhash_base_hash
         )
-        sig = minhash_signature(grams, num_perm, base_hash=base_hash)
-        bh = F.md5(
-            F.concat_ws(
-                ",",
-                *[
-                    F.element_at(
-                        "__sig", (F.col("band") * rows + (j + 1)).cast("int")
-                    )
-                    for j in range(rows)
-                ],
+        got = next(
+            (f.metadata.get(_SKETCH_META) for f in dim_sketch.schema.fields
+             if f.name == "bh"),
+            None,
+        )
+        if got != want:
+            raise ValueError(
+                f"dim_sketch was built with {got}, but this join needs {want}; "
+                "rebuild it with fuzzy_band_sketch and this join's parameters"
             )
-        )
-        return (
-            rel.withColumn("__sig", sig)
-            .withColumn("band", F.explode(F.sequence(F.lit(0), F.lit(bands - 1))))
-            .select(*rel.columns, "band", bh.alias("bh"))
-        )
 
     # A pair may collide in several bands; duplicates are NOT removed here —
     # MIN is duplicate-insensitive, so a distinct() would only re-shuffle
@@ -340,8 +428,8 @@ def fuzzy_top1_join_blocked(
     # them in keeps the pair stream map-side: the partial MIN collapses each
     # scan partition to one row per left key before the only extra shuffle.
     cand = (
-        banded(df, left_col)
-        .join(banded(dim, right_col), ["band", "bh"])
+        fuzzy_band_sketch(df, left_col, **params)
+        .join(dim_sketch, ["band", "bh"])
         .drop("band", "bh")
     )
     dist = F.levenshtein(F.col(left_col), F.col(right_col))

@@ -36,7 +36,7 @@ from __future__ import annotations
 import hashlib
 
 from tibame_project_spark.sources.manifest import CommitFS
-from tibame_project_spark.sources.writers import _create_new
+from tibame_project_spark.sources.writers import _create_new, _hadoop_path
 
 __all__ = ["CoordinatedCommitFS", "ConditionalPutCommitFS"]
 
@@ -80,7 +80,7 @@ class CoordinatedCommitFS(CommitFS):
         coord_fs.mkdirs(self._path(self._coord_dir))
 
     def _path(self, s: str):
-        return self._jvm.org.apache.hadoop.fs.Path(s)
+        return _hadoop_path(self._jvm, s)
 
     def _entry(self, fs, path):
         # qualify before hashing: the protocol names the same object both

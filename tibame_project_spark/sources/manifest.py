@@ -128,6 +128,8 @@ from tibame_project_spark.sources.writers import (
     _COMMIT_PREFIX,
     _committed_versions,
     _create_new,
+    _hadoop_path,
+    _jvm_class,
     _version_suffix,
     read_snapshot_version,
 )
@@ -204,7 +206,7 @@ _STATS_STRING_MAX = 32
 
 def _fs_for(spark: SparkSession, path: str):
     jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = _hadoop_path(jvm, path)
     return p.getFileSystem(spark._jsc.hadoopConfiguration()), p, jvm
 
 
@@ -257,19 +259,17 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
         _os.replace(tmp_local, local)
         return
     fs, p, jvm = _fs_for(spark, path)
-    tmp = jvm.org.apache.hadoop.fs.Path(
-        p.getParent(), f".{p.getName()}.tmp-{uuid.uuid4().hex}"
-    )
+    tmp = _hadoop_path(jvm, p.getParent(), f".{p.getName()}.tmp-{uuid.uuid4().hex}")
     out = fs.create(tmp, True)
     out.write(bytearray(text.encode("utf-8")))
     out.close()
     if fs.rename(tmp, p):
         return
     try:
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        fc = _jvm_class(jvm, "org.apache.hadoop.fs.FileContext").getFileContext(
             p.toUri(), spark._jsc.hadoopConfiguration()
         )
-        ren = jvm.org.apache.hadoop.fs.Options.Rename
+        ren = _jvm_class(jvm, "org.apache.hadoop.fs.Options$Rename")
         opts = spark._sc._gateway.new_array(ren, 1)
         opts[0] = ren.OVERWRITE
         fc.rename(tmp, p, opts)
@@ -294,7 +294,7 @@ def _sweep_tmp_siblings(
     than the floor is a crash's leftover, never a racer's in-flight
     publish. ``dry_run`` counts without deleting, so vacuum's dry run
     predicts the real sweep exactly. Returns the number of files."""
-    d = jvm.org.apache.hadoop.fs.Path(dir_path)
+    d = _hadoop_path(jvm, dir_path)
     if not fs.exists(d):
         return 0
     swept = 0
@@ -316,7 +316,9 @@ def _read_text(spark: SparkSession, path: str) -> str:
     fs, p, jvm = _fs_for(spark, path)
     stream = fs.open(p)
     try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return _jvm_class(jvm, "org.apache.commons.io.IOUtils").toString(
+            stream, "UTF-8"
+        )
     finally:
         stream.close()
 
@@ -863,7 +865,7 @@ def _read_live(
         fs, _, jvm = _fs_for(spark, base_path)
         dv_bytes = sum(
             fs.getContentSummary(
-                jvm.org.apache.hadoop.fs.Path(_data_path(base_path, d))
+                _hadoop_path(jvm, _data_path(base_path, d))
             ).getLength()
             for d in dirs
         )
@@ -985,8 +987,8 @@ def _await_claim(fs, jvm, base_path: str, version: int) -> None:
     raise with the recovery hint."""
     import time as _time
 
-    claim = jvm.org.apache.hadoop.fs.Path(f"{base_path}/{_CLAIM_PREFIX}{version}")
-    marker = jvm.org.apache.hadoop.fs.Path(f"{base_path}/{_COMMIT_PREFIX}{version}")
+    claim = _hadoop_path(jvm, f"{base_path}/{_CLAIM_PREFIX}{version}")
+    marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{version}")
     stat_errors = 0
     while not fs.exists(marker):
         try:
@@ -1213,7 +1215,7 @@ def _finish(
         hook()
     fs, base, jvm = _fs_for(spark, base_path)
     tmp_dir = f"manifest_tmp/c={_token()}"
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{base_path}/{tmp_dir}")
+    tmp = _hadoop_path(jvm, f"{base_path}/{tmp_dir}")
     try:
         for _attempt in range(_MAX_REBASES):
             listing = list(fs.listStatus(base)) if fs.exists(base) else []
@@ -1321,9 +1323,7 @@ def _finish(
             if _TEST_PRECLAIM_HOOK is not None:
                 hook, _TEST_PRECLAIM_HOOK = _TEST_PRECLAIM_HOOK, None
                 hook()
-            claim = jvm.org.apache.hadoop.fs.Path(
-                f"{base_path}/{_CLAIM_PREFIX}{version}"
-            )
+            claim = _hadoop_path(jvm, f"{base_path}/{_CLAIM_PREFIX}{version}")
             try:
                 _COMMIT_FS.create_new(fs, claim)  # create-new = the claim
             except Exception:
@@ -1351,9 +1351,7 @@ def _finish(
             # transient write error must not wedge the table behind a
             # stale claim)
             try:
-                dst = jvm.org.apache.hadoop.fs.Path(
-                    f"{base_path}/manifest/v={version}"
-                )
+                dst = _hadoop_path(jvm, f"{base_path}/manifest/v={version}")
                 fs.mkdirs(dst.getParent())
                 if fs.exists(dst):
                     # a previous claim-holder crashed after its rename but
@@ -1468,7 +1466,7 @@ def _finish(
                                 if pruned % 64 == 0:
                                     _heartbeat()
                     for sub in ("manifest", "meta"):
-                        subp = jvm.org.apache.hadoop.fs.Path(f"{base_path}/{sub}")
+                        subp = _hadoop_path(jvm, f"{base_path}/{sub}")
                         if fs.exists(subp):
                             for status in fs.listStatus(subp):
                                 name = status.getPath().getName()
@@ -1481,9 +1479,7 @@ def _finish(
                                     pruned += 1
                                     if pruned % 64 == 0:
                                         _heartbeat()
-                marker = jvm.org.apache.hadoop.fs.Path(
-                    f"{base_path}/{_COMMIT_PREFIX}{version}"
-                )
+                marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{version}")
                 _COMMIT_FS.create_new(fs, marker)  # create-new = the commit
             except BaseException:
                 _COMMIT_FS.delete(fs, claim)
@@ -1533,7 +1529,7 @@ def recover_manifest_table(
         ):
             continue
         if not fs.exists(
-            jvm.org.apache.hadoop.fs.Path(f"{base_path}/{_COMMIT_PREFIX}{v}")
+            _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{v}")
         ):
             _COMMIT_FS.delete(fs, st.getPath())
             removed += 1
@@ -1596,7 +1592,9 @@ def _in_clone(*frames: DataFrame) -> list[DataFrame]:
         for k, v in _CLONE_CONFS.items():
             jclone.conf().set(k, v)
         memo = parent._tibame_clone = (confs, jclone)
-    of_rows = parent._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    of_rows = _jvm_class(
+        parent._jvm, "org.apache.spark.sql.classic.Dataset"
+    ).ofRows
     return [
         DataFrame(of_rows(memo[1], f._jdf.queryExecution().analyzed()), parent)
         for f in frames
@@ -2538,9 +2536,7 @@ def _committed_manifest(spark: SparkSession, base_path: str, version: int | None
             raise FileNotFoundError(f"no committed manifest table under {base_path}")
     else:
         fs, _, jvm = _fs_for(spark, base_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{base_path}/{_COMMIT_PREFIX}{version}"
-        )
+        marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{version}")
         if not fs.exists(marker):
             raise FileNotFoundError(
                 f"manifest version {version} under {base_path} is not committed"
@@ -3514,7 +3510,7 @@ def publish_staged_manifest(
     # the manifest now references the data files; the stage record (and
     # its copy of the added rows) is spent
     fs, _, jvm = _fs_for(spark, base_path)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(f"{base_path}/staged/{token}"), True)
+    fs.delete(_hadoop_path(jvm, f"{base_path}/staged/{token}"), True)
     return version
 
 
@@ -3523,7 +3519,7 @@ def abandon_staged_manifest(spark: SparkSession, base_path: str, token: str) -> 
     unreferenced (no manifest ever pointed at them) and the next
     :func:`vacuum_manifest_table` reclaims them."""
     fs, _, jvm = _fs_for(spark, base_path)
-    p = jvm.org.apache.hadoop.fs.Path(f"{base_path}/staged/{token}")
+    p = _hadoop_path(jvm, f"{base_path}/staged/{token}")
     if not fs.delete(p, True):
         raise FileNotFoundError(f"no staged edit {token!r} under {base_path}")
 
@@ -3532,7 +3528,7 @@ def list_staged_manifests(spark: SparkSession, base_path: str) -> dict[str, dict
     """``{token: {op, key, base_head}}`` for every pending staged edit —
     the audit-queue listing."""
     fs, _, jvm = _fs_for(spark, base_path)
-    root = jvm.org.apache.hadoop.fs.Path(f"{base_path}/staged")
+    root = _hadoop_path(jvm, f"{base_path}/staged")
     if not fs.exists(root):
         return {}
     out: dict[str, dict] = {}
@@ -4485,9 +4481,7 @@ def clone_manifest_table(
         version = src_head
     else:
         _, _, jvm = _fs_for(spark, src_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{src_path}/{_COMMIT_PREFIX}{version}"
-        )
+        marker = _hadoop_path(jvm, f"{src_path}/{_COMMIT_PREFIX}{version}")
         if not fs.exists(marker):
             raise FileNotFoundError(
                 f"manifest version {version} under {src_path} is not committed"
@@ -4670,16 +4664,12 @@ def vacuum_manifest_table(
     # manifest points at yet — an audit window must survive housekeeping,
     # so a stage's added files count as live until it publishes or is
     # abandoned (a crashed stage with no stage.json protects nothing)
-    staged_root = jvm.org.apache.hadoop.fs.Path(f"{base_path}/staged")
+    staged_root = _hadoop_path(jvm, f"{base_path}/staged")
     if fs.exists(staged_root):
         for st in fs.listStatus(staged_root):
             token = st.getPath().getName()
-            add = jvm.org.apache.hadoop.fs.Path(
-                f"{base_path}/staged/{token}/add"
-            )
-            stamp = jvm.org.apache.hadoop.fs.Path(
-                f"{base_path}/staged/{token}/stage.json"
-            )
+            add = _hadoop_path(jvm, f"{base_path}/staged/{token}/add")
+            stamp = _hadoop_path(jvm, f"{base_path}/staged/{token}/stage.json")
             if fs.exists(stamp) and fs.exists(add):
                 staged = _read_arrow(spark, f"{base_path}/staged/{token}/add")
                 referenced.update(staged.column("path").to_pylist())
@@ -4688,7 +4678,7 @@ def vacuum_manifest_table(
                     p for p in staged.column("dv_path").to_pylist() if p
                 )
     deleted = 0
-    data_root = jvm.org.apache.hadoop.fs.Path(f"{base_path}/data")
+    data_root = _hadoop_path(jvm, f"{base_path}/data")
     if fs.exists(data_root):
         for d in fs.listStatus(data_root):
             if not d.isDirectory():
@@ -4708,7 +4698,7 @@ def vacuum_manifest_table(
                     deleted += 1
             if not kept_any and not dry_run:
                 fs.delete(d.getPath(), True)
-    dv_root = jvm.org.apache.hadoop.fs.Path(f"{base_path}/dv")
+    dv_root = _hadoop_path(jvm, f"{base_path}/dv")
     if fs.exists(dv_root):
         for d in fs.listStatus(dv_root):
             if not d.isDirectory():
@@ -4722,7 +4712,7 @@ def vacuum_manifest_table(
     # deletes its own tmp dir on every exit path, so anything still here
     # belongs to a dead process (same min_age_s contract as data dirs —
     # a LIVE writer's tmp is younger than any sane threshold)
-    tmp_root = jvm.org.apache.hadoop.fs.Path(f"{base_path}/manifest_tmp")
+    tmp_root = _hadoop_path(jvm, f"{base_path}/manifest_tmp")
     if fs.exists(tmp_root):
         for d in fs.listStatus(tmp_root):
             if old_enough(d):
@@ -5134,7 +5124,7 @@ def evolve_manifest_table(
 def _manifest_tags(spark: SparkSession, base_path: str) -> dict[str, int]:
     """All tags of a table: ``{name: version}`` from ``tags/<name>.json``."""
     fs, _, jvm = _fs_for(spark, base_path)
-    root = jvm.org.apache.hadoop.fs.Path(f"{base_path}/tags")
+    root = _hadoop_path(jvm, f"{base_path}/tags")
     if not fs.exists(root):
         return {}
     out: dict[str, int] = {}
@@ -5181,9 +5171,7 @@ def tag_manifest_version(
         if head is None:
             raise FileNotFoundError(f"no committed manifest table under {base_path}")
         pin = head if version is None else version
-        claim = jvm.org.apache.hadoop.fs.Path(
-            f"{base_path}/{_CLAIM_PREFIX}{head + 1}"
-        )
+        claim = _hadoop_path(jvm, f"{base_path}/{_CLAIM_PREFIX}{head + 1}")
         try:
             _COMMIT_FS.create_new(fs, claim)
         except Exception:
@@ -5199,17 +5187,13 @@ def tag_manifest_version(
             _COMMIT_FS.delete(fs, claim)
             continue
         try:
-            marker = jvm.org.apache.hadoop.fs.Path(
-                f"{base_path}/{_COMMIT_PREFIX}{pin}"
-            )
+            marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{pin}")
             if not fs.exists(marker):
                 raise FileNotFoundError(
                     f"manifest version {pin} under {base_path} is not "
                     "committed or has been pruned past retention — cannot tag"
                 )
-            tag_path = jvm.org.apache.hadoop.fs.Path(
-                f"{base_path}/tags/{name}.json"
-            )
+            tag_path = _hadoop_path(jvm, f"{base_path}/tags/{name}.json")
             fs.mkdirs(tag_path.getParent())
             try:
                 _COMMIT_FS.create_new(  # create-new = the pin
@@ -5236,7 +5220,7 @@ def delete_manifest_tag(spark: SparkSession, base_path: str, name: str) -> None:
     the NEXT commit's pruning pass (and its files at the next vacuum
     after that) — nothing is deleted here."""
     fs, _, jvm = _fs_for(spark, base_path)
-    p = jvm.org.apache.hadoop.fs.Path(f"{base_path}/tags/{name}.json")
+    p = _hadoop_path(jvm, f"{base_path}/tags/{name}.json")
     if not _COMMIT_FS.delete(fs, p):
         raise FileNotFoundError(f"no tag {name!r} under {base_path}")
 

@@ -262,7 +262,7 @@ def compact_parquet(
     """
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
+    p = _hadoop_path(jvm, path)
     fs = p.getFileSystem(conf)
     total = fs.getContentSummary(p).getLength()
     n_files = max(1, -(-int(total) // (target_file_mb * 1024 * 1024)))
@@ -272,6 +272,24 @@ def compact_parquet(
     else:
         df.repartition(n_files).write.mode("overwrite").parquet(out_path)
     return n_files
+
+
+def _jvm_class(jvm, name: str):
+    """The JVM class ``name``, fully qualified (``Outer$Inner`` for a
+    nested class), resolved with ONE py4j reflection command. The
+    attribute chain ``jvm.org.apache.hadoop.fs.Path`` sends one command
+    per step, and each package step (``org``, ``org.apache``, ...) is a
+    failed class lookup that scans every jar on the classpath: a
+    ``Path`` built through the chain took 1.2-1.3 ms against 0.13-0.16 ms
+    through the fully qualified name (``get_spark`` session, 4-core
+    host). Deliberately not cached: a ``JavaClass`` is bound to the
+    gateway that resolved it, and a restarted session brings a new one."""
+    return getattr(jvm, name)
+
+
+def _hadoop_path(jvm, *args):
+    """``new org.apache.hadoop.fs.Path(*args)`` through :func:`_jvm_class`."""
+    return _jvm_class(jvm, "org.apache.hadoop.fs.Path")(*args)
 
 
 #: Commit-marker filename prefix for snapshot-versioned tables; version n
@@ -371,7 +389,7 @@ def write_snapshot(
         raise ValueError(f"keep must be >= 1 (the current version), got {keep}")
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(base_path)
+    base = _hadoop_path(jvm, base_path)
     fs = base.getFileSystem(conf)
     # ONE pre-write listing serves version resolution, staleness
     # validation AND both prune passes (everything the prune deletes
@@ -398,9 +416,7 @@ def write_snapshot(
             "re-resolve with read_snapshot_version"
         )
     df.write.mode("overwrite").parquet(f"{base_path}/v={version}")
-    marker = jvm.org.apache.hadoop.fs.Path(
-        f"{base_path}/{_COMMIT_PREFIX}{version}"
-    )
+    marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{version}")
     _create_new(fs, marker)  # create-new = the commit
     floor = version - keep
     for status in listing:
@@ -422,7 +438,7 @@ def read_snapshot_version(spark, base_path: str) -> int | None:
     published yet."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(base_path)
+    base = _hadoop_path(jvm, base_path)
     fs = base.getFileSystem(conf)
     if not fs.exists(base):
         return None
@@ -445,9 +461,7 @@ def read_snapshot(spark, base_path: str, *, version: int | None = None) -> DataF
         # would break the "never observe a partial table" invariant
         jvm = spark._jvm
         conf = spark._jsc.hadoopConfiguration()
-        marker = jvm.org.apache.hadoop.fs.Path(
-            f"{base_path}/{_COMMIT_PREFIX}{version}"
-        )
+        marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{version}")
         if not marker.getFileSystem(conf).exists(marker):
             raise FileNotFoundError(
                 f"snapshot version {version} under {base_path} is not "

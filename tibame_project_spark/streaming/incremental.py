@@ -497,8 +497,9 @@ def consume_manifest_feed(
         manifest_feed_commit,
         read_manifest_version,
     )
+    from tibame_project_spark.sources.writers import _hadoop_path
 
-    fs_state = spark._jvm.org.apache.hadoop.fs.Path(state_path)
+    fs_state = _hadoop_path(spark._jvm, state_path)
     fs = fs_state.getFileSystem(spark._jsc.hadoopConfiguration())
     applied = 0
     while max_epochs is None or applied < max_epochs:
@@ -596,8 +597,9 @@ def _replication_apply(
         read_manifest_version,
         write_manifest_table,
     )
+    from tibame_project_spark.sources.writers import _hadoop_path
 
-    state_p = spark._jvm.org.apache.hadoop.fs.Path(state_path)
+    state_p = _hadoop_path(spark._jvm, state_path)
     state_fs = state_p.getFileSystem(spark._jsc.hadoopConfiguration())
 
     def apply_batch(changes: DataFrame, version: int) -> None:
