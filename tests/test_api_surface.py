@@ -342,3 +342,22 @@ def test_pagerank_integer_dangling_raise_and_fast_path(spark):
                for r in pagerank_integer(cyc, "src", "dst",
                                          dangling="assume_none").collect()}
     assert via_probe == assumed
+
+
+def test_engine_has_no_range_partitioned_writer():
+    """Every clustered layout goes through ``writers._clustered_write``,
+    whose file boundaries come from the rows. Spark's
+    ``repartitionByRange`` seeds its boundary sample from the RDD id, so
+    a layout written through it changes with the process's history."""
+    import pathlib
+
+    import tibame_project_spark
+
+    root = pathlib.Path(tibame_project_spark.__file__).parent
+    hits = [
+        f"{p.relative_to(root)}:{i}"
+        for p in sorted(root.rglob("*.py"))
+        for i, line in enumerate(p.read_text(encoding="utf-8").splitlines(), 1)
+        if "repartitionByRange" in line
+    ]
+    assert hits == []

@@ -126,6 +126,7 @@ from pyspark.sql.types import (
 
 from tibame_project_spark.sources.writers import (
     _COMMIT_PREFIX,
+    _clustered_write,
     _committed_versions,
     _create_new,
     _hadoop_path,
@@ -1986,10 +1987,7 @@ def _expect_gate(
     answer exactly what the gated frame would. Callers whose written
     data is NOT the gated frame (the merge gates its source batch but
     writes the merged output) omit ``written`` and keep the one
-    pre-write validation scan. Reported violation COUNTS can include
-    the range partitioner's sampling re-evaluation of the plan and so
-    may overstate; pass/fail cannot flip (a sampled violation is a real
-    violation).
+    pre-write validation scan.
     """
     if not expect:
         return df, lambda: None
@@ -2182,41 +2180,15 @@ def _write_data(
     n_files: int,
     zorder_bits: int = 16,
 ) -> None:
-    """Write a commit's data files; ``cluster_by`` range-partitions and
-    sorts so per-file min/max ranges are tight and disjoint — what makes
-    both ``prune=`` reads and merge file-skipping actually skip. Two or
-    more columns cluster on their Z-order (Morton) interleaving
-    (``writers.zorder_key`` — columns must already be integers scaled
-    into [0, 2^zorder_bits), same contract as ``write_zorder_parquet``),
-    keeping every file a small hyper-rectangle so ``prune=`` skips on ANY
-    clustered column, not just the first."""
+    """Write a commit's data files (``writers._clustered_write``):
+    ``cluster_by`` makes per-file min/max ranges tight and disjoint, which
+    ``prune=`` reads and merge file-skipping skip on; two or more columns
+    cluster on their Morton key (integers in [0, 2^zorder_bits), as for
+    ``write_zorder_parquet``). The layout is a function of the rows, so
+    which files a later merge rewrites, and whether it fuses, is too."""
     cols = [cluster_by] if isinstance(cluster_by, str) else cluster_by
-    if cols and len(cols) > 1:
-        from tibame_project_spark.sources.writers import zorder_key
-
-        df = df.withColumn("__zk", zorder_key(cols, bits=zorder_bits))
-        if n_files <= 1:
-            df = df.coalesce(1).sortWithinPartitions("__zk").drop("__zk")
-        else:
-            df = (
-                df.repartitionByRange(n_files, "__zk")
-                .sortWithinPartitions("__zk")
-                .drop("__zk")
-            )
-    elif cols:
-        if n_files <= 1:
-            # one output file: range partitioning into ONE partition
-            # degenerates to "everything together", so the range
-            # exchange (and its sampling pass, which re-evaluates the
-            # whole upstream plan) buys nothing a narrow coalesce
-            # doesn't — the within-file sort is what the stats need
-            df = df.coalesce(1).sortWithinPartitions(cols[0])
-        else:
-            df = df.repartitionByRange(n_files, F.col(cols[0]))
-            df = df.sortWithinPartitions(cols[0])
-    elif n_files:
-        df = df.repartition(max(1, n_files))
-    df.write.mode("overwrite").parquet(f"{base_path}/{data_dir}")
+    zb = zorder_bits if cols and len(cols) > 1 else None
+    _clustered_write(df, f"{base_path}/{data_dir}", cols, n_files, zorder_bits=zb)
 
 
 def write_manifest_table(
@@ -2680,9 +2652,8 @@ _CAND_FOLD_MAX_FILES = 96
 #: sides, so the full-outer merge join plans with ZERO exchanges and
 #: the whole candidate-read → join → sort → write chain runs as ONE
 #: stage/job instead of a 3-stage AQE chain. Above the bound (or with
-#: >1 candidate file, where range-clustering the output needs its
-#: exchange) the distributed plan is the 100 TB-correct shape and is
-#: kept.
+#: >1 candidate file, where clustering the output needs its exchange)
+#: the distributed plan is the 100 TB-correct shape and is kept.
 _MERGE_FUSE_MAX_BYTES = 128 << 20
 
 
@@ -3156,7 +3127,7 @@ def _prepare_merge_edit(
         # so the full-outer merge join (and update_condition's target join)
         # plans with ZERO exchanges: candidate-read → join(s) → sort → write
         # is one stage/one job instead of a 3-stage AQE chain per merge.
-        # Multi-file rewrites keep the range exchange (clustering IS the
+        # Multi-file rewrites keep the clustering exchange (it IS the
         # optimization at scale) and big candidates keep task parallelism.
         # one output file per touched file: byte-based sizing was tried and
         # REVERTED — fewer, wider files change which files later merges must

@@ -16,6 +16,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructType, VariantType
 
 
 def write_parquet(
@@ -137,9 +139,9 @@ def write_sorted_parquet(
     n_files: int | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Layout-optimized parquet write: range-repartition on ``layout_cols``
-    then sort within each partition before writing — the data-skipping
-    layout (linear clustering; the 1-D case of what Z-ordering generalizes).
+    """Layout-optimized parquet write: cluster on ``layout_cols``
+    (lexicographic) and sort within each file — the data-skipping layout
+    (linear clustering; the 1-D case of what Z-ordering generalizes).
 
     Why it matters at 100 TB: parquet stores per-row-group min/max
     statistics, and both Spark's parquet reader and any stats-aware engine
@@ -151,18 +153,12 @@ def write_sorted_parquet(
     unsorted layout has every row group spanning nearly the full value
     range, making min/max stats useless — the test proves the contrast.)
 
-    ``repartitionByRange`` samples the column to build balanced range
-    bounds (one shuffle), so file sizes stay even under skewed value
-    distributions; ``sortWithinPartitions`` is a per-partition sort with no
-    extra exchange. ``n_files`` controls output file count (cluster
-    parallelism at write time; omit to keep the session default).
+    One sample job picks file boundaries from the rows (even sizes under
+    skew), one id exchange routes the rows and a per-partition sort orders
+    them: the layout is a function of the rows (:func:`_clustered_write`;
+    ``n_files`` defaults to the session's shuffle partitions).
     """
-    cols = [layout_cols] if isinstance(layout_cols, str) else list(layout_cols)
-    if n_files is not None:
-        ranged = df.repartitionByRange(n_files, *cols)
-    else:
-        ranged = df.repartitionByRange(*cols)
-    ranged.sortWithinPartitions(*cols).write.mode(mode).parquet(path)
+    _clustered_write(df, path, layout_cols, n_files, mode=mode)
 
 
 def zorder_key(cols, *, bits: int = 16):
@@ -176,8 +172,6 @@ def zorder_key(cols, *, bits: int = 16):
     truncated hash, ...); keeping normalization out of this function keeps
     the key exact and engine-independent.
     """
-    from pyspark.sql import functions as F
-
     n = len(cols)
     if bits * n > 63:
         raise ValueError(
@@ -217,22 +211,11 @@ def write_zorder_parquet(
     selective B predicate skips nothing); the Morton curve keeps each row
     group a small hyper-rectangle in BOTH dimensions, so box predicates
     (time range × key range, lat × lon, ...) prune row groups on every
-    clustered column at once. Same write shape as the 1-D case: one
-    range-repartition shuffle on the key, per-partition sort, stats do the
+    clustered column at once. Same write shape as the 1-D case on the
+    Morton key, a layout that is a function of the rows; stats do the
     rest at read time.
     """
-    zk = zorder_key(layout_cols, bits=bits)
-    keyed = df.withColumn("__zk", zk)
-    if n_files is not None:
-        ranged = keyed.repartitionByRange(n_files, "__zk")
-    else:
-        ranged = keyed.repartitionByRange("__zk")
-    (
-        ranged.sortWithinPartitions("__zk")
-        .drop("__zk")
-        .write.mode(mode)
-        .parquet(path)
-    )
+    _clustered_write(df, path, layout_cols, n_files, zorder_bits=bits, mode=mode)
 
 
 def compact_parquet(
@@ -253,9 +236,9 @@ def compact_parquet(
     Sizing comes from the filesystem (Hadoop FileSystem API, so HDFS/S3A
     paths size identically to local), not a data scan. Plain compaction is
     a round-robin ``repartition`` (one shuffle, even output sizes); pass
-    ``layout_cols`` to spend the same shuffle on a range-repartition +
-    in-partition sort and come out of maintenance with the data-skipping
-    layout of ``write_sorted_parquet`` for free. Writes to ``out_path``
+    ``layout_cols`` to spend it on ``write_sorted_parquet``'s clustering
+    (sample job + id exchange; a layout that is a function of the rows).
+    Writes to ``out_path``
     (swap is the caller's transaction: point readers at the new path, or
     rename over the old one in one FS op) — compaction never overwrites
     the table it is reading. Returns the output file count.
@@ -266,12 +249,72 @@ def compact_parquet(
     fs = p.getFileSystem(conf)
     total = fs.getContentSummary(p).getLength()
     n_files = max(1, -(-int(total) // (target_file_mb * 1024 * 1024)))
-    df = spark.read.parquet(path)
-    if layout_cols is not None:
-        write_sorted_parquet(df, out_path, layout_cols=layout_cols, n_files=n_files)
-    else:
-        df.repartition(n_files).write.mode("overwrite").parquet(out_path)
+    _clustered_write(spark.read.parquet(path), out_path, layout_cols, n_files)
     return n_files
+
+
+#: Boundary-sample rows per output file of a clustered write.
+_SAMPLE_ROWS_PER_FILE = 20
+
+
+def _hashable(dt) -> bool:
+    """False for a map or variant, at any depth: Spark cannot hash them."""
+    if isinstance(dt, ArrayType):
+        return _hashable(dt.elementType)
+    if isinstance(dt, StructType):
+        return all(_hashable(f.dataType) for f in dt.fields)
+    return not isinstance(dt, (MapType, VariantType))
+
+
+def _clustered_write(
+    df: DataFrame,
+    path: str,
+    cols: str | list[str] | None,
+    n_files: int | None = None,
+    *,
+    zorder_bits: int | None = None,
+    mode: str = "overwrite",
+) -> None:
+    """THE clustering writer: up to ``n_files`` (default: the session's
+    shuffle partitions) parquet files with disjoint ranges on ``cols``,
+    each sorted on them — lexicographically, or on their Morton key when
+    ``zorder_bits`` is given. ``n_files <= 1``: one sorted file; no
+    ``cols``: round-robin into ``n_files`` (0: as the frame comes).
+
+    The layout is a function of the rows (Spark's range partitioner seeds
+    its sample from the RDD id). ONE sample job keeps the bottom
+    ``_SAMPLE_ROWS_PER_FILE * n`` rows by (xxhash64 of the row, so a heavy
+    key weighs by its rows; key); the driver cuts n-1 quantiles ``b_i``
+    of their keys; ``repartitionById`` sends a row to file ``Σ (key >
+    b_i)`` (struct compare, NULL first: file 0), monotone in the key
+    however the driver sorted (NaN, collations): ranges stay disjoint."""
+    cols = [cols] if isinstance(cols, str) else list(cols or [])
+    if n_files is None:
+        n_files = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    if not cols:
+        (df.repartition(n_files) if n_files else df).write.mode(mode).parquet(path)
+        return
+    key = cols if zorder_bits is None else ["__zk"]
+    if zorder_bits is not None:
+        df = df.withColumn("__zk", zorder_key(cols, bits=zorder_bits))
+    if n_files <= 1:
+        df = df.coalesce(1)
+    else:
+        kcols = [F.col(c) for c in key]
+        h = F.xxhash64(*[F.col("`" + f.name.replace("`", "``") + "`")
+                         for f in df.schema.fields if _hashable(f.dataType)])
+        sample = df.orderBy(h, *kcols).select(*kcols).limit(
+            _SAMPLE_ROWS_PER_FILE * n_files).collect()
+        sample.sort(key=lambda r: tuple((v is not None, v) for v in r))
+        m, fields = len(sample), df.select(*kcols).schema.fields
+        fid = F.lit(0)
+        for i in range(1, n_files if m else 1):
+            bound = F.struct(*[F.lit(v).cast(f.dataType).alias(f.name)
+                               for v, f in zip(sample[i * m // n_files], fields)])
+            fid = fid + (F.struct(*kcols) > bound).cast("int")
+        df = df.repartitionById(n_files, fid)
+    df = df.sortWithinPartitions(*key)
+    (df if zorder_bits is None else df.drop("__zk")).write.mode(mode).parquet(path)
 
 
 def _jvm_class(jvm, name: str):
