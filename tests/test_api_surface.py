@@ -135,70 +135,6 @@ def test_ngram_jaccard_pairs_blocked_variant(spark):
     assert blocked == exact == {(1, 2): 1.0}
 
 
-def test_char_count_matches_length(spark):
-    from tibame_project_spark.functions.textstats import char_count
-
-    df = spark.createDataFrame([("héllo",), ("",)], ["t"])
-    got = [r.n for r in df.select(char_count(F.col("t")).alias("n")).collect()]
-    assert got == [5, 0]
-
-
-def test_triangle_count_known_graphs(spark):
-    from tibame_project_spark.operators.graph import triangle_count
-
-    # K4 has C(4,3)=4 triangles; edges given unordered/duplicated/self-loop
-    k4 = [(a, b) for a in range(4) for b in range(4) if a != b] + [(2, 2)]
-    df = spark.createDataFrame(k4, "src long, dst long")
-    assert triangle_count(df, "src", "dst").first()["n_triangles"] == 4
-    # a path graph has none
-    path = spark.createDataFrame([(0, 1), (1, 2), (2, 3)], "src long, dst long")
-    assert triangle_count(path, "src", "dst").first()["n_triangles"] == 0
-
-
-def test_triangle_count_degree_order_same_count(spark):
-    """Any total order generates each triangle exactly once from its least
-    vertex — id order and degree order must agree on every graph."""
-    import random
-
-    from tibame_project_spark.operators.graph import triangle_count
-
-    rng = random.Random(5)
-    edges = list({(rng.randrange(25), rng.randrange(25)) for _ in range(150)})
-    df = spark.createDataFrame(edges, "src long, dst long")
-    by_id = triangle_count(df, "src", "dst", order_by="id").first()["n_triangles"]
-    by_deg = triangle_count(df, "src", "dst", order_by="degree").first()["n_triangles"]
-    assert by_id == by_deg and by_id > 0
-    with __import__("pytest").raises(ValueError, match="order_by"):
-        triangle_count(df, "src", "dst", order_by="random")
-
-
-def test_triangle_degree_order_bounds_hub_wedges(spark):
-    """On a star graph (one celebrity hub), id order can hand the hub an
-    O(n²) wedge set; degree order orients every edge INTO the hub, so no
-    node has out-degree > 1 and the wedge stage has nothing hot to do —
-    the skew bound, asserted on the oriented out-degrees themselves."""
-    from pyspark.sql import functions as F
-
-    from tibame_project_spark.operators.graph import _oriented_edges
-
-    # hub id 0 < all leaf ids: worst case for id order
-    star = spark.createDataFrame(
-        [(0, i) for i in range(1, 51)], "src long, dst long"
-    ).select(F.col("src").alias("lo"), F.col("dst").alias("hi"))
-    max_out_id = (
-        _oriented_edges(star, "id").groupBy("u").count().agg(F.max("count")).first()[0]
-    )
-    max_out_deg = (
-        _oriented_edges(star, "degree")
-        .groupBy("u")
-        .count()
-        .agg(F.max("count"))
-        .first()[0]
-    )
-    assert max_out_id == 50  # hub owns every wedge pair: C(50,2) wedges
-    assert max_out_deg == 1  # leaves (degree 1) point at the hub: 0 wedges
-
-
 def test_shared_item_postings_memoizes_per_session_and_sf(spark):
     """sparse_topk and hybrid_rerank must reference the SAME postings build
     (that is the shared-inverted-index contract); switching corpora must
@@ -361,3 +297,49 @@ def test_engine_has_no_range_partitioned_writer():
         if "repartitionByRange" in line
     ]
     assert hits == []
+
+
+def test_every_engine_import_resolves():
+    """Every ``from tibame_project_spark... import name`` (and ``import
+    tibame_project_spark...``) in the package, the tests, ``tools/``,
+    ``perfbench/``, ``__spark_entry__.py`` and ``bench.py`` names
+    something that exists, function-local imports included: a lazy
+    import of a deleted symbol breaks at run time, not at collection."""
+    import ast
+    import importlib
+    import pathlib
+
+    def resolves(module: str, name: str | None) -> bool:
+        try:
+            mod = importlib.import_module(module)
+            if name is None or hasattr(mod, name):
+                return True
+            importlib.import_module(f"{module}.{name}")
+            return True
+        except ImportError:
+            return False
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    files = [repo / "__spark_entry__.py", repo / "bench.py"] + [
+        p
+        for d in ("tibame_project_spark", "tests", "tools", "perfbench")
+        for p in sorted((repo / d).rglob("*.py"))
+    ]
+    checked, missing = 0, []
+    for path in files:
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.ImportFrom) and not node.level:
+                pairs = [(node.module, a.name) for a in node.names]
+            elif isinstance(node, ast.Import):
+                pairs = [(a.name, None) for a in node.names]
+            else:
+                continue
+            for module, name in pairs:
+                if module.split(".")[0] != "tibame_project_spark":
+                    continue
+                checked += 1
+                if not resolves(module, name):
+                    missing.append(
+                        f"{path.relative_to(repo)}:{node.lineno} {module} {name}"
+                    )
+    assert checked and missing == []

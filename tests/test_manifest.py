@@ -889,10 +889,10 @@ def test_catalog_manifest_pipeline_over_orders(spark, tmp_path):
     """Real-table pipeline through the catalog surface: orders lands as a
     key-clustered manifest table, a priority-correction batch merges in
     rewriting only candidate files, and SQL-side plans read the result
-    through catalog.register_manifest with a pruned scan — the manifest
+    through catalog.load_manifest as a temp view with a pruned scan — the manifest
     twin of the warehouse-refresh test's snapshot publish."""
     from tests.conftest import SF_DIR
-    from tibame_project_spark.catalog import load, load_manifest, register_manifest
+    from tibame_project_spark.catalog import load, load_manifest
 
     base = str(tmp_path / "orders_m")
     orders = load(spark, SF_DIR, "orders").select(
@@ -915,9 +915,9 @@ def test_catalog_manifest_pipeline_over_orders(spark, tmp_path):
     assert before & after, "low-key batch must leave high-key files untouched"
     assert load_manifest(spark, base).count() == n
     # pruned catalog read: files that can hold the corrected keys only
-    register_manifest(
-        spark, base, "orders_mv", prune=f"min_o_orderkey <= {lo_keys + 50}"
-    )
+    load_manifest(
+        spark, base, prune=f"min_o_orderkey <= {lo_keys + 50}"
+    ).createOrReplaceTempView("orders_mv")
     got = spark.sql(
         "SELECT count(*) AS n FROM orders_mv WHERE o_orderstatus = 'X'"
     ).first()["n"]
@@ -4164,6 +4164,70 @@ def test_wap_publish_rebases_disjoint_and_conflicts_overlapping(
     assert (4, 444) not in _content(spark, base)  # the loser never landed
     with pytest.raises(FileNotFoundError):
         abandon_staged_manifest(spark, base, token)
+
+
+def _wap_kind(kind):
+    """(schema, key of row i, a key just above key i) for a bounds kind."""
+    import datetime
+    import decimal
+    import math
+
+    if kind == "timestamp":
+        t0 = datetime.datetime(2024, 3, 10, 1, 30)
+        return ("id timestamp, v long",
+                lambda i: t0 + datetime.timedelta(hours=i),
+                lambda i: t0 + datetime.timedelta(hours=i, microseconds=1))
+    if kind == "decimal":
+        return ("id decimal(10,2), v long",
+                lambda i: decimal.Decimal(i) + decimal.Decimal("0.25"),
+                lambda i: decimal.Decimal(i) + decimal.Decimal("0.26"))
+    return ("id double, v long", lambda i: i + 0.5,
+            lambda i: math.nextafter(i + 0.5, math.inf))
+
+
+@pytest.mark.parametrize("kind", ["timestamp", "decimal", "double"])
+def test_wap_stage_bounds_need_no_job_and_guard_publish(
+    spark, tmp_path, spark_jobs, monkeypatch, kind
+):
+    """Staging keeps the key bounds in stage.json: ``_persist_stage``
+    runs no Spark job for a timestamp, decimal or double key. Published
+    in another session time zone, the bounds still gate the rebase
+    exactly: an append just above them rebases, an append of a key
+    inside them raises ConcurrentCommitError."""
+    import tibame_project_spark.sources.manifest as M
+
+    schema, key, above = _wap_kind(kind)
+    jobs_seen = []
+
+    def persist(*a, **kw):
+        with spark_jobs() as jobs:
+            out = real(*a, **kw)
+        jobs_seen.append(jobs())
+        return out
+
+    real = M._persist_stage
+    monkeypatch.setattr(M, "_persist_stage", persist)
+    base = str(tmp_path / "t")
+    rows = lambda *ks: spark.createDataFrame(ks, schema)  # noqa: E731
+    write_manifest_table(
+        spark, rows(*[(key(i), i) for i in range(20)]), base,
+        stats_cols=["id"], cluster_by="id", n_files=2, keep=10,
+    )
+    token = M.stage_merge_manifest_table(spark, rows((key(3), 333)), base, "id")
+    append_manifest_table(spark, rows((above(3), 1)), base, keep=10)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert M.publish_staged_manifest(spark, base, token, keep=10) == 2
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    token = M.stage_merge_manifest_table(spark, rows((key(15), 555)), base, "id")
+    append_manifest_table(spark, rows((key(15), 7)), base, keep=10)
+    with pytest.raises(M.ConcurrentCommitError):
+        M.publish_staged_manifest(spark, base, token, keep=10)
+    assert jobs_seen == [0, 0]
+    got = {(r["id"], r["v"]) for r in read_manifest_table(spark, base).collect()}
+    assert (key(3), 333) in got and (key(15), 555) not in got
 
 
 def test_wap_crashed_stage_protects_nothing(spark, tmp_path):

@@ -455,22 +455,16 @@ def test_release_pipeline_stage_interactions(spark):
 
 
 # ---------------------------------------------------------------------------
-# end-to-end train-ready export: release -> pack -> shard -> partitioned write
+# end-to-end train-ready export: release -> pack
 
 
-def test_release_to_shards_export_chain(spark, tmp_path):
-    """The full corpus-to-trainer chain composed: release_corpus (quality
-    gate, scrub, both dedups, decontaminate, chunk) → pack_chunks →
-    assign_training_shards → partitioned parquet. Invariants: every
-    released chunk lands in exactly one sequence, every sequence in
-    exactly one shard, shards balanced within one sequence, and the
-    written layout has one directory per shard."""
-    import glob
-
+def test_release_to_sequences_export_chain(spark):
+    """The corpus-to-trainer chain composed: release_corpus (quality
+    gate, scrub, both dedups, decontaminate, chunk) → pack_chunks.
+    Invariant: every released chunk lands in exactly one sequence."""
     from tibame_project_spark.catalog import load
     from tibame_project_spark.functions.textstats import pack_chunks
     from tibame_project_spark.operators.dedup import md5_base_hash
-    from tibame_project_spark.partitioning import assign_training_shards
     from tibame_project_spark.plans.release import release_corpus
 
     sf = "/root/testdata/sf0.001"
@@ -487,24 +481,6 @@ def test_release_to_shards_export_chain(spark, tmp_path):
         packed.groupBy("doc_id", "chunk_idx").count().filter("count > 1").count()
         == 0
     )
-
-    seqs = packed.select("seq_id").distinct()
-    sharded = assign_training_shards(
-        seqs, id_col="seq_id", n_shards=4, base_hash=md5_base_hash
-    )
-    sizes = [
-        r["n"]
-        for r in sharded.groupBy("shard").agg(F.count(F.lit(1)).alias("n")).collect()
-    ]
-    assert len(sizes) == 4 and max(sizes) - min(sizes) <= 1
-
-    out = str(tmp_path / "export")
-    packed.join(sharded.select("seq_id", "shard"), "seq_id").write.partitionBy(
-        "shard"
-    ).parquet(out)
-    assert len(glob.glob(out + "/shard=*")) == 4
-    back = spark.read.parquet(out)
-    assert back.count() == n_chunks
 
 
 def test_serving_remaining_contract_shapes(spark):

@@ -323,23 +323,3 @@ def load_manifest(
     return read_manifest_table(
         spark, base_path, version=version, prune=prune, tag=tag, as_of=as_of
     )
-
-
-def register_manifest(
-    spark: SparkSession,
-    base_path: str,
-    view_name: str,
-    *,
-    version: int | None = None,
-    prune: str | None = None,
-    tag: str | None = None,
-    as_of=None,
-) -> DataFrame:
-    """:func:`load_manifest` + temp-view registration, mirroring
-    :func:`register_snapshot`: the view binds to the file list resolved AT
-    REGISTRATION — re-register to follow subsequent commits."""
-    df = load_manifest(
-        spark, base_path, version=version, prune=prune, tag=tag, as_of=as_of
-    )
-    df.createOrReplaceTempView(view_name)
-    return df

@@ -46,10 +46,3 @@ def split_delimited(col: Column, delim: str = "•") -> Column:
     (``d_tripadvisor_src_to_ods.py:90-97``) / split-and-strip
     (``transfer_src_tripadvisor_to_ods_tripadvisor.py:75``)."""
     return F.transform(F.split(col, delim), lambda x: F.trim(x))
-
-
-def filename_column(pattern: str, group: int = 1) -> Column:
-    """Derive a column from the input file path — reference pulls place_id
-    from blob names (``d_gmaps_places_src_to_ods.py:117-119``) and
-    place+date from scrape filenames (``fb_scraper/normalization.py:8-13``)."""
-    return F.regexp_extract(F.input_file_name(), pattern, group)

@@ -40,10 +40,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text)
-
-
 def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, _PUNCT_RE, ""))
 
@@ -151,76 +147,6 @@ def bpe_pair_counts(df, text_col: str, *, k: int = 20):
         .orderBy(F.col("n").desc(), "pair")
         .limit(k)
     )
-
-
-def _merge_once(toks: Column, a: str, b: str) -> Column:
-    """Apply one BPE merge rule (a, b) → a+b to a token array: greedy
-    left-to-right non-overlapping, as a single left fold (the merged token
-    lands in the accumulator, so an immediately following ``b`` can't
-    re-merge — the standard BPE scan, relationally)."""
-    ab = F.lit(a + b)
-    return F.aggregate(
-        toks,
-        F.array().cast("array<string>"),
-        # F.get (0-based) is the null-safe last-element probe: element_at
-        # throws under ANSI when acc is still empty
-        lambda acc, x: F.when(
-            (F.get(acc, F.size(acc) - 1) == F.lit(a)) & (x == F.lit(b)),
-            F.concat(
-                F.when(
-                    F.size(acc) == 1, F.array().cast("array<string>")
-                ).otherwise(F.slice(acc, 1, F.size(acc) - 1)),
-                F.array(ab),
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def train_bpe_merges(df, text_col: str, *, n_merges: int = 5) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merge rules from a corpus (Sennrich et al.
-    2016, arXiv:1508.07909): the driver loop over ``bpe_pair_counts``'s
-    primitive — each round takes the most frequent adjacent pair as the
-    next rule and rewrites the token arrays with it before recounting.
-    Deterministic rule order via the (count desc, pair) tie-break.
-
-    Scale shape per round: one explode→count aggregation (pair partials on
-    the shuffle, bounded by distinct pairs) plus one narrow fold rewriting
-    the arrays; the driver receives exactly ONE row per round (the argmax
-    pair). The evolving token relation is localCheckpoint'd each round —
-    same lineage-truncation discipline as ``ivf_train`` — so plan size
-    stays constant across merges. n_merges drives total cost linearly;
-    real tokenizers run tens of thousands of rounds, which is the same
-    loop with the count relation cached smarter (delta-counting only pairs
-    touched by the previous merge).
-    """
-    cur = df.select(bpe_tokens(F.col(text_col)).alias("__toks"))
-    sep = "\u0001"
-    merges: list[tuple[str, str]] = []
-    for _ in range(n_merges):
-        pairs = F.when(
-            F.size("__toks") >= 2,
-            F.transform(
-                F.slice(F.col("__toks"), 1, F.size("__toks") - 1),
-                lambda x, i: F.concat(
-                    x, F.lit(sep), F.element_at(F.col("__toks"), i + 2)
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-        top = (
-            cur.select(F.explode(pairs).alias("pair"))
-            .groupBy("pair")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .orderBy(F.col("n").desc(), "pair")
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        a, b = top[0].pair.split(sep, 1)
-        merges.append((a, b))
-        cur = cur.select(_merge_once(F.col("__toks"), a, b).alias("__toks"))
-        cur = cur.localCheckpoint(eager=False)
-    return merges
 
 
 #: Rolling-hash parameters: base 31, modulus 2^56 — acc*31+cp < 2^62 stays

@@ -263,71 +263,6 @@ def histogram_fixed(
     )
 
 
-def zscore_normalize(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    *,
-    scale: int = 2,
-    out_col: str = "z",
-) -> DataFrame:
-    """Per-group standardization: z = (x − mean) / stddev_pop — the feature
-    scaling step of a training pipeline (per-domain score normalization,
-    per-feature embedding whitening), with ``pearson_stats``' determinism
-    discipline: the sufficient statistics (n, Σx, Σx²) accumulate as EXACT
-    decimals in one map-side-partial aggregation pass, and only the final
-    closed-form ops run in IEEE doubles — so the same z values come back
-    under any partitioning, retry, or AQE re-plan (Spark's streaming-double
-    ``stddev`` cannot promise that).
-
-    Population stddev (ddof=0): normalization wants the moment of THIS
-    group, not an inference estimate. Groups with stddev 0 (constant value,
-    or a single row) get z = 0.0 rather than NaN — constant features
-    normalize to the origin.
-
-    Scale shape: the stats relation is one row per group (broadcast in the
-    join below); the normalization itself is a map-side expression. Two
-    scans of the input (stats + normalize) — at 100 TB either persist the
-    input upstream or reuse an already-materialized stats table; the stats
-    pass reads only (group, value) columns either way.
-    """
-    gc = group_cols or []
-    xd = F.col(value_col).cast(f"decimal(18,{scale})")
-    # count NON-NULL values (matching the sums' null-skipping), so a NULL
-    # value — or a magnitude overflowing decimal(18,scale) — cannot bias
-    # the group's mean/std
-    stats = df.groupBy(*gc).agg(
-        F.count(xd).cast("double").alias("__n"),
-        F.sum(xd).cast("double").alias("__sx"),
-        F.sum(xd * xd).cast("double").alias("__sxx"),
-    )
-    n, sx, sxx = F.col("__n"), F.col("__sx"), F.col("__sxx")
-    stats = stats.select(
-        *gc,
-        (sx / n).alias("__mean"),
-        F.sqrt(F.greatest(sxx / n - (sx / n) * (sx / n), F.lit(0.0))).alias("__std"),
-    )
-    if gc:
-        # null-safe equi-join: groupBy puts NULL-keyed rows in a real
-        # group, and a plain column-name join would silently strand them
-        # (NULL != NULL) at z = 0
-        st = stats
-        for c in gc:
-            st = st.withColumnRenamed(c, f"__g_{c}")
-        cond = [F.col(c).eqNullSafe(F.col(f"__g_{c}")) for c in gc]
-        joined = df.join(F.broadcast(st), cond, "left").drop(
-            *[f"__g_{c}" for c in gc]
-        )
-    else:
-        joined = df.crossJoin(F.broadcast(stats))
-    z = F.when(
-        F.col("__std") > 0.0,
-        (F.col(value_col).cast(f"decimal(18,{scale})").cast("double") - F.col("__mean"))
-        / F.col("__std"),
-    ).otherwise(F.lit(0.0))
-    return joined.withColumn(out_col, z).drop("__mean", "__std")
-
-
 def rolling_distinct(
     df: DataFrame,
     *,
@@ -366,100 +301,3 @@ def rolling_distinct(
         "users_est",
         F.hll_sketch_estimate(F.hll_union_agg("__sk").over(w)),
     ).select(*gc, "day", "users_est")
-
-
-def _cms_cells(key_col: str, width: int, depth: int) -> Column:
-    """The (depth_idx, bucket) cell array for one key — ONE definition so
-    build and probe can never desynchronize (seeds are positional)."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(i).cast("int").alias("depth_idx"),
-                F.pmod(F.xxhash64(F.col(key_col), F.lit(i)), F.lit(width)).alias(
-                    "bucket"
-                ),
-            )
-            for i in range(depth)
-        ]
-    )
-
-
-def cms_table(
-    df: DataFrame,
-    key_col: str,
-    *,
-    width: int = 1 << 12,
-    depth: int = 4,
-    weight_col: str | None = None,
-) -> DataFrame:
-    """Count-min sketch over ``df[key_col]`` as a **counter relation**
-    ``(depth_idx: int, bucket: long, cnt: long)`` — the frequency-counting
-    sibling of the HLL tier (``rolling_distinct``) and the Bloom bitmap
-    (``joins.bloom_filter_table``): a fixed ``depth × width`` summary that
-    keeps answering "how often did key X occur" after the key universe
-    itself has stopped fitting anywhere.
-
-    Build is one narrow explode (``depth`` rows per input row) and one
-    aggregation whose output is bounded by ``depth·width`` rows no matter
-    the input cardinality — the shuffle carries (cell, partial-count)
-    pairs, never keys, so a 10^11-key stream costs the same summary as a
-    10^3-key one. ``weight_col`` switches the cells from row counts to
-    weight sums (e.g. token counts per domain).
-
-    Guarantees (Cormode & Muthukrishnan 2005): estimates never
-    UNDER-count, and over-count by at most ``e/width · N`` (N = total
-    weight) with probability ``1 − e^(−depth)`` — one-sided error, so a
-    "top talkers" readout can only mistakenly promote, never drop, a
-    genuinely heavy key.
-    """
-    w = F.lit(1).cast("long") if weight_col is None else F.col(weight_col).cast("long")
-    return (
-        df.select(F.explode(_cms_cells(key_col, width, depth)).alias("__cell"), w.alias("__w"))
-        .groupBy(F.col("__cell.depth_idx").alias("depth_idx"), F.col("__cell.bucket").alias("bucket"))
-        .agg(F.sum("__w").alias("cnt"))
-    )
-
-
-def cms_estimate(
-    keys: DataFrame,
-    key_col: str,
-    cms: DataFrame,
-    *,
-    width: int,
-    depth: int,
-) -> DataFrame:
-    """Point-query a count-min sketch built by :func:`cms_table` (same
-    ``width``/``depth`` — seeds are positional): returns ``keys`` with an
-    ``est_count`` column, ``min`` over the ``depth`` counter rows.
-
-    Probe shape mirrors the Bloom probe: explode each key onto its
-    ``depth`` cells, ONE broadcast equi-join against the counter relation
-    (≤ depth·width rows — KBs to MBs), and a per-key min aggregation.
-    A key that was never inserted can still read > 0 (collisions), but a
-    cell with NO row means zero — ``coalesce`` keeps the min honest.
-    Non-key columns of ``keys`` (labels, metadata riding with the
-    candidate list) are carried through unchanged (grouped alongside the
-    key, so duplicate input rows collapse per distinct row). Carry
-    columns must therefore be groupable (no maps); the sketch side is
-    aliased to reserved ``__cms_*`` names before the join, so carry
-    columns named ``depth_idx``/``bucket``/``cnt`` are fine.
-    """
-    carry = list(keys.columns)
-    sketch = F.broadcast(
-        cms.select(
-            F.col("depth_idx").alias("__cms_d"),
-            F.col("bucket").alias("__cms_b"),
-            F.col("cnt").alias("__cms_cnt"),
-        )
-    )
-    probed = (
-        keys.select(*carry, F.explode(_cms_cells(key_col, width, depth)).alias("__cell"))
-        .join(
-            sketch,
-            (F.col("__cell.depth_idx") == F.col("__cms_d"))
-            & (F.col("__cell.bucket") == F.col("__cms_b")),
-            "left",
-        )
-        .select(*carry, F.coalesce(F.col("__cms_cnt"), F.lit(0)).alias("__c"))
-    )
-    return probed.groupBy(*carry).agg(F.min("__c").alias("est_count"))

@@ -897,99 +897,3 @@ def ngram_jaccard_pairs(
             F.round("jaccard", 4).alias("jaccard"),
         )
     )
-
-
-def dedup_keep_best(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    score_col: str,
-) -> DataFrame:
-    """Exactly one survivor per transitive near-duplicate cluster, keeping
-    the BEST row by ``score_col`` (quality, length, recency) instead of
-    ``minhash_dedup``'s any-survivor/smallest-id semantics — the corpus-
-    curation refinement: when a cluster holds a clean original and a
-    boilerplate-wrapped copy, keep the clean one.
-
-    Composition, not new machinery: ``pairs`` (from any pair generator —
-    MinHash, SimHash, embedding, n-gram) → ``connected_components`` →
-    per-component argmax window with a deterministic (score DESC, id)
-    tie-break. Rows in no pair form their own singleton cluster
-    (coalesce to their own id). Shuffles: CC's rounds + one component
-    window — the window's input is one row per DOC, grouped by component,
-    and AQE splits pathological mega-clusters."""
-    from pyspark.sql import Window
-
-    comp = connected_components(pairs).withColumnRenamed("node", id_col)
-    labeled = df.join(comp, id_col, "left").withColumn(
-        "__comp", F.coalesce("component", F.col(id_col))
-    )
-    w = Window.partitionBy("__comp").orderBy(
-        F.col(score_col).desc(), F.col(id_col)
-    )
-    return (
-        labeled.withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .drop("__rk", "__comp", "component")
-    )
-
-
-def lsh_recall_report(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    *,
-    n: int = 3,
-    num_perm: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Measure the MinHash-LSH tier's candidate recall against exact
-    ground truth: run ``minhash_dedup_pairs`` (probabilistic candidates,
-    exact-Jaccard verified) and ``ngram_jaccard_exact_pairs`` (exact
-    all-pairs via prefix filtering) on the SAME corpus/threshold and
-    report one row ``(n_true, n_lsh, n_hit, recall)``.
-
-    This is the tuning loop for (num_perm, bands): theoretical per-pair
-    recall at similarity s is ``1 − (1 − s^(num_perm/bands))^bands``, but
-    the number that matters is measured on YOUR corpus's similarity
-    distribution. Run it on a sampled slice (the exact generator is the
-    expensive side), pick the cheapest banding whose recall clears the
-    bar, then ship that banding against the full corpus. Both generators
-    are bucketed (no cross product), so the report itself scales with
-    the slice; the join underneath is on (id_a, id_b) pair keys.
-
-    LSH-verified pairs are a subset of true pairs (same exact-Jaccard
-    verify), so precision is 1 by construction and n_hit counts the
-    overlap anyway as a self-check (n_hit == n_lsh unless a bug).
-    """
-    # each generator feeds its own count AND the hit semi-join; persist so
-    # the exact all-pairs join (the dominant cost) runs ONCE, compute the
-    # three scalars eagerly, and release the cache — a report never needs
-    # to stay lazy, and this leaves no caching contract on the caller
-    true_pairs = (
-        ngram_jaccard_exact_pairs(df, text_col, id_col, n=n, threshold=threshold)
-        .select("id_a", "id_b")
-        .persist()
-    )
-    lsh_pairs = (
-        minhash_dedup_pairs(
-            df, text_col, id_col, n=n, num_perm=num_perm, bands=bands, threshold=threshold
-        )
-        .select("id_a", "id_b")
-        .persist()
-    )
-    try:
-        n_true = true_pairs.count()
-        n_lsh = lsh_pairs.count()
-        n_hit = lsh_pairs.join(true_pairs, ["id_a", "id_b"], "left_semi").count()
-    finally:
-        true_pairs.unpersist()
-        lsh_pairs.unpersist()
-    recall = 1.0 if n_true == 0 else n_hit / n_true
-    from tibame_project_spark.localdf import local_rows_df
-
-    return local_rows_df(
-        df.sparkSession, [(n_true, n_lsh, n_hit, recall)],
-        "n_true long, n_lsh long, n_hit long, recall double",
-    )

@@ -154,94 +154,3 @@ def pagerank_integer(
             .localCheckpoint(eager=False)
         )
     return ranks
-
-
-def triangle_count(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    *,
-    order_by: str = "id",
-) -> DataFrame:
-    """Global triangle count of an undirected graph — the classic
-    two-join MapReduce formulation (wedge generation + closure check),
-    the graph-metric counterpart to ``connected_components``'s clustering
-    and PageRank's ranking (dense near-dup neighborhoods show up as
-    triangle-heavy regions).
-
-    Orientation: every edge is deduped and oriented along a total order
-    on nodes, so a triangle {a,b,c} (a ≺ b ≺ c) is generated exactly once
-    as the wedge (a→b, a→c) closed by b→c — no post-hoc division by 6.
-    Plan: one distinct, a self-join pivoting on the wedge's least node,
-    a closure join on the (b, c) pair — all hash joins on node-id keys.
-
-    ``order_by`` picks the total order:
-
-    * ``"id"`` (default): plain node-id order — oracle-friendly
-      (replayable in ANSI SQL), with AQE's skew split covering hub nodes.
-    * ``"degree"``: (degree, id)-lexicographic order — the standard
-      skew-bounding refinement: every out-neighborhood is capped at
-      O(√m), so a celebrity node generates NO giant wedge set (its edges
-      all point INTO it) and no single wedge partition can run hot. Same
-      count by construction (any total order generates each triangle
-      exactly once from its least vertex); costs one extra degree
-      aggregation + annotation join.
-
-    Returns a 1-row (n_triangles).
-    """
-    if order_by not in ("id", "degree"):
-        raise ValueError(f"order_by must be 'id' or 'degree', got {order_by!r}")
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
-        )
-        .filter(F.col("lo") != F.col("hi"))
-        .distinct()
-    )
-    out = _oriented_edges(e, order_by)
-    ab = out.select(F.col("u").alias("a"), F.col("v").alias("b"), F.col("vk").alias("bk"))
-    ac = out.select(F.col("u").alias("a"), F.col("v").alias("c"), F.col("vk").alias("ck"))
-    wedges = ab.join(ac, "a").filter(F.col("bk") < F.col("ck"))
-    closing = out.select(F.col("u").alias("b"), F.col("v").alias("c"))
-    return (
-        wedges.join(closing, ["b", "c"])
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-
-
-def _oriented_edges(e: DataFrame, order_by: str) -> DataFrame:
-    """Orient canonical undirected edges ``(lo, hi)`` along the chosen
-    total order. Returns ``(u, v, vk)`` with u ≺ v and ``vk`` the order
-    key of ``v`` (a comparable ``(d, n)`` struct, d=0 under id order) so
-    the wedge stage can compare neighbors without re-joining degrees."""
-    if order_by == "id":
-        return e.select(
-            F.col("lo").alias("u"),
-            F.col("hi").alias("v"),
-            F.struct(
-                F.lit(0).cast("long").alias("d"), F.col("hi").alias("n")
-            ).alias("vk"),
-        )
-    deg = (
-        e.select(F.col("lo").alias("n"))
-        .unionAll(e.select(F.col("hi").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    ann = e.join(
-        deg.select(F.col("n").alias("lo"), F.col("d").alias("dlo")), "lo"
-    ).join(deg.select(F.col("n").alias("hi"), F.col("d").alias("dhi")), "hi")
-    lo_first = F.struct(F.col("dlo").alias("d"), F.col("lo").alias("n")) < F.struct(
-        F.col("dhi").alias("d"), F.col("hi").alias("n")
-    )
-    return ann.select(
-        F.when(lo_first, F.col("lo")).otherwise(F.col("hi")).alias("u"),
-        F.when(lo_first, F.col("hi")).otherwise(F.col("lo")).alias("v"),
-        F.when(
-            lo_first,
-            F.struct(F.col("dhi").alias("d"), F.col("hi").alias("n")),
-        )
-        .otherwise(F.struct(F.col("dlo").alias("d"), F.col("lo").alias("n")))
-        .alias("vk"),
-    )

@@ -828,61 +828,3 @@ def bloom_semi_join(
         big, key_col, bitmap, num_bits=num_bits, num_hashes=num_hashes
     )
     return pruned.join(small.select(key_col).distinct(), key_col, "left_semi")
-
-
-def bloom_anti_join(
-    big: DataFrame,
-    small: DataFrame,
-    key_col: str,
-    *,
-    num_bits: int = 1 << 16,
-    num_hashes: int = 5,
-    bloom: DataFrame | None = None,
-) -> DataFrame:
-    """Exact ``LEFT ANTI`` join (``NOT IN`` — the upsert/decontamination
-    shape, J7) with a Bloom shortcut: a key the filter reports ABSENT is
-    definitely not in ``small``, so the row is kept immediately with no
-    join at all; only the bloom-positive minority rides the real
-    anti-join, which settles the false positives. Result is bit-identical
-    to ``big.join(small, key, "left_anti")``.
-
-    The asymmetry vs :func:`bloom_semi_join` is which side gets the free
-    pass: a semi-join's bloom DROPS definite-absent rows, an anti-join's
-    bloom KEEPS them. Both ship only the candidate minority to the
-    exchange — at 100 TB the anti-join (think ``decontaminate``'s "not in
-    the eval set", or ``insert_missing``'s "not already loaded") is
-    usually the more skewed case: almost everything is absent, so almost
-    everything skips the shuffle entirely.
-
-    The probe here computes the full k-test conjunction as a flag (no
-    early filter — BOTH branches need every row classified), then splits:
-    flag=false → keep, flag=true → real anti-join, union back. Same
-    bitmap caching contract as :func:`bloom_semi_join`, including the
-    caller-owned ``bloom=`` lifecycle.
-    """
-    if bloom is None:
-        bitmap = bloom_filter_table(
-            small, key_col, num_bits=num_bits, num_hashes=num_hashes
-        ).persist()
-    else:
-        _check_bloom_params(bloom, num_bits, num_hashes)
-        bitmap = bloom
-    flagged, scratch = big, []
-    tests = []
-    for i in range(num_hashes):
-        flagged, test, cols = _bloom_probe_step(
-            flagged, key_col, bitmap, i, num_bits
-        )
-        tests.append(test)
-        scratch.extend(cols)
-    maybe = tests[0]
-    for t in tests[1:]:
-        maybe = maybe & t
-    flagged = flagged.withColumn("__bloom_maybe", maybe).drop(*scratch)
-
-    definite_absent = flagged.filter(~F.col("__bloom_maybe")).drop("__bloom_maybe")
-    candidates = flagged.filter(F.col("__bloom_maybe")).drop("__bloom_maybe")
-    return definite_absent.unionByName(
-        candidates.join(small.select(key_col).distinct(), key_col, "left_anti")
-        .select(*definite_absent.columns)
-    )

@@ -43,31 +43,6 @@ def ensure_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame
     return out
 
 
-def tune_shuffle_partitions(
-    spark,
-    input_bytes: int,
-    *,
-    target_partition_bytes: int = 128 * 1024 * 1024,
-    per_core_tasks: int = 2,
-) -> int:
-    """Size ``spark.sql.shuffle.partitions`` for an input volume: enough
-    partitions that a post-shuffle partition targets ~``target_partition_
-    bytes`` (spill-free with executor memory in the GBs), but never fewer
-    than ``per_core_tasks`` × cluster parallelism (all cores busy, room for
-    stragglers). The 100 TB arithmetic this encodes: 100 TB / 128 MB ≈
-    800k partitions — far beyond any static default, which is why this is
-    computed, not hard-coded. With AQE on, this sets the *initial*
-    partitioning that AQE coalesces/splits from, so getting the order of
-    magnitude right still matters. Returns the value it set."""
-    parallelism = spark.sparkContext.defaultParallelism
-    n = max(
-        per_core_tasks * parallelism,
-        -(-input_bytes // target_partition_bytes),  # ceil division
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n
-
-
 def stratified_hash_sample(
     df: DataFrame, stratum_cols: list[str], k: int, *, hash_col: str
 ) -> DataFrame:
@@ -392,78 +367,4 @@ def curriculum_index(
         d.join(F.broadcast(offsets), ["__t", "__bkt"])
         .withColumn(pos_col, F.col("__off") + F.row_number().over(w_in))
         .drop("__t", "__h", "__bkt", "__off")
-    )
-
-
-def key_skew_report(
-    df: DataFrame,
-    keys: list[str],
-    *,
-    top: int = 5,
-) -> DataFrame:
-    """Shuffle-key skew diagnostic: per hot key its row share of the table,
-    plus the uniform-share baseline — the number that decides whether a
-    groupBy/join on ``keys`` needs ``salted_count_sum``/AQE-skew handling
-    (a key holding a large multiple of the uniform share funnels its whole
-    group through one reducer).
-
-    One count aggregation (map-side partials, the same shuffle the real
-    query would pay) + a top-N over the (already tiny) key-count relation;
-    the total is a broadcast 1-row aggregate, not a driver count. Returns
-    (keys..., n_rows, share, uniform_share, skew_ratio) for the ``top``
-    hottest keys, skew_ratio = share / uniform_share.
-    """
-    counts = df.groupBy(*keys).agg(F.count(F.lit(1)).alias("n_rows"))
-    totals = counts.agg(
-        F.sum("n_rows").alias("__total"), F.count(F.lit(1)).alias("__nkeys")
-    )
-    # top-N via orderBy().limit(): TakeOrderedAndProject keeps the per-key
-    # relation distributed (a global row_number window would funnel every
-    # distinct key through one reducer — the exact failure this function
-    # diagnoses); the totals cross-join lands on <= top rows
-    hot = counts.orderBy(F.col("n_rows").desc(), *keys).limit(top)
-    return hot.crossJoin(F.broadcast(totals)).select(
-        *keys,
-        "n_rows",
-        (F.col("n_rows") / F.col("__total")).alias("share"),
-        (F.lit(1.0) / F.col("__nkeys")).alias("uniform_share"),
-        (F.col("n_rows") * F.col("__nkeys") / F.col("__total")).alias("skew_ratio"),
-    )
-
-
-def assign_training_shards(
-    df: DataFrame,
-    *,
-    id_col: str,
-    n_shards: int,
-    base_hash=None,
-    bucket_bits: int = 10,
-    shard_col: str = "shard",
-) -> DataFrame:
-    """Contiguous, size-balanced shard assignment over the deterministic
-    corpus shuffle: shard = floor((pos − 1) · n_shards / N) on
-    ``global_sort_index``'s pseudo-random total order — the export step of
-    a training run (each data-loader rank reads its shard as one
-    contiguous slice of a reproducible epoch order; resharding to a
-    different ``n_shards`` re-slices the SAME order, so runs remain
-    comparable across cluster sizes).
-
-    Shard sizes differ by at most one row (the floor partition of a
-    contiguous range). The corpus row count enters as a broadcast 1-row
-    aggregate, not a driver count; everything else is the three-step
-    shuffle-index shape (per-bucket windows, no single-reducer sort).
-    Write with ``partitionBy(shard_col)`` and each shard lands as its own
-    partition directory.
-    """
-    idx = global_sort_index(
-        df, id_col=id_col, base_hash=base_hash, bucket_bits=bucket_bits
-    )
-    total = idx.agg(F.count(F.lit(1)).alias("__total"))
-    return (
-        idx.crossJoin(F.broadcast(total))
-        .withColumn(
-            shard_col,
-            F.floor((F.col("pos") - 1) * n_shards / F.col("__total")).cast("int"),
-        )
-        .drop("__total")
     )

@@ -121,7 +121,7 @@ from pyspark.sql import DataFrame, SparkSession
 from tibame_project_spark.localdf import local_rows_df
 from pyspark.sql.types import (
     BooleanType, ByteType, DateType, DecimalType, IntegerType, LongType,
-    ShortType, StringType, StructField, StructType,
+    ShortType, StringType, StructField, StructType, TimestampType,
 )
 
 from tibame_project_spark.sources.writers import (
@@ -3305,44 +3305,24 @@ def _persist_stage(
     spark: SparkSession, base_path: str, edit: dict, *, op: str
 ) -> str:
     """Persist a prepared manifest edit under ``staged/<token>/``: the
-    added manifest rows as parquet, the key bounds as a typed 1-row
-    parquet, scalars in ``stage.json`` — which lands LAST, so a crash
-    mid-stage leaves no stage record, only unreferenced files for
-    vacuum, never a half-readable stage."""
+    added manifest rows as parquet, scalars (the key bounds too) in
+    ``stage.json`` — which lands LAST, so a crash mid-stage leaves no
+    stage record, only unreferenced files for vacuum, never a
+    half-readable stage."""
     token = _token()
     key = edit["key"]
     if edit["added"] is not None:
         _materialize_manifest(
             spark, edit["added"], base_path, f"staged/{token}/add"
         )
-    if edit["bounds"] is not None:
-        from pyspark.sql.types import StructField
-        from pyspark.sql.types import StructType as _ST
-
-        kt = edit["schema"][key].dataType
-        _, lo, hi = edit["bounds"]
-        bschema = _ST([StructField("lo", kt), StructField("hi", kt)])
-        # a driver-side Arrow write only for types whose Arrow
-        # round-trip is provably the Spark one (the footer-stat kinds);
-        # timestamps and decimals keep the Spark write
-        bkind = kt.simpleString().split("(")[0]
-        if bkind not in _FOOTER_STATS_KINDS or not _write_arrow_parquet(
-            base_path,
-            f"staged/{token}/bounds",
-            _rows_to_arrow([(lo, hi)], bschema),
-        ):
-            local_rows_df(spark, [(lo, hi)], bschema).coalesce(
-                1
-            ).write.mode("overwrite").parquet(
-                f"{base_path}/staged/{token}/bounds"
-            )
+    enc, _ = _bound_codec(edit["schema"][key].dataType)
     stage = {
         "op": op,
         "key": key,
         "base_head": edit["base_head"],
         "removed": edit["removed"],
         "has_added": edit["added"] is not None,
-        "has_bounds": edit["bounds"] is not None,
+        "bounds": edit["bounds"] and [enc(v) for v in edit["bounds"][1:]],
         "schema": edit["schema"].jsonValue(),
         "stats_cols": edit["stats_cols"],
         "dv_key": edit["dv_key"],
@@ -3358,6 +3338,23 @@ def _persist_stage(
         spark, f"{base_path}/staged/{token}/stage.json", json.dumps(stage)
     )
     return token
+
+
+def _bound_codec(kt):
+    """(encode, decode) between a key bound and its ``stage.json``
+    scalar. A timestamp is epoch microseconds: the instant, whatever the
+    session time zone publish runs in (``datetime.timestamp`` keeps the
+    fold of an ambiguous local time, which ``toInternal`` drops).
+    Decoding gives what Spark's ``collect()`` gives, so the bounds
+    compare with the stats :func:`_check_rebase` collects."""
+    import decimal
+
+    if isinstance(kt, DecimalType):
+        return str, decimal.Decimal
+    if isinstance(kt, TimestampType):
+        return (lambda v: int(v.replace(microsecond=0).timestamp()) * 10**6
+                + v.microsecond), kt.fromInternal
+    return kt.toInternal, kt.fromInternal
 
 
 def _read_stage(spark: SparkSession, base_path: str, token: str) -> dict:
@@ -3447,13 +3444,9 @@ def publish_staged_manifest(
     if st["has_added"]:
         added = _read_arrow(spark, f"{base_path}/staged/{token}/add")
     bounds = None
-    if st["has_bounds"]:
-        # collected through Spark: the bounds compare with Spark-collected
-        # stat values in _check_rebase
-        b = spark.createDataFrame(
-            _read_arrow(spark, f"{base_path}/staged/{token}/bounds")
-        ).first()
-        bounds = (st["key"], b["lo"], b["hi"])
+    if st["bounds"] is not None:
+        _, dec = _bound_codec(StructType.fromJson(st["schema"])[st["key"]].dataType)
+        bounds = (st["key"], *map(dec, st["bounds"]))
     version = _finish(
         spark,
         base_path,

@@ -4,8 +4,8 @@ Engine extension (BASELINE.json north star). The Spark-side plumbing —
 schema, Arrow batch shape, mapInPandas signatures, partition sizing — is real
 and tested; the actual media decode is STUBBED because no image/audio libs
 exist in this container: ``decode_fn=None`` uses a deterministic fake
-(byte-statistics features) and a clearly marked ``NotImplementedError`` path
-documents where a real decoder (PIL/librosa/ffmpeg) would plug in.
+(byte-statistics features); a real decoder (PIL/librosa/ffmpeg) plugs in as
+``decode_fn``.
 
 Scale notes: binary payloads ride the normal columnar path (parquet binary),
 so partition sizing must budget for payload width —
@@ -44,16 +44,6 @@ def _fake_decode(payload: bytes, dim: int = 8) -> list[float]:
         float(sum(payload[i * step : (i + 1) * step]) % 256) / 255.0
         for i in range(dim)
     ]
-
-
-def real_decoder_stub(payload: bytes) -> list[float]:
-    """Where a real decoder would go (PIL.Image.open / librosa.load /
-    ffmpeg frame sampling). Not available in this environment."""
-    raise NotImplementedError(
-        "media decode requires image/audio libraries not present in this "
-        "container; wire a decoder here (e.g. PIL for images) and pass it "
-        "as decode_fn"
-    )
 
 
 def extract_features(

@@ -140,25 +140,6 @@ def read_binary_files(
     )
 
 
-def read_parquet_evolving(
-    spark: SparkSession, path: str | list[str]
-) -> DataFrame:
-    """Read a parquet corpus whose batches were written under DRIFTED
-    schemas (columns added over time) as one relation — ``mergeSchema``
-    reconciles the per-file footers and absent columns read as NULL.
-
-    This is the rolling-corpus ingest reality at 100 TB: a feed adds a
-    column in March and the reader must still see January's files. Merge
-    cost is footer-only (one extra driver-side pass over file metadata,
-    no data read), so keep it ON for evolving feeds and OFF (the Spark
-    default) for frozen snapshot tables where the single-footer fast
-    path is measurable.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(
-        *(path if isinstance(path, list) else [path])
-    )
-
-
 #: numeric widening lattice for evolve_union — each integral type widens to
 #: any later one (all exact); float widens to double. Deliberately NO
 #: integral→floating edge: long→double silently loses exactness above 2^53,

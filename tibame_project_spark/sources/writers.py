@@ -218,41 +218,6 @@ def write_zorder_parquet(
     _clustered_write(df, path, layout_cols, n_files, zorder_bits=bits, mode=mode)
 
 
-def compact_parquet(
-    spark,
-    path: str,
-    out_path: str,
-    *,
-    target_file_mb: int = 128,
-    layout_cols: str | list[str] | None = None,
-) -> int:
-    """Small-files compaction: rewrite a parquet table into
-    ceil(total_bytes / target) files — the maintenance pass every
-    incremental sink eventually needs (daily availableNow appends and
-    per-partition micro-batch writes accumulate KB-scale files whose
-    per-file open/footer/task overhead dominates scans long before data
-    size does).
-
-    Sizing comes from the filesystem (Hadoop FileSystem API, so HDFS/S3A
-    paths size identically to local), not a data scan. Plain compaction is
-    a round-robin ``repartition`` (one shuffle, even output sizes); pass
-    ``layout_cols`` to spend it on ``write_sorted_parquet``'s clustering
-    (sample job + id exchange; a layout that is a function of the rows).
-    Writes to ``out_path``
-    (swap is the caller's transaction: point readers at the new path, or
-    rename over the old one in one FS op) — compaction never overwrites
-    the table it is reading. Returns the output file count.
-    """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = _hadoop_path(jvm, path)
-    fs = p.getFileSystem(conf)
-    total = fs.getContentSummary(p).getLength()
-    n_files = max(1, -(-int(total) // (target_file_mb * 1024 * 1024)))
-    _clustered_write(spark.read.parquet(path), out_path, layout_cols, n_files)
-    return n_files
-
-
 #: Boundary-sample rows per output file of a clustered write.
 _SAMPLE_ROWS_PER_FILE = 20
 

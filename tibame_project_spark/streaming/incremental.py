@@ -873,41 +873,3 @@ def stream_static_enrich(
     """
     d = F.broadcast(dim) if broadcast_dim else dim
     return stream.join(d, F.col(stream_key) == F.col(dim_key), how)
-
-
-def windowed_distinct_users(
-    events: DataFrame,
-    *,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    user_col: str = "user_id",
-    window_duration: str = "1 day",
-    watermark: str = "1 day",
-    rsd: float = 0.02,
-) -> DataFrame:
-    """Tumbling-window DISTINCT-user estimates via HLL — the streaming
-    "uniques dashboard" pattern, and the composition of this module's
-    watermark windows with the sketch tier (``analytics.rolling_distinct``
-    batch-side, ``approx_users``' 2%-certificate for accuracy evidence).
-
-    Exact streaming COUNT(DISTINCT) is disallowed by Spark for good
-    reason: its state per open window is the user SET (unbounded).
-    ``approx_count_distinct`` keeps per-window state at a fixed register
-    array (KBs at rsd=2%) no matter how many users arrive, and merges
-    across micro-batches — uniques over a billion-user day cost the same
-    state as over a thousand-user day. Works on both a static and a
-    streaming DataFrame (same code path), so a batch oracle can replay
-    the identical expression: Spark's HLL is deterministic for a fixed
-    input set, and the estimate is partial-merge invariant (register max
-    is commutative), so batch and availableNow streaming agree exactly.
-    """
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window_duration).alias("win"), F.col(key_col))
-        .agg(F.approx_count_distinct(user_col, rsd).alias("approx_users"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            key_col,
-            "approx_users",
-        )
-    )
