@@ -343,3 +343,60 @@ def test_every_engine_import_resolves():
                         f"{path.relative_to(repo)}:{node.lineno} {module} {name}"
                     )
     assert checked and missing == []
+
+
+def test_every_docstring_reference_resolves():
+    """Every ``:func:``, ``:class:``, ``:data:`` and ``:mod:`` reference in
+    the package's docstrings names a symbol that exists — resolved as
+    Sphinx would: absolute, relative to the package, to the referring
+    module, or (leading ``.``) to the referring module's package. A
+    docstring that still points at a deleted function reads as live
+    documentation of a path the engine no longer has."""
+    import ast
+    import importlib
+    import pathlib
+    import re
+
+    def lookup(dotted: str) -> bool:
+        parts = dotted.split(".")
+        for i in range(len(parts), 0, -1):
+            try:
+                obj = importlib.import_module(".".join(parts[:i]))
+            except ImportError:
+                continue
+            for attr in parts[i:]:
+                if not hasattr(obj, attr):
+                    return False
+                obj = getattr(obj, attr)
+            return True
+        return False
+
+    role = re.compile(r":(?:func|class|data|mod):`~?([^`]+)`")
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    pkg = repo / "tibame_project_spark"
+    checked, missing = 0, []
+    for path in sorted(pkg.rglob("*.py")):
+        module = ".".join(path.relative_to(repo).with_suffix("").parts)
+        module = module.removesuffix(".__init__")
+        package = module if path.name == "__init__.py" else module.rpartition(".")[0]
+        for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+            if not isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            ):
+                continue
+            doc = ast.get_docstring(node, clean=False) or ""
+            for m in role.finditer(doc):
+                target = "".join(m.group(1).split())
+                checked += 1
+                if target.startswith("."):
+                    candidates = [package + target]
+                else:
+                    candidates = [
+                        target,
+                        f"tibame_project_spark.{target}",
+                        f"{module}.{target}",
+                    ]
+                if not any(lookup(c) for c in candidates):
+                    missing.append(f"{path.relative_to(repo)}:{node.lineno} {target}")
+    assert checked and missing == []

@@ -475,6 +475,33 @@ def test_vacuum_deletes_only_unreferenced(spark, tmp_path):
     assert vacuum_manifest_table(spark, base) == 0
 
 
+def test_manifest_table_ignores_foreign_files(spark, tmp_path):
+    """Stray non-numeric entries matching a versioned prefix (editor
+    backups, tmp dirs) are IGNORED by the head listing, by commits and
+    their retention prune, and by vacuum: none of them raises out of a
+    read or write, and none is deleted."""
+    base = str(tmp_path / "t")
+    write_manifest_table(spark, _mk(spark, [(0, 0)]), base, stats_cols=["id"])
+    foreign_files = ["_COMMIT_v1.bak", "_CLAIM_vx", "meta/v=x.json"]
+    for name in foreign_files:
+        open(os.path.join(base, name), "w").close()
+    os.makedirs(os.path.join(base, "manifest", "v=tmp"))
+    assert read_manifest_version(spark, base) == 0
+    for i in range(1, 4):  # keep=1: each commit prunes the version before it
+        assert write_manifest_table(spark, _mk(spark, [(i, i)]), base, keep=1) == i
+    assert read_manifest_version(spark, base) == 3
+    assert _content(spark, base) == {(3, 3)}
+    assert sorted(n for n in os.listdir(base) if n.startswith("_COMMIT_v")) == [
+        "_COMMIT_v1.bak",
+        "_COMMIT_v3",
+    ]
+    assert vacuum_manifest_table(spark, base) > 0
+    assert _content(spark, base) == {(3, 3)}
+    for name in foreign_files:
+        assert os.path.isfile(os.path.join(base, name))
+    assert os.path.isdir(os.path.join(base, "manifest", "v=tmp"))
+
+
 def test_crash_before_marker_is_invisible_then_superseded(spark, tmp_path):
     base = str(tmp_path / "t")
     write_manifest_table(spark, _mk(spark, [(1, 1)]), base, stats_cols=["id"])
@@ -710,6 +737,42 @@ def test_stream_cdc_apply_manifest_merges_and_survives_replay(spark, tmp_path):
     assert len(manifest_file_paths(spark, base)) == 1
 
 
+def test_stream_cdc_apply_manifest_refuses_bootstrap_after_table_loss(
+    spark, tmp_path
+):
+    """No crash state loses a manifest table, so a committed epoch that
+    finds none means external loss (rm -rf, retention script):
+    re-bootstrapping from one batch would silently drop every earlier
+    key, and the sink must fail loudly instead."""
+    import shutil
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from tibame_project_spark.streaming.incremental import stream_cdc_apply_manifest
+
+    src = tmp_path / "feed"
+    base = str(tmp_path / "lost")
+    ckpt = str(tmp_path / "ckpt")
+    schema = "id long, v long"
+
+    def land(rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
+            str(src)
+        )
+
+    def run():
+        stream = spark.readStream.schema(schema).parquet(str(src))
+        stream_cdc_apply_manifest(stream, base, "id", checkpoint=ckpt)
+
+    land([(1, 10)])
+    run()
+    assert _content(spark, base) == {(1, 10)}
+    shutil.rmtree(base)  # external loss after epoch 0
+    land([(2, 20)])
+    with pytest.raises(StreamingQueryException, match="refusing to bootstrap"):
+        run()
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     st.lists(
@@ -889,10 +952,9 @@ def test_catalog_manifest_pipeline_over_orders(spark, tmp_path):
     """Real-table pipeline through the catalog surface: orders lands as a
     key-clustered manifest table, a priority-correction batch merges in
     rewriting only candidate files, and SQL-side plans read the result
-    through catalog.load_manifest as a temp view with a pruned scan — the manifest
-    twin of the warehouse-refresh test's snapshot publish."""
+    through read_manifest_table as a temp view with a pruned scan."""
     from tests.conftest import SF_DIR
-    from tibame_project_spark.catalog import load, load_manifest
+    from tibame_project_spark.catalog import load
 
     base = str(tmp_path / "orders_m")
     orders = load(spark, SF_DIR, "orders").select(
@@ -913,9 +975,9 @@ def test_catalog_manifest_pipeline_over_orders(spark, tmp_path):
     merge_manifest_table(spark, batch, base, "o_orderkey", delete_col="dead")
     after = set(manifest_file_paths(spark, base))
     assert before & after, "low-key batch must leave high-key files untouched"
-    assert load_manifest(spark, base).count() == n
-    # pruned catalog read: files that can hold the corrected keys only
-    load_manifest(
+    assert read_manifest_table(spark, base).count() == n
+    # pruned read: files that can hold the corrected keys only
+    read_manifest_table(
         spark, base, prune=f"min_o_orderkey <= {lo_keys + 50}"
     ).createOrReplaceTempView("orders_mv")
     got = spark.sql(

@@ -2315,51 +2315,6 @@ def test_merge_upsert_one_pass_matches_sequential_composition(spark):
     assert sum(line.count("Join") for line in plan.splitlines()) == 1
 
 
-def test_stream_cdc_apply_merges_each_batch(spark, tmp_path):
-    """CDC apply: first batch bootstraps the table (tombstones skipped),
-    the second batch — processed incrementally off the checkpoint —
-    updates, inserts, and deletes in one merge; a re-run with no new files
-    is a no-op (idempotence of the availableNow drain)."""
-    import os
-
-    from tibame_project_spark.streaming.incremental import stream_cdc_apply
-
-    src = tmp_path / "cdc"
-    ckpt = str(tmp_path / "ckpt")
-    schema = "id long, name string, v long, dead boolean"
-    spark.sql("DROP TABLE IF EXISTS cdc_applied")
-
-    def land(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(
-            str(src)
-        )
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        stream_cdc_apply(
-            stream, "cdc_applied", "id", checkpoint=ckpt, delete_col="dead"
-        )
-        # foreachBatch merges in a cloned session; this session's cached
-        # file listing is stale after the overwrite (documented contract)
-        spark.catalog.refreshTable("cdc_applied")
-
-    land([(1, "a", 10, False), (2, "b", 20, False), (9, "x", 99, True)])
-    run()
-    assert sorted(tuple(r) for r in spark.table("cdc_applied").collect()) == [
-        (1, "a", 10),
-        (2, "b", 20),
-    ]
-
-    land([(2, "B", 200, False), (3, "c", 30, False), (1, "a", 10, True)])
-    run()
-    expected = [(2, "B", 200), (3, "c", 30)]
-    assert sorted(tuple(r) for r in spark.table("cdc_applied").collect()) == expected
-
-    run()  # no new files: checkpointed progress makes this a no-op
-    assert sorted(tuple(r) for r in spark.table("cdc_applied").collect()) == expected
-    spark.sql("DROP TABLE cdc_applied")
-
-
 def test_bloom_joins_reject_mismatched_bitmap_params(spark):
     """A bitmap built with different num_bits/num_hashes than the probe
     would silently drop true matches; the stamped build parameters must be
@@ -2406,125 +2361,6 @@ def test_radius_join_grid_guards_and_huge_coordinates(spark):
     assert got == want and len(want) >= 2
 
 
-def test_stream_cdc_apply_refuses_bootstrap_after_table_loss(spark, tmp_path):
-    """If the checkpoint has committed epochs but the table is gone (a
-    mid-overwrite crash), re-bootstrapping from one batch would silently
-    drop every earlier key — the sink must fail loudly instead."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from tibame_project_spark.streaming.incremental import stream_cdc_apply
-
-    src = tmp_path / "cdc2"
-    ckpt = str(tmp_path / "ckpt2")
-    schema = "id long, v long"
-    spark.sql("DROP TABLE IF EXISTS cdc_lost")
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        stream_cdc_apply(stream, "cdc_lost", "id", checkpoint=ckpt)
-
-    spark.createDataFrame([(1, 10)], schema).coalesce(1).write.mode("append").parquet(str(src))
-    run()
-    assert spark.table("cdc_lost").count() == 1
-
-    spark.sql("DROP TABLE cdc_lost")  # simulate the mid-overwrite loss
-    spark.createDataFrame([(2, 20)], schema).coalesce(1).write.mode("append").parquet(str(src))
-    with pytest.raises(StreamingQueryException, match="refusing to bootstrap"):
-        run()
-
-
-def test_write_snapshot_atomic_publish_and_prune(spark, tmp_path):
-    """Snapshot writes publish via an atomic pointer swap: a 'crashed'
-    write (data directory present, pointer never swapped) is invisible to
-    readers; version pruning keeps the newest `keep` only."""
-    from tibame_project_spark.sources.writers import (
-        read_snapshot,
-        read_snapshot_version,
-        write_snapshot,
-    )
-
-    base = str(tmp_path / "snap")
-    assert read_snapshot_version(spark, base) is None
-    v0 = write_snapshot(spark, spark.createDataFrame([(1, "a")], "id long, v string"), base)
-    assert v0 == 0 and read_snapshot_version(spark, base) == 0
-
-    # simulate a crash mid-write of v=1: data lands, pointer never swaps
-    spark.createDataFrame([(2, "b")], "id long, v string").write.parquet(f"{base}/v=1")
-    assert read_snapshot_version(spark, base) == 0
-    assert [tuple(r) for r in read_snapshot(spark, base).collect()] == [(1, "a")]
-
-    # the next committed write overwrites and supersedes the orphaned dir
-    v1 = write_snapshot(spark, spark.createDataFrame([(3, "c")], "id long, v string"), base)
-    assert v1 == 1 and read_snapshot_version(spark, base) == 1
-    assert [tuple(r) for r in read_snapshot(spark, base).collect()] == [(3, "c")]
-
-    write_snapshot(spark, spark.createDataFrame([(4, "d")], "id long, v string"), base, keep=2)
-    import os
-
-    dirs = sorted(d for d in os.listdir(base) if d.startswith("v="))
-    assert dirs == ["v=1", "v=2"]  # older versions pruned, current kept
-
-
-def test_stream_cdc_apply_snapshot_merges_and_survives_replay(spark, tmp_path):
-    """The snapshot-backed CDC apply: bootstrap, then merge
-    update/insert/delete into a NEW version per batch; the previous
-    version stays on disk during the merge (no read-then-overwrite
-    hazard) and a no-new-files re-run changes nothing."""
-    from tibame_project_spark.sources.writers import read_snapshot
-    from tibame_project_spark.streaming.incremental import stream_cdc_apply_snapshot
-
-    src = tmp_path / "feed"
-    base = str(tmp_path / "snaptab")
-    ckpt = str(tmp_path / "ckpt3")
-    schema = "id long, name string, v long, dead boolean"
-
-    def land(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode("append").parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        stream_cdc_apply_snapshot(stream, base, "id", checkpoint=ckpt, delete_col="dead")
-
-    land([(1, "a", 10, False), (2, "b", 20, False)])
-    run()
-    assert sorted(tuple(r) for r in read_snapshot(spark, base).collect()) == [
-        (1, "a", 10),
-        (2, "b", 20),
-    ]
-    land([(2, "B", 200, False), (3, "c", 30, False), (1, "a", 10, True)])
-    run()
-    expected = [(2, "B", 200), (3, "c", 30)]
-    assert sorted(tuple(r) for r in read_snapshot(spark, base).collect()) == expected
-    run()  # checkpointed: no new files, no new version content
-    assert sorted(tuple(r) for r in read_snapshot(spark, base).collect()) == expected
-
-
-def test_write_snapshot_guards_and_mid_prune_crash_sweep(spark, tmp_path):
-    """keep < 1 would delete the version just committed — rejected; a
-    mid-prune crash (marker deleted, data dir left) must be swept by the
-    next write's prune instead of leaking a table copy forever."""
-    import os
-
-    from tibame_project_spark.sources.writers import (
-        read_snapshot_version,
-        write_snapshot,
-    )
-
-    base = str(tmp_path / "snapg")
-    df = spark.createDataFrame([(1,)], "id long")
-    with pytest.raises(ValueError, match="keep"):
-        write_snapshot(spark, df, base, keep=0)
-
-    for _ in range(3):  # v0, v1, v2 with keep=3: nothing pruned yet
-        write_snapshot(spark, df, base, keep=3)
-    # simulate a crashed prune of v=0: marker gone, data dir remains
-    os.remove(os.path.join(base, "_COMMIT_v0"))
-    assert read_snapshot_version(spark, base) == 2
-    write_snapshot(spark, df, base, keep=2)  # commits v3, floor=1
-    dirs = sorted(d for d in os.listdir(base) if d.startswith("v="))
-    assert dirs == ["v=2", "v=3"]  # markerless v=0 AND v=1 both swept
-
-
 def test_bloom_prune_rejects_mismatched_bitmap_params(spark):
     """bloom_prune is a public entry point with no downstream join to
     repair false negatives — a mismatched bitmap must be rejected there
@@ -2538,88 +2374,10 @@ def test_bloom_prune_rejects_mismatched_bitmap_params(spark):
         bloom_prune(df, "key", bitmap, num_bits=4096, num_hashes=5)
 
 
-def test_stream_cdc_apply_snapshot_refuses_bootstrap_after_external_loss(spark, tmp_path):
-    """A committed epoch finding no snapshot table means external deletion
-    (no crash state can lose one) — refuse to re-bootstrap, same contract
-    as the managed-table sink."""
-    import shutil
-
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from tibame_project_spark.streaming.incremental import stream_cdc_apply_snapshot
-
-    src = tmp_path / "feed2"
-    base = str(tmp_path / "snaplost")
-    ckpt = str(tmp_path / "ckpt4")
-    schema = "id long, v long"
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        stream_cdc_apply_snapshot(stream, base, "id", checkpoint=ckpt)
-
-    spark.createDataFrame([(1, 10)], schema).coalesce(1).write.mode("append").parquet(str(src))
-    run()
-    shutil.rmtree(base)  # external loss
-    spark.createDataFrame([(2, 20)], schema).coalesce(1).write.mode("append").parquet(str(src))
-    with pytest.raises(StreamingQueryException, match="refusing to bootstrap"):
-        run()
-
-
-def test_snapshot_changes_feed_between_versions(spark, tmp_path):
-    """The derived change feed between two snapshot versions tags exactly
-    the inserted / deleted / updated keys."""
-    from tibame_project_spark.sources.writers import snapshot_changes, write_snapshot
-
-    base = str(tmp_path / "cdfeed")
-    write_snapshot(
-        spark,
-        spark.createDataFrame([(1, 10), (2, 20), (3, 30)], "id long, v long"),
-        base,
-        keep=5,
-    )
-    write_snapshot(
-        spark,
-        spark.createDataFrame([(1, 10), (2, 200), (4, 40)], "id long, v long"),
-        base,
-        keep=5,
-    )
-    got = {
-        r.id: (r.op, r.old_v, r.new_v)
-        for r in snapshot_changes(spark, base, "id", from_version=0).collect()
-    }
-    assert got == {
-        1: ("same", 10, 10),
-        2: ("update", 20, 200),
-        3: ("delete", 30, None),
-        4: ("insert", None, 40),
-    }
-
-
-def test_write_snapshot_stale_base_version_fails_before_data_write(spark, tmp_path):
-    """A stale base_version (overlapping writers, cached value) must fail
-    BEFORE touching the committed version's data, and explicit-version
-    reads must refuse uncommitted (crash-orphan) directories."""
-    from tibame_project_spark.sources.writers import read_snapshot, write_snapshot
-
-    base = str(tmp_path / "snapstale")
-    df1 = spark.createDataFrame([(1,)], "id long")
-    df2 = spark.createDataFrame([(2,)], "id long")
-    write_snapshot(spark, df1, base)          # v0
-    write_snapshot(spark, df2, base)          # v1 (current)
-    with pytest.raises(RuntimeError, match="not ahead"):
-        write_snapshot(spark, df1, base, base_version=0)  # stale: targets v1
-    # committed v1 data untouched by the refused write
-    assert [r.id for r in read_snapshot(spark, base).collect()] == [2]
-    # explicit version must be committed: orphan dirs are refused
-    spark.createDataFrame([(9,)], "id long").write.parquet(f"{base}/v=7")
-    with pytest.raises(FileNotFoundError, match="not committed"):
-        read_snapshot(spark, base, version=7)
-
-
 def test_merge_upsert_null_keys_are_null_safe(spark):
     """A NULL-key change row must MATCH the NULL-key target row (update or
     delete), not re-insert a duplicate on every application — the re-apply
-    fixpoint the CDC sinks rely on."""
+    fixpoint a CDC apply relies on."""
     from tibame_project_spark.operators.corrections import merge_upsert
 
     target = spark.createDataFrame([(None, 1), (7, 70)], "id integer, v long")
@@ -2635,20 +2393,6 @@ def test_merge_upsert_null_keys_are_null_safe(spark):
     assert [(r.id, r.v) for r in merge_upsert(merged, tomb, "id", delete_col="dead").collect()] == [(7, 70)]
 
 
-def test_write_snapshot_stale_guard_holds_beyond_retention(spark, tmp_path):
-    """The staleness guard must stay closed even when the collided
-    version's own marker was already pruned: validation compares against
-    the committed HEAD, not one marker file."""
-    from tibame_project_spark.sources.writers import write_snapshot
-
-    base = str(tmp_path / "snapstale2")
-    df = spark.createDataFrame([(1,)], "id long")
-    for _ in range(6):  # v0..v5, keep=2 → markers v0..v3 pruned
-        write_snapshot(spark, df, base, keep=2)
-    with pytest.raises(RuntimeError, match="not ahead"):
-        write_snapshot(spark, df, base, base_version=2)  # targets pruned v3
-
-
 def test_radius_join_grid_rejects_float_radius(spark):
     from tibame_project_spark.operators.joins import radius_join_grid
 
@@ -2657,21 +2401,6 @@ def test_radius_join_grid_rejects_float_radius(spark):
         radius_join_grid(ldf, ldf, left_id="lid", right_id="lid", radius=2.5)
     # an integral float is fine (2.0 == int(2.0))
     assert radius_join_grid(ldf, ldf, left_id="lid", right_id="lid", radius=2.0).count() == 1
-
-
-def test_write_snapshot_rejects_base_version_ahead_of_head(spark, tmp_path):
-    """A cached base_version AHEAD of the committed head is as destructive
-    as one behind it (its prune floor would sweep the real head) — only
-    exactly head+1 may write."""
-    from tibame_project_spark.sources.writers import read_snapshot, write_snapshot
-
-    base = str(tmp_path / "snapahead")
-    df = spark.createDataFrame([(1,)], "id long")
-    write_snapshot(spark, df, base)  # head = v0
-    with pytest.raises(RuntimeError, match="not ahead"):
-        write_snapshot(spark, df, base, base_version=9, keep=2)
-    # head untouched and still readable
-    assert read_snapshot(spark, base).count() == 1
 
 
 def test_merge_upsert_key_guards_and_nonfinite_radius(spark):
@@ -2700,34 +2429,6 @@ def test_radius_join_grid_rejects_nonintegral_coordinate_columns(spark):
         radius_join_grid(idf, idf, left_id="lid", right_id="lid", radius=2).count()
         == 1
     )
-
-
-def test_snapshot_table_ignores_foreign_files(spark, tmp_path):
-    """r06 ADVICE: a stray non-numeric entry matching the _COMMIT_v / v=
-    prefixes (editor backup, tmp dir) must be IGNORED, not raise ValueError
-    out of every reader and writer on the table."""
-    import os
-
-    from tibame_project_spark.sources.writers import (
-        read_snapshot,
-        read_snapshot_version,
-        write_snapshot,
-    )
-
-    base = str(tmp_path / "snapforeign")
-    df = spark.createDataFrame([(1,)], "id long")
-    write_snapshot(spark, df, base)  # v0
-    open(os.path.join(base, "_COMMIT_v1.bak"), "w").close()
-    os.makedirs(os.path.join(base, "v=tmp"))
-    assert read_snapshot_version(spark, base) == 0
-    assert read_snapshot(spark, base).count() == 1
-    # writes (incl. the prune loops over the polluted listing) still work
-    for _ in range(3):
-        write_snapshot(spark, df, base, keep=1)
-    assert read_snapshot_version(spark, base) == 3
-    # the foreign entries survived untouched
-    assert os.path.exists(os.path.join(base, "_COMMIT_v1.bak"))
-    assert os.path.isdir(os.path.join(base, "v=tmp"))
 
 
 def test_ngram_jaccard_prefix_filter_equals_default(spark):

@@ -729,39 +729,6 @@ def test_merge_upsert_matches_dict_model(spark_global, target_rows, source_rows)
     assert {r.id: r.v for r in again.collect()} == model
 
 
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.lists(st.integers(0, 50), min_size=1, max_size=5, unique=True),
-        min_size=1,
-        max_size=5,
-    ),
-    st.integers(1, 3),
-)
-def test_write_snapshot_sequence_matches_model(spark_global, tmp_path_factory, batches, keep):
-    """Any sequence of snapshot writes: the reader always sees exactly the
-    last committed content, version numbers are dense, and retained data
-    dirs never exceed `keep`."""
-    import os
-
-    from tibame_project_spark.sources.writers import (
-        read_snapshot,
-        read_snapshot_version,
-        write_snapshot,
-    )
-
-    base = str(tmp_path_factory.mktemp("snapseq") / "t")
-    for i, ids in enumerate(batches):
-        df = spark_global.createDataFrame([(x,) for x in ids], "id long")
-        v = write_snapshot(spark_global, df, base, keep=keep)
-        assert v == i
-    assert read_snapshot_version(spark_global, base) == len(batches) - 1
-    got = sorted(r.id for r in read_snapshot(spark_global, base).collect())
-    assert got == sorted(batches[-1])
-    dirs = [d for d in os.listdir(base) if d.startswith("v=")]
-    assert len(dirs) <= keep
-
-
 @settings(max_examples=6, deadline=None)
 @given(
     st.lists(
@@ -781,38 +748,56 @@ def test_write_snapshot_sequence_matches_model(spark_global, tmp_path_factory, b
         max_size=3,
     ),
 )
+@example(
+    base_rows=[(i, i) for i in range(8)],
+    batches=[[(2, 22, False), (9, 9, False)], [(0, 0, True), (9, 99, False)]],
+)
 def test_snapshot_changes_cdc_roundtrip_is_identity(
     spark_global, tmp_path_factory, base_rows, batches
 ):
     """derive→apply is the identity — the end-to-end contract tying the
     storage tier together: for ANY base table and upsert-batch sequence,
-    the change feed snapshot_changes derives between v0 and head, applied
-    by stream_cdc_apply_snapshot onto a COPY of v0, reproduces the head
-    exactly (deletes included, `same` rows carried or not)."""
-    from tibame_project_spark.operators.corrections import merge_upsert
-    from tibame_project_spark.sources.writers import (
-        read_snapshot,
-        snapshot_changes,
-        write_snapshot,
+    the file-diff change feed manifest_changes derives between v0 and
+    head, applied by the CDC sink stream_cdc_apply_manifest onto a COPY
+    of v0, reproduces the head exactly (deletes included)."""
+    from tibame_project_spark.localdf import local_rows_df
+    from tibame_project_spark.sources.manifest import (
+        manifest_changes,
+        merge_manifest_table,
+        read_manifest_table,
+        write_manifest_table,
     )
-    from tibame_project_spark.streaming.incremental import stream_cdc_apply_snapshot
+    from tibame_project_spark.streaming.incremental import stream_cdc_apply_manifest
 
+    spark = spark_global
     tmp = tmp_path_factory.mktemp("cdcrt")
-    src_base, dst_base = str(tmp / "src"), str(tmp / "dst")
+    src, dst = str(tmp / "src"), str(tmp / "dst")
 
-    base_df = spark_global.createDataFrame(base_rows or [(999, 0)], "id long, v long")
+    base_df = local_rows_df(spark, base_rows or [(999, 0)], "id long, v long")
     if not base_rows:
-        base_df = base_df.filter("id < 0")  # empty, schema kept
-    write_snapshot(spark_global, base_df, src_base, keep=10)
-    cur = base_df
-    for b in batches:
-        batch_df = spark_global.createDataFrame(b, "id long, v long, dead boolean")
-        cur = merge_upsert(cur, batch_df, "id", delete_col="dead")
-        write_snapshot(spark_global, cur, src_base, keep=10)
-    head = {r.id: r.v for r in read_snapshot(spark_global, src_base).collect()}
-
+        base_df = base_df.where("id < 0")  # empty, schema kept
+    write_manifest_table(
+        spark, base_df, src, stats_cols=["id"], cluster_by="id", n_files=3, keep=10
+    )
+    for batch in batches:
+        merge_manifest_table(
+            spark,
+            spark.createDataFrame(batch, "id long, v long, dead boolean"),
+            src,
+            "id",
+            delete_col="dead",
+            keep=10,
+        )
+    # copy of v0 becomes the subscriber's bootstrap state
+    write_manifest_table(
+        spark,
+        read_manifest_table(spark, src, version=0),
+        dst,
+        stats_cols=["id"],
+        keep=10,
+    )
     feed = (
-        snapshot_changes(spark_global, src_base, "id", from_version=0)
+        manifest_changes(spark, src, "id", from_version=0)
         .filter(F.col("op") != "same")
         .select(
             "id",
@@ -820,27 +805,27 @@ def test_snapshot_changes_cdc_roundtrip_is_identity(
             (F.col("op") == "delete").alias("dead"),
         )
     )
-    # copy of v0 becomes the subscriber's bootstrap state
-    write_snapshot(
-        spark_global, read_snapshot(spark_global, src_base, version=0), dst_base
-    )
     feed_dir, ckpt = str(tmp / "feed"), str(tmp / "ckpt")
     feed.coalesce(1).write.mode("append").parquet(feed_dir)
-    stream = spark_global.readStream.schema("id long, v long, dead boolean").parquet(
+    stream = spark.readStream.schema("id long, v long, dead boolean").parquet(
         feed_dir
     )
-    stream_cdc_apply_snapshot(
-        stream, dst_base, "id", checkpoint=ckpt, delete_col="dead"
+    stream_cdc_apply_manifest(
+        stream, dst, "id", checkpoint=ckpt, delete_col="dead", keep=10
     )
-    got = {r.id: r.v for r in read_snapshot(spark_global, dst_base).collect()}
-    assert got == head
+
+    def content(base):
+        return {(r.id, r.v) for r in read_manifest_table(spark, base).collect()}
+
+    assert content(dst) == content(src)
 
 
 # ---------------------------------------------------------------------------
 # r14 footer-based commit stats: for ARBITRARY data (adversarial unicode
 # incl. astral chars, NULL patterns, negative ints, boundary dates) the
 # parquet-footer stats rows must be BIT-IDENTICAL to the distributed-scan
-# rows — the prune layer's row-loss safety rides on this equivalence.
+# rows, Bloom maps included — the prune layer's row-loss safety rides on
+# this equivalence.
 
 
 @given(
@@ -866,10 +851,11 @@ def test_snapshot_changes_cdc_roundtrip_is_identity(
         max_size=30,
     ),
     n_files=st.integers(1, 3),
+    bloom=st.sampled_from([None, {"cols": ["k", "s", "dt"], "m": 256, "k": 3}]),
 )
 @settings(max_examples=25, deadline=None)
 def test_footer_stats_equal_scan_stats_for_arbitrary_data(
-    spark_global, tmp_path_factory, rows, n_files
+    spark_global, tmp_path_factory, rows, n_files, bloom
 ):
     from tibame_project_spark.sources import manifest as M
 
@@ -881,7 +867,7 @@ def test_footer_stats_equal_scan_stats_for_arbitrary_data(
     foot = sorted(
         tuple(r)
         for r in spark.createDataFrame(M._file_stats(
-            spark, base, "data/c=p", cols, df.schema, None, null_stats=True
+            spark, base, "data/c=p", cols, df.schema, bloom, null_stats=True
         )).collect()
     )
     orig = M._footer_file_stats
@@ -890,7 +876,7 @@ def test_footer_stats_equal_scan_stats_for_arbitrary_data(
         scan = sorted(
             tuple(r)
             for r in spark.createDataFrame(M._file_stats(
-                spark, base, "data/c=p", cols, df.schema, None,
+                spark, base, "data/c=p", cols, df.schema, bloom,
                 null_stats=True,
             )).collect()
         )

@@ -270,56 +270,3 @@ def analyze_table(
             m = re.search(r"(\d+)\s+rows", raw)
             out["rowCount"] = int(m.group(1)) if m else None
     return out
-
-
-def load_snapshot(spark: SparkSession, base_path: str, *, version: int | None = None) -> DataFrame:
-    """Read a snapshot-versioned table (``sources.writers.write_snapshot``)
-    through the catalog — same contract as :func:`load` for plain parquet:
-    the committed head is resolved with ONE directory listing (or an
-    explicit ``version`` for time travel within the retention window) and
-    crash orphans are never observable. Plans consume snapshot tables with
-    this the way they consume managed ones, without importing the writer
-    module."""
-    from tibame_project_spark.sources.writers import read_snapshot
-
-    return read_snapshot(spark, base_path, version=version)
-
-
-def register_snapshot(
-    spark: SparkSession,
-    base_path: str,
-    view_name: str,
-    *,
-    version: int | None = None,
-) -> DataFrame:
-    """:func:`load_snapshot` + temp-view registration, mirroring
-    :func:`register_testdata`'s view contract so SQL-side plans can name a
-    snapshot table. The view binds to the version committed AT REGISTRATION
-    (the version directory, not the moving head) — re-register to follow
-    subsequent commits; readers are never switched mid-query."""
-    df = load_snapshot(spark, base_path, version=version)
-    df.createOrReplaceTempView(view_name)
-    return df
-
-
-def load_manifest(
-    spark: SparkSession,
-    base_path: str,
-    *,
-    version: int | None = None,
-    prune: str | None = None,
-    tag: str | None = None,
-    as_of=None,
-) -> DataFrame:
-    """Read a manifest-backed table (``sources.manifest``) through the
-    catalog — :func:`load_snapshot`'s twin for the incremental-commit
-    format: committed head resolved through the shared marker protocol,
-    or time travel by ``version``, release ``tag``, or ``as_of`` instant
-    (epoch ms / datetime — TIMESTAMP AS OF); optionally file-skipped by a
-    ``prune`` expression over the per-file min/max stats (see
-    ``sources.manifest.manifest_file_paths`` for the contract)."""
-    from tibame_project_spark.sources.manifest import read_manifest_table
-
-    return read_manifest_table(
-        spark, base_path, version=version, prune=prune, tag=tag, as_of=as_of
-    )

@@ -74,7 +74,7 @@ def merge_upsert(
     optionally ``delete_col``. By default keys match NULL-safely
     (``eqNullSafe``): a NULL-key change row updates/deletes the NULL-key
     target row instead of silently re-inserting a duplicate on every
-    application — without that, the re-apply fixpoint the CDC sinks rely
+    application — without that, the re-apply fixpoint a CDC apply relies
     on breaks for bad upstream extracts. Trade-off: Catalyst extracts
     null-safe keys as ``(coalesce(k, default), isnull(k))`` pairs, which
     a table bucketed on the raw key no longer satisfies — so the

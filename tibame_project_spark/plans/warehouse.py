@@ -16,11 +16,7 @@ nightly refresh re-expressed for 100 TB:
   join's distribution requirement satisfiable by raw-key bucketing), writes
   the result to a bucketed stage table, and publishes it with the
   metastore's atomic rename — readers see the old table or the new one,
-  never a half-written mix;
-* optionally the published result is ALSO committed as a
-  **snapshot-versioned table** (``write_snapshot``), the artifact
-  downstream consumers read through ``catalog.load_snapshot`` /
-  ``register_snapshot`` and diff with ``snapshot_changes``.
+  never a half-written mix.
 
 Plan-asserted end-to-end in
 ``tests/test_physical_plans.py::test_warehouse_refresh_join_is_exchange_free``.
@@ -32,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from tibame_project_spark.catalog import drop_table, ensure_layers, rename_table
 from tibame_project_spark.operators.corrections import merge_upsert
-from tibame_project_spark.sources.writers import write_bucketed_table, write_snapshot
+from tibame_project_spark.sources.writers import write_bucketed_table
 
 
 def bootstrap_warehouse(
@@ -74,14 +70,11 @@ def refresh_warehouse(
     key: str = "c_custkey",
     delete_col: str | None = "is_deleted",
     buckets: int = 8,
-    snapshot_path: str | None = None,
 ) -> DataFrame:
     """One nightly refresh: MERGE the staged batch into the target in one
     full-outer pass (no exchange on either side — both scans are bucketed
     on ``key``), materialize bucketed into ``<target>_stage``, then publish
-    via the metastore's atomic rename. When ``snapshot_path`` is given the
-    published table is also committed as a snapshot version, so downstream
-    consumers get time travel + a change feed for free.
+    via the metastore's atomic rename.
 
     Returns the published target DataFrame."""
     merged = merge_upsert(
@@ -98,10 +91,7 @@ def refresh_warehouse(
     write_bucketed_table(merged, stage, bucket_by=key, num_buckets=buckets)
     drop_table(spark, target)
     rename_table(spark, stage, target)
-    out = spark.table(target)
-    if snapshot_path is not None:
-        write_snapshot(spark, out, snapshot_path)
-    return out
+    return spark.table(target)
 
 
 def merge_plan(
@@ -162,11 +152,12 @@ def mart_delta_from_feed(
     sums: dict[str, str] | None = None,
 ) -> DataFrame:
     """Signed aggregate delta of a ``snapshot_diff``-schema change feed
-    (``sources.manifest.manifest_feed`` intervals, ``snapshot_changes``,
-    ...): every surviving row image contributes +1 / +value under its NEW
-    group, every disappearing image −1 / −value under its OLD group — so
-    an update that MOVES a row between groups debits one and credits the
-    other, and the delta folds into a standing mart with
+    (``sources.manifest.manifest_feed`` intervals,
+    ``sources.manifest.manifest_changes``, ...): every surviving row
+    image contributes +1 / +value under its NEW group, every
+    disappearing image −1 / −value under its OLD group — so an update
+    that MOVES a row between groups debits one and credits the other,
+    and the delta folds into a standing mart with
     ``corrections.merge_aggregates`` without ever touching the base
     table. Only fully decomposable measures qualify (counts and sums —
     min/max cannot absorb deletes without re-reading the group; keep
@@ -226,8 +217,9 @@ def maintain_mart_from_feed(
     replaying an interval double-counts — so the cursor protocol alone
     (at-least-once) is not enough. The consumer contract here is
     exactly-once-EFFECT: persist the mart STAMPED with ``head`` in one
-    atomic write (``sources.writers.write_snapshot`` of the mart with the
-    head recorded alongside, or any transactional sink), then advance the
+    atomic write (a ``sources.manifest.write_manifest_table`` full
+    refresh of the mart with ``txn=(app_id, head)``, read back with
+    ``last_txn_version``, or any transactional sink), then advance the
     cursor with ``manifest_feed_commit(spark, state_path, head)``. On
     restart pass the stamp back as ``applied_head``: it overrides the
     cursor, so a crash between the mart persist and the cursor commit

@@ -35,8 +35,8 @@ from __future__ import annotations
 
 import hashlib
 
-from tibame_project_spark.sources.manifest import CommitFS
-from tibame_project_spark.sources.writers import _create_new, _hadoop_path
+from tibame_project_spark.sources.manifest import CommitFS, _create_new
+from tibame_project_spark.sources.writers import _hadoop_path
 
 __all__ = ["CoordinatedCommitFS", "ConditionalPutCommitFS"]
 
@@ -46,7 +46,7 @@ class CoordinatedCommitFS(CommitFS):
 
     ``coord_dir`` must name a directory on a filesystem with a truly
     atomic create-new (HDFS, ABFS, GCS, or a local directory, which
-    :func:`~tibame_project_spark.sources.writers._create_new` creates
+    :func:`~tibame_project_spark.sources.manifest._create_new` creates
     with ``O_EXCL``). ``create_new`` first atomically creates a
     coordination entry named by the sha256 of the target path (its
     content is the target path string, for :meth:`clear_orphans`); only

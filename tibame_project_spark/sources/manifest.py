@@ -1,15 +1,16 @@
 """Manifest-backed tables: incremental snapshot commits with per-file
 statistics and data skipping.
 
-:mod:`.writers`' ``write_snapshot`` gives atomic versioned overwrites, but
-every version is a FULL copy of the table — the right tool for dims and
-marts, the wrong one for a 100 TB fact table whose nightly change batch
-touches 0.1% of rows. This module adds the layer the big table formats
-(Delta Lake, Apache Iceberg — public designs; original implementation on
-plain Spark relations + Hadoop FS calls) put on top of the same commit
-marker: a per-version **manifest** listing the immutable data files that
-compose the table, with per-file row counts, byte sizes, and min/max
-statistics on declared columns. Commits then become metadata operations:
+A versioned overwrite that republishes a FULL copy of the table per
+version is the right tool for dims and marts, the wrong one for a 100 TB
+fact table whose nightly change batch touches 0.1% of rows. This module
+is the layer the big table formats (Delta Lake, Apache Iceberg — public
+designs; original implementation on plain Spark relations + Hadoop FS
+calls) put on top of an atomic commit marker (``_COMMIT_v<n>``, created
+new, never renamed): a per-version **manifest** listing the immutable
+data files that compose the table, with per-file row counts, byte
+sizes, and min/max statistics on declared columns. Commits then become
+metadata operations:
 
 - **append** adds files, rewrites nothing (:func:`append_manifest_table`);
 - **merge** rewrites ONLY files whose key range intersects the change
@@ -113,6 +114,7 @@ from __future__ import annotations
 import bisect
 import json
 import math
+import os
 import uuid
 
 import pyspark.sql.functions as F
@@ -125,14 +127,9 @@ from pyspark.sql.types import (
 )
 
 from tibame_project_spark.sources.writers import (
-    _COMMIT_PREFIX,
     _clustered_write,
-    _committed_versions,
-    _create_new,
     _hadoop_path,
     _jvm_class,
-    _version_suffix,
-    read_snapshot_version,
 )
 
 __all__ = [
@@ -181,9 +178,63 @@ __all__ = [
     "UnsupportedTableFeatureError",
 ]
 
-#: Manifest tables share the snapshot commit marker protocol; the head
-#: version of either table kind resolves through the same listing.
-read_manifest_version = read_snapshot_version
+#: Marker filename prefixes of the commit protocol. Version n commits as
+#: f"{_COMMIT_PREFIX}{n}"; its claim f"{_CLAIM_PREFIX}{n}" serializes the
+#: tiny metadata window of the commit (manifest rename + meta json +
+#: tag-aware prune + commit marker) — data writes AND the manifest
+#: materialization happen before, in attempt-unique dirs, fully in
+#: parallel. ONE definition shared by every writer, prune and reader, so
+#: their parsing can never desynchronize.
+_COMMIT_PREFIX = "_COMMIT_v"
+_CLAIM_PREFIX = "_CLAIM_v"
+
+
+def _version_suffix(name: str, prefix: str) -> int | None:
+    """``int(suffix)`` of a versioned entry name, or None when the name
+    doesn't carry an all-digits suffix (``_COMMIT_v1.bak``, ``v=tmp``…).
+    Foreign files in a table's base dir are thereby IGNORED instead of
+    raising ValueError out of every read/write on the table."""
+    if not name.startswith(prefix):
+        return None
+    suffix = name[len(prefix):]
+    return int(suffix) if suffix.isdigit() else None
+
+
+def _committed_versions(listing) -> list[int]:
+    """Version numbers of all commit markers in a base-dir listing."""
+    return [
+        v
+        for st in listing
+        if (v := _version_suffix(st.getPath().getName(), _COMMIT_PREFIX)) is not None
+    ]
+
+
+def _create_new(fs, path, data: bytes = b"") -> None:
+    """Create the Hadoop ``path`` on ``fs`` with ``data`` iff it does not
+    exist; raise if it does. Only the exists-test-and-create is atomic:
+    a ``file:`` path is opened with ``O_CREAT | O_EXCL``, so exactly one
+    of several racing callers creates it (Hadoop's local
+    ``create(path, overwrite=False)`` checks, then creates, and lets
+    several win). ``data`` is written AFTER the create, so a concurrent
+    reader may see the file shorter than ``data``, and a crash mid-write
+    leaves it so. Every other scheme takes Hadoop's create-new, which is
+    as atomic as that filesystem makes it (HDFS and ABFS are; S3A and
+    GCS without conditional writes are not)."""
+    uri = fs.makeQualified(path).toUri()
+    if uri.getScheme() == "file":
+        local = uri.getPath()
+        os.makedirs(os.path.dirname(local), exist_ok=True)
+        fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        return
+    out = fs.create(path, False)
+    try:
+        if data:
+            out.write(bytearray(data))
+    finally:
+        out.close()
+
 
 _ORDERABLE_KINDS = (
     "boolean tinyint smallint int bigint float double decimal string date "
@@ -245,19 +296,17 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
     re-bootstrap (duplicate downstream application)."""
     local = _local_dir(path)
     if local is not None:
-        import os as _os
-
-        d, name = _os.path.split(local)
-        _os.makedirs(d, exist_ok=True)
-        crc = _os.path.join(d, f".{name}.crc")
-        if _os.path.exists(crc):
-            _os.remove(crc)
-        tmp_local = _os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
+        d, name = os.path.split(local)
+        os.makedirs(d, exist_ok=True)
+        crc = os.path.join(d, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        tmp_local = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
         with open(tmp_local, "w", encoding="utf-8") as f:
             f.write(text)
             f.flush()
-            _os.fsync(f.fileno())
-        _os.replace(tmp_local, local)
+            os.fsync(f.fileno())
+        os.replace(tmp_local, local)
         return
     fs, p, jvm = _fs_for(spark, path)
     tmp = _hadoop_path(jvm, p.getParent(), f".{p.getName()}.tmp-{uuid.uuid4().hex}")
@@ -363,6 +412,13 @@ def _begin(spark: SparkSession, base_path: str):
     head = max(committed) if committed else None
     version = (head if head is not None else -1) + 1
     return fs, listing, head, version
+
+
+def read_manifest_version(spark: SparkSession, base_path: str) -> int | None:
+    """The committed head version of a manifest table (its highest
+    ``_COMMIT_v<n>`` marker), or None if nothing has been published
+    yet. One listing of the base dir."""
+    return _begin(spark, base_path)[2]
 
 
 #: Every table feature THIS engine implements. A commit whose state
@@ -896,11 +952,6 @@ class ConcurrentCommitError(RuntimeError):
     claim)."""
 
 
-#: Claim markers serialize the tiny metadata window of a commit (manifest
-#: rename + meta json + tag-aware prune + commit marker); data writes AND
-#: the manifest materialization happen before, in attempt-unique dirs,
-#: fully in parallel.
-_CLAIM_PREFIX = "_CLAIM_v"
 #: How long a claim may be held without its commit marker appearing
 #: before waiters declare it abandoned. Measured from the claim FILE's
 #: modification time, never from the waiter's arrival — a healthy busy
@@ -1744,13 +1795,12 @@ def _file_stats(
     an empty manifest block, not an inference error.
 
     ``bloom`` (``{"cols": [...], "m": bits, "k": hashes}``) adds one
-    sparse per-file Bloom filter per declared column, built fully
-    distributed: each row's k positions explode to (word, bit) pairs, a
-    (file, word) ``bit_or`` folds them, and a per-file collect packs the
-    surviving words into a map<int,bigint> — the filter lives in the
-    manifest as ~set-bits/64 entries, so an unsaturated filter costs KBs
-    per file and a saturated one degrades to keep-everything, never to
-    wrong answers.
+    sparse per-file Bloom filter per declared column: each row's k
+    positions explode to (word, bit) pairs, a (file, word) ``bit_or``
+    folds them, and a per-file collect packs the surviving words into a
+    map<int,bigint> — the filter lives in the manifest as ~set-bits/64
+    entries, so an unsaturated filter costs KBs per file and a saturated
+    one degrades to keep-everything, never to wrong answers.
 
     ``null_stats`` (a create-time table flag, Delta's nullCount) adds a
     per-file ``nulls_<col>`` count per stats column on the SAME single
@@ -1767,15 +1817,9 @@ def _file_stats(
     conversion raises). The distributed scan below is the fallback for
     the remaining types, for files missing chunk statistics, and for
     stores Arrow cannot reach or read — so on an Arrow-unreachable store
-    every commit pays the scan's jobs. A Bloom-configured table still
-    scans for its filters, but reading ONLY the Bloom columns."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        MapType,
-        StructField,
-    )
-
+    every commit pays the scan's jobs. Either way a Bloom-configured
+    table then scans for its filters, reading ONLY the Bloom columns
+    (:func:`_fold_bloom`)."""
     footer_rows = _footer_file_stats(
         spark, base_path, data_dir, stats_cols, schema, schema_id,
         null_stats=null_stats,
@@ -1797,50 +1841,8 @@ def _file_stats(
             StructField("dv_path", StringType()),
             StructField("schema_id", IntegerType()),
         ]
-        if not bloom:
-            return _rows_to_arrow(footer_rows, StructType(fields))
-        # the Bloom filters still need the values — but ONLY the Bloom
-        # columns' bytes, not every stats column's
-        raw = (
-            spark.read.schema(schema)
-            .parquet(f"{base_path}/{data_dir}")
-            .select(
-                *bloom["cols"],
-                F.col("_metadata.file_path").alias("__path"),
-            )
-        )
-        # the filters are KBs per file: COLLECT them (one small job per
-        # Bloom column — the inherent value scan) and fold driver-side
-        # into the footer rows, instead of a distributed join
-        bfields = list(fields) + [
-            StructField(
-                f"bloom_{c}", MapType(IntegerType(), LongType())
-            )
-            for c in bloom["cols"]
-        ]
-        # r15 single-task fusion (same notion as the merge-rewrite gate):
-        # the written bytes are KNOWN from the footers — when they fit
-        # one task, build each column's filters in ONE partition, so the
-        # explode→bit_or→pack pipeline runs without its two exchanges
-        # (1 job per Bloom column instead of an AQE stage cascade);
-        # bigger commits keep the fully distributed build. Unlike the
-        # fused merge, this plan stays in the caller's session: no join
-        # multiplies its size estimate, which follows the scanned bytes,
-        # so no exchange comes back under the default single-partition cap
-        if _fits_one_task(r[1] for r in footer_rows):
-            raw = raw.coalesce(1)
-        bmaps: dict = {}
-        for c in bloom["cols"]:
-            for r in _bloom_words(raw, c, bloom["m"], bloom["k"]).collect():
-                bmaps.setdefault(r["path"], {})[c] = r[f"bloom_{c}"]
-        brows = [
-            row
-            + tuple(
-                bmaps.get(row[0], {}).get(c) for c in bloom["cols"]
-            )
-            for row in footer_rows
-        ]
-        return _rows_to_arrow(brows, StructType(bfields))
+        stats = _rows_to_arrow(footer_rows, StructType(fields))
+        return _fold_bloom(spark, stats, base_path, data_dir, schema, bloom)
     raw = spark.read.schema(schema).parquet(f"{base_path}/{data_dir}").select(
         "*",
         F.col("_metadata.file_path").alias("__path"),
@@ -1892,9 +1894,48 @@ def _file_stats(
             F.lit(schema_id).alias("schema_id"),
         )
     )
-    if bloom:
-        out = _attach_bloom(out, raw, bloom)
-    return out.toArrow()
+    return _fold_bloom(spark, out.toArrow(), base_path, data_dir, schema, bloom)
+
+
+def _fold_bloom(spark, stats, base_path: str, data_dir: str, schema, bloom):
+    """``stats`` (the manifest rows of ``data_dir``'s files, a pyarrow
+    Table) with one ``bloom_<c>`` column appended per Bloom column —
+    ``stats`` itself when ``bloom`` is unset. The filters are KBs per
+    file: COLLECT them (one small job per Bloom column — the inherent
+    value scan, reading only that column's bytes) and fold them
+    driver-side into the stats rows, keyed by file path."""
+    if not bloom:
+        return stats
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import MapType
+
+    raw = (
+        spark.read.schema(schema)
+        .parquet(f"{base_path}/{data_dir}")
+        .select(*bloom["cols"], F.col("_metadata.file_path").alias("__path"))
+    )
+    # r15 single-task fusion (same notion as the merge-rewrite gate):
+    # when the written bytes fit one task, build each column's filters in
+    # ONE partition, so the explode→bit_or→pack pipeline runs without its
+    # two exchanges (1 job per Bloom column instead of an AQE stage
+    # cascade); bigger commits keep the fully distributed build. Unlike
+    # the fused merge, this plan stays in the caller's session: no join
+    # multiplies its size estimate, which follows the scanned bytes, so
+    # no exchange comes back under the default single-partition cap
+    if _fits_one_task(stats.column("bytes").to_pylist()):
+        raw = raw.coalesce(1)
+    paths = stats.column("path").to_pylist()
+    map_type = to_arrow_type(MapType(IntegerType(), LongType()))
+    for c in bloom["cols"]:
+        words = {
+            r["path"]: r[f"bloom_{c}"]
+            for r in _bloom_words(raw, c, bloom["m"], bloom["k"]).collect()
+        }
+        stats = stats.append_column(
+            f"bloom_{c}", pa.array([words.get(p) for p in paths], type=map_type)
+        )
+    return stats
 
 
 def _bloom_words(raw: DataFrame, c: str, m: int, k: int) -> DataFrame:
@@ -1930,14 +1971,6 @@ def _bloom_words(raw: DataFrame, c: str, m: int, k: int) -> DataFrame:
             ).alias(f"bloom_{c}")
         )
     )
-
-
-def _attach_bloom(out: DataFrame, raw: DataFrame, bloom: dict) -> DataFrame:
-    """Join the per-file sparse Bloom filters onto the stats rows.
-    ``raw`` needs only the Bloom columns plus ``__path``."""
-    for c in bloom["cols"]:
-        out = out.join(_bloom_words(raw, c, bloom["m"], bloom["k"]), "path", "left")
-    return out
 
 
 def _constraint_rules(meta: dict, delete_col: str | None = None) -> list:
@@ -4436,8 +4469,6 @@ def clone_manifest_table(
 
     Raises if ``dst_path`` already holds a committed table (clone
     creates; it does not overwrite)."""
-    import os as _os
-
     fs, listing, src_head, _ = _begin(spark, src_path)
     if src_head is None:
         raise FileNotFoundError(f"no committed manifest table under {src_path}")
@@ -4459,7 +4490,7 @@ def clone_manifest_table(
     src_abs = (
         src_path
         if "://" in src_path or src_path.startswith(("/", "file:"))
-        else _os.path.abspath(src_path)
+        else os.path.abspath(src_path)
     )
 
     import pyarrow as pa
@@ -4507,15 +4538,15 @@ def manifest_changes(
     construction, never read), and every changed key lives in a file only
     one side references. The diff therefore joins
     ``read(removed files) FULL OUTER read(added files)`` — cost tracks
-    the data the commits TOUCHED, not the table. The manifest twin of
-    ``writers.snapshot_changes`` (which must read both full versions);
-    same output schema (``operators.corrections.snapshot_diff``: key,
-    op, old_*/new_* columns), same key-unique-table assumption.
+    the data the commits TOUCHED, not the table, where
+    ``operators.corrections.snapshot_diff`` of the two full versions
+    reads both tables. Same output schema as ``snapshot_diff`` (key, op,
+    old_*/new_* columns), same key-unique-table assumption.
 
     Carried-but-rewritten rows (a merge rewrites a candidate file's
     non-batch rows verbatim into new files) appear on both sides with
     equal values and fall out as ``same`` — filter ``op != 'same'`` for
-    the applyable feed, exactly as with ``snapshot_changes``. Deletion
+    the applyable feed, exactly as with ``snapshot_diff``. Deletion
     vectors compose: the diff unit is the (file, vector) PAIR, so a file
     whose vector grew is re-read on both sides (old vector applied on the
     left, new on the right) and its newly condemned rows fall out as

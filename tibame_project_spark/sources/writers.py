@@ -13,8 +13,6 @@ Maps the reference's write modes onto Spark save modes:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, MapType, StructType, VariantType
@@ -298,211 +296,3 @@ def _jvm_class(jvm, name: str):
 def _hadoop_path(jvm, *args):
     """``new org.apache.hadoop.fs.Path(*args)`` through :func:`_jvm_class`."""
     return _jvm_class(jvm, "org.apache.hadoop.fs.Path")(*args)
-
-
-#: Commit-marker filename prefix for snapshot-versioned tables; version n
-#: commits as f"{_COMMIT_PREFIX}{n}". ONE definition shared by the writer,
-#: the prune, and the reader so parsing can never desynchronize.
-_COMMIT_PREFIX = "_COMMIT_v"
-
-
-def _version_suffix(name: str, prefix: str) -> int | None:
-    """``int(suffix)`` of a versioned entry name, or None when the name
-    doesn't carry an all-digits suffix (``_COMMIT_v1.bak``, ``v=tmp``…).
-    Foreign files in a snapshot base dir are thereby IGNORED instead of
-    raising ValueError out of every read/write on the table."""
-    if not name.startswith(prefix):
-        return None
-    suffix = name[len(prefix):]
-    return int(suffix) if suffix.isdigit() else None
-
-
-def _committed_versions(listing) -> list[int]:
-    """Version numbers of all commit markers in a base-dir listing."""
-    return [
-        v
-        for st in listing
-        if (v := _version_suffix(st.getPath().getName(), _COMMIT_PREFIX)) is not None
-    ]
-
-
-def _create_new(fs, path, data: bytes = b"") -> None:
-    """Create the Hadoop ``path`` on ``fs`` with ``data`` iff it does not
-    exist; raise if it does. Only the exists-test-and-create is atomic:
-    a ``file:`` path is opened with ``O_CREAT | O_EXCL``, so exactly one
-    of several racing callers creates it (Hadoop's local
-    ``create(path, overwrite=False)`` checks, then creates, and lets
-    several win). ``data`` is written AFTER the create, so a concurrent
-    reader may see the file shorter than ``data``, and a crash mid-write
-    leaves it so. Every other scheme takes Hadoop's create-new, which is
-    as atomic as that filesystem makes it (HDFS and ABFS are; S3A and
-    GCS without conditional writes are not)."""
-    uri = fs.makeQualified(path).toUri()
-    if uri.getScheme() == "file":
-        local = uri.getPath()
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        fd = os.open(local, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o666)
-        with os.fdopen(fd, "wb") as f:
-            f.write(data)
-        return
-    out = fs.create(path, False)
-    try:
-        if data:
-            out.write(bytearray(data))
-    finally:
-        out.close()
-
-
-def write_snapshot(
-    spark,
-    df: DataFrame,
-    base_path: str,
-    *,
-    keep: int = 2,
-    base_version: int | None = None,
-) -> int:
-    """Versioned atomic overwrite on a plain filesystem — the minimal
-    snapshot-isolation pattern that table formats (Delta/Iceberg)
-    industrialize: each write lands in a fresh ``v=<n>/`` subdirectory of
-    ``base_path`` and is published by atomically creating an empty
-    ``_COMMIT_v<n>`` marker (create-new through :func:`_create_new`,
-    never rename/replace — the append-only-log commit; atomic on local
-    paths and HDFS. Object
-    stores without conditional PUT make create-new a check-then-write,
-    which is why the single-writer contract below is load-bearing there,
-    exactly as it is for every file-log table format without a lock
-    service); the current version is simply the highest committed
-    marker.
-
-    Crash safety, by construction: a failure anywhere before the marker
-    creation leaves the previous version current and the new ``v=<n>/``
-    directory an invisible orphan (the next write overwrites and
-    supersedes it) — readers (:func:`read_snapshot`) never observe a
-    partial table, and the read-then-overwrite hazard of in-place
-    ``mode("overwrite")`` (documented on
-    ``streaming.incremental.stream_cdc_apply``) disappears: the new
-    version is derived FROM the old one while the old one stays on disk.
-    ``keep`` (>= 1) bounds disk growth by pruning versions older than the
-    newest ``keep`` (marker first, then data, so a half-pruned version can
-    never read as current; the sweep also collects markerless data dirs
-    below the retention floor, so a crash BETWEEN the two deletes leaks
-    nothing permanently). Single-writer per table, like every file-log
-    format without a lock service.
-
-    ``base_version`` lets a caller that already resolved the current
-    committed version (e.g. a CDC loop that just read it) skip the extra
-    listing. Returns the committed version number.
-    """
-    if keep < 1:
-        raise ValueError(f"keep must be >= 1 (the current version), got {keep}")
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = _hadoop_path(jvm, base_path)
-    fs = base.getFileSystem(conf)
-    # ONE pre-write listing serves version resolution, staleness
-    # validation AND both prune passes (everything the prune deletes
-    # predates this write; deleting a marker cannot change which v=<n>
-    # dirs exist) — object-store LISTs are the expensive metadata op here
-    listing = list(fs.listStatus(base)) if fs.exists(base) else []
-    committed = _committed_versions(listing)
-    current = (
-        base_version
-        if base_version is not None
-        else (max(committed) if committed else None)
-    )
-    version = (current if current is not None else -1) + 1
-    if committed and version != max(committed) + 1:
-        # a stale base_version (overlapping drains, cached value) must
-        # fail BEFORE the data write — mode("overwrite") would destroy a
-        # committed version's data, and a version AHEAD of the head is
-        # just as destructive: its prune floor would sweep the real
-        # head's marker and data. Exactly head+1 is the only valid write
-        raise RuntimeError(
-            f"snapshot version {version} under {base_path} is not ahead "
-            f"of the committed head v{max(committed)} by exactly one — "
-            "base_version is stale (concurrent writer or cached value); "
-            "re-resolve with read_snapshot_version"
-        )
-    df.write.mode("overwrite").parquet(f"{base_path}/v={version}")
-    marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{version}")
-    _create_new(fs, marker)  # create-new = the commit
-    floor = version - keep
-    for status in listing:
-        mv = _version_suffix(status.getPath().getName(), _COMMIT_PREFIX)
-        if mv is not None and mv <= floor:
-            fs.delete(status.getPath(), False)
-    for status in listing:
-        # data dirs at/below the floor, markerless ones included (a
-        # prior mid-prune crash deleted the marker only)
-        dv = _version_suffix(status.getPath().getName(), "v=")
-        if dv is not None and dv <= floor:
-            fs.delete(status.getPath(), True)
-    return version
-
-
-def read_snapshot_version(spark, base_path: str) -> int | None:
-    """The committed version number of a :func:`write_snapshot` table
-    (highest ``_COMMIT_v<n>`` marker), or None if nothing has been
-    published yet."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = _hadoop_path(jvm, base_path)
-    fs = base.getFileSystem(conf)
-    if not fs.exists(base):
-        return None
-    versions = _committed_versions(list(fs.listStatus(base)))
-    return max(versions) if versions else None
-
-
-def read_snapshot(spark, base_path: str, *, version: int | None = None) -> DataFrame:
-    """Read the current committed version of a :func:`write_snapshot`
-    table (or an explicit ``version`` a caller already resolved — time
-    travel within the retention window). Raises if nothing has been
-    published."""
-    if version is None:
-        version = read_snapshot_version(spark, base_path)
-        if version is None:
-            raise FileNotFoundError(f"no committed snapshot under {base_path}")
-    else:
-        # an explicit version must be a COMMITTED one: a crashed write can
-        # leave a partial marker-less v=<n>/ dir, and reading it silently
-        # would break the "never observe a partial table" invariant
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        marker = _hadoop_path(jvm, f"{base_path}/{_COMMIT_PREFIX}{version}")
-        if not marker.getFileSystem(conf).exists(marker):
-            raise FileNotFoundError(
-                f"snapshot version {version} under {base_path} is not "
-                "committed (crash orphan, pruned, or never written)"
-            )
-    return spark.read.parquet(f"{base_path}/v={version}")
-
-
-def snapshot_changes(
-    spark,
-    base_path: str,
-    key: str | list[str],
-    *,
-    from_version: int,
-    to_version: int | None = None,
-) -> DataFrame:
-    """Change data feed between two committed versions of a
-    :func:`write_snapshot` table: every key inserted / deleted / updated
-    between ``from_version`` and ``to_version`` (default: current),
-    tagged and carrying old/new values — ``operators.corrections.
-    snapshot_diff`` applied to the version directories that
-    snapshot-versioning keeps on disk anyway. This is the read side of
-    the CDC story: ``stream_cdc_apply_snapshot`` applies a change feed,
-    this derives one, so a downstream table can subscribe to increments
-    instead of re-reading the 100 TB table per refresh. Both versions
-    must still be within the retention window (``keep``).
-    """
-    from tibame_project_spark.operators.corrections import snapshot_diff
-
-    if to_version is None:
-        to_version = read_snapshot_version(spark, base_path)
-        if to_version is None:
-            raise FileNotFoundError(f"no committed snapshot under {base_path}")
-    old = read_snapshot(spark, base_path, version=from_version)
-    new = read_snapshot(spark, base_path, version=to_version)
-    return snapshot_diff(old, new, key)

@@ -71,11 +71,11 @@ def stream_to_serving(
 
 
 def _cdc_bootstrap(batch: DataFrame, epoch: int, delete_col: str | None, where: str) -> DataFrame:
-    """Shared first-epoch bootstrap for the CDC sinks: refuse when the
-    checkpoint says earlier epochs committed but the target is gone
-    (re-bootstrapping from one batch silently drops every earlier key),
-    otherwise strip tombstoned rows (a delete in the very first batch
-    inserts nothing) and drop the tombstone column."""
+    """Shared first-epoch bootstrap of the CDC sink and the replication
+    drivers: refuse when the checkpoint says earlier epochs committed but
+    the target is gone (re-bootstrapping from one batch silently drops
+    every earlier key), otherwise strip tombstoned rows (a delete in the
+    very first batch inserts nothing) and drop the tombstone column."""
     if epoch > 0:
         raise RuntimeError(
             f"{where}: checkpoint is at epoch {epoch} but the target does "
@@ -86,133 +86,6 @@ def _cdc_bootstrap(batch: DataFrame, epoch: int, delete_col: str | None, where: 
     if delete_col is not None:
         out = out.filter(~F.coalesce(F.col(delete_col), F.lit(False))).drop(delete_col)
     return out
-
-
-def stream_cdc_apply(
-    stream: DataFrame,
-    qualified_table: str,
-    key: str | list[str],
-    *,
-    checkpoint: str,
-    delete_col: str | None = None,
-) -> None:
-    """CDC apply: treat the stream as a change feed of full-row upsert
-    payloads (optionally carrying a boolean tombstone in ``delete_col``)
-    and MERGE each micro-batch into the managed table in one pass via
-    ``operators.corrections.merge_upsert`` — matched keys update, new keys
-    insert, tombstoned keys delete. The concrete form of
-    ``stream_to_serving``'s "MERGE on a key" idempotence contract.
-
-    Idempotence under at-least-once redelivery: re-merging an identical
-    batch is a fixpoint (matched rows re-take the same values, tombstones
-    find nothing left to delete, would-be inserts are now matched updates
-    with equal values), so a replayed epoch cannot corrupt the table.
-    Within a batch, ``availableNow`` + checkpoint give the scheduled-CDC
-    operating mode: each run drains the backlog then stops.
-
-    The merged result is ``localCheckpoint``-ed (eager) before the
-    overwrite — the merge reads the same table it replaces, and cutting
-    lineage to materialized partitions is what makes read-then-overwrite
-    possible in one batch. The overwrite itself is NOT atomic on a plain
-    managed table: a crash between the delete and the commit can destroy
-    the table, which is why a later epoch finding no table refuses to
-    re-bootstrap (prior rows would silently vanish) and fails loudly for
-    operator recovery. At 100 TB the real fix is MERGE INTO on a table
-    format with snapshot isolation (Delta/Iceberg); call sites don't
-    change.
-
-    Precondition: at most one change per key per micro-batch (a multi-
-    change feed should be collapsed to the latest change first — compose
-    with ``operators.dedup.dedup_keep_last`` on an event-time column);
-    duplicate source keys would fan out in the merge join.
-    """
-    from tibame_project_spark.operators.corrections import merge_upsert
-
-    def apply_batch(batch: DataFrame, epoch: int) -> None:
-        spark = batch.sparkSession
-        if spark.catalog.tableExists(qualified_table):
-            target = spark.table(qualified_table)
-            merged = merge_upsert(target, batch, key, delete_col=delete_col)
-        else:
-            # a committed epoch with no table means a mid-overwrite crash
-            # destroyed it; the shared bootstrap refuses rather than
-            # papering over the loss (recover from backup / reset ckpt)
-            merged = _cdc_bootstrap(
-                batch, epoch, delete_col, f"stream_cdc_apply({qualified_table})"
-            )
-        merged.localCheckpoint(eager=True).write.mode("overwrite").saveAsTable(
-            qualified_table
-        )
-        # the overwrite replaced the table's files; drop the cached file
-        # listing so the next batch's merge doesn't chase deleted parquet
-        # parts. foreachBatch runs in a CLONED session, so sibling
-        # sessions that already read the table must refreshTable on their
-        # side after a drain — the usual contract for overwritten tables
-        # (a snapshot-isolated table format removes the need).
-        spark.catalog.refreshTable(qualified_table)
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def stream_cdc_apply_snapshot(
-    stream: DataFrame,
-    base_path: str,
-    key: str | list[str],
-    *,
-    checkpoint: str,
-    delete_col: str | None = None,
-    keep: int = 2,
-) -> None:
-    """:func:`stream_cdc_apply` on a snapshot-versioned table
-    (``sources.writers.write_snapshot``) instead of an in-place managed
-    table — the variant WITHOUT the non-atomic-overwrite window: each
-    micro-batch merges against the current committed version and
-    publishes a new ``v=<n>/`` directory with an atomic commit marker, so
-    a crash at any point leaves the previous complete version current —
-    no crash state loses prior rows. (The refuse-to-bootstrap guard is
-    still applied for EXTERNAL loss: a committed epoch finding no
-    snapshot means someone deleted the table.) A replayed epoch re-merges against a
-    version that already contains it — a fixpoint — and publishes an
-    identical next version. This is the plain-filesystem rehearsal of
-    MERGE INTO on a snapshot-isolated table format.
-    """
-    from tibame_project_spark.operators.corrections import merge_upsert
-    from tibame_project_spark.sources.writers import (
-        read_snapshot,
-        read_snapshot_version,
-        write_snapshot,
-    )
-
-    def apply_batch(batch: DataFrame, epoch: int) -> None:
-        spark = batch.sparkSession
-        # resolve the committed version ONCE per batch (one listing, not
-        # three) and thread it through the read and the write
-        version = read_snapshot_version(spark, base_path)
-        if version is None:
-            # crash states can't lose a snapshot table, so a missing table
-            # at a committed epoch means EXTERNAL loss (retention script,
-            # rm -rf, moved mount) — the shared bootstrap refuses
-            merged = _cdc_bootstrap(
-                batch, epoch, delete_col, f"stream_cdc_apply_snapshot({base_path})"
-            )
-        else:
-            target = read_snapshot(spark, base_path, version=version)
-            merged = merge_upsert(target, batch, key, delete_col=delete_col)
-        write_snapshot(spark, merged, base_path, keep=keep, base_version=version)
-
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def stream_cdc_apply_manifest(
@@ -228,20 +101,34 @@ def stream_cdc_apply_manifest(
     small_bytes: int = 32 * 1024 * 1024,
     app_id: str | None = None,
 ) -> None:
-    """:func:`stream_cdc_apply` on a manifest-backed table
-    (``sources.manifest``) — the variant where a micro-batch costs what
-    the batch TOUCHES, not what the table holds: each epoch is one
-    file-skipping MERGE commit (only files whose key range intersects the
-    batch are rewritten; everything else is carried forward in the
-    manifest), with the same atomic-marker crash safety as the snapshot
-    variant. At 100 TB this is the only CDC shape that works — the
-    snapshot variant republishes the full table per drain, this one
-    republishes ~batch-sized files plus a KB of metadata.
+    """CDC apply onto a manifest-backed table (``sources.manifest``):
+    treat the stream as a change feed of full-row upsert payloads
+    (optionally carrying a boolean tombstone in ``delete_col``) and
+    MERGE each micro-batch into the table — matched keys update, new
+    keys insert, tombstoned keys delete. The concrete form of
+    :func:`stream_to_serving`'s "MERGE on a key" idempotence contract;
+    ``availableNow`` + checkpoint give the scheduled-CDC operating mode:
+    each run drains the backlog then stops.
+
+    A micro-batch costs what the batch TOUCHES, not what the table
+    holds: each epoch is one file-skipping MERGE commit (only files
+    whose key range intersects the batch are rewritten; everything else
+    is carried forward in the manifest) published by an atomic commit
+    marker, so a crash at any point leaves the previous complete
+    version current. A drain republishes ~batch-sized files plus a KB
+    of metadata.
 
     Epoch 0 against a missing table bootstraps it (tombstones stripped,
-    clustered on ``key``); a committed epoch finding no table refuses,
-    same as the other sinks. Replayed epochs are merge fixpoints — the
-    re-published version is content-identical.
+    clustered on ``key``). No crash state loses the table, so a
+    committed epoch finding no table means external loss (retention
+    script, ``rm -rf``, moved mount): the sink refuses to re-bootstrap
+    from one batch, which would silently drop every earlier key.
+    Replayed epochs are merge fixpoints — the re-published version is
+    content-identical.
+
+    Precondition: at most one change per key per micro-batch (collapse
+    a multi-change feed to the latest change first, e.g. with
+    ``operators.dedup.dedup_keep_last`` on an event-time column).
 
     Per-epoch merge commits accrete small files; ``compact_every=N``
     folds files under ``small_bytes`` into big ones every N epochs (an
